@@ -16,12 +16,14 @@ import graft.util.Cols
 object Incremental {
 
   /** A3 (reference `utils/incremental.py:13-50`): current watermark of a
-    * target table; None when the table is missing/empty/lacks the column.
-    * Single `max` aggregate — no count() pre-check scan. */
+    * target table, plain parquet or versioned ([[TableIO.readTable]]
+    * reads a versioned table's current snapshot); None when the table
+    * is missing/empty/lacks the column. Single `max` aggregate — no
+    * count() pre-check scan. */
   def getWatermark(spark: SparkSession, tablePath: String,
       watermarkColumn: String): Option[Any] = {
     if (!TableIO.exists(spark, tablePath)) return None
-    val df = TableIO.read(spark, tablePath)
+    val df = TableIO.readTable(spark, tablePath)
     Cols.resolve(df, watermarkColumn).flatMap { c =>
       val row = df.agg(max(col(c))).head()
       if (row.isNullAt(0)) None else Some(row.get(0))

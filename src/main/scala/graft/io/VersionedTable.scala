@@ -506,13 +506,15 @@ final class VersionedTable(spark: SparkSession, root: String) {
   /** Plan the scan with no DV application (the manifest entries' raw
     * parquet rows). */
   private def rawScan(m: VersionManifest, entries: Seq[ManifestEntry],
-      isStreaming: Boolean, withRowMeta: Boolean): DataFrame = {
+      isStreaming: Boolean, withRowMeta: Boolean,
+      wholeFiles: Boolean = false): DataFrame = {
     val qualifiedRoot = fs.makeQualified(rootPath)
     val files = entries.map(e => graftbridge.ManifestFile(
       new Path(qualifiedRoot, e.relPath).toString, e.bytes,
       e.partitionValues))
     graftbridge.ManifestScan.parquetTable(spark, qualifiedRoot,
-      snapshotSchema(m), m.partitionBy, files, isStreaming, withRowMeta)
+      snapshotSchema(m), m.partitionBy, files, isStreaming, withRowMeta,
+      wholeFiles)
   }
 
   /** Length of the qualified-root prefix every scanned file path
@@ -658,7 +660,11 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * already applied them), so per-file counts in the new dir are
     * CUMULATIVE for folded files and DELTA for the rest — returned
     * alongside the folded relPath set so the commit half can
-    * re-point chains accordingly. */
+    * re-point chains accordingly.
+    *
+    * Cost: ONE write job. The per-file counts come from that write's
+    * own tasks (a stats tracker counting the rows each committed task
+    * wrote per `file_rel`), not from reading the sidecar back. */
   private def writeDvSidecar(newPairs: DataFrame,
       candidates: Seq[ManifestEntry],
       dir: Path): (Set[String], Map[String, Long]) = {
@@ -678,11 +684,10 @@ final class VersionedTable(spark: SparkSession, root: String) {
             Seq("file_rel"), "left_semi")
         newPairs.unionByName(accumulated)
       }
-    out.write.mode(SaveMode.Overwrite).parquet(dir.toString)
-    val counts: Map[String, Long] = spark.read.schema(dvSchema)
-      .parquet(dir.toString).groupBy("file_rel").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    (foldable.map(_.relPath).toSet, counts)
+    val perFile = new graftbridge.RowsPerKeyTracker(ordinal = 0)
+    graftbridge.TrackedWrite.parquet(out.select("file_rel", "pos"),
+      dir.toString, tableWriteOptions, Seq(perFile))
+    (foldable.map(_.relPath).toSet, perFile.counts)
   }
 
   /** One candidate entry's post-commit form under a [[writeDvSidecar]]
@@ -2039,28 +2044,46 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * keys are safe to ignore here: an equi-join key never matches
     * NULL, so null-key source rows are always inserts. */
   private def sourceKeyMayMatch(m: VersionManifest, source: DataFrame,
-      keyCol: String): ManifestEntry => Boolean = {
+      keyCol: String): ManifestEntry => Boolean =
+    keyEnvelope(source, keyCol) match {
+      case Seq() => (_: ManifestEntry) => true
+      case env => envelopeMayMatch(m, source, keyCol,
+        source.agg(env.head, env.tail: _*).head(), 0)
+    }
+
+  /** The aggregates of a source's key envelope, min then max: as
+    * doubles for numeric keys, as strings for string keys, none for
+    * key types that cannot prune. */
+  private def keyEnvelope(source: DataFrame, keyCol: String)
+      : Seq[org.apache.spark.sql.Column] = {
     import org.apache.spark.sql.functions.{col, max, min}
     import org.apache.spark.sql.types._
-    val phys = physFor(m, keyCol)
-    val partCols = m.partitionBy.toSet
     source.schema(keyCol).dataType match {
       case ByteType | ShortType | IntegerType | LongType |
            FloatType | DoubleType =>
-        val env = source.agg(min(col(keyCol)).cast("double"),
-          max(col(keyCol)).cast("double")).head()
-        if (env.isNullAt(0) ||
-            math.abs(env.getDouble(0)) > 9007199254740992.0 ||
-            math.abs(env.getDouble(1)) > 9007199254740992.0)
-          (_: ManifestEntry) => true
-        else rangeMayMatch(partCols, phys,
-          env.getDouble(0), env.getDouble(1)) _
-      case StringType =>
-        val env = source.agg(min(col(keyCol)), max(col(keyCol))).head()
-        if (env.isNullAt(0)) (_: ManifestEntry) => true
-        else strRangeMayMatch(partCols, phys,
-          env.getString(0), env.getString(1)) _
-      case _ => (_: ManifestEntry) => true
+        Seq(min(col(keyCol)).cast("double"), max(col(keyCol)).cast("double"))
+      case StringType => Seq(min(col(keyCol)), max(col(keyCol)))
+      case _ => Seq.empty
+    }
+  }
+
+  /** [[sourceKeyMayMatch]]'s test from a computed [[keyEnvelope]],
+    * whose min and max sit at `at` and `at + 1` of `row`. */
+  private def envelopeMayMatch(m: VersionManifest, source: DataFrame,
+      keyCol: String, row: org.apache.spark.sql.Row,
+      at: Int): ManifestEntry => Boolean = {
+    import org.apache.spark.sql.types.StringType
+    val phys = physFor(m, keyCol)
+    val partCols = m.partitionBy.toSet
+    if (row.isNullAt(at)) (_: ManifestEntry) => true
+    else if (source.schema(keyCol).dataType == StringType)
+      strRangeMayMatch(partCols, phys, row.getString(at),
+        row.getString(at + 1)) _
+    else {
+      val (lo, hi) = (row.getDouble(at), row.getDouble(at + 1))
+      if (math.abs(lo) > 9007199254740992.0 ||
+          math.abs(hi) > 9007199254740992.0) (_: ManifestEntry) => true
+      else rangeMayMatch(partCols, phys, lo, hi) _
     }
   }
 
@@ -2083,9 +2106,12 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * envelope against manifest stats / partition values ([[
     * scanMayMatch]]'s test — numeric AND string keys), so a
     * range-clustered table is touched only where the batch's keys
-    * live. Pass 1 finds matched rows reading ONLY the key columns
-    * (column-pruned scan); pass 2 reads the candidates once more to
-    * build the update images. On row-tracked tables updated rows
+    * live. ONE scan of the candidates joins the source and keeps the
+    * matched rows' (file, row_index) with their new images,
+    * checkpointed at O(matched rows): the DV sidecar, the update
+    * images and the insert anti-join all derive from it. The source's
+    * emptiness, duplicate-key guard and key envelope come from one
+    * aggregate. On row-tracked tables updated rows
     * CARRY their row id through materialization, so
     * [[changesWithUpdates]] reports them as `update_preimage` /
     * `update_postimage` pairs — not delete+insert — and a no-op
@@ -2103,7 +2129,8 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * append-vs-DML rule). Returns the committed version. */
   def mergeVectorized(source: DataFrame, mergeKeys: Seq[String],
       updateColumns: Option[Seq[String]] = None): Long = {
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.{broadcast, col, count,
+      count_distinct, lit, struct}
     require(mergeKeys.nonEmpty, "mergeKeys must be non-empty")
     val curV = currentVersion.getOrElse(
       sys.error(s"table $root does not exist"))
@@ -2121,64 +2148,84 @@ final class VersionedTable(spark: SparkSession, root: String) {
     updateCols.foreach(c => require(
       tgtCols.contains(c) && !mergeKeys.contains(c),
       s"update column '$c' must be an existing non-key column of $root"))
-    val src = source.localCheckpoint() // envelope, guard, and 3 joins
-    if (src.isEmpty) return curV
-    require(src.groupBy(mergeKeys.map(col): _*).count()
-      .filter(col("count") > 1).isEmpty,
+    // lazy: the checks' aggregate below is its single first consumer
+    // and materializes it; the joins after it read the checkpoint
+    val src = source.localCheckpoint(eager = false)
+    // emptiness, the duplicate-key guard and the key envelope: ONE
+    // aggregate over the source
+    val keyCol = mergeKeys.head
+    val facts = src.agg(count(lit(1)),
+      count_distinct(struct(mergeKeys.map(col): _*)) +:
+        keyEnvelope(src, keyCol): _*).head()
+    if (facts.getLong(0) == 0L) return curV
+    require(facts.getLong(0) == facts.getLong(1),
       s"MERGE source has duplicate rows on (${mergeKeys.mkString(",")}) " +
         "— each target row may match at most one source row")
-    val keyCol = mergeKeys.head
-    val mayMatch = sourceKeyMayMatch(m, src, keyCol)
+    val mayMatch =
+      if (facts.length == 2) (_: ManifestEntry) => true
+      else envelopeMayMatch(m, src, keyCol, facts, 2)
     val candidates = m.entries.filter(mayMatch)
     val tracked = m.rowIdHw.isDefined
     val metaFile = graftbridge.ManifestScan.FilePathCol
     val metaPos = graftbridge.ManifestScan.RowIndexCol
-    val srcKeys = src.select(mergeKeys.map(col): _*)
-    // PASS 1 — matched rows as (keys, file, pos), key columns only
-    // (the scan column-prunes to the keys + row meta); O(matched)
-    // rows, checkpointed once and reused for the mask AND the
-    // insert anti-join
-    val pairs =
-      if (candidates.isEmpty) null
-      else readFiles(m, candidates, withRowMeta = true)
-        .select(mergeKeys.map(col) :+ col(metaFile) :+ col(metaPos): _*)
-        .join(srcKeys, mergeKeys, "left_semi")
-        .localCheckpoint()
-    val newDvDir = newCommitDir(curV + 1)
-    val (folded, counts) =
-      if (candidates.isEmpty) (Set.empty[String], Map.empty[String, Long])
+    // ONE pass over the candidates: each matched target row with its
+    // (file, pos) and its new image — matched rows take the source's
+    // values for the update columns, row-tracked ones carry their id.
+    // O(matched) rows, checkpointed once: the DV sidecar, the update
+    // images and the insert anti-join all read it
+    val imageCols = mergeKeys.map(col) ++
+      tgtCols.filterNot(mergeKeys.contains).map { c =>
+        if (updateCols.contains(c) && source.columns.contains(c))
+          col(s"s.$c").as(c)
+        else col(s"t.$c").as(c)
+      } ++
+      (if (tracked) Seq(col(s"t.$RowIdPhysCol").as(RowIdPhysCol))
+       else Seq.empty)
+    val matched =
+      if (candidates.isEmpty) None
       else {
+        val tgt =
+          if (tracked) logicalize(m,
+            readFilesPhysicalRid(m, candidates, keepMeta = true))
+          else readFiles(m, candidates, withRowMeta = true)
+        Some(tgt.alias("t").join(src.alias("s"), mergeKeys, "inner")
+          .select(imageCols :+ col(s"t.$metaFile").as(metaFile) :+
+            col(s"t.$metaPos").as(metaPos): _*)
+          .localCheckpoint())
+      }
+    val newDvDir = newCommitDir(curV + 1)
+    val (folded, counts) = matched match {
+      case None => (Set.empty[String], Map.empty[String, Long])
+      case Some(rows) =>
         // delta sidecar: ONLY this merge's newly retired rows — the
         // existing masks stay in their own chain links (O(changed
         // rows) written per commit; cap-length chains fold here)
-        val matchedPairs = pairs.select(
-          fileRelCol(col(metaFile)).as("file_rel"), col(metaPos).as("pos"))
-        writeDvSidecar(matchedPairs, candidates, newDvDir)
-      }
+        writeDvSidecar(rows.select(fileRelCol(col(metaFile)).as("file_rel"),
+          col(metaPos).as("pos")), candidates, newDvDir)
+    }
     val dvRel = relativize(newDvDir)
-    // PASS 2 — the new images: matched rows updated + unmatched
-    // source rows inserted; row-tracked updates CARRY their id
-    val tgtScan =
-      if (candidates.isEmpty) {
+    val updates = matched match {
+      case Some(rows) => rows.drop(metaFile, metaPos)
+      case None =>
         val e = readVersion(curV).limit(0)
-        if (tracked) e.withColumn(RowIdPhysCol, lit(null).cast("long"))
-        else e
-      }
-      else if (tracked) logicalize(m, readFilesPhysicalRid(m, candidates))
-      else readFiles(m, candidates)
-    val updates = tgtScan.alias("t").join(src.alias("s"), mergeKeys, "inner")
-      .select(mergeKeys.map(col) ++
-        tgtCols.filterNot(mergeKeys.contains).map { c =>
-          if (updateCols.contains(c) && source.columns.contains(c))
-            col(s"s.$c").as(c)
-          else col(s"t.$c").as(c)
-        } ++
-        (if (tracked) Seq(col(s"t.$RowIdPhysCol").as(RowIdPhysCol))
-         else Seq.empty): _*)
-    val matchedKeys =
-      if (candidates.isEmpty) srcKeys.limit(0)
-      else pairs.select(mergeKeys.map(col): _*).distinct()
-    val inserts = src.join(matchedKeys, mergeKeys, "left_anti")
+        (if (tracked) e.withColumn(RowIdPhysCol, lit(null).cast("long"))
+         else e).alias("t").join(src.alias("s"), mergeKeys, "inner")
+          .select(imageCols: _*)
+    }
+    // the inserts: source rows no target row matched. An anti-join
+    // needs no distinct right side; the planner cannot size the
+    // checkpointed matches (it multiplies the join's inputs), but the
+    // sidecar write counted them, so broadcast them when their keys
+    // fit the session's broadcast threshold
+    val inserts = matched.fold(src) { rows =>
+      val keys = rows.select(mergeKeys.map(col): _*)
+      val keyBytes = mergeKeys.map(k => schema(k).dataType.defaultSize).sum
+      val limit = org.apache.spark.sql.internal.SQLConf.get
+        .autoBroadcastJoinThreshold
+      src.join(
+        if (counts.values.sum * keyBytes <= limit) broadcast(keys) else keys,
+        mergeKeys, "left_anti")
+    }
       .select(mergeKeys.map(col) ++
         tgtCols.filterNot(mergeKeys.contains).map { c =>
           val f = schema(c)
@@ -3808,37 +3855,47 @@ final class VersionedTable(spark: SparkSession, root: String) {
       truncTests.forall(_(e))
   }
 
-  /** M5: restore — a NEW version whose manifest is a copy of the
-    * target's (Delta RESTORE semantics). No data is copied or moved;
-    * version numbers are never reused. */
   // ------------------------------------------------------------ bloom index
 
   private def bloomDirFor(v: Long, column: String) =
     new Path(root, s"_bloom/v$v/$column")
+
+  /** Bloom sidecar rows: one (file_rel, serialized bloom) per indexed
+    * file. Sidecars are always read with this schema: inferring it
+    * would cost a Spark job per read. */
+  private val bloomSchema = StructType(Seq(
+    org.apache.spark.sql.types.StructField("file_rel",
+      org.apache.spark.sql.types.StringType),
+    org.apache.spark.sql.types.StructField("bloom",
+      org.apache.spark.sql.types.BinaryType)))
+
+  private def readBloomRows(dir: Path): DataFrame =
+    spark.read.schema(bloomSchema).parquet(dir.toString)
 
   /** PER-FILE BLOOM-FILTER INDEX (Delta's bloom filter index): one
     * bloom per data file over `column`, for POINT-LOOKUP file
     * skipping where min/max stats are useless — a hash-distributed
     * key column spans the whole domain in every file, so range stats
     * prune nothing, but a bloom answers "this file definitely does
-    * not contain key k" per file. Built in ONE distributed pass:
-    * scan with file provenance, `xxhash64` the column (fixed 8-byte
-    * items whatever the type), one shuffle grouping by file, one
-    * bloom per file sized from the manifest's exact per-file row
-    * count. The sidecar (`_bloom/v<version>/<column>/`) is
-    * O(files × bits) — ~1 MB per 1M-row file at 3% fpp.
+    * not contain key k" per file. Built in ONE Spark job with no
+    * shuffle ([[bloomFrame]]): `xxhash64` the column (fixed 8-byte
+    * items whatever the type), one bloom per file sized from the
+    * manifest's exact per-file row count. The sidecar
+    * (`_bloom/v<version>/<column>/`) covers exactly the files of
+    * manifest `<version>` and is O(files × bits) — ~1 MB per 1M-row
+    * file at 3% fpp.
     *
     * Correctness is one-sided by construction: a bloom may claim a
     * key it doesn't hold (file read for nothing) but never misses
     * one it does, and files without a bloom are always read. Files
     * written after the build (plain appends) stay unindexed until
-    * the next maintenance pass; maintenance rewrites (OPTIMIZE /
-    * REORG PURGE / row-level UPDATE and DELETE) refresh the sidecar
-    * themselves ([[refreshBloomIndexes]]) so point-lookup skipping
-    * survives them with no manual rebuild — Delta's
-    * OPTIMIZE-preserves-index behavior. DV masks don't shrink blooms
-    * (deleted keys stay as false positives — reads stay correct, the
-    * row predicate still applies). */
+    * the next refresh; maintenance rewrites (OPTIMIZE / REORG PURGE)
+    * and row-level DML (MERGE, UPDATE, DELETE rewrites) refresh the
+    * sidecar themselves ([[refreshBloomIndexes]], one job) so
+    * point-lookup skipping survives them with no manual rebuild —
+    * Delta's OPTIMIZE-preserves-index behavior. DV masks don't shrink
+    * blooms (deleted keys stay as false positives — reads stay
+    * correct, the row predicate still applies). */
   def buildBloomIndex(column: String, fpp: Double = 0.03): Unit = {
     val curV = currentVersion.getOrElse(
       sys.error(s"table $root does not exist"))
@@ -3847,36 +3904,51 @@ final class VersionedTable(spark: SparkSession, root: String) {
       .getOrElse(sys.error(s"no column $column at $root"))
     val dir = bloomDirFor(curV, column)
     bloomFrame(m, m.entries, phys, fpp).write.mode(SaveMode.Overwrite)
-      .parquet(dir.toString)
+      .options(tableWriteOptions).parquet(dir.toString)
     writeFppMarker(dir, fpp)
   }
 
-  /** One (file_rel, serialized bloom) row per file of `entries` over
-    * PHYSICAL column `phys` — the shared distributed build pass of
+  /** One (file_rel, serialized bloom) row per non-empty file of
+    * `entries` over PHYSICAL column `phys` — the build pass shared by
     * [[buildBloomIndex]] (all files) and [[refreshBloomIndexes]]
-    * (only files missing a bloom). One scan of exactly `entries`,
-    * one shuffle grouping rows by file, each bloom sized from the
-    * manifest's exact per-file row count. */
-  private def bloomFrame(m: VersionManifest, entries: Seq[ManifestEntry],
-      phys: String, fpp: Double): DataFrame = {
+    * (files the old sidecar does not cover). Map-side, no shuffle: the
+    * scan plans every file whole into one task, whose rows of a file
+    * arrive together, so each task folds its files' hashes into one
+    * bloom per file, sized from the manifest's exact per-file row
+    * count. Bloom bits do not depend on insertion order, so the bytes
+    * equal a build that groups the hashes by file first. */
+  private[graft] def bloomFrame(m: VersionManifest,
+      entries: Seq[ManifestEntry], phys: String, fpp: Double): DataFrame = {
     import org.apache.spark.sql.functions.{col, xxhash64}
     import spark.implicits._
     val rowsByFile = entries.map(e => e.relPath -> e.rows).toMap
-    val scan = rawScan(m, entries, isStreaming = false,
-      withRowMeta = true)
-    val pairs = scan.select(
+    rawScan(m, entries, isStreaming = false, withRowMeta = true,
+        wholeFiles = true)
+      .select(
         fileRelCol(col(graftbridge.ManifestScan.FilePathCol))
           .as("file_rel"),
         xxhash64(col(phys)).as("h"))
       .as[(String, Long)]
-    pairs.groupByKey(_._1).mapGroups { (file, it) =>
-      val bf = org.apache.spark.util.sketch.BloomFilter.create(
-        math.max(1L, rowsByFile.getOrElse(file, 1L)), fpp)
-      it.foreach(t => bf.putLong(t._2))
-      val bos = new java.io.ByteArrayOutputStream()
-      bf.writeTo(bos)
-      (file, bos.toByteArray)
-    }.toDF("file_rel", "bloom")
+      .mapPartitions { it =>
+        val rows = it.buffered
+        val seen = scala.collection.mutable.HashSet.empty[String]
+        new Iterator[(String, Array[Byte])] {
+          def hasNext: Boolean = rows.hasNext
+          def next(): (String, Array[Byte]) = {
+            val file = rows.head._1
+            // a file split across runs would yield partial blooms,
+            // which skip files wrongly — fail instead
+            require(seen.add(file), s"bloom build saw $file twice in a task")
+            val bf = org.apache.spark.util.sketch.BloomFilter.create(
+              math.max(1L, rowsByFile.getOrElse(file, 1L)), fpp)
+            while (rows.hasNext && rows.head._1 == file)
+              bf.putLong(rows.next()._2)
+            val bos = new java.io.ByteArrayOutputStream()
+            bf.writeTo(bos)
+            (file, bos.toByteArray)
+          }
+        }
+      }.toDF("file_rel", "bloom")
   }
 
   /** The build fpp rides with the sidecar (`_fpp`, underscore-prefixed
@@ -3896,16 +3968,17 @@ final class VersionedTable(spark: SparkSession, root: String) {
   }
 
   /** Bring every bloom sidecar current with version `v` — called by
-    * the maintenance rewrites (OPTIMIZE / REORG PURGE / row-level
-    * UPDATE and DELETE), whose fresh output files would otherwise
-    * silently degrade to "always read" until a manual rebuild. Files
-    * that already have a bloom keep it (carried forward by a
-    * distributed semi-join — sidecar bytes never touch the driver);
-    * files missing one (the rewrite's output, plus any post-index
-    * appends swept up along the way) get blooms built by scanning
-    * ONLY those files. Cost O(un-indexed data + sidecar size), never
-    * a table scan; a no-op when no index exists or nothing is
-    * missing. */
+    * the maintenance rewrites (OPTIMIZE / REORG PURGE) and row-level
+    * DML, whose fresh output files would otherwise silently degrade to
+    * "always read" until a manual rebuild. ONE Spark job per indexed
+    * column, none when nothing is missing: sidecar `_bloom/v<bv>`
+    * covers exactly manifest `bv`'s files, so the files it lacks
+    * (the commit's output, plus any post-index appends swept up along
+    * the way) are known from the two manifests on the driver. One
+    * write then carries the old sidecar's rows for live files forward
+    * and appends map-side blooms ([[bloomFrame]]) scanned from ONLY
+    * the uncovered files — sidecar bytes never touch the driver. Cost
+    * O(uncovered data + sidecar size), never a table scan. */
   private[graft] def refreshBloomIndexes(v: Long): Unit = {
     val dir = new Path(root, "_bloom")
     if (!fs.exists(dir)) return
@@ -3926,7 +3999,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
 
   private def refreshBloomColumn(m: VersionManifest, v: Long,
       column: String, bv: Long): Unit = {
-    import org.apache.spark.sql.functions.broadcast
+    import org.apache.spark.sql.functions.{col, udf}
     import spark.implicits._
     // the indexed column may have been renamed/dropped since the
     // build — a vanished logical name quietly ends the index's life
@@ -3934,19 +4007,26 @@ final class VersionedTable(spark: SparkSession, root: String) {
     val phys = mappingOrIdentity(m).find(_._1 == column).map(_._2)
       .getOrElse(return)
     val oldDir = bloomDirFor(bv, column)
-    val old = spark.read.parquet(oldDir.toString)
-      .select("file_rel", "bloom")
-    // names only on the driver (manifest-sized, like the entries list)
-    val oldNames = old.select("file_rel").as[String].collect().toSet
-    val missing = m.entries.filterNot(e => oldNames.contains(e.relPath))
-    if (missing.isEmpty) return // every live file indexed; extras inert
+    val old = readBloomRows(oldDir)
+    // names only on the driver (manifest-sized, like the entries list);
+    // a vacuum may have dropped manifest bv, and then the names come
+    // from the sidecar itself (one extra job)
+    val covered: Set[String] =
+      if (manifestCommitted(bv)) readManifest(bv).entries.map(_.relPath).toSet
+      else old.select("file_rel").as[String].collect().toSet
+    val uncovered = m.entries.filterNot(e => covered.contains(e.relPath))
+    if (uncovered.isEmpty) return // every live file indexed; extras inert
     val fpp = readFppMarker(oldDir)
-    val live = m.entries.map(_.relPath).toDF("file_rel")
-    val out = old.join(broadcast(live), Seq("file_rel"), "left_semi")
-      .unionByName(bloomFrame(m, missing, phys, fpp))
-    val newDir = bloomDirFor(v, column)
-    out.write.mode(SaveMode.Overwrite).parquet(newDir.toString)
-    writeFppMarker(newDir, fpp)
+    val live = spark.sparkContext.broadcast(m.entries.map(_.relPath).toSet)
+    try {
+      val isLive = udf((f: String) => live.value.contains(f))
+      val out = old.filter(isLive(col("file_rel")))
+        .unionByName(bloomFrame(m, uncovered, phys, fpp))
+      val newDir = bloomDirFor(v, column)
+      out.write.mode(SaveMode.Overwrite).options(tableWriteOptions)
+        .parquet(newDir.toString)
+      writeFppMarker(newDir, fpp)
+    } finally live.destroy()
   }
 
   /** Newest version ≤ current with a bloom sidecar for `column`. */
@@ -3966,18 +4046,18 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * probe, plus every file without a bloom (post-index writes).
     * Exposed for the skip-count spec.
     *
-    * Scale shape: the per-file blooms are evaluated IN EXECUTORS —
-    * one distributed pass over the sidecar parquet — and only the
-    * NAMES of provably-unneeded files return to the driver
-    * (file-name-sized, like every other manifest-pruning path).
-    * Pulling the blooms themselves to the driver would be ~1 TB of
-    * sidecar bytes on a 100 TB table (~800K files × ~1.2 MB); driver
-    * cost here is O(file names), independent of bloom size. The
-    * probe hashes are computed in ONE one-row job whatever the probe
-    * count (not one job per value). */
+    * Scale shape: ONE Spark job. The per-file blooms are evaluated IN
+    * EXECUTORS — one distributed pass over the sidecar parquet, read
+    * with its known schema — and only the NAMES of provably-unneeded
+    * files return to the driver (file-name-sized, like every other
+    * manifest-pruning path). Pulling the blooms themselves to the
+    * driver would be ~1 TB of sidecar bytes on a 100 TB table (~800K
+    * files × ~1.2 MB); driver cost here is O(file names), independent
+    * of bloom size. The probe hashes are evaluated on the driver by
+    * the same `xxhash64` expression that built the index, no job. */
   private[graft] def bloomPlannedEntries(column: String,
       values: Seq[Any]): Seq[ManifestEntry] = {
-    import org.apache.spark.sql.functions.{lit, xxhash64}
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, XxHash64}
     import spark.implicits._
     val curV = currentVersion.getOrElse(
       sys.error(s"table $root does not exist"))
@@ -3986,16 +4066,13 @@ final class VersionedTable(spark: SparkSession, root: String) {
       case None => m.entries
       case Some(bv) =>
         val dt = logicalSchema(m)(column).dataType
-        // all probe hashes batched into one single-row projection,
-        // by the SAME Spark kernel that built the index (xxhash64 is
-        // type-sensitive — cast to the column type first)
-        val row = spark.range(1).select(values.zipWithIndex.map {
-          case (v, i) => xxhash64(lit(v).cast(dt)).as(s"h$i") }: _*)
-          .head()
-        val hs = Array.tabulate(values.size)(row.getLong)
-        val dropped = spark.read
-          .parquet(bloomDirFor(bv, column).toString)
-          .select("file_rel", "bloom").as[(String, Array[Byte])]
+        // xxhash64 is type-sensitive — cast to the column type first,
+        // in the session's time zone as the analyzer would
+        val tz = Some(spark.conf.get("spark.sql.session.timeZone"))
+        val hs = values.map(v => new XxHash64(Seq(Cast(Literal(v), dt, tz)))
+          .eval().asInstanceOf[Long]).toArray
+        val dropped = readBloomRows(bloomDirFor(bv, column))
+          .as[(String, Array[Byte])]
           .mapPartitions(_.collect {
             case (f, b)
               if !VersionedTable.bloomMightContainAny(b, hs) => f
@@ -4093,6 +4170,9 @@ final class VersionedTable(spark: SparkSession, root: String) {
     }
   }
 
+  /** M5: restore — a NEW version whose manifest is a copy of the
+    * target's (Delta RESTORE semantics). No data is copied or moved;
+    * version numbers are never reused. */
   def restore(v: Long): Unit = {
     require(manifestCommitted(v), s"version $v does not exist at $root")
     val m = readManifest(v)
@@ -4406,39 +4486,35 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * [[readWhereTimestamp]] dead on arrival. When the session sits on
     * that default, commits write TIMESTAMP_MICROS instead (the form
     * whose Long stats the manifest scrape records); a session that
-    * explicitly chose MILLIS/MICROS is left alone. */
+    * explicitly chose MILLIS/MICROS is left alone. The commit protocol
+    * comes from [[tableWriteOptions]]. */
   private def writeCommitData(df: DataFrame, parts: Seq[String],
       dir: Path): Unit = {
     val key = "spark.sql.parquet.outputTimestampType"
     val prev = spark.conf.get(key, "INT96")
     if (prev == "INT96") spark.conf.set(key, "TIMESTAMP_MICROS")
-    // Commit-protocol scope (restored below, engine commits only):
-    // readers are gated by the MANIFEST, never by directory state, and
-    // every attempt dir is writer-unique — so the v1 committer's
-    // driver-side rename pass over _temporary (plus its _SUCCESS
-    // marker file) buys nothing here. v2 renames in the tasks;
-    // a failed attempt's leftovers live in an attempt dir no manifest
-    // ever references. Driver stack sampling (round 18, post-fork-fix)
-    // put the v1 rename pass at ~half of writeCommitData's driver time
-    // on commit-heavy scenarios.
-    val algoKey =
-      "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version"
-    val succKey =
-      "spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs"
-    val prevAlgo = spark.conf.getOption(algoKey)
-    val prevSucc = spark.conf.getOption(succKey)
-    spark.conf.set(algoKey, "2")
-    spark.conf.set(succKey, "false")
     try {
-      val writer = df.write.mode(SaveMode.Overwrite)
+      val writer = df.write.mode(SaveMode.Overwrite).options(tableWriteOptions)
       (if (parts.nonEmpty) writer.partitionBy(parts: _*) else writer)
         .parquet(dir.toString)
     } finally {
       if (prev == "INT96") spark.conf.set(key, prev)
-      prevAlgo.fold(spark.conf.unset(algoKey))(spark.conf.set(algoKey, _))
-      prevSucc.fold(spark.conf.unset(succKey))(spark.conf.set(succKey, _))
     }
   }
+
+  /** Writer options of every parquet write under the table root (commit
+    * data, DV and bloom sidecars). Readers are gated by the MANIFEST,
+    * never by directory state, and every attempt dir is writer-unique,
+    * so the v1 committer's driver-side rename pass over `_temporary` and
+    * its `_SUCCESS` marker buy nothing here: committer v2 renames in the
+    * tasks, and a failed attempt's leftovers live in a dir no manifest
+    * references. They are writer options, not session settings, because
+    * only options reach the write job's Hadoop configuration
+    * (`spark.hadoop.*` set at runtime is copied verbatim, prefix and
+    * all). */
+  private val tableWriteOptions = Map(
+    "mapreduce.fileoutputcommitter.algorithm.version" -> "2",
+    "mapreduce.fileoutputcommitter.marksuccessfuljobs" -> "false")
 
   /** Table-root-relative path. Both sides are qualified through the
     * FileSystem first: listStatus returns scheme-qualified paths
@@ -4955,16 +5031,19 @@ final class VersionedTable(spark: SparkSession, root: String) {
       // without libhadoop — two process spawns per commit, on every
       // committing query (driver stack sampling, round 18) — and the
       // checksummed fs.create would leave an orphaned `.crc` sibling
-      // behind the raw rename anyway (the pointer is advisory; no
-      // reader verifies it).
+      // behind the raw rename anyway. A `._latest.crc` left by an
+      // earlier checksummed write no longer matches the new bytes, so
+      // a checksummed read of the pointer would fail: delete it.
       if (fs.getUri.getScheme == "file") {
         val tmpNio = java.nio.file.Paths.get(tmp.toUri.getPath)
+        val latestNio = java.nio.file.Paths.get(latestPath.toUri.getPath)
         java.nio.file.Files.write(tmpNio,
           v.toString.getBytes(StandardCharsets.UTF_8))
-        java.nio.file.Files.move(tmpNio,
-          java.nio.file.Paths.get(latestPath.toUri.getPath),
+        java.nio.file.Files.move(tmpNio, latestNio,
           java.nio.file.StandardCopyOption.ATOMIC_MOVE,
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        java.nio.file.Files.deleteIfExists(
+          latestNio.resolveSibling("._latest.crc"))
       } else {
         val out = fs.create(tmp, true)
         try out.write(v.toString.getBytes(StandardCharsets.UTF_8))

@@ -62,9 +62,13 @@ object Streaming {
       case Some(children) => children.map(c => dirBytes(c.getPath)).sum
       case None =>
         try {
+          // the active session's Hadoop configuration carries the
+          // credentials and filesystem settings a remote probe needs
+          val conf = SparkSession.getActiveSession
+            .map(_.sparkContext.hadoopConfiguration)
+            .getOrElse(new org.apache.hadoop.conf.Configuration())
           val p = new org.apache.hadoop.fs.Path(path)
-          p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-            .getContentSummary(p).getLength
+          p.getFileSystem(conf).getContentSummary(p).getLength
         } catch { case scala.util.control.NonFatal(_) => -1L }
     }
   }

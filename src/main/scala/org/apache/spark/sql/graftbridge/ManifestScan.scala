@@ -96,6 +96,12 @@ final class ManifestFileIndex(
   override def sizeInBytes: Long = files.map(_.bytes).sum
 }
 
+/** Parquet that never splits a file across scan tasks. */
+final class WholeFileParquetFormat extends ParquetFileFormat {
+  override def isSplitable(sparkSession: SparkSession,
+      options: Map[String, String], path: Path): Boolean = false
+}
+
 /** Entry point: plan a parquet scan over an explicit manifest.
   * Lives in an `org.apache.spark.sql` subpackage because
   * `HadoopFsRelation`/`LogicalRelation`/`Dataset.ofRows` are
@@ -119,11 +125,13 @@ object ManifestScan {
     * MicroBatchExecution asserts the flag on every V1 getBatch
     * result, exactly as FileStreamSource sets it). `rowMeta` appends
     * [[FilePathCol]]/[[RowIndexCol] from the parquet reader's
-    * `_metadata` struct. */
+    * `_metadata` struct. `wholeFiles` plans every file into ONE task,
+    * never split across tasks, so a per-task pass sees each file's rows
+    * together and in order. */
   def parquetTable(spark: SparkSession, root: Path,
       snapshotSchema: StructType, partitionColumns: Seq[String],
       files: Seq[ManifestFile], isStreaming: Boolean = false,
-      rowMeta: Boolean = false): DataFrame = {
+      rowMeta: Boolean = false, wholeFiles: Boolean = false): DataFrame = {
     val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val partitionSchema = StructType(
       partitionColumns.map(c => snapshotSchema(snapshotSchema.fieldIndex(c))))
@@ -132,7 +140,9 @@ object ManifestScan {
     val index = new ManifestFileIndex(root, files, partitionSchema,
       cs.sessionState.conf.sessionLocalTimeZone)
     val relation = HadoopFsRelation(index, partitionSchema, dataSchema,
-      bucketSpec = None, new ParquetFileFormat, options = Map.empty)(cs)
+      bucketSpec = None,
+      if (wholeFiles) new WholeFileParquetFormat else new ParquetFileFormat,
+      options = Map.empty)(cs)
     val df = org.apache.spark.sql.classic.Dataset.ofRows(
       cs, LogicalRelation(relation, isStreaming))
     // HadoopFsRelation appends partition columns after the data columns;

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.io.VersionedTable
+import graft.io.{ManifestEntry, VersionedTable}
 
 /** Per-file bloom index: point-lookup file skipping with one-sided
   * error — files may be read for nothing, never skipped wrongly.
@@ -105,27 +105,13 @@ class BloomIndexSpec extends AnyFunSuite {
     "the probe count") {
     val vt = scattered(1000)
     vt.buildBloomIndex("k")
-    def jobsFor(probes: Seq[Any]): Int = {
-      val sc = spark.sparkContext
-      val group = s"bloom-probe-${probes.size}"
-      sc.setJobGroup(group, "bloom probe batching pin")
-      try vt.bloomPlannedEntries("k", probes)
-      finally sc.clearJobGroup()
-      // the status store is fed asynchronously — poll to stability
-      var last = -1
-      var cur = sc.statusTracker.getJobIdsForGroup(group).length
-      var spins = 0
-      while ((cur != last || cur == 0) && spins < 50) {
-        Thread.sleep(100); last = cur; spins += 1
-        cur = sc.statusTracker.getJobIdsForGroup(group).length
-      }
-      cur
-    }
+    def jobsFor(probes: Seq[Any]): Int =
+      SparkJobs.count(spark)(vt.bloomPlannedEntries("k", probes))
     val few = jobsFor(Seq(1L, 2L))
     val many = jobsFor(1L to 40L)
     assert(few > 0 && few === many,
       s"job count must not grow with probe count: $few vs $many " +
-        "(one batched hash job + one sidecar pass)")
+        "(probes hash on the driver; one sidecar pass)")
   }
 
   test("planning never deserializes a bloom on the driver (lexical pin)") {
@@ -175,5 +161,113 @@ class BloomIndexSpec extends AnyFunSuite {
     val all = vt.manifestEntries(vt.currentVersion.get)
     assert(vt.bloomPlannedEntries("k", Seq(77L)).size < all.size)
     assert(vt.readWhereKeyIn("k", Seq(77L)).count() === 1)
+  }
+
+  /** Every live non-empty file's bloom as a build that groups each
+    * file's `xxhash64` values first would make it: the file read on its
+    * own, one bloom sized from its manifest row count. */
+  private def groupedBlooms(root: String, entries: Seq[ManifestEntry],
+      column: String, fpp: Double): Map[String, Seq[Byte]] =
+    entries.filter(_.rows > 0).map { e =>
+      val bf = org.apache.spark.util.sketch.BloomFilter.create(e.rows, fpp)
+      spark.read.parquet(s"$root/${e.relPath}")
+        .select(xxhash64(col(column))).as[Long].collect()
+        .foreach(h => bf.putLong(h))
+      val bos = new java.io.ByteArrayOutputStream()
+      bf.writeTo(bos)
+      e.relPath -> bos.toByteArray.toSeq
+    }.toMap
+
+  private def sidecar(root: String, v: Long,
+      column: String): Map[String, Seq[Byte]] =
+    spark.read.parquet(s"$root/_bloom/v$v/$column")
+      .as[(String, Array[Byte])].collect()
+      .map { case (f, b) => f -> b.toSeq }.toMap
+
+  /** The refreshed sidecar of the current version covers every live
+    * non-empty file, with bytes equal to the grouped build and to
+    * `bloomFrame`, for the files `added` in particular (a commit may
+    * add an empty file, which has no bloom in either build). */
+  private def assertSidecarCurrent(vt: VersionedTable, root: String,
+      column: String, added: Set[String]): Unit = {
+    val v = vt.currentVersion.get
+    val live = vt.manifestEntries(v)
+    assert(added.subsetOf(live.map(_.relPath).toSet))
+    val got = sidecar(root, v, column)
+    val want = groupedBlooms(root, live, column, 0.03)
+    assert(got.keySet === want.keySet, "sidecar must cover every live file")
+    val addedRows = added.intersect(want.keySet)
+    assert(addedRows.nonEmpty, s"no added file holds rows: $added")
+    addedRows.foreach(f => assert(got(f) === want(f), s"bloom of $f"))
+    assert(got === want)
+    val m = vt.currentManifest
+    val built = vt.bloomFrame(m, m.entries, column, 0.03)
+      .as[(String, Array[Byte])].collect()
+      .map { case (f, b) => f -> b.toSeq }.toMap
+    assert(got === built, "refresh must equal a full bloomFrame build")
+  }
+
+  private def addedBy(vt: VersionedTable, v: Long): Set[String] =
+    vt.manifestEntries(v).map(_.relPath).toSet --
+      vt.manifestEntries(v - 1).map(_.relPath)
+
+  test("refresh after a merge: unpartitioned, blooms byte-identical") {
+    val root = Fixtures.tempDir("bloom-refresh-flat") + "/tbl"
+    val vt = new VersionedTable(spark, root)
+    vt.write((1L to 3000L).map(i => (i, s"v$i")).toDF("k", "s")
+      .repartition(4, col("k")))
+    vt.buildBloomIndex("k")
+    val v = vt.mergeVectorized(((10L to 40L).map(i => (i, "u")) ++
+      (5000L to 5040L).map(i => (i, "n"))).toDF("k", "s"), Seq("k"))
+    assertSidecarCurrent(vt, root, "k", addedBy(vt, v))
+    assert(vt.readWhereKeyIn("k", Seq(20L, 5020L)).count() === 2)
+  }
+
+  test("refresh after a multi-file commit on a partitioned table") {
+    val root = Fixtures.tempDir("bloom-refresh-part") + "/tbl"
+    val vt = new VersionedTable(spark, root)
+    vt.write((1L to 3000L).map(i => (i, s"p${i % 3}", i * 2)).toDF("k", "p", "x")
+      .repartition(2, col("k")), partitionBy = Some(Seq("p")))
+    vt.buildBloomIndex("k")
+    // the update's images land in every partition: one file each
+    val v = vt.updateVectorizedWhere(col("k") % 50 === 0,
+      Map("x" -> lit(-1L)))
+    val added = addedBy(vt, v)
+    assert(added.size >= 3, s"expected a multi-file commit: $added")
+    assertSidecarCurrent(vt, root, "k", added)
+    assert(vt.readWhereKeyIn("k", Seq(100L)).select("x").as[Long]
+      .collect().toSeq === Seq(-1L))
+  }
+
+  test("refresh after a multi-file merge sweeps up a post-index append") {
+    val root = Fixtures.tempDir("bloom-refresh-sweep") + "/tbl"
+    val vt = new VersionedTable(spark, root)
+    vt.write((1L to 2000L).map(i => (i, s"v$i")).toDF("k", "s")
+      .repartition(4, col("k")))
+    vt.buildBloomIndex("k")
+    val appended = vt.write((3000L to 3100L).map(i => (i, s"a$i"))
+      .toDF("k", "s"), SaveMode.Append)
+    val late = addedBy(vt, appended)
+    val v = vt.mergeVectorized((100L to 400L).map(i => (i, "u"))
+      .toDF("k", "s").repartition(3), Seq("k"))
+    val merged = addedBy(vt, v)
+    assert(merged.size >= 2, s"expected a multi-file commit: $merged")
+    assertSidecarCurrent(vt, root, "k", merged ++ late)
+    assert(vt.readWhereKeyIn("k", Seq(3050L, 200L)).count() === 2)
+  }
+
+  test("refresh reads covered names from the sidecar once vacuum " +
+    "dropped the index's manifest") {
+    val root = Fixtures.tempDir("bloom-refresh-vacuum") + "/tbl"
+    val vt = new VersionedTable(spark, root)
+    vt.write((1L to 2000L).map(i => (i, s"v$i")).toDF("k", "s")
+      .repartition(4, col("k")))
+    vt.buildBloomIndex("k")
+    val late = addedBy(vt, vt.write(Seq((9000L, "a")).toDF("k", "s"),
+      SaveMode.Append))
+    vt.write(Seq((9001L, "b")).toDF("k", "s"), SaveMode.Append)
+    vt.vacuum(retainVersions = 1, orphanGraceMs = 0L)
+    val v = vt.updateVectorizedWhere(col("k") === 5L, Map("s" -> lit("x")))
+    assertSidecarCurrent(vt, root, "k", addedBy(vt, v) ++ late)
   }
 }

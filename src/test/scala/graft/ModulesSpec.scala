@@ -113,6 +113,26 @@ class UpsertSpec extends AnyFunSuite {
     assert(wm1.toString > wm0.toString)
   }
 
+  test("getWatermark reads a versioned table's current snapshot") {
+    val root = Fixtures.tempDir("graft-wm-versioned") + "/silver"
+    val vt = new VersionedTable(spark, root)
+    def ts(s: String) = java.sql.Timestamp.valueOf(s)
+    vt.write(Seq((1L, ts("2023-01-01 00:00:00")), (2L, ts("2023-01-05 00:00:00")))
+      .toDF("id", "ts"))
+    assert(Incremental.getWatermark(spark, root, "ts") ===
+      Some(ts("2023-01-05 00:00:00")))
+    vt.write(Seq((3L, ts("2023-02-01 00:00:00"))).toDF("id", "ts"),
+      SaveMode.Append)
+    assert(Incremental.getWatermark(spark, root, "ts") ===
+      Some(ts("2023-02-01 00:00:00")))
+    // a DV delete masks the newest row: the snapshot, not the files,
+    // decides the watermark
+    vt.deleteVectorizedWhere(col("id") === 3L)
+    assert(Incremental.getWatermark(spark, root, "ts") ===
+      Some(ts("2023-01-05 00:00:00")))
+    assert(Incremental.getWatermark(spark, root, "no_such_column") === None)
+  }
+
   test("partition-scoped merge rewrites only touched partitions") {
     val base = Fixtures.tempDir("graft-merge-scoped")
     val path = s"$base/t"
@@ -663,6 +683,28 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(vt.currentVersion === Some(5L))
     val v6 = vt.write(Seq((4, "d")).toDF("id", "s"), SaveMode.Append)
     assert(v6 === 6L && vt.read().count() === 4)
+  }
+
+  test("a pointer written by the checksummed path: the next commit " +
+    "swaps it cleanly and leaves no stale checksum") {
+    val root = Fixtures.tempDir("graft-vt-crc") + "/tbl"
+    val vt = new VersionedTable(spark, root)
+    vt.write(Seq((1, "a")).toDF("id", "s")) // v0
+    // the checksummed FileSystem writes `._latest.crc` beside the pointer
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
+    val latest = new org.apache.hadoop.fs.Path(root, "_latest")
+    val out = fs.create(latest, true)
+    out.write("0".getBytes("UTF-8")); out.close()
+    val crc = new java.io.File(root, "._latest.crc")
+    assert(crc.exists())
+    assert(vt.write(Seq((2, "b")).toDF("id", "s"), SaveMode.Append) === 1L)
+    assert(!crc.exists(), "a stale ._latest.crc must not survive the swap")
+    assert(new java.io.File(root).listFiles().forall(!_.getName.endsWith(".crc")))
+    // a checksummed read of the pointer now verifies
+    val in = fs.open(latest)
+    val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    assert(text === "1" && vt.read().count() === 2)
   }
 
   test("append is O(delta): prior version's files untouched, only new files written") {
