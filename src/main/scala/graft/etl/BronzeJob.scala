@@ -3,7 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.config.PipelineConfig
-import graft.io.TableIO
+import graft.io.{TableIO, WriteLayout}
 import graft.model.Schemas
 import graft.util.Cols
 
@@ -12,7 +12,8 @@ import graft.util.Cols
   *
   * read CSV (header + inferSchema) → add ingestion_ts/source_file →
   * derive trip_date partition column → validate against the bronze
-  * schema (extras allowed) → write partitioned parquet.
+  * schema (extras allowed) → write partitioned parquet, one file per
+  * day ([[WriteLayout.byPartitionValue]]).
   */
 object BronzeJob {
 
@@ -65,11 +66,10 @@ object BronzeJob {
 
     val partCol = Option.when(cfg.partitioning.enabled)(
       cfg.partitioning.bronzePartitionColumn)
-    TableIO.writeTable(spark, df, cfg.paths.bronze, mode, partCol,
-      cfg.versionedTables)
+    TableIO.writeTable(spark, WriteLayout.byPartitionValue(df, partCol),
+      cfg.paths.bronze, mode, partCol, cfg.versionedTables)
 
-    val written = TableIO.readTable(spark, cfg.paths.bronze).count()
-    Result(rowsIngested, written, errors, dq)
+    Result(rowsIngested, TableIO.rowCount(spark, cfg.paths.bronze), errors, dq)
     } finally raw.unpersist() // also on the fail-on-DQ throw path
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.config.PipelineConfig
-import graft.io.TableIO
+import graft.io.{TableIO, WriteLayout}
 import graft.model.Schemas
 import graft.util.Cols
 
@@ -84,7 +84,7 @@ object SilverJob {
   def run(spark: SparkSession, cfg: PipelineConfig,
       mode: SaveMode = SaveMode.Overwrite): Result = {
     val bronze = TableIO.readTable(spark, cfg.paths.bronze)
-    val rowsIn = bronze.count()
+    val rowsIn = TableIO.rowCount(spark, cfg.paths.bronze)
 
     val typed = castColumns(bronze)
     // Persist the filtered frame: it feeds the row-count action, the
@@ -118,10 +118,10 @@ object SilverJob {
 
     val partCol = Option.when(cfg.partitioning.enabled)(
       cfg.partitioning.silverPartitionColumn)
-    TableIO.writeTable(spark, withPartition, cfg.paths.silver, mode,
-      partCol, cfg.versionedTables)
+    TableIO.writeTable(spark, WriteLayout.byPartitionValue(withPartition,
+      partCol), cfg.paths.silver, mode, partCol, cfg.versionedTables)
 
-    val rowsAfterDedup = TableIO.readTable(spark, cfg.paths.silver).count()
+    val rowsAfterDedup = TableIO.rowCount(spark, cfg.paths.silver)
     filtered.unpersist()
     Result(rowsIn, rowsAfterFilter, rowsAfterDedup, errors, dq)
   }

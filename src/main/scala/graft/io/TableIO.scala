@@ -69,7 +69,11 @@ object TableIO {
     * the column in the manifest (it is then inherited by later writes
     * that pass none, and powers manifest-level partition pruning);
     * a plain table partitions the directory layout. Either way the
-    * column is ignored, as in [[write]], when the frame lacks it. */
+    * column is ignored, as in [[write]], when the frame lacks it.
+    * Each write task writes one file per partition value it holds, so
+    * an unclustered frame commits tasks × values files; callers that
+    * want one file per value cluster first
+    * ([[WriteLayout.byPartitionValue]]). */
   def writeTable(spark: SparkSession, df: DataFrame, path: String,
       mode: SaveMode, partitionBy: Option[String],
       versioned: Boolean): Unit =
@@ -85,6 +89,13 @@ object TableIO {
   def readTable(spark: SparkSession, path: String): DataFrame = {
     val vt = new VersionedTable(spark, path)
     if (vt.exists) vt.read() else read(spark, path)
+  }
+
+  /** Rows [[readTable]] returns: summed from a versioned table's
+    * manifest (no Spark job), counted by a scan of a plain table. */
+  def rowCount(spark: SparkSession, path: String): Long = {
+    val vt = new VersionedTable(spark, path)
+    if (vt.exists) vt.liveRowCount() else read(spark, path).count()
   }
 
   /** Temp path for an atomic-as-possible dir swap. MUST start with an

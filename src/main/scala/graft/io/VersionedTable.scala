@@ -453,6 +453,12 @@ final class VersionedTable(spark: SparkSession, root: String) {
   def read(): DataFrame = readVersion(
     currentVersion.getOrElse(sys.error(s"table $root does not exist")))
 
+  /** Rows [[read]] returns, from the manifest alone: each entry's
+    * footer row count minus its deletion-vector masked rows. No Spark
+    * job, where `read().count()` scans every file. */
+  def liveRowCount(): Long = manifestEntries(currentVersion.getOrElse(
+    sys.error(s"table $root does not exist"))).map(_.liveRows).sum
+
   /** S4: time-travel read at an explicit version. Plans against the
     * manifest's recorded snapshot schema — no per-file inference. */
   def readVersion(v: Long): DataFrame = {
@@ -509,13 +515,19 @@ final class VersionedTable(spark: SparkSession, root: String) {
       isStreaming: Boolean, withRowMeta: Boolean,
       wholeFiles: Boolean = false): DataFrame = {
     val qualifiedRoot = fs.makeQualified(rootPath)
-    val files = entries.map(e => graftbridge.ManifestFile(
-      new Path(qualifiedRoot, e.relPath).toString, e.bytes,
-      e.partitionValues))
+    val files = scanFiles(qualifiedRoot, entries)
     graftbridge.ManifestScan.parquetTable(spark, qualifiedRoot,
       snapshotSchema(m), m.partitionBy, files, isStreaming, withRowMeta,
-      wholeFiles)
+      wholeFiles, scanSkipping(m, entries, files))
   }
+
+  /** Entries as the scan's file index sees them: qualified path, exact
+    * size and partition values. */
+  private def scanFiles(qualifiedRoot: Path, entries: Seq[ManifestEntry])
+      : Seq[graftbridge.ManifestFile] =
+    entries.map(e => graftbridge.ManifestFile(
+      new Path(qualifiedRoot, e.relPath).toString, e.bytes,
+      e.partitionValues))
 
   /** Length of the qualified-root prefix every scanned file path
     * carries; +1 more for the separating '/' is applied at use sites.
@@ -1763,8 +1775,8 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * tree (Delta's stats-based skipping applied to DML candidates):
     * walk the Catalyst tree of `pred` and compose per-file may-match
     * tests from the conjuncts it can reason about — `=`, `<`, `<=`,
-    * `>`, `>=`, `<=>`, `BETWEEN` (parses to AND), `IN` (literal-list
-    * envelope), and `startsWith`/prefix-`LIKE`, each against a bare
+    * `>`, `>=`, `<=>`, `BETWEEN` (parses to AND), `IN` (each listed
+    * value), and `startsWith`/prefix-`LIKE`, each against a bare
     * column and a literal, pruned through the manifest's numeric or
     * short-ASCII string min/max stats (or an exact partition value).
     * plus `IS [NOT] NULL` against recorded per-file null counts (and
@@ -1774,18 +1786,46 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * is conservatively non-skipping (the test answers "may match";
     * the row-level filter decides). Strict bounds are widened to
     * inclusive (a superset — sound), a finite numeric bound beyond
-    * 2^53 refuses to prune (stats are doubles), and a numeric literal
-    * against a string-stats column (or vice versa) finds no stats and
-    * passes every file. The walk runs on the UNRESOLVED tree, so no
-    * implicit casts hide a column. */
+    * 2^53 or a NaN bound refuses to prune (stats are doubles, and
+    * Spark orders NaN above every number), decimal stats never prune
+    * (parquet records them unscaled), and a numeric literal against a
+    * string-stats column (or vice versa) finds no stats and passes
+    * every file. A file holding NaN records no range for that column
+    * (the footer scrape drops it), so its rows above every bound stay
+    * reachable. The walk runs on the UNRESOLVED tree, so no implicit
+    * casts hide a column. */
   private[graft] def predicateMayMatch(m: VersionManifest,
-      pred: org.apache.spark.sql.Column): ManifestEntry => Boolean = {
+      pred: org.apache.spark.sql.Column): ManifestEntry => Boolean =
+    exprMayMatch(m, graftbridge.ColumnBridge.catalystExpression(pred),
+      logicalSchema(m), physFor(m, _))
+
+  /** [[predicateMayMatch]] for the filters Spark pushes into a scan of
+    * this table's files: resolved expressions over PHYSICAL column
+    * names (a renamed column reaches the scan under its physical name),
+    * so the same analyzer skips files for reads and for DML. */
+  private def scanSkipping(m: VersionManifest,
+      entries: Seq[ManifestEntry], files: Seq[graftbridge.ManifestFile])
+      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
+        graftbridge.ManifestFile => Boolean = {
+    case Seq() => _ => true
+    case filters =>
+      val test = exprMayMatch(m,
+        filters.reduce(org.apache.spark.sql.catalyst.expressions.And(_, _)),
+        snapshotSchema(m), identity)
+      val kept = files.iterator.zip(entries.iterator)
+        .collect { case (f, e) if test(e) => f.path }.toSet
+      f => kept(f.path)
+  }
+
+  private def exprMayMatch(m: VersionManifest,
+      pred: org.apache.spark.sql.catalyst.expressions.Expression,
+      schema: StructType, physOf: String => String)
+      : ManifestEntry => Boolean = {
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     import org.apache.spark.sql.catalyst.expressions._
     import org.apache.spark.sql.types._
     val partCols = m.partitionBy.toSet
     val all: ManifestEntry => Boolean = _ => true
-    val schema = logicalSchema(m)
     def attr(e: Expression): Option[String] = e match {
       case a: UnresolvedAttribute if a.nameParts.length == 1 =>
         Some(a.nameParts.head)
@@ -1849,9 +1889,12 @@ final class VersionedTable(spark: SparkSession, root: String) {
     }
     def range(name: String, lo: Double, hi: Double)
         : ManifestEntry => Boolean =
-      if ((!lo.isInfinite && math.abs(lo) > 9007199254740992.0) ||
+      if (lo.isNaN || hi.isNaN ||
+          (!lo.isInfinite && math.abs(lo) > 9007199254740992.0) ||
           (!hi.isInfinite && math.abs(hi) > 9007199254740992.0)) all
-      else rangeMayMatch(partCols, physFor(m, name), lo, hi) _
+      else if (!partCols.contains(physOf(name)) && schema.fields.exists(f =>
+          f.name == name && f.dataType.isInstanceOf[DecimalType])) all
+      else rangeMayMatch(partCols, physOf(name), lo, hi) _
     // a string envelope is only sound on a DECLARED string column:
     // strRangeMayMatch's partition branch compares partition values
     // LEXICALLY, which on a numeric partition column would prune
@@ -1860,7 +1903,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
         : ManifestEntry => Boolean =
       if (!schema.fields.exists(f =>
           f.name == name && f.dataType == StringType)) all
-      else strRangeMayMatch(partCols, physFor(m, name), lo, hi) _
+      else strRangeMayMatch(partCols, physOf(name), lo, hi) _
     // (column, literal) of a comparison, either operand order;
     // `flip` = the literal was on the LEFT (so `5 <= c` is `c >= 5`).
     // A string literal against a temporal column converts to the
@@ -1898,22 +1941,25 @@ final class VersionedTable(spark: SparkSession, root: String) {
           else srange(n, s, "\uffff")
         case None => all
       }
+    // a file may match IN when it may hold one of the listed values
+    def anyOf[V](vs: Seq[V])(test: V => ManifestEntry => Boolean)
+        : ManifestEntry => Boolean = {
+      val tests = vs.distinct.map(test)
+      en => tests.exists(_(en))
+    }
     def inTest(a: Expression, vs: Seq[Expression]): ManifestEntry => Boolean =
       attr(a) match {
         case Some(n) if vs.nonEmpty =>
           val nums = vs.map(numOf)
           val strs = vs.map(strOf)
-          if (nums.forall(_.isDefined)) {
-            val ds = nums.flatten
-            range(n, ds.min, ds.max)
-          } else if (strs.forall(_.isDefined)) {
+          if (nums.forall(_.isDefined)) anyOf(nums.flatten)(d => range(n, d, d))
+          else if (strs.forall(_.isDefined)) {
             val ss = strs.flatten
             val temps = ss.map(temporalOf(n, _))
-            if (temps.forall(_.isDefined)) {
-              // IN over date/timestamp strings: numeric envelope
-              val ds = temps.flatten
-              range(n, ds.min, ds.max)
-            } else srange(n, ss.min, ss.max)
+            // IN over date/timestamp strings: their numeric units
+            if (temps.forall(_.isDefined))
+              anyOf(temps.flatten)(d => range(n, d, d))
+            else anyOf(ss)(v => srange(n, v, v))
           } else all
         case _ => all
       }
@@ -1935,7 +1981,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
         : ManifestEntry => Boolean =
       attr(a) match {
         case Some(n) =>
-          val phys = physFor(m, n)
+          val phys = physOf(n)
           (e: ManifestEntry) =>
             if (partCols.contains(phys))
               e.partitionValues.get(phys) match {
@@ -1973,6 +2019,9 @@ final class VersionedTable(spark: SparkSession, root: String) {
       case GreaterThan(l, r) => boundTest(l, r, upper = false)
       case GreaterThanOrEqual(l, r) => boundTest(l, r, upper = false)
       case In(a, vs) => inTest(a, vs)
+      // the optimizer's form of a long IN list: internal values
+      case InSet(a, hs) if a.resolved =>
+        inTest(a, hs.toSeq.map(Literal(_, a.dataType)))
       // parsed SQL BETWEEN is a RuntimeReplaceable node PRE-analysis
       // (it only desugars to >= AND <= later); compose the two bounds
       case b: Between =>
@@ -2015,7 +2064,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
         }
       case _ => all
     }
-    build(graftbridge.ColumnBridge.catalystExpression(pred))
+    build(pred)
   }
 
   /** [[scanMayMatch]] for a STRING key column — the doc-id /
@@ -2915,14 +2964,13 @@ final class VersionedTable(spark: SparkSession, root: String) {
   private def rawScanRid(m: VersionManifest,
       entries: Seq[ManifestEntry]): DataFrame = {
     val qualifiedRoot = fs.makeQualified(rootPath)
-    val files = entries.map(e => graftbridge.ManifestFile(
-      new Path(qualifiedRoot, e.relPath).toString, e.bytes,
-      e.partitionValues))
     val ext = StructType(snapshotSchema(m).fields :+
       org.apache.spark.sql.types.StructField(RowIdPhysCol,
         org.apache.spark.sql.types.LongType, nullable = true))
+    val files = scanFiles(qualifiedRoot, entries)
     graftbridge.ManifestScan.parquetTable(spark, qualifiedRoot, ext,
-      m.partitionBy, files, isStreaming = false, rowMeta = true)
+      m.partitionBy, files, isStreaming = false, rowMeta = true,
+      dataSkipping = scanSkipping(m, entries, files))
   }
 
   /** Change feed WITH UPDATE IMAGES (Delta CDF `update_preimage` /
@@ -4623,8 +4671,13 @@ final class VersionedTable(spark: SparkSession, root: String) {
                       }
                     case _ => None
                   }
+                // DECIMAL stats are the UNSCALED integers (150 for
+                // 1.50): no unit the double-valued ranges compare in
+                val isDecimal = c.getPrimitiveType.getLogicalTypeAnnotation
+                  .isInstanceOf[org.apache.parquet.schema.LogicalTypeAnnotation
+                    .DecimalLogicalTypeAnnotation]
                 val range: Option[(Double, Double)] =
-                  if (st == null || !st.hasNonNullValue) None
+                  if (st == null || !st.hasNonNullValue || isDecimal) None
                   else (st.genericGetMin, st.genericGetMax) match {
                     case (mn: java.lang.Integer, mx: java.lang.Integer) =>
                       Some((mn.toDouble, mx.toDouble))

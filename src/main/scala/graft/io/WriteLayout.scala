@@ -1,27 +1,27 @@
 package graft.io
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
-/** Write-side clustering for hive-partitioned index commits.
+/** Write-side clustering for hive-partitioned commits.
   *
   * An UNCLUSTERED `partitionBy(col)` write has every write task emit
   * one file per partition value it sees — `shuffle.partitions ×
   * values` small files, a per-file commit cost (create + footer read
   * + manifest entry) that GROWS with core count: q88's bm25 postings
   * build measured 3× FASTER on 8 cores than 32 before clustering
-  * (c8/c32 ratio 0.35). Clustered, the file count is `values ×
-  * salt-fanout` regardless of cores.
+  * (c8/c32 ratio 0.35). Clustered, the file count follows the number
+  * of values regardless of cores.
   *
-  * The salt fanout is bytes-derived like the streaming state sizing
-  * (guide §2: make partitioning scale-adaptive, never a local
-  * constant): one extra write task per ~128 MB of input per partition
-  * value, so a 100 TB corpus still writes ~128 MB files at full
-  * cluster width while a KB-scale commit writes exactly one file per
-  * value. Catalyst reports UNKNOWN sizes as an EB-scale default (e.g.
-  * a streaming micro-batch plan); anything past 1 PB is treated as
-  * unmeasured and fails OPEN to the session's shuffle width — the
-  * pre-clustering task count, never a blown Int.
+  * The clustering is a REBALANCE hint, sized by adaptive execution from
+  * the shuffle's measured bytes rather than from a planner estimate
+  * (those inflate through joins above checkpointed frames: q70's
+  * vectors⋈codes estimated ~GBs for a 2 MB frame): small values share
+  * a write task, and a value past the advisory partition size splits
+  * across several, so a 100 TB input still writes advisory-sized files
+  * at full cluster width while a KB-scale commit writes exactly one
+  * file per value. With adaptive execution off the hint is a plain
+  * hash repartition: still one file per value, with no split.
   *
   * Layout-only: results, the hive directory layout, and partition
   * pruning are unchanged. Deliberately OPT-IN per call site — layout
@@ -29,34 +29,12 @@ import org.apache.spark.sql.functions._
   * upstream and must not be re-shuffled here. */
 object WriteLayout {
 
-  /** `df` clustered for a `partitionBy(partCol)` write of ~`nValues`
-    * distinct partition values; `saltKey` spreads one value's rows
-    * across the fanout when the input is big enough to need it (pick
-    * a high-cardinality column, e.g. the row id). */
-  def clustered(df: DataFrame, partCol: String, nValues: Int,
-      saltKey: Column, sizeFrom: Option[DataFrame] = None): DataFrame = {
-    val n = math.max(1, nValues)
-    val srcBytes: Long =
-      try sizeFrom.getOrElse(df).queryExecution.optimizedPlan.stats
-        .sizeInBytes.min(BigInt(Long.MaxValue)).toLong
-      catch { case scala.util.control.NonFatal(_) => -1L }
-    val shufflePar = math.max(1L, df.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toLong)
-    val fanout: Long =
-      if (srcBytes < 0L || srcBytes > (1L << 50))
-        math.max(1L, shufflePar / n)
-      else 1L + srcBytes / (n.toLong * (128L << 20))
-    // Ceiling: never more write tasks than 4× the session's shuffle
-    // width. Catalyst estimates INFLATE through joins above
-    // checkpointed frames (q70's vectors⋈codes estimated ~GBs for a
-    // 2 MB frame and spawned a 14s, 1600-task write) — the session's
-    // own parallelism is the honest bound on useful write tasks, and
-    // it scales with the cluster where the estimate scales with the
-    // planner's guesswork.
-    val totalParts = (n.toLong * fanout)
-      .min(math.max(n.toLong, shufflePar * 4))
-      .min(Int.MaxValue.toLong).toInt
-    df.repartition(totalParts, col(partCol),
-      pmod(xxhash64(saltKey), lit(fanout)))
-  }
+  /** `df` clustered for a `partitionBy(partCol)` commit, so each
+    * partition value's rows reach one write task (a few for a value
+    * past the advisory partition size) and the commit writes one file
+    * per value, not one per task and value. Unchanged when `partCol` is
+    * None or not a column of `df`. */
+  def byPartitionValue(df: DataFrame, partCol: Option[String]): DataFrame =
+    partCol.filter(df.columns.contains)
+      .fold(df)(c => df.hint("rebalance", col(c)))
 }

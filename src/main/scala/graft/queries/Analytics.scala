@@ -837,10 +837,10 @@ object Analytics {
         when(uFirst, col("u")).otherwise(col("v")).as("src"),
         when(uFirst, col("v")).otherwise(col("u")).as("dst"))
       // referenced four times below (the intersection joins + the two
-      // edge stats); without persist the co-occurrence self-join
-      // would re-run per reference. At 100 TB this is a written
-      // table, not a cache.
-      .persist()
+      // edge stats) in one plan: an eager checkpoint runs the
+      // co-occurrence self-join once. At 100 TB this is a written
+      // table, not a checkpoint.
+      .localCheckpoint()
     // adjacency-intersection form: per oriented edge (u,v), triangles
     // closed at it are |N⁺(u) ∩ N⁺(v)|. Arrays are SORTED ONCE per
     // node so the per-edge intersection is a codegen'd two-pointer
@@ -854,9 +854,10 @@ object Analytics {
     val adj = e.groupBy(col("src"))
       .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
       // referenced three times (both intersection sides + the
-      // edge/wedge stats below) — persist the node-sized arrays once
-      // instead of re-running the groupBy over e per reference
-      .persist()
+      // edge/wedge stats below) in one plan — checkpoint the node-sized
+      // arrays eagerly instead of re-running the groupBy over e per
+      // reference
+      .localCheckpoint()
     val nTri = e.select(col("src"), col("dst"))
       .join(adj.select(col("src").as("a_u"), col("nbrs").as("nu"))
         .hint("shuffle_hash"), col("src") === col("a_u"))
@@ -868,14 +869,14 @@ object Analytics {
       // out-neighbor match) must report 0, not NULL
       .agg(coalesce(sum(col("t")), lit(0L)).cast("long")
         .as("n_triangles"))
-    // node count from the PERSISTED oriented edges (src ∪ dst distinct
+    // node count from the CHECKPOINTED oriented edges (src ∪ dst distinct
     // — every co edge survives orientation, so the node set is
     // identical to deg's); counting deg would re-run the co-occurrence
-    // self-join, which is only cached as part of e
+    // self-join, which is only checkpointed as part of e
     val nNodes = e.select(col("src").as("n"))
       .unionAll(e.select(col("dst").as("n"))).distinct()
       .agg(count(lit(1)).as("n_nodes"))
-    // edge + wedge counts in ONE pass over the persisted adjacency
+    // edge + wedge counts in ONE pass over the checkpointed adjacency
     // arrays (out-degree = array size), replacing two separate
     // aggregate branches over e: n_edges = Σ|N⁺|, wedges = Σ d(d−1)/2.
     // coalesce on edges only — count(*) was never NULL, while the

@@ -58,10 +58,10 @@ object IvfIndex {
     // WriteLayout): unclustered, file count = write tasks × clusters
     // and grows with core count
     new VersionedTable(spark, s"$root/vectors")
-      .write(graft.io.WriteLayout.clustered(
+      .write(graft.io.WriteLayout.byPartitionValue(
           assigned.select(
             (Seq("id", "cluster", "v") ++ payload).map(col): _*),
-          "cluster", nlist, col("id"), sizeFrom = Some(corpus)),
+          Some("cluster")),
         partitionBy = Some(Seq("cluster")))
   }
 

@@ -59,17 +59,14 @@ object IvfPqIndex {
     // graft.io.WriteLayout: unclustered, file count = write tasks ×
     // clusters and grows with core count
     new VersionedTable(spark, s"$root/vectors").write(
-      graft.io.WriteLayout.clustered(
+      graft.io.WriteLayout.byPartitionValue(
         corpus.select(col(idCol).cast("long").as("id"),
           Similarity.toDouble(col(vecCol)).as("v"))
           .join(codes.select(col("id"), col("cluster")), "id"),
-        "cluster", nlist, col("id"), sizeFrom = Some(corpus)),
+        Some("cluster")),
       partitionBy = Some(Seq("cluster")))
     new VersionedTable(spark, s"$root/codes")
-      .write(graft.io.WriteLayout.clustered(codes, "cluster", nlist,
-        // codes are ~64× smaller than the corpus; its scan estimate
-        // (the only reliable one here) just overshoots the fanout
-        col("id"), sizeFrom = Some(corpus)),
+      .write(graft.io.WriteLayout.byPartitionValue(codes, Some("cluster")),
         partitionBy = Some(Seq("cluster")))
   }
 

@@ -200,14 +200,12 @@ object LexicalIndex {
     * write task emit one file per bucket it sees — `shuffle.partitions
     * × nBuckets` small files, a per-file commit cost that GROWS with
     * core count (q88 measured 3× FASTER on 8 cores than 32; c8/c32
-    * ratio 0.35). Clustered, the file count is `nBuckets ×
-    * salt-fanout` regardless of cores. The fanout is bytes-derived
-    * like the streaming state sizing (guide §2: scale-adaptive, never
-    * a local constant): one extra write task per ~128 MB of source per
-    * bucket, so a 100 TB corpus still writes ~128 MB postings files at
-    * full cluster width while a KB-scale batch writes exactly nBuckets
-    * files. Layout-only — the persisted index shape (hive-partitioned
-    * by bucket) and every query result are unchanged. */
+    * ratio 0.35). Clustered ([[graft.io.WriteLayout.byPartitionValue]]),
+    * a KB-scale batch writes exactly nBuckets files regardless of
+    * cores, and adaptive execution splits a bucket past the advisory
+    * partition size into a few files. Layout-only — the persisted index
+    * shape (hive-partitioned by bucket) and every query result are
+    * unchanged. */
   private def indexRows(docs: DataFrame, idCol: String, textCol: String,
       nBuckets: Int): (DataFrame, DataFrame) = {
     val tf = docs.select(col(idCol).cast("long").as("doc_id"),
@@ -215,12 +213,10 @@ object LexicalIndex {
       .groupBy("doc_id", "term").agg(count(lit(1)).as("n_td"))
       .localCheckpoint() // feeds len, postings, and the stats fold once
     val len = tf.groupBy("doc_id").agg(sum("n_td").as("len_d"))
-    // fanout derives from the DOCS plan size (the postings' own
-    // estimate inherits the checkpoint's unknown), see WriteLayout
-    val postings = graft.io.WriteLayout.clustered(
+    val postings = graft.io.WriteLayout.byPartitionValue(
       tf.join(len, "doc_id").withColumn("bucket",
         pmod(xxhash64(col("term")), lit(nBuckets.toLong))),
-      "bucket", nBuckets, col("doc_id"), sizeFrom = Some(docs))
+      Some("bucket"))
     val stats = len.agg(count(lit(1)).as("n_docs"),
       sum("len_d").as("sum_len"), lit(nBuckets).as("n_buckets"))
     (postings, stats)

@@ -35,12 +35,20 @@ final case class ManifestFile(path: String, bytes: Long,
   *    pushed partition filters against each partition's values row,
   *    so `WHERE dt = '2023-01-01'` scans one partition's files even
   *    though the manifest-level API wasn't used.
+  *  - Per-file data skipping works too (Delta's stats-based skipping):
+  *    `dataSkipping` turns the pushed data filters into a per-file test
+  *    (the table's manifest stats answer it, see
+  *    `VersionedTable.predicateMayMatch`), and `listFiles` drops every
+  *    file it proves holds no matching row, so `WHERE ts > <watermark>`
+  *    plans only the files holding newer rows.
   */
 final class ManifestFileIndex(
     root: Path,
     files: Seq[ManifestFile],
     override val partitionSchema: StructType,
-    sessionTimeZone: String) extends FileIndex {
+    sessionTimeZone: String,
+    dataSkipping: Seq[Expression] => ManifestFile => Boolean)
+    extends FileIndex {
 
   override def rootPaths: Seq[Path] = Seq(root)
 
@@ -64,13 +72,13 @@ final class ManifestFileIndex(
       }
     })
 
-  private lazy val partitions: Seq[(InternalRow, Array[FileStatus])] =
+  private lazy val partitions: Seq[(InternalRow, Seq[(ManifestFile, FileStatus)])] =
     files.groupBy(_.partitionValues).toSeq.map { case (values, group) =>
       // Sizes must be EXACT (the parquet reader trusts them for footer
       // location); they are — recorded from the commit-time listing of
       // immutable files. Block size 128 MB only steers split packing.
-      partitionRow(values) -> group.map(f => new FileStatus(
-        f.bytes, false, 1, 128L * 1024 * 1024, 0L, new Path(f.path))).toArray
+      partitionRow(values) -> group.map(f => f -> new FileStatus(
+        f.bytes, false, 1, 128L * 1024 * 1024, 0L, new Path(f.path)))
     }
 
   override def listFiles(partitionFilters: Seq[Expression],
@@ -88,7 +96,11 @@ final class ManifestFileIndex(
         bound.initialize(0)
         partitions.filter { case (row, _) => bound.eval(row) }
       }
-    pruned.map { case (row, group) => PartitionDirectory(row, group) }
+    val mayMatch = dataSkipping(dataFilters)
+    pruned.flatMap { case (row, group) =>
+      val kept = group.collect { case (f, st) if mayMatch(f) => st }
+      Option.when(kept.nonEmpty)(PartitionDirectory(row, kept.toArray))
+    }
   }
 
   override def inputFiles: Array[String] = files.map(_.path).toArray
@@ -127,18 +139,22 @@ object ManifestScan {
     * [[FilePathCol]]/[[RowIndexCol] from the parquet reader's
     * `_metadata` struct. `wholeFiles` plans every file into ONE task,
     * never split across tasks, so a per-task pass sees each file's rows
-    * together and in order. */
+    * together and in order. `dataSkipping` maps the data filters Spark
+    * pushes into the scan to a test of which files may hold a matching
+    * row; the default plans every file. */
   def parquetTable(spark: SparkSession, root: Path,
       snapshotSchema: StructType, partitionColumns: Seq[String],
       files: Seq[ManifestFile], isStreaming: Boolean = false,
-      rowMeta: Boolean = false, wholeFiles: Boolean = false): DataFrame = {
+      rowMeta: Boolean = false, wholeFiles: Boolean = false,
+      dataSkipping: Seq[Expression] => ManifestFile => Boolean =
+        _ => _ => true): DataFrame = {
     val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val partitionSchema = StructType(
       partitionColumns.map(c => snapshotSchema(snapshotSchema.fieldIndex(c))))
     val dataSchema = StructType(
       snapshotSchema.filterNot(f => partitionColumns.contains(f.name)))
     val index = new ManifestFileIndex(root, files, partitionSchema,
-      cs.sessionState.conf.sessionLocalTimeZone)
+      cs.sessionState.conf.sessionLocalTimeZone, dataSkipping)
     val relation = HadoopFsRelation(index, partitionSchema, dataSchema,
       bucketSpec = None,
       if (wholeFiles) new WholeFileParquetFormat else new ParquetFileFormat,

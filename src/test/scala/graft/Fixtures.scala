@@ -55,6 +55,25 @@ object Fixtures {
     taxiDf(spark).coalesce(1).write.mode("overwrite")
       .option("header", "true").csv(path)
 
+  /** The fixture's rows repeated `days` times, each copy shifted one
+    * more day (pickups over `days + 1` dates), written as `files` CSV
+    * files: a CSV scan then has `files` tasks that each see most dates. */
+  def writeRawCsvDays(spark: SparkSession, path: String, days: Int,
+      files: Int, firstShift: Int = 0): Unit = {
+    import org.apache.spark.sql.functions.expr
+    val base = taxiDf(spark)
+    def shifted(c: String, k: Int) = expr(
+      s"cast(cast($c as timestamp) + make_interval(0, 0, 0, $k) as string)").as(c)
+    val copies = (firstShift until firstShift + days).map { k =>
+      base.select(base.columns.toSeq.map {
+        case c @ ("tpep_pickup_datetime" | "tpep_dropoff_datetime") => shifted(c, k)
+        case c => base(c)
+      }: _*)
+    }
+    copies.reduce(_ union _).repartition(files).write.mode("overwrite")
+      .option("header", "true").csv(path)
+  }
+
   def tempDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 }
