@@ -138,7 +138,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * `Some(cols)` sets it (Overwrite only; an Append may never change
     * it), and `Some(Seq.empty)` on an Overwrite explicitly CLEARS it,
     * rewriting the table unpartitioned. Partition values power
-    * manifest-level pruning in [[readWhere]]/[[readWherePartition]].
+    * manifest-level pruning in [[readMatching]] and every scan.
     * Returns the new version number. */
   def write(df0: DataFrame, mode: SaveMode = SaveMode.Overwrite,
       operation: String = "WRITE",
@@ -529,14 +529,6 @@ final class VersionedTable(spark: SparkSession, root: String) {
       new Path(qualifiedRoot, e.relPath).toString, e.bytes,
       e.partitionValues))
 
-  /** Length of the qualified-root prefix every scanned file path
-    * carries; +1 more for the separating '/' is applied at use sites.
-    * `_metadata.file_path` renders paths in `Path.toString` form
-    * (probe-verified), which is exactly how [[rawScan]] constructs
-    * them — so a fixed-length strip recovers the manifest-relative
-    * path without any URI-encoding pitfalls. */
-  private def rootPrefixLen: Int = fs.makeQualified(rootPath).toString.length
-
   /** Physical name of the materialized row-id column tracked rewrites
     * carry INSIDE their data files. Never part of the snapshot schema;
     * normal reads never request it. */
@@ -561,13 +553,19 @@ final class VersionedTable(spark: SparkSession, root: String) {
       .otherwise(pathCol)
   }
 
+  /** [[fileRelCol]]'s key for the file at qualified path `abs`, on the
+    * driver. The scan's `_metadata.file_path` is the path's URI form
+    * (a space as `%20`, a literal `%` as `%25`, so a timestamp
+    * partition's `00%3A00` arrives as `00%253A00`), so `abs` is
+    * rendered the same way before the root prefix is stripped. */
   private[io] def renderKey(qualifiedRoot: String, abs: String): String = {
     val prefix = qualifiedRoot + "/"
-    if (abs.startsWith(prefix)) abs.substring(prefix.length) else abs
+    val uri = new Path(abs).toUri.toString
+    if (uri.startsWith(prefix)) uri.substring(prefix.length) else uri
   }
 
   /** DV sidecar schema: the table-relative file path (as rendered by
-    * the scan — see [[rootPrefixLen]]) and the masked row's ordinal
+    * the scan — see [[fileRelCol]]) and the masked row's ordinal
     * within that parquet file. */
   private val dvSchema = StructType(Seq(
     org.apache.spark.sql.types.StructField("file_rel",
@@ -876,9 +874,8 @@ final class VersionedTable(spark: SparkSession, root: String) {
         if (removed.nonEmpty) {
           val ops = history(limit = Int.MaxValue)
             .filter(h => h.version > f && h.version <= toV)
-          val rewriteOnly = ops.size == (toV - f) && ops.forall(h =>
-            h.operation.startsWith("OPTIMIZE") ||
-              h.operation == "REORG PURGE")
+          val rewriteOnly = ops.size == (toV - f) &&
+            ops.forall(h => VersionedTable.layoutOp(h.operation))
           if (!rewriteOnly) sys.error(
             s"versions $f..$toV of $root removed ${removed.size} file(s) " +
               "outside a pure OPTIMIZE/REORG PURGE window — the change " +
@@ -937,46 +934,6 @@ final class VersionedTable(spark: SparkSession, root: String) {
     readManifest(currentVersion.getOrElse(
       sys.error(s"table $root does not exist")))
 
-  /** Manifest-level data skipping (Delta stats-based file pruning):
-    * read only the files whose recorded [min, max] for `column`
-    * intersects [lo, hi], then apply the predicate for row-level
-    * exactness. Parquet's own row-group skipping still happens inside
-    * the surviving files, but it requires OPENING every file's footer
-    * at scan planning — on a 100 TB table with 10^5 files that is 10^5
-    * storage round-trips per query; the manifest answers the same
-    * question from ONE small file already in hand. Files with no
-    * recorded stats for the column (non-numeric, all-null, or
-    * pre-stats manifests) are conservatively read. */
-  def readBetween(column: String, lo: Double, hi: Double): DataFrame =
-    readWhere(Map(column -> (lo, hi)))
-
-  /** Multi-predicate form of [[readBetween]]: a file survives only if
-    * its recorded range intersects EVERY given [lo, hi] — conjunctive
-    * predicates compound the skipping (a file in the right id range
-    * but wrong timestamp range is pruned). Partition columns prune on
-    * the file's partition VALUE (exact, not a range): Delta-style
-    * partition pruning from the manifest alone. */
-  def readWhere(ranges: Map[String, (Double, Double)]): DataFrame = {
-    require(ranges.nonEmpty, "readWhere needs at least one column range")
-    readMatching(ranges.toSeq.map { case (c, (lo, hi)) =>
-      VersionedTable.NumRange(c, lo, hi) }: _*)
-  }
-
-  /** Exact-value partition pruning — the string-partition counterpart
-    * of [[readWhere]]'s numeric ranges (a `dt=2023-01-01` partition can
-    * never match a Double range, and equality is what partition reads
-    * actually want). A file survives only if its partition value for
-    * every given column EQUALS the given string (compared on the raw
-    * hive path value, which is how the writer spelled it). Non-partition
-    * columns prune through numeric stats when the value parses as a
-    * number, else just row-filter. The row-level predicate stays on top
-    * for exactness (Spark casts the literal to the column's type). */
-  def readWherePartition(equal: Map[String, String]): DataFrame = {
-    require(equal.nonEmpty, "readWherePartition needs at least one column=value")
-    readMatching(equal.toSeq.map { case (c, v) =>
-      VersionedTable.PartitionEq(c, v) }: _*)
-  }
-
   /** Exact multi-value partition read: plans ONLY the files whose
     * partition value for `column` is in `values`. Membership on the
     * path-derived partition value is exact (a file's partition value IS
@@ -987,7 +944,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * predicate). Files without a recorded value for `column` are
     * EXCLUDED — the caller is selecting partitions, and a value-less
     * file belongs to none — unlike the conservative range reads; use
-    * [[readWherePartition]] when unsure of the layout. */
+    * [[readMatching]] with `PartitionEq` when unsure of the layout. */
   def readWherePartitionIn(column: String, values: Set[String],
       atVersion: Option[Long] = None): DataFrame = {
     val v = atVersion.orElse(currentVersion)
@@ -1000,47 +957,17 @@ final class VersionedTable(spark: SparkSession, root: String) {
     if (keep.isEmpty) readVersion(v).limit(0) else readFiles(m, keep)
   }
 
-  /** Timestamp-typed [[readBetween]] — the watermark read: an
-    * incremental pipeline's "rows since my last high-water-mark"
-    * predicate on a timestamp column prunes files straight from the
-    * manifest with NO manual unit conversion. Bounds are ISO-8601
-    * instants; stats compare in epoch-MICROS (the unit parquet
-    * physically stores and the footer scrape recorded); the row-level
-    * predicate compares real timestamps, so files the stats can't
-    * decide about are still filtered exactly. Timestamp-valued
-    * PARTITION columns only prune when the path value parses as an
-    * ISO instant (rendered forms vary by writer timezone —
-    * unparseable values are read, never dropped). */
-  def readWhereTimestamp(column: String, loIso: String, hiIso: String): DataFrame =
-    readMatching(VersionedTable.TsRange(column, loIso, hiIso))
-
-  /** Date-typed [[readBetween]]: bounds are `yyyy-MM-dd`, stats compare
-    * in epoch-DAYS (parquet's physical date unit), and `dt=yyyy-MM-dd`
-    * partition values prune from their path spelling directly. */
-  def readWhereDate(column: String, lo: String, hi: String): DataFrame =
-    readMatching(VersionedTable.DateRange(column, lo, hi))
-
-  /** String-range read pruning on the manifests' string stats (short
-    * pure-ASCII min/max from the parquet footers — the encoding where
-    * parquet's byte order, Spark's UTF8String order, and Java's String
-    * order all agree). Covers the common string-watermark shapes:
-    * `yyyy-MM-dd` date strings, zero-padded ids, status codes. Files
-    * without recorded string stats (long or non-ASCII values) are
-    * read and row-filtered. */
-  def readWhereString(column: String, lo: String, hi: String): DataFrame = {
-    require(lo <= hi, s"empty string range: '$lo' > '$hi'")
-    readMatching(VersionedTable.StrRange(column, lo, hi))
-  }
-
-  /** Unified predicate read — the Delta-style "arbitrary conjunctive
-    * predicate" pushdown the single-column readWhere* family delegates
-    * to: partition equalities and typed stats ranges combine in ONE
-    * call, ONE manifest pass, and one scan over the intersection of
-    * the surviving files (a file in the right partition but the wrong
-    * timestamp range is pruned, and vice versa). Row-level predicates
-    * are re-applied on top for exactness; files a conjunct has no
-    * information about are conservatively read (None → read, never
-    * drop). */
+  /** Manifest-pruned read (Delta's stats-based file skipping and
+    * partition pruning) of a conjunction of typed predicates:
+    * partition equalities and typed ranges combine in ONE call, ONE
+    * manifest pass, and one scan over the files that may hold a
+    * matching row (a file in the right partition but the wrong
+    * timestamp range is pruned, and vice versa). The manifest answers
+    * from one small file already in hand what parquet's own row-group
+    * skipping would answer by opening every file's footer. Each
+    * predicate's row filter ([[VersionedTable.TablePredicate.condition]])
+    * is re-applied on top for exactness; files a conjunct has no
+    * information about are conservatively read. */
   def readMatching(preds: VersionedTable.TablePredicate*): DataFrame =
     readMatchingAt(None, preds: _*)
 
@@ -1053,97 +980,31 @@ final class VersionedTable(spark: SparkSession, root: String) {
   def readMatchingAt(atVersion: Option[Long],
       preds: VersionedTable.TablePredicate*): DataFrame = {
     require(preds.nonEmpty, "readMatching needs at least one predicate")
-    val compiled = preds.map(compilePredicate)
-    prunedRead(compiled.map(_._1).reduce(_ && _),
-      (e, partCols) => compiled.forall(_._2(e, partCols)), preds,
-      atVersion)
+    val v = atVersion.orElse(currentVersion)
+      .getOrElse(sys.error(s"table $root does not exist"))
+    val m = readManifest(v)
+    val keep = entriesMatching(m, preds)
+    // every file excluded: an empty frame with the snapshot schema
+    (if (keep.isEmpty) readVersion(v).limit(0) else readFiles(m, keep))
+      .filter(preds.map(_.condition).reduce(_ && _))
   }
 
-  /** (row-level predicate, file-survives test) for one conjunct. The
-    * survives test prunes on partition VALUES for partition columns
-    * and recorded stats otherwise; typed ranges compare in the
-    * column's physical stats unit (epoch-micros / epoch-days). */
-  private def compilePredicate(p: VersionedTable.TablePredicate)
-      : (org.apache.spark.sql.Column,
-         (ManifestEntry, Set[String]) => Boolean) = {
-    import org.apache.spark.sql.functions.{col, lit}
-    def ranged(column: String, pred: org.apache.spark.sql.Column,
-        statLo: Double, statHi: Double,
-        partParse: String => Option[Double]) =
-      (pred, (e: ManifestEntry, partCols: Set[String]) =>
-        if (partCols.contains(column))
-          e.partitionValues.get(column).flatMap(partParse) match {
-            case Some(v) => v >= statLo && v <= statHi
-            case None => true
-          }
-        else e.stats.get(column) match {
-          case Some((mn, mx)) => mx >= statLo && mn <= statHi
-          case None => true
-        })
-    p match {
-      case VersionedTable.PartitionEq(column, value) =>
-        (col(column) === lit(value),
-          (e: ManifestEntry, partCols: Set[String]) =>
-            if (partCols.contains(column))
-              e.partitionValues.get(column) match {
-                case Some(pv) => pv == value
-                case None => true // null partition value: must read
-              }
-            else e.stats.get(column) match {
-              case Some((mn, mx)) =>
-                scala.util.Try(value.toDouble).toOption
-                  .forall(d => mx >= d && mn <= d)
-              case None => true
-            })
-      case VersionedTable.NumRange(column, lo, hi) =>
-        ranged(column, col(column) >= lo && col(column) <= hi, lo, hi,
-          s => scala.util.Try(s.toDouble).toOption)
-      case VersionedTable.TsRange(column, loIso, hiIso) =>
-        val (lo, hi) =
-          (java.time.Instant.parse(loIso), java.time.Instant.parse(hiIso))
-        def micros(i: java.time.Instant): Double =
-          i.getEpochSecond * 1e6 + i.getNano / 1000.0
-        ranged(column,
-          col(column) >= lit(java.sql.Timestamp.from(lo)) &&
-            col(column) <= lit(java.sql.Timestamp.from(hi)),
-          micros(lo), micros(hi),
-          s => scala.util.Try(micros(java.time.Instant.parse(s))).toOption)
-      case VersionedTable.DateRange(column, lo, hi) =>
-        val (loD, hiD) =
-          (java.time.LocalDate.parse(lo), java.time.LocalDate.parse(hi))
-        ranged(column,
-          col(column) >= lit(java.sql.Date.valueOf(loD)) &&
-            col(column) <= lit(java.sql.Date.valueOf(hiD)),
-          loD.toEpochDay.toDouble, hiD.toEpochDay.toDouble,
-          s => scala.util.Try(
-            java.time.LocalDate.parse(s).toEpochDay.toDouble).toOption)
-      case VersionedTable.StrRange(column, lo, hi) =>
-        (col(column) >= lit(lo) && col(column) <= lit(hi),
-          (e: ManifestEntry, partCols: Set[String]) =>
-            if (partCols.contains(column))
-              e.partitionValues.get(column).forall(v => v >= lo && v <= hi)
-            else e.strStats.get(column) match {
-              case Some((mn, mx)) => mx >= lo && mn <= hi
-              case None => true
-            })
-    }
+  /** The entries of `m` a [[readMatching]] with `preds` plans: those
+    * [[predicateMayMatch]] admits for the conjunction of the
+    * predicates' row filters, and the generated-column tests keep. */
+  private def entriesMatching(m: VersionManifest,
+      preds: Seq[VersionedTable.TablePredicate]): Seq[ManifestEntry] = {
+    val mayMatch = preds.map(_.condition).reduceOption(_ && _)
+      .fold((_: ManifestEntry) => true)(predicateMayMatch(m, _))
+    val gen = generatedSurvives(m, preds)
+    m.entries.filter(e => mayMatch(e) && gen(e))
   }
 
-  /** Shared skeleton of the manifest-pruned reads: keep the files
-    * `survives` admits, plan the scan over just those, and re-apply the
-    * row-level predicate. Zero surviving files still returns a frame
-    * with the snapshot schema. */
   /** The manifest entries a [[readMatching]] with these predicates
     * would plan — the observable the pruning specs assert on. */
   private[graft] def matchingEntries(
-      preds: VersionedTable.TablePredicate*): Seq[ManifestEntry] = {
-    val m = readManifest(currentVersion.getOrElse(
-      sys.error(s"table $root does not exist")))
-    val compiled = preds.map(compilePredicate)
-    val gen = generatedSurvives(m, preds)
-    m.entries.filter(e =>
-      compiled.forall(_._2(e, m.partitionBy.toSet)) && gen(e))
-  }
+      preds: VersionedTable.TablePredicate*): Seq[ManifestEntry] =
+    entriesMatching(currentManifest, preds)
 
   /** SCAN-ECONOMICS REPORT for a predicated read — the audit number a
     * table owner actually watches: how many files / bytes / rows a
@@ -1155,31 +1016,14 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * table. */
   def pruningReport(preds: VersionedTable.TablePredicate*)
       : VersionedTable.PruningReport = {
-    val all = manifestEntries(currentVersion.getOrElse(
-      sys.error(s"table $root does not exist")))
-    val kept = matchingEntries(preds: _*)
+    val m = currentManifest
+    val all = m.entries
+    val kept = entriesMatching(m, preds)
     VersionedTable.PruningReport(
       plannedFiles = kept.size, totalFiles = all.size,
       plannedBytes = kept.map(_.bytes).sum, totalBytes = all.map(_.bytes).sum,
       plannedRows = kept.map(_.liveRows).sum,
       totalRows = all.map(_.liveRows).sum)
-  }
-
-  private def prunedRead(pred: org.apache.spark.sql.Column,
-      survives: (ManifestEntry, Set[String]) => Boolean,
-      preds: Seq[VersionedTable.TablePredicate] = Seq.empty,
-      atVersion: Option[Long] = None): DataFrame = {
-    val v = atVersion.orElse(currentVersion)
-      .getOrElse(sys.error(s"table $root does not exist"))
-    val m = readManifest(v)
-    val partCols = m.partitionBy.toSet
-    val gen = generatedSurvives(m, preds)
-    val keep = m.entries.filter(e => survives(e, partCols) && gen(e))
-    if (keep.isEmpty) {
-      // every file excluded: an empty frame with the snapshot schema
-      return readVersion(v).limit(0).filter(pred)
-    }
-    readFiles(m, keep).filter(pred)
   }
 
   /** DELETE whole partitions as a METADATA-ONLY commit (Delta's
@@ -1225,19 +1069,18 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * rows rebase cleanly; an append that MIGHT hold matching rows
     * aborts the delete loudly (its rows were never scanned). */
   def deleteBetween(column: String, lo: Double, hi: Double): Long = {
-    import org.apache.spark.sql.functions.col
     val curV = currentVersion.getOrElse(
       sys.error(s"table $root does not exist"))
     val m = readManifest(curV)
-    val mayMatch =
-      rangeMayMatch(m.partitionBy.toSet, physFor(m, column), lo, hi) _
+    val matches = VersionedTable.NumRange(column, lo, hi).condition
+    val mayMatch = predicateMayMatch(m, matches)
     val candidates = m.entries.filter(mayMatch)
     if (candidates.isEmpty) return curV // provably nothing to delete
     // tracked tables rewrite WITH each survivor's materialized row id
     val src = if (m.rowIdHw.isDefined)
       logicalize(m, readFilesPhysicalRid(m, candidates))
     else readFiles(m, candidates)
-    val survivors = src.filter(!(col(column) >= lo && col(column) <= hi))
+    val survivors = src.filter(!matches)
     val v = replaceWhere(survivors, e => !mayMatch(e),
       s"DELETE $column IN [$lo,$hi]", basisVersion = Some(curV))
     refreshBloomIndexes(v)
@@ -1270,11 +1113,10 @@ final class VersionedTable(spark: SparkSession, root: String) {
     require(!set.keys.exists(m.partitionBy.contains),
       s"cannot update partition columns of $root in place " +
         "(rows would change partitions) — use a MERGE")
-    val mayMatch =
-      rangeMayMatch(m.partitionBy.toSet, physFor(m, column), lo, hi) _
+    val matches = VersionedTable.NumRange(column, lo, hi).condition
+    val mayMatch = predicateMayMatch(m, matches)
     val candidates = m.entries.filter(mayMatch)
     if (candidates.isEmpty) return curV // provably nothing to update
-    val matches = col(column) >= lo && col(column) <= hi
     val tracked = m.rowIdHw.isDefined
     val src = if (tracked) logicalize(m, readFilesPhysicalRid(m, candidates))
               else readFiles(m, candidates)
@@ -1321,46 +1163,21 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * Prior versions still read the unmasked rows (snapshot isolation);
     * [[vacuum]] keeps every sidecar a retained version references. */
   def deleteVectorized(column: String, lo: Double, hi: Double): Long = {
-    import org.apache.spark.sql.functions.col
-    deleteVectorizedCore(
-      mask = _.filter(col(column) >= lo && col(column) <= hi),
-      mayMatch0 = m => rangeMayMatch(m.partitionBy.toSet,
-        physFor(m, column), lo, hi),
-      opDesc = s"DELETE DV $column IN [$lo,$hi]")
-  }
-
-  /** Row-level DELETE of `column` ∈ `values` via deletion vectors —
-    * [[deleteVectorized]] for an explicit id SET (the shape a dedup
-    * pipeline's survivor list produces). Manifest pruning uses the
-    * set's [min, max] envelope (stats/partition ranges can prove a
-    * file holds none of the ids); the row mask itself is the exact
-    * membership test. Same WriteSerializable semantics as the range
-    * flavor. Driver-sized sets only — for a DISTRIBUTED key frame
-    * (millions of dedup victims) use [[deleteVectorizedKeys]]. */
-  def deleteVectorizedIn(column: String, values: Set[Long]): Long = {
-    import org.apache.spark.sql.functions.col
-    val curV = currentVersion.getOrElse(
-      sys.error(s"table $root does not exist"))
-    if (values.isEmpty) return curV
-    val lo = values.min.toDouble
-    val hi = values.max.toDouble
-    deleteVectorizedCore(
-      mask = _.filter(col(column).isin(values.toSeq: _*)),
-      mayMatch0 = m => rangeMayMatch(m.partitionBy.toSet,
-        physFor(m, column), lo, hi),
-      opDesc = s"DELETE DV $column IN SET(${values.size})")
+    val matches = VersionedTable.NumRange(column, lo, hi).condition
+    deleteVectorizedCore(matches, s"DELETE DV $column IN [$lo,$hi]")(
+      _.filter(matches))
   }
 
   /** Row-level DELETE of every row whose `column` appears in `keys` —
-    * the DISTRIBUTED flavor of [[deleteVectorizedIn]]: the key frame
-    * (e.g. a dedup pass's victim list) never collects to the driver;
-    * the mask is a semi-join of the candidate scan against it, so the
-    * only driver-sized values are the two-element [min, max] envelope
-    * used for manifest pruning. `keys` must have exactly one column
-    * (any name, castable to the target column's type). Same
+    * the DISTRIBUTED form of an `IN` delete: the key frame (e.g. a
+    * dedup pass's victim list) never collects to the driver; the mask
+    * is a semi-join of the candidate scan against it, so the only
+    * driver-sized values are the key's [min, max] envelope
+    * ([[keyEnvelope]]) that skips files. `keys` must have exactly one
+    * column (any name, castable to the target column's type). Same
     * WriteSerializable semantics as the range flavor. */
   def deleteVectorizedKeys(column: String, keys: DataFrame): Long = {
-    import org.apache.spark.sql.functions.{col, max, min}
+    import org.apache.spark.sql.functions.{col, count, lit}
     val curV = currentVersion.getOrElse(
       sys.error(s"table $root does not exist"))
     require(keys.columns.length == 1,
@@ -1368,15 +1185,13 @@ final class VersionedTable(spark: SparkSession, root: String) {
         s"[${keys.columns.mkString(",")}]")
     val k = keys.select(col(keys.columns.head).as(column)).distinct()
       .localCheckpoint() // the envelope agg AND the mask both read it
-    val env = k.agg(min(col(column)).cast("double"),
-      max(col(column)).cast("double")).head()
-    if (env.isNullAt(0)) return curV // empty key frame: nothing to do
-    val (lo, hi) = (env.getDouble(0), env.getDouble(1))
-    deleteVectorizedCore(
-      mask = _.join(k, Seq(column), "left_semi"),
-      mayMatch0 = m => rangeMayMatch(m.partitionBy.toSet,
-        physFor(m, column), lo, hi),
-      opDesc = s"DELETE DV $column IN KEYS[$lo,$hi]")
+    val env = k.agg(count(lit(1)), keyEnvelope(k, column,
+      logicalSchema(readManifest(curV))(column).dataType): _*).head()
+    if (env.getLong(0) == 0L) return curV // empty key frame: nothing to do
+    val range =
+      if (env.length < 3) "" else s"[${env.get(1)},${env.get(2)}]"
+    deleteVectorizedCore(envelopePredicate(column, env, 1),
+      s"DELETE DV $column IN KEYS$range")(_.join(k, Seq(column), "left_semi"))
   }
 
   /** Row-level DELETE of every row satisfying an ARBITRARY predicate
@@ -1388,16 +1203,16 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * each file's recorded stats (numeric and short-ASCII string
     * min/max, exact partition values), so a selective predicate on a
     * clustered column reads only the files it could touch — exactly
-    * Delta's data-skipping-for-DML shape. Conjuncts the analyzer
-    * cannot prove anything about are conservatively non-skipping;
-    * the row mask itself is always the exact `filter(pred)` (rows
-    * where the predicate is NULL survive — SQL three-valued WHERE).
-    * Same WriteSerializable concurrency as the range flavor. */
+    * Delta's data-skipping-for-DML shape. `IN` tests each listed
+    * value, so an id-set delete (the survivor list a dedup pipeline
+    * produces) skips the files between the ids too. Conjuncts the
+    * analyzer cannot prove anything about are conservatively
+    * non-skipping; the row mask itself is always the exact
+    * `filter(pred)` (rows where the predicate is NULL survive — SQL
+    * three-valued WHERE). Same WriteSerializable concurrency as the
+    * range flavor. */
   def deleteVectorizedWhere(pred: org.apache.spark.sql.Column): Long =
-    deleteVectorizedCore(
-      mask = _.filter(pred),
-      mayMatch0 = m => predicateMayMatch(m, pred),
-      opDesc = s"DELETE DV WHERE $pred")
+    deleteVectorizedCore(pred, s"DELETE DV WHERE $pred")(_.filter(pred))
 
   /** CONVERT TO versioned table, IN PLACE (Delta `CONVERT TO DELTA`):
     * adopt an existing plain-parquet directory — flat or
@@ -1633,14 +1448,16 @@ final class VersionedTable(spark: SparkSession, root: String) {
     dest
   }
 
-  private def deleteVectorizedCore(mask: DataFrame => DataFrame,
-      mayMatch0: VersionManifest => ManifestEntry => Boolean,
-      opDesc: String): Long = {
-    import org.apache.spark.sql.functions.{col, substring}
+  /** The DV delete every flavor shares: the files [[predicateMayMatch]]
+    * admits for `skip` are the candidates, and `mask` picks the rows
+    * of their scan to retire. */
+  private def deleteVectorizedCore(skip: org.apache.spark.sql.Column,
+      opDesc: String)(mask: DataFrame => DataFrame): Long = {
+    import org.apache.spark.sql.functions.col
     val curV = currentVersion.getOrElse(
       sys.error(s"table $root does not exist"))
     val m = readManifest(curV)
-    val mayMatch = mayMatch0(m)
+    val mayMatch = predicateMayMatch(m, skip)
     val candidates = m.entries.filter(mayMatch)
     if (candidates.isEmpty) return curV // provably nothing to delete
     val qualifiedRoot = fs.makeQualified(rootPath)
@@ -1699,40 +1516,23 @@ final class VersionedTable(spark: SparkSession, root: String) {
     }
   }
 
-  /** May `e` contain a row with `column` in [lo, hi]? Partition values
-    * and stats prove absence; anything unknown must assume presence. */
-  private def rangeMayMatch(partCols: Set[String], column: String,
-      lo: Double, hi: Double)(e: ManifestEntry): Boolean =
-    if (partCols.contains(column))
-      e.partitionValues.get(column)
-        .flatMap(s => scala.util.Try(s.toDouble).toOption) match {
-        case Some(v) => v >= lo && v <= hi
-        case None => true // unknown partition value: must assume yes
-      }
-    else e.stats.get(column) match {
-      case Some((mn, mx)) => mx >= lo && mn <= hi
-      case None => true // no stats: must assume yes
-    }
-
   /** The READ half of a stats-pruned key-scoped rewrite (the Delta
     * MERGE touched-files shape, exposed for key-scoped folds like the
-    * streaming CDC apply sink): the scan of every file that MAY hold
-    * `column` ∈ [lo, hi] — ALL rows of those files, DVs applied — plus
-    * the predicate marking the entries that were NOT planned (their
-    * stats/partition value PROVE the range absent, so a
+    * streaming CDC apply sink): the scan of every file that MAY hold a
+    * row satisfying `pred` ([[predicateMayMatch]]) — ALL rows of those
+    * files, DVs applied — plus the predicate marking the entries that
+    * were NOT planned (the manifest PROVES them free of matches, so a
     * [[replaceWhere]] with this `keep` re-references them untouched)
     * and the snapshot version the scan planned against (hand it to
     * replaceWhere's `basisVersion` so a racing commit is caught, not
-    * lost). Files without usable stats are conservatively scanned.
-    * On row-tracked tables the rewritten rows take fresh row ids, as
-    * any MERGE rewrite does. */
-  def scanMayMatch(column: String, lo: Double, hi: Double)
+    * lost). On row-tracked tables the rewritten rows take fresh row
+    * ids, as any MERGE rewrite does. */
+  def scanMayMatch(pred: org.apache.spark.sql.Column)
       : (DataFrame, ManifestEntry => Boolean, Long) = {
     val curV = currentVersion.getOrElse(
       sys.error(s"table $root does not exist"))
     val m = readManifest(curV)
-    val mayMatch =
-      rangeMayMatch(m.partitionBy.toSet, physFor(m, column), lo, hi) _
+    val mayMatch = predicateMayMatch(m, pred)
     val candidates = m.entries.filter(mayMatch)
     val scan =
       if (candidates.isEmpty) readVersion(curV).limit(0)
@@ -1740,60 +1540,36 @@ final class VersionedTable(spark: SparkSession, root: String) {
     (scan, e => !mayMatch(e), curV)
   }
 
-  /** May `e` contain a row with STRING `column` in [lo, hi]? The
-    * manifest's short-ASCII string min/max (M12 footer stats — only
-    * recorded when provably order-safe: parquet's byte-wise-unsigned
-    * binary ordering, Spark's UTF-8 byte ordering, and Java String
-    * ordering all agree when the stored bounds are pure ASCII, and an
-    * ASCII max proves every value in the file is ASCII) or an exact
-    * partition value prove absence; anything unknown must assume
-    * presence — same conservatism as the numeric [[scanMayMatch]]. */
-  private def strRangeMayMatch(partCols: Set[String], column: String,
-      lo: String, hi: String)(e: ManifestEntry): Boolean =
-    if (partCols.contains(column))
-      e.partitionValues.get(column) match {
-        // ASCII-gated like the stats branch: a pure-ASCII value
-        // compares identically under Java UTF-16, Spark UTF-8-byte,
-        // and parquet orderings AGAINST ANY bound (the first
-        // differing position is either ASCII-vs-ASCII or
-        // ASCII-vs-higher, consistent in all three), while two
-        // non-ASCII sides can flip order across them (U+FFFF sorts
-        // above a supplementary character in UTF-16 but below it in
-        // UTF-8 bytes) — a value of `prefix + U+FFFF + more` against
-        // a prefix envelope's `prefix + U+FFFF` upper sentinel would
-        // be WRONGLY pruned under plain Java comparison
-        case Some(v) if v.forall(_ < 128) => v >= lo && v <= hi
-        case Some(_) => true // non-ASCII value: ordering not provable
-        case None => true // unknown partition value: must assume yes
-      }
-    else e.strStats.get(column) match {
-      case Some((mn, mx)) => mx >= lo && mn <= hi
-      case None => true // no stats: must assume yes
-    }
-
-  /** Data skipping derived from an ARBITRARY predicate's expression
-    * tree (Delta's stats-based skipping applied to DML candidates):
-    * walk the Catalyst tree of `pred` and compose per-file may-match
-    * tests from the conjuncts it can reason about — `=`, `<`, `<=`,
-    * `>`, `>=`, `<=>`, `BETWEEN` (parses to AND), `IN` (each listed
-    * value), and `startsWith`/prefix-`LIKE`, each against a bare
-    * column and a literal, pruned through the manifest's numeric or
-    * short-ASCII string min/max stats (or an exact partition value).
-    * plus `IS [NOT] NULL` against recorded per-file null counts (and
-    * hive partition values, which prove a column non-null wholesale).
-    * AND needs both sides possible, OR either; everything else —
-    * NOT, casts, cross-column comparisons, scalar functions —
-    * is conservatively non-skipping (the test answers "may match";
-    * the row-level filter decides). Strict bounds are widened to
-    * inclusive (a superset — sound), a finite numeric bound beyond
-    * 2^53 or a NaN bound refuses to prune (stats are doubles, and
-    * Spark orders NaN above every number), decimal stats never prune
-    * (parquet records them unscaled), and a numeric literal against a
-    * string-stats column (or vice versa) finds no stats and passes
-    * every file. A file holding NaN records no range for that column
-    * (the footer scrape drops it), so its rows above every bound stay
-    * reachable. The walk runs on the UNRESOLVED tree, so no implicit
-    * casts hide a column. */
+  /** THE file-skipping test (Delta's stats-based skipping and
+    * partition pruning), for every read and DML entry: may manifest
+    * entry `e` hold a row satisfying `pred`? Walks the Catalyst tree of
+    * `pred` and composes per-file tests from the conjuncts it can
+    * reason about — `=`, `<`, `<=`, `>`, `>=`, `<=>`, `BETWEEN`
+    * (parses to AND), `IN` (each listed value), and
+    * `startsWith`/prefix-`LIKE`, each against a bare column and a
+    * literal, pruned through the manifest's numeric or short-ASCII
+    * string min/max stats or the file's partition value — plus
+    * `IS [NOT] NULL` against recorded per-file null counts (and
+    * partition values, which prove a column non-null wholesale). AND
+    * needs both sides possible, OR either; everything else — NOT,
+    * casts, cross-column comparisons, scalar functions — is
+    * conservatively non-skipping (the test answers "may match"; the
+    * row-level filter decides).
+    *
+    * Values compare the way Spark compares them: a literal, and a
+    * partition path value, go through Spark's own `Cast` to the
+    * column's type in the session time zone (the cast the scan decodes
+    * partition values with, [[graftbridge.ManifestScan.castValue]]),
+    * then compare in the stats' units (epoch days for dates, epoch
+    * micros for timestamps, doubles for numerics). A cast that throws
+    * or yields null refuses to prune, and so do a string bound on a
+    * numeric column, a bound beyond 2^53 (stats are doubles), a NaN,
+    * and decimal stats (parquet records them unscaled). Strings
+    * compare as strings only on a declared string column; strict
+    * bounds are widened to inclusive (a superset — sound). A file
+    * holding NaN records no range for that column (the footer scrape
+    * drops it), so its rows above every bound stay reachable. The walk
+    * runs on the UNRESOLVED tree, so no implicit casts hide a column. */
   private[graft] def predicateMayMatch(m: VersionManifest,
       pred: org.apache.spark.sql.Column): ManifestEntry => Boolean =
     exprMayMatch(m, graftbridge.ColumnBridge.catalystExpression(pred),
@@ -1824,7 +1600,9 @@ final class VersionedTable(spark: SparkSession, root: String) {
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     import org.apache.spark.sql.catalyst.expressions._
     import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
     val partCols = m.partitionBy.toSet
+    val tz = spark.sessionState.conf.sessionLocalTimeZone
     val all: ManifestEntry => Boolean = _ => true
     def attr(e: Expression): Option[String] = e match {
       case a: UnresolvedAttribute if a.nameParts.length == 1 =>
@@ -1832,98 +1610,106 @@ final class VersionedTable(spark: SparkSession, root: String) {
       case a: AttributeReference => Some(a.name)
       case _ => None
     }
-    def numOf(e: Expression): Option[Double] = e match {
-      case Literal(v, dt) if v != null => dt match {
-        case ByteType => Some(v.asInstanceOf[Byte].toDouble)
-        case ShortType => Some(v.asInstanceOf[Short].toDouble)
-        case IntegerType => Some(v.asInstanceOf[Int].toDouble)
-        case LongType => Some(v.asInstanceOf[Long].toDouble)
-        case FloatType => Some(v.asInstanceOf[Float].toDouble)
-        case DoubleType => Some(v.asInstanceOf[Double])
-        case _: DecimalType => Some(v.asInstanceOf[Decimal].toDouble)
-        // typed temporal literals carry the stats' own physical units
-        // (DateType = epoch days as Int, TimestampType = epoch micros
-        // as Long — exactly what the footer scrape records)
-        case DateType => Some(v.asInstanceOf[Int].toDouble)
-        case TimestampType => Some(v.asInstanceOf[Long].toDouble)
-        case _ => None
+    def typeOf(n: String): Option[DataType] =
+      schema.fields.find(_.name == n).map(_.dataType)
+    // a catalyst value in the stats' units: doubles for numerics, epoch
+    // days for dates, epoch micros for timestamps (what the footer
+    // scrape records); NaN has no place in a range
+    def units(v: Any, dt: DataType): Option[Double] = (dt match {
+      case ByteType | ShortType | IntegerType | LongType | FloatType |
+           DoubleType | DateType | TimestampType | TimestampNTZType =>
+        Some(v.asInstanceOf[Number].doubleValue)
+      case _: DecimalType => Some(v.asInstanceOf[Decimal].toDouble)
+      case _ => None
+    }).filterNot(_.isNaN)
+    def cast(v: Any, from: DataType, to: DataType): Option[Any] =
+      if (from == to) Some(v)
+      else if (!Cast.canCast(from, to)) None
+      else scala.util.Try(graftbridge.ManifestScan.castValue(v, from, to, tz))
+        .toOption.flatMap(Option(_))
+    // a literal compared with column `n`: in the stats' units together
+    // with the type both sides compare in, or a string against a
+    // string column. A number meets a numeric column as is; any other
+    // literal casts to the column's type (the analyzer casts a string
+    // literal to a date, timestamp or numeric column); against a
+    // string column Spark casts the COLUMN to the literal's type
+    // (numbers to double), so partition values decode to that. A
+    // string meets a numeric column only as a `point` (=, <=>, IN):
+    // string BOUNDS on a numeric column never prune
+    def lift(n: String, e: Expression, point: Boolean)
+        : Option[Either[(Double, DataType), String]] = (e, typeOf(n)) match {
+      case (Literal(v, lt), Some(ct)) if v != null => (lt, ct) match {
+        case (StringType, StringType) => Some(scala.Right(v.toString))
+        case (StringType, _: NumericType) if !point => None
+        case (_: NumericType, _: NumericType) =>
+          units(v, lt).map(d => scala.Left((d, ct)))
+        case (_, StringType) =>
+          val cmp = if (lt.isInstanceOf[NumericType]) DoubleType else lt
+          cast(v, lt, cmp).flatMap(units(_, cmp)).map(d => scala.Left((d, cmp)))
+        case _ =>
+          cast(v, lt, ct).flatMap(units(_, ct)).map(d => scala.Left((d, ct)))
       }
       case _ => None
     }
-    // a STRING literal against a DATE/TIMESTAMP column: the analyzer
-    // casts the string to the column's type, so the envelope converts
-    // to the stats' units here — date-only strings exactly (the one
-    // shape Spark's cast and LocalDate.parse agree on byte for byte);
-    // timestamps from tz-carrying ISO instants always, and from bare
-    // local forms only under a UTC session (they cast in session
-    // time); anything unparseable stays conservative
-    def tsMicrosOf(s: String): Option[Double] = {
-      val inst: Option[java.time.Instant] =
-        scala.util.Try(java.time.Instant.parse(s)).toOption
-          .orElse(scala.util.Try(
-            java.time.OffsetDateTime.parse(s).toInstant).toOption)
-          .orElse {
-            if (spark.conf.get("spark.sql.session.timeZone", "") != "UTC")
-              None
-            else {
-              val norm = s.trim.replace(' ', 'T')
-              scala.util.Try(java.time.LocalDateTime.parse(norm)
-                .toInstant(java.time.ZoneOffset.UTC)).toOption
-                .orElse(scala.util.Try(java.time.LocalDate.parse(norm)
-                  .atStartOfDay.toInstant(java.time.ZoneOffset.UTC))
-                  .toOption)
-            }
-          }
-      inst.map(i => i.getEpochSecond * 1e6 + i.getNano / 1000.0)
-    }
-    def temporalOf(name: String, s: String): Option[Double] =
-      schema.fields.find(_.name == name).map(_.dataType) match {
-        case Some(DateType) => scala.util.Try(
-          java.time.LocalDate.parse(s).toEpochDay.toDouble).toOption
-        case Some(TimestampType) => tsMicrosOf(s)
-        case _ => None
+    // may a file hold a row of `n` in [lo, hi] (units of `cmp`)?
+    // Partition values decode to `cmp` once per distinct value; stats
+    // are in the column's own units. Unknown means yes.
+    def range(n: String, lo: Double, hi: Double, cmp: DataType)
+        : ManifestEntry => Boolean = {
+      val phys = physOf(n)
+      def inexact(d: Double) =
+        !d.isInfinite && math.abs(d) > 9007199254740992.0
+      if (inexact(lo) || inexact(hi)) all
+      else if (partCols.contains(phys)) {
+        val decoded =
+          scala.collection.concurrent.TrieMap.empty[String, Option[Double]]
+        e => e.partitionValues.get(phys).flatMap(pv =>
+          decoded.getOrElseUpdate(pv, cast(UTF8String.fromString(pv),
+            StringType, cmp).flatMap(units(_, cmp)))) match {
+          case Some(v) => v >= lo && v <= hi
+          case None => true // null or undecodable partition value
+        }
+      } else if (typeOf(n).exists(_.isInstanceOf[DecimalType])) all
+      else e => e.stats.get(phys) match {
+        case Some((mn, mx)) => mx >= lo && mn <= hi
+        case None => true // no stats: must assume yes
       }
-    def strOf(e: Expression): Option[String] = e match {
-      case Literal(v, StringType) if v != null => Some(v.toString)
-      case _ => None
     }
-    def range(name: String, lo: Double, hi: Double)
-        : ManifestEntry => Boolean =
-      if (lo.isNaN || hi.isNaN ||
-          (!lo.isInfinite && math.abs(lo) > 9007199254740992.0) ||
-          (!hi.isInfinite && math.abs(hi) > 9007199254740992.0)) all
-      else if (!partCols.contains(physOf(name)) && schema.fields.exists(f =>
-          f.name == name && f.dataType.isInstanceOf[DecimalType])) all
-      else rangeMayMatch(partCols, physOf(name), lo, hi) _
-    // a string envelope is only sound on a DECLARED string column:
-    // strRangeMayMatch's partition branch compares partition values
-    // LEXICALLY, which on a numeric partition column would prune
-    // files the analyzed (cast) comparison actually matches
-    def srange(name: String, lo: String, hi: String)
-        : ManifestEntry => Boolean =
-      if (!schema.fields.exists(f =>
-          f.name == name && f.dataType == StringType)) all
-      else strRangeMayMatch(partCols, physOf(name), lo, hi) _
-    // (column, literal) of a comparison, either operand order;
-    // `flip` = the literal was on the LEFT (so `5 <= c` is `c >= 5`).
-    // A string literal against a temporal column converts to the
-    // stats' numeric units (the analyzer casts the STRING side).
-    def lift(n: String, e: Expression): Option[Either[Double, String]] =
-      numOf(e).map(scala.Left(_))
-        .orElse(strOf(e).map(s =>
-          temporalOf(n, s).map(scala.Left(_)).getOrElse(scala.Right(s))))
-    def sides(l: Expression, r: Expression)
-        : Option[(String, Either[Double, String], Boolean)] =
+    // a string range is sound only on a DECLARED string column (a
+    // numeric partition value compared lexically would prune rows the
+    // cast comparison matches) and against ASCII partition values: a
+    // pure-ASCII value compares the same under Java UTF-16, Spark's
+    // UTF-8 bytes and parquet's byte order against ANY bound, while
+    // two non-ASCII sides can flip (U+FFFF sorts above a supplementary
+    // character in UTF-16, below it in UTF-8). String stats are
+    // recorded only when short and ASCII
+    def srange(n: String, lo: String, hi: String): ManifestEntry => Boolean =
+      if (!typeOf(n).contains(StringType)) all
+      else {
+        val phys = physOf(n)
+        if (partCols.contains(phys)) e => e.partitionValues.get(phys) match {
+          case Some(v) if v.forall(_ < 128) => v >= lo && v <= hi
+          case _ => true // non-ASCII or null partition value
+        }
+        else e => e.strStats.get(phys) match {
+          case Some((mn, mx)) => mx >= lo && mn <= hi
+          case None => true // no stats: must assume yes
+        }
+      }
+    // (column, lifted literal) of a comparison, either operand order;
+    // `flip` = the literal was on the LEFT (so `5 <= c` is `c >= 5`)
+    def sides(l: Expression, r: Expression, point: Boolean)
+        : Option[(String, Either[(Double, DataType), String], Boolean)] =
       attr(l) match {
-        case Some(n) => lift(n, r).map(v => (n, v, false))
+        case Some(n) => lift(n, r, point).map(v => (n, v, false))
         case None => attr(r) match {
-          case Some(n) => lift(n, l).map(v => (n, v, true))
+          case Some(n) => lift(n, l, point).map(v => (n, v, true))
           case None => None
         }
       }
     def eqTest(l: Expression, r: Expression): ManifestEntry => Boolean =
-      sides(l, r) match {
-        case Some((n, scala.Left(d), _)) => range(n, d, d)
+      sides(l, r, point = true) match {
+        case Some((n, scala.Left((d, cmp)), _)) => range(n, d, d, cmp)
         case Some((n, scala.Right(s), _)) => srange(n, s, s)
         case None => all
       }
@@ -1931,10 +1717,10 @@ final class VersionedTable(spark: SparkSession, root: String) {
     // column is the left operand (`c <= v`); flipped literals invert
     def boundTest(l: Expression, r: Expression, upper: Boolean)
         : ManifestEntry => Boolean =
-      sides(l, r) match {
-        case Some((n, scala.Left(d), flip)) =>
-          if (upper != flip) range(n, Double.NegativeInfinity, d)
-          else range(n, d, Double.PositiveInfinity)
+      sides(l, r, point = false) match {
+        case Some((n, scala.Left((d, cmp)), flip)) =>
+          if (upper != flip) range(n, Double.NegativeInfinity, d, cmp)
+          else range(n, d, Double.PositiveInfinity, cmp)
         case Some((n, scala.Right(s), flip)) =>
           // string stats are ASCII-only, so "\uffff" bounds them all
           if (upper != flip) srange(n, "", s)
@@ -1942,27 +1728,16 @@ final class VersionedTable(spark: SparkSession, root: String) {
         case None => all
       }
     // a file may match IN when it may hold one of the listed values
-    def anyOf[V](vs: Seq[V])(test: V => ManifestEntry => Boolean)
-        : ManifestEntry => Boolean = {
-      val tests = vs.distinct.map(test)
-      en => tests.exists(_(en))
-    }
     def inTest(a: Expression, vs: Seq[Expression]): ManifestEntry => Boolean =
-      attr(a) match {
-        case Some(n) if vs.nonEmpty =>
-          val nums = vs.map(numOf)
-          val strs = vs.map(strOf)
-          if (nums.forall(_.isDefined)) anyOf(nums.flatten)(d => range(n, d, d))
-          else if (strs.forall(_.isDefined)) {
-            val ss = strs.flatten
-            val temps = ss.map(temporalOf(n, _))
-            // IN over date/timestamp strings: their numeric units
-            if (temps.forall(_.isDefined))
-              anyOf(temps.flatten)(d => range(n, d, d))
-            else anyOf(ss)(v => srange(n, v, v))
-          } else all
-        case _ => all
+      if (attr(a).isEmpty || vs.isEmpty) all
+      else {
+        val tests = vs.distinct.map(eqTest(a, _))
+        en => tests.exists(_(en))
       }
+    def strOf(e: Expression): Option[String] = e match {
+      case Literal(v, StringType) if v != null => Some(v.toString)
+      case _ => None
+    }
     def startsTest(a: Expression, p: Expression): ManifestEntry => Boolean =
       (attr(a), strOf(p)) match {
         // ASCII stats: every value with this prefix sorts inside
@@ -2067,73 +1842,35 @@ final class VersionedTable(spark: SparkSession, root: String) {
     build(pred)
   }
 
-  /** [[scanMayMatch]] for a STRING key column — the doc-id /
-    * content-hash keys LLM-pipeline dimension tables are actually
-    * keyed on: the scan of every file that MAY hold `column` ∈
-    * [lo, hi] by string stats / partition values, the keep predicate
-    * for [[replaceWhere]], and the snapshot version scanned. */
-  def scanMayMatchString(column: String, lo: String, hi: String)
-      : (DataFrame, ManifestEntry => Boolean, Long) = {
-    val curV = currentVersion.getOrElse(
-      sys.error(s"table $root does not exist"))
-    val m = readManifest(curV)
-    val mayMatch =
-      strRangeMayMatch(m.partitionBy.toSet, physFor(m, column), lo, hi) _
-    val candidates = m.entries.filter(mayMatch)
-    val scan =
-      if (candidates.isEmpty) readVersion(curV).limit(0)
-      else readFiles(m, candidates)
-    (scan, e => !mayMatch(e), curV)
-  }
-
-  /** The may-match test for a SOURCE frame's key envelope — numeric
-    * keys through [[rangeMayMatch]] (exact-double range only), string
-    * keys through [[strRangeMayMatch]]; anything else (or an all-null
-    * key) cannot prune and every file is a candidate. NULL source
-    * keys are safe to ignore here: an equi-join key never matches
-    * NULL, so null-key source rows are always inserts. */
-  private def sourceKeyMayMatch(m: VersionManifest, source: DataFrame,
-      keyCol: String): ManifestEntry => Boolean =
-    keyEnvelope(source, keyCol) match {
-      case Seq() => (_: ManifestEntry) => true
-      case env => envelopeMayMatch(m, source, keyCol,
-        source.agg(env.head, env.tail: _*).head(), 0)
-    }
-
-  /** The aggregates of a source's key envelope, min then max: as
-    * doubles for numeric keys, as strings for string keys, none for
-    * key types that cannot prune. */
-  private def keyEnvelope(source: DataFrame, keyCol: String)
+  /** The aggregates of a source key's envelope, min then max, when that
+    * envelope orders like the `target` column it skips files of (the
+    * same type, or both numeric); none otherwise — a string envelope
+    * bounds nothing on a numeric column ("10" < "9"). */
+  private def keyEnvelope(source: DataFrame, keyCol: String,
+      target: org.apache.spark.sql.types.DataType)
       : Seq[org.apache.spark.sql.Column] = {
     import org.apache.spark.sql.functions.{col, max, min}
     import org.apache.spark.sql.types._
-    source.schema(keyCol).dataType match {
-      case ByteType | ShortType | IntegerType | LongType |
-           FloatType | DoubleType =>
-        Seq(min(col(keyCol)).cast("double"), max(col(keyCol)).cast("double"))
-      case StringType => Seq(min(col(keyCol)), max(col(keyCol)))
-      case _ => Seq.empty
+    val orders = (source.schema(keyCol).dataType, target) match {
+      case (_: NumericType, _: NumericType) => true
+      case (k @ (StringType | DateType | TimestampType | TimestampNTZType),
+          t) => k == t
+      case _ => false
     }
+    if (orders) Seq(min(col(keyCol)), max(col(keyCol))) else Seq.empty
   }
 
-  /** [[sourceKeyMayMatch]]'s test from a computed [[keyEnvelope]],
-    * whose min and max sit at `at` and `at + 1` of `row`. */
-  private def envelopeMayMatch(m: VersionManifest, source: DataFrame,
-      keyCol: String, row: org.apache.spark.sql.Row,
-      at: Int): ManifestEntry => Boolean = {
-    import org.apache.spark.sql.types.StringType
-    val phys = physFor(m, keyCol)
-    val partCols = m.partitionBy.toSet
-    if (row.isNullAt(at)) (_: ManifestEntry) => true
-    else if (source.schema(keyCol).dataType == StringType)
-      strRangeMayMatch(partCols, phys, row.getString(at),
-        row.getString(at + 1)) _
-    else {
-      val (lo, hi) = (row.getDouble(at), row.getDouble(at + 1))
-      if (math.abs(lo) > 9007199254740992.0 ||
-          math.abs(hi) > 9007199254740992.0) (_: ManifestEntry) => true
-      else rangeMayMatch(partCols, phys, lo, hi) _
-    }
+  /** `keyCol` within the [[keyEnvelope]] whose min and max sit at `at`
+    * and `at + 1` of `row`: the predicate a keyed DML hands to
+    * [[predicateMayMatch]]. With no envelope, or an all-null key,
+    * every file is a candidate. NULL source keys are safe to ignore
+    * here: an equi-join key never matches NULL, so null-key source
+    * rows are always inserts. */
+  private def envelopePredicate(keyCol: String, row: org.apache.spark.sql.Row,
+      at: Int): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.{col, lit}
+    if (row.length < at + 2 || row.isNullAt(at)) lit(true)
+    else col(keyCol) >= lit(row.get(at)) && col(keyCol) <= lit(row.get(at + 1))
   }
 
   /** MERGE via DELETION VECTORS (Delta 3.x DV-backed DML): matched
@@ -2152,8 +1889,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * untouched target rows stay exactly where they are.
     *
     * Scale shape: candidate files come from the source's first-key
-    * envelope against manifest stats / partition values ([[
-    * scanMayMatch]]'s test — numeric AND string keys), so a
+    * envelope ([[keyEnvelope]]) through [[predicateMayMatch]], so a
     * range-clustered table is touched only where the batch's keys
     * live. ONE scan of the candidates joins the source and keeps the
     * matched rows' (file, row_index) with their new images,
@@ -2205,15 +1941,13 @@ final class VersionedTable(spark: SparkSession, root: String) {
     val keyCol = mergeKeys.head
     val facts = src.agg(count(lit(1)),
       count_distinct(struct(mergeKeys.map(col): _*)) +:
-        keyEnvelope(src, keyCol): _*).head()
+        keyEnvelope(src, keyCol, schema(keyCol).dataType): _*).head()
     if (facts.getLong(0) == 0L) return curV
     require(facts.getLong(0) == facts.getLong(1),
       s"MERGE source has duplicate rows on (${mergeKeys.mkString(",")}) " +
         "— each target row may match at most one source row")
-    val mayMatch =
-      if (facts.length == 2) (_: ManifestEntry) => true
-      else envelopeMayMatch(m, src, keyCol, facts, 2)
-    val candidates = m.entries.filter(mayMatch)
+    val candidates = m.entries.filter(
+      predicateMayMatch(m, envelopePredicate(keyCol, facts, 2)))
     val tracked = m.rowIdHw.isDefined
     val metaFile = graftbridge.ManifestScan.FilePathCol
     val metaPos = graftbridge.ManifestScan.RowIndexCol
@@ -2297,48 +2031,22 @@ final class VersionedTable(spark: SparkSession, root: String) {
     v
   }
 
-  /** Row-level UPDATE of `column` ∈ [lo, hi] via DELETION VECTORS —
-    * [[updateBetween]] with O(changed rows) write amplification: the
-    * matched rows are masked out of their files (never rewritten) and
-    * their updated images appended, one atomic commit, exactly the
-    * [[mergeVectorized]] mechanics with the match coming from a
-    * predicate instead of a source join. Row-tracked tables carry
-    * each updated row's id, so the change feed reports updates as
-    * update pre/post image pairs. Partition columns can't be set
-    * (Delta's rule — use a MERGE); concurrency as
-    * [[deleteVectorized]] (WriteSerializable). */
-  def updateVectorizedBetween(column: String, lo: Double, hi: Double,
-      set: Map[String, org.apache.spark.sql.Column]): Long = {
-    import org.apache.spark.sql.functions.col
-    updateVectorizedCore(
-      matches = col(column) >= lo && col(column) <= hi,
-      mayMatch0 = m => rangeMayMatch(m.partitionBy.toSet,
-        physFor(m, column), lo, hi),
-      set = set,
-      opDesc = s"UPDATE DV $column IN [$lo,$hi]")
-  }
-
   /** Row-level UPDATE of every row satisfying an ARBITRARY predicate
-    * via deletion vectors — [[updateVectorizedBetween]] generalized to
-    * whatever WHERE clause a SQL `UPDATE` carries. Candidate files
-    * come from [[predicateMayMatch]]'s data skipping (comparisons /
-    * IN / BETWEEN / prefix conjuncts against recorded stats); rows
-    * where the predicate is NULL are NOT updated (SQL three-valued
-    * WHERE). Same O(changed rows) write amplification, partition-
-    * column rule, and WriteSerializable concurrency as the range
-    * form. */
+    * via DELETION VECTORS — the WHERE clause a SQL `UPDATE` carries,
+    * with O(changed rows) write amplification: the matched rows are
+    * masked out of their files (never rewritten) and their updated
+    * images appended, one atomic commit, exactly the
+    * [[mergeVectorized]] mechanics with the match coming from a
+    * predicate instead of a source join. Candidate files come from
+    * [[predicateMayMatch]]'s data skipping (comparisons / IN / BETWEEN
+    * / prefix conjuncts against recorded stats); rows where the
+    * predicate is NULL are NOT updated (SQL three-valued WHERE).
+    * Row-tracked tables carry each updated row's id, so the change
+    * feed reports updates as update pre/post image pairs. Partition
+    * columns can't be set (Delta's rule — use a MERGE); concurrency
+    * as [[deleteVectorized]] (WriteSerializable). */
   def updateVectorizedWhere(pred: org.apache.spark.sql.Column,
-      set: Map[String, org.apache.spark.sql.Column]): Long =
-    updateVectorizedCore(
-      matches = pred,
-      mayMatch0 = m => predicateMayMatch(m, pred),
-      set = set,
-      opDesc = s"UPDATE DV WHERE $pred")
-
-  private def updateVectorizedCore(matches: org.apache.spark.sql.Column,
-      mayMatch0: VersionManifest => ManifestEntry => Boolean,
-      set: Map[String, org.apache.spark.sql.Column],
-      opDesc: String): Long = {
+      set: Map[String, org.apache.spark.sql.Column]): Long = {
     import org.apache.spark.sql.functions.col
     require(set.nonEmpty, "updateVectorized needs a column to set")
     val curV = currentVersion.getOrElse(
@@ -2350,15 +2058,14 @@ final class VersionedTable(spark: SparkSession, root: String) {
     require(!set.keys.exists(m.partitionBy.contains),
       s"cannot update partition columns of $root in place " +
         "(rows would change partitions) — use a MERGE")
-    val mayMatch = mayMatch0(m)
-    val candidates = m.entries.filter(mayMatch)
+    val candidates = m.entries.filter(predicateMayMatch(m, pred))
     if (candidates.isEmpty) return curV // provably nothing to update
     val tracked = m.rowIdHw.isDefined
     val metaFile = graftbridge.ManifestScan.FilePathCol
     val metaPos = graftbridge.ManifestScan.RowIndexCol
     // PASS 1 — mask the matched rows (predicate-column-pruned scan)
     val matchedPairs = readFiles(m, candidates, withRowMeta = true)
-      .filter(matches)
+      .filter(pred)
       .select(fileRelCol(col(metaFile)).as("file_rel"),
         col(metaPos).as("pos"))
     // delta sidecar only (see mergeVectorized) — chain-appended in
@@ -2371,7 +2078,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
     val scan =
       if (tracked) logicalize(m, readFilesPhysicalRid(m, candidates))
       else readFiles(m, candidates)
-    val newImages = scan.filter(matches)
+    val newImages = scan.filter(pred)
       .select(schema.fields.toSeq.map { f =>
         set.get(f.name) match {
           case Some(expr) => expr.cast(f.dataType).as(f.name)
@@ -2383,7 +2090,8 @@ final class VersionedTable(spark: SparkSession, root: String) {
     writeCommitData(delogicalize(m.mapping, newImages), m.partitionBy,
       dataDir)
     val added = listCommitFiles(dataDir)
-    val v = commitMaskAppend(m, candidates, counts, folded, dvRel, added, opDesc)
+    val v = commitMaskAppend(m, candidates, counts, folded, dvRel, added,
+      s"UPDATE DV WHERE $pred")
     refreshBloomIndexes(v)
     v
   }
@@ -2417,8 +2125,13 @@ final class VersionedTable(spark: SparkSession, root: String) {
     val m = readManifest(curV)
     val keys = batchKeys.select(mergeKeys.map(col): _*).distinct()
       .localCheckpoint() // envelope agg AND the semi-join read it
-    val mayMatch = sourceKeyMayMatch(m, keys, mergeKeys.head)
-    val candidates = m.entries.filter(mayMatch)
+    val keyCol = mergeKeys.head
+    val candidates = keyEnvelope(keys, keyCol,
+        logicalSchema(m)(keyCol).dataType) match {
+      case Seq() => m.entries
+      case env => m.entries.filter(predicateMayMatch(m,
+        envelopePredicate(keyCol, keys.agg(env.head, env.tail: _*).head(), 0)))
+    }
     val metaFile = graftbridge.ManifestScan.FilePathCol
     val metaPos = graftbridge.ManifestScan.RowIndexCol
     val affected =
@@ -2455,7 +2168,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
   }
 
   /** Shared COMMIT half of the DV mask+append DML family
-    * ([[mergeVectorized]] / [[updateVectorizedBetween]] /
+    * ([[mergeVectorized]] / [[updateVectorizedWhere]] /
     * [[mergeClausesVectorized]]): atomically APPEND the new delta
     * sidecar to each touched candidate's DV chain (per-file
     * NEWLY-masked `counts`, keyed by scan-rendered path; 0 =
@@ -3006,9 +2719,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
     val windowOps = history(limit = Int.MaxValue)
       .filter(h => h.version > fromV && h.version <= toV)
     val rewriteOnly = windowOps.size == (toV - fromV) &&
-      windowOps.forall(h =>
-        h.operation.startsWith("OPTIMIZE") || // incl. OPTIMIZE WHERE
-          h.operation == "REORG PURGE")
+      windowOps.forall(h => VersionedTable.layoutOp(h.operation))
     if (rewriteOnly) {
       val fields = org.apache.spark.sql.types.StructField(
           RowIdCol, org.apache.spark.sql.types.LongType) +:
@@ -3124,10 +2835,8 @@ final class VersionedTable(spark: SparkSession, root: String) {
       val ops = history(limit = Int.MaxValue)
         .filter(h => h.version > fromV && h.version <= toV)
       val complete = ops.size == (toV - fromV)
-      def rewriteSafe(op: String) =
-        op.startsWith("OPTIMIZE") || op == "REORG PURGE"
       if (complete && removed.nonEmpty && ops.forall(h =>
-          rewriteSafe(h.operation))) {
+          VersionedTable.layoutOp(h.operation))) {
         // pure layout window: empty by construction (answered from
         // history — proving emptiness with a diff would be O(table))
         return spark.createDataFrame(
@@ -3142,7 +2851,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
       // death (fully-masked file dropped — its pre-window live rows
       // are exactly the deleted rows); masks only grew
       val derivable = complete &&
-        ops.forall(h => !rewriteSafe(h.operation) &&
+        ops.forall(h => !VersionedTable.layoutOp(h.operation) &&
           !h.operation.startsWith("RESTORE")) &&
         (removed.isEmpty || removalsAllDvDeaths(fromV, toV)) &&
         dvChangedEntries.forall(e =>
@@ -3197,10 +2906,6 @@ final class VersionedTable(spark: SparkSession, root: String) {
     val opByV = history(limit = Int.MaxValue)
       .filter(h => h.version > fromV && h.version <= toV)
       .map(h => h.version -> h.operation).toMap
-    def dvDml(op: String) = op.startsWith("DELETE DV") ||
-      op.startsWith("UPDATE DV") || op.startsWith("MERGE DV")
-    def pureRemovalOp(op: String) = op == "TRUNCATE" ||
-      op.toUpperCase.startsWith("DELETE")
     var prev = readManifest(fromV).entries.map(_.relPath).toSet
     ((fromV + 1) to toV).forall { v =>
       val cur = readManifest(v).entries.map(_.relPath).toSet
@@ -3208,7 +2913,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
       val addedHere = (cur -- prev).nonEmpty
       prev = cur
       !removedHere || opByV.get(v).exists(op =>
-        dvDml(op) || (pureRemovalOp(op) && !addedHere))
+        VersionedTable.deathsOnly(op, addedFiles = addedHere))
     }
   }
 
@@ -3232,12 +2937,6 @@ final class VersionedTable(spark: SparkSession, root: String) {
     val opByV = history(limit = Int.MaxValue)
       .filter(h => h.version > fromV && h.version <= toV)
       .map(h => h.version -> h.operation).toMap
-    def rewriteSafe(op: String) =
-      op.startsWith("OPTIMIZE") || op == "REORG PURGE"
-    def dvDml(op: String) = op.startsWith("DELETE DV") ||
-      op.startsWith("UPDATE DV") || op.startsWith("MERGE DV")
-    def pureRemovalOp(op: String) = op == "TRUNCATE" ||
-      op.toUpperCase.startsWith("DELETE")
     // 0 = mergeable (derivable DML/append), 1 = layout (empty),
     // 2 = other (single-commit snapshot diff)
     var prev = readManifest(fromV)
@@ -3253,10 +2952,10 @@ final class VersionedTable(spark: SparkSession, root: String) {
       val cls = opByV.get(v) match {
         case None => 2 // history gap: prove nothing
         case Some(op) if op.startsWith("RESTORE") => 2
-        case Some(op) if rewriteSafe(op) => 1 // layout moves no rows
+        case Some(op) if VersionedTable.layoutOp(op) => 1 // moves no rows
         case Some(_) if dvShrunk => 2
         case Some(op) if removed &&
-          !(dvDml(op) || (pureRemovalOp(op) && !added)) => 2
+          !VersionedTable.deathsOnly(op, addedFiles = added) => 2
         case Some(_) => 0
       }
       v -> cls
@@ -4531,7 +4230,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
   /** The one place commit data hits parquet. Spark still DEFAULTS
     * timestamp output to INT96 (Hive compat), whose footers carry NO
     * statistics — every timestamp column would be unprunable and
-    * [[readWhereTimestamp]] dead on arrival. When the session sits on
+    * timestamp skipping dead on arrival. When the session sits on
     * that default, commits write TIMESTAMP_MICROS instead (the form
     * whose Long stats the manifest scrape records); a session that
     * explicitly chose MILLIS/MICROS is left alone. The commit protocol
@@ -5200,30 +4899,104 @@ object VersionedTable {
     }
   }
 
-  /** One conjunct of a unified [[VersionedTable.readMatching]] read —
-    * the typed predicate shapes the single-column readWhere* family
-    * exposes, combinable in ONE call (and one manifest pass):
-    * `readMatching(PartitionEq("dt", "2024-01-01"),
+  /** One conjunct of a [[VersionedTable.readMatching]] read (and of a
+    * [[VersionedTable.pruningReport]]), combinable in ONE call and one
+    * manifest pass: `readMatching(PartitionEq("dt", "2024-01-01"),
     * TsRange("ts", lo, hi))` prunes on the partition value AND the
-    * timestamp stats before any file is opened. */
-  sealed trait TablePredicate
-  /** Partition-value equality (exact on the raw hive path spelling);
-    * on a non-partition column falls back to numeric stats when the
-    * value parses as a number. */
+    * timestamp stats before any file is opened. Each is a row filter,
+    * [[condition]]; the files a read plans are those
+    * [[VersionedTable.predicateMayMatch]] admits for the conjunction,
+    * so values compare as Spark compares them (cast to the column's
+    * type) and a file the manifest knows nothing about is read. */
+  sealed trait TablePredicate {
+    /** The row filter this predicate stands for. */
+    def condition: org.apache.spark.sql.Column
+  }
+  /** `column = value`, the value spelled the way a partition path
+    * spells it (`dt=2024-01-01` is `PartitionEq("dt", "2024-01-01")`)
+    * and cast to the column's type, so `"03"` finds an int partition
+    * `3`. On a partition column a file prunes on its partition value
+    * (every row's value); on any other column on its stats. Files
+    * with a null, non-ASCII string or undecodable partition value are
+    * read. */
   final case class PartitionEq(column: String, value: String)
-      extends TablePredicate
-  /** Numeric [lo, hi] range over recorded min/max stats. */
+      extends TablePredicate {
+    def condition: org.apache.spark.sql.Column =
+      org.apache.spark.sql.functions.col(column) ===
+        org.apache.spark.sql.functions.lit(value)
+  }
+  /** Numeric `column` ∈ [lo, hi] over the recorded min/max stats or
+    * the partition value; ranges on several columns compound the
+    * skipping (a file in the right id range but the wrong timestamp
+    * range is pruned). Files without stats for the column (all-null,
+    * decimal, pre-stats manifests) are read, and so is every file
+    * when a bound lies beyond 2^53. A point range on a `bucket<n>`
+    * or a range on a `trunc<w>` generator's source also prunes the
+    * generated partitions. */
   final case class NumRange(column: String, lo: Double, hi: Double)
-      extends TablePredicate
-  /** Timestamp range over ISO-8601 instants (stats in epoch-micros). */
+      extends TablePredicate {
+    def condition: org.apache.spark.sql.Column = {
+      val c = org.apache.spark.sql.functions.col(column)
+      c >= lo && c <= hi
+    }
+  }
+  /** Timestamp `column` ∈ [loIso, hiIso] — the watermark read ("rows
+    * since my last high-water mark") with no manual unit conversion:
+    * bounds are ISO-8601 instants, stats compare in epoch micros (the
+    * unit parquet stores), partition values decode as timestamps in
+    * the session time zone. A range on a `day`/`hour`/`month`/`year`
+    * generator's source also prunes the generated partitions. */
   final case class TsRange(column: String, loIso: String, hiIso: String)
-      extends TablePredicate
-  /** Date range over `yyyy-MM-dd` bounds (stats in epoch-days). */
+      extends TablePredicate {
+    def condition: org.apache.spark.sql.Column = {
+      import org.apache.spark.sql.functions.{col, lit}
+      def at(iso: String) =
+        lit(java.sql.Timestamp.from(java.time.Instant.parse(iso)))
+      col(column) >= at(loIso) && col(column) <= at(hiIso)
+    }
+  }
+  /** Date `column` ∈ [lo, hi], bounds `yyyy-MM-dd`: stats compare in
+    * epoch days (parquet's date unit), `dt=yyyy-MM-dd` partition
+    * values decode as dates. */
   final case class DateRange(column: String, lo: String, hi: String)
-      extends TablePredicate
-  /** String range over the short-ASCII string stats. */
+      extends TablePredicate {
+    def condition: org.apache.spark.sql.Column = {
+      import org.apache.spark.sql.functions.{col, lit}
+      def at(d: String) =
+        lit(java.sql.Date.valueOf(java.time.LocalDate.parse(d)))
+      col(column) >= at(lo) && col(column) <= at(hi)
+    }
+  }
+  /** `column` ∈ [lo, hi] with string bounds. On a string column it
+    * prunes on the short pure-ASCII min/max stats and ASCII partition
+    * values (the encoding where parquet's, Spark's and Java's string
+    * orders agree: `yyyy-MM-dd` strings, zero-padded ids, status
+    * codes); long or non-ASCII values are read. On a date or
+    * timestamp column the bounds cast to its type, as the row filter
+    * does; on a numeric column they never prune. */
   final case class StrRange(column: String, lo: String, hi: String)
-      extends TablePredicate
+      extends TablePredicate {
+    def condition: org.apache.spark.sql.Column = {
+      import org.apache.spark.sql.functions.{col, lit}
+      col(column) >= lit(lo) && col(column) <= lit(hi)
+    }
+  }
+
+  /** A history operation that moves bytes, never rows: OPTIMIZE
+    * (OPTIMIZE WHERE included) or REORG PURGE. */
+  private[io] def layoutOp(op: String): Boolean =
+    op.startsWith("OPTIMIZE") || op == "REORG PURGE"
+
+  /** Are the files commit `op` removed whole-file DEATHS (every prior
+    * live row deleted)? True for DV DML — every DV delete, update and
+    * merge records a `DELETE DV` / `UPDATE DV` / `MERGE DV` operation,
+    * and a DV commit drops only fully-masked files — and for a DELETE
+    * or TRUNCATE that added no files (a delete that kept survivors
+    * would have rewritten them into new ones). */
+  private[io] def deathsOnly(op: String, addedFiles: Boolean): Boolean =
+    op.startsWith("DELETE DV") || op.startsWith("UPDATE DV") ||
+      op.startsWith("MERGE DV") ||
+      (!addedFiles && (op == "TRUNCATE" || op.toUpperCase.startsWith("DELETE")))
 
   /** [[VersionedTable.pruningReport]]'s answer: planned vs total scan
     * economics of a predicated read, straight from the manifest. */
@@ -5276,8 +5049,8 @@ final case class VersionConflictException(message: String)
   * time, and the basis for manifest-level file skipping at read
   * time). Date and timestamp columns land in the NUMERIC `stats` as
   * epoch-days / epoch-micros, the unit parquet physically stores —
-  * [[VersionedTable.readWhereDate]]/[[VersionedTable.readWhereTimestamp]]
-  * do the unit conversion so callers never touch ordinals. */
+  * file skipping ([[VersionedTable.predicateMayMatch]]) does the unit
+  * conversion so callers never touch ordinals. */
 final case class ManifestEntry(relPath: String, rows: Long, bytes: Long,
     stats: Map[String, (Double, Double)] = Map.empty,
     strStats: Map[String, (String, String)] = Map.empty,

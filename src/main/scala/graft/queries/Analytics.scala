@@ -1149,7 +1149,7 @@ object Analytics {
     * with the merge key a DOC-ID STRING — the key shape LLM-pipeline
     * dimension tables actually use. The sink's stats-pruned fold now
     * rides the manifest's short-ASCII string min/max (M12 →
-    * [[graft.io.VersionedTable.scanMayMatchString]]): each narrow
+    * [[graft.io.VersionedTable.scanMayMatch]]): each narrow
     * batch replaceWhere-rewrites only the files whose STRING key
     * range it may touch and re-references the rest byte-identically
     * (StreamingSpec pins the file-level contract) — before r15 a

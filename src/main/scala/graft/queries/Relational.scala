@@ -588,7 +588,7 @@ object Relational {
   }
 
   /** DV-BACKED UPDATE (q241;
-    * [[graft.io.VersionedTable.updateVectorizedBetween]]): the q42
+    * [[graft.io.VersionedTable.updateVectorizedWhere]]): the q42
     * row-level UPDATE re-expressed as mask + append — the matched
     * band's rows are DV-masked out of their files and their updated
     * images appended in one atomic commit, so a 0.1%-band update on
@@ -606,7 +606,7 @@ object Relational {
       (col("o_totalprice").cast("decimal(18,4)") * 100)
         .cast("long").as("cents"), col("o_orderstatus"))
       .repartitionByRange(8, col("o_orderkey")))
-    vt.updateVectorizedBetween("o_orderkey", 1000, 3000,
+    vt.updateVectorizedWhere(col("o_orderkey").between(1000, 3000),
       Map("cents" -> (col("cents") + 5L), "o_orderstatus" -> lit("Z")))
     vt.read().orderBy("o_orderkey")
   }
@@ -1741,7 +1741,7 @@ object Relational {
   /** STATS-BASED DATA SKIPPING under the oracle (q148, previously
     * spec-only — M12): orders committed as many RANGE-CLUSTERED files
     * (repartitionByRange on the key writes each file a disjoint key
-    * span, each with recorded [min,max] stats), then `readBetween`
+    * span, each with recorded [min,max] stats), then a `NumRange` read
     * plans ONLY the files whose stats intersect the predicate and
     * applies it row-level. The oracle is the plain WHERE — so a stats
     * bug that prunes a file it shouldn't (missing rows) or mis-skips
@@ -1756,7 +1756,7 @@ object Relational {
     vt.write(load(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
       .repartitionByRange(16, col("o_orderkey")))
-    vt.readBetween("o_orderkey", 2000, 4000)
+    vt.readMatching(graft.io.VersionedTable.NumRange("o_orderkey", 2000, 4000))
       .orderBy("o_orderkey")
   }
 
@@ -1764,7 +1764,7 @@ object Relational {
     * oracle (q170 — M2×M12 jointly, where q148 pins one dimension):
     * orders are Z-ORDERED on (o_orderkey, o_custkey) — the interleaved
     * curve gives every file a TIGHT [min,max] envelope on BOTH
-    * columns — then `readWhere` plans only the files whose recorded
+    * columns — then `readMatching` plans only the files whose recorded
     * envelopes intersect BOTH ranges and row-filters the survivors.
     * The oracle is the plain conjunctive WHERE, so wrong pruning in
     * either dimension (skipped rows or unfiltered extras)
@@ -1780,9 +1780,8 @@ object Relational {
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice")))
     graft.maintenance.Maintenance.zOrderBy(spark, root,
       Seq("o_orderkey", "o_custkey"), numPartitions = Some(16))
-    vt.readWhere(Map(
-        "o_orderkey" -> (1000.0, 9000.0),
-        "o_custkey" -> (200.0, 900.0)))
+    vt.readMatching(graft.io.VersionedTable.NumRange("o_orderkey", 1000, 9000),
+        graft.io.VersionedTable.NumRange("o_custkey", 200, 900))
       .orderBy("o_orderkey")
   }
 
@@ -1793,7 +1792,7 @@ object Relational {
     * UNSORTED and a second incremental pass clusters ONLY those new
     * files — the first pass's entries survive byte-identically
     * (LiquidClusterSpec pins that) — before a conjunctive 2-D
-    * readWhere spans BOTH file populations. The oracle is the plain
+    * range read spans BOTH file populations. The oracle is the plain
     * conjunctive BETWEEN, so over-pruning in either population loses
     * rows and hash-mismatches. Scale: nightly clustering costs one
     * pass over the DAY'S files, never an O(table) rewrite, and
@@ -1811,9 +1810,8 @@ object Relational {
       org.apache.spark.sql.SaveMode.Append)
     graft.maintenance.Maintenance.clusterIncrementalBy(spark, root,
       Seq("o_orderkey", "o_custkey"), numPartitions = Some(8))
-    vt.readWhere(Map(
-        "o_orderkey" -> (1000.0, 9000.0),
-        "o_custkey" -> (200.0, 900.0)))
+    vt.readMatching(graft.io.VersionedTable.NumRange("o_orderkey", 1000, 9000),
+        graft.io.VersionedTable.NumRange("o_custkey", 200, 900))
       .orderBy("o_orderkey")
   }
 
@@ -1839,8 +1837,8 @@ object Relational {
         date_format(col("ts"), "yyyy-MM-dd").as("day")),
       partitionBy = Some(Seq("day")))
     vt.recordGenerated("day", "day(ts)")
-    vt.readWhereTimestamp("ts",
-        "2024-01-10T06:00:00Z", "2024-01-13T18:00:00Z")
+    vt.readMatching(graft.io.VersionedTable.TsRange("ts",
+        "2024-01-10T06:00:00Z", "2024-01-13T18:00:00Z"))
       .select("event_id", "user_id", "event_type", "day")
       .orderBy("event_id")
   }
@@ -1869,8 +1867,8 @@ object Relational {
         date_format(col("ts"), "yyyy-MM-dd-HH").as("hr")),
       partitionBy = Some(Seq("hr")))
     vt.recordGenerated("hr", "hour(ts)")
-    vt.readWhereTimestamp("ts",
-        "2024-01-12T06:30:00Z", "2024-01-13T02:15:00Z")
+    vt.readMatching(graft.io.VersionedTable.TsRange("ts",
+        "2024-01-12T06:30:00Z", "2024-01-13T02:15:00Z"))
       .select("event_id", "user_id", "event_type", "hr")
       .orderBy("event_id")
   }
@@ -1901,7 +1899,8 @@ object Relational {
     vt.write(o.filter(col("o_orderkey") % 2 =!= 0),
       org.apache.spark.sql.SaveMode.Append) // raw: the writer derives kb
     Seq(11L, 502L, 7004L)
-      .map(k => vt.readWhere(Map("o_orderkey" -> (k.toDouble, k.toDouble))))
+      .map(k =>
+        vt.readMatching(graft.io.VersionedTable.NumRange("o_orderkey", k, k)))
       .reduce(_.unionByName(_))
       .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
       .orderBy("o_orderkey")
@@ -1937,7 +1936,7 @@ object Relational {
     vt.write(o.filter(col("o_orderkey") % 2 =!= 0)
         .repartition(col("o_orderkey") - pmod(col("o_orderkey"), lit(2000L))),
       org.apache.spark.sql.SaveMode.Append) // raw: the writer derives ks
-    vt.readWhere(Map("o_orderkey" -> (3000.0, 7000.0)))
+    vt.readMatching(graft.io.VersionedTable.NumRange("o_orderkey", 3000, 7000))
       .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
       .orderBy("o_orderkey")
   }

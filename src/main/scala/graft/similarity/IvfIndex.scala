@@ -131,10 +131,9 @@ object IvfIndex {
     * the commit on; prior versions still serve the pre-delete index
     * via time travel. This closes the dedup-pipeline loop: the
     * survivor list's complement deletes straight out of the index. */
-  def delete(spark: SparkSession, root: String, ids: Set[Long]): Unit = {
-    new VersionedTable(spark, s"$root/vectors").deleteVectorizedIn("id", ids)
-    ()
-  }
+  def delete(spark: SparkSession, root: String, ids: Set[Long]): Unit =
+    if (ids.nonEmpty) new VersionedTable(spark, s"$root/vectors")
+      .deleteVectorizedWhere(col("id").isin(ids.toSeq: _*))
 
   /** DISTRIBUTED delete — the id set as a single-column FRAME, riding
     * [[graft.io.VersionedTable.deleteVectorizedKeys]]' semi-join mask:

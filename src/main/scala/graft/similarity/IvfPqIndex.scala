@@ -136,10 +136,12 @@ object IvfPqIndex {
     * commit lands, even if the codes mask hasn't landed yet (the
     * stale code row only wastes a candidate slot). Old versions of
     * both tables still serve the pre-delete index via time travel. */
-  def delete(spark: SparkSession, root: String, ids: Set[Long]): Unit = {
-    new VersionedTable(spark, s"$root/vectors").deleteVectorizedIn("id", ids)
-    new VersionedTable(spark, s"$root/codes").deleteVectorizedIn("id", ids)
-  }
+  def delete(spark: SparkSession, root: String, ids: Set[Long]): Unit =
+    if (ids.nonEmpty) {
+      val matches = col("id").isin(ids.toSeq: _*)
+      new VersionedTable(spark, s"$root/vectors").deleteVectorizedWhere(matches)
+      new VersionedTable(spark, s"$root/codes").deleteVectorizedWhere(matches)
+    }
 
   /** DISTRIBUTED delete — ids as a single-column FRAME through the
     * semi-join mask kernel ([[graft.io.VersionedTable

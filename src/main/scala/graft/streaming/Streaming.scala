@@ -461,16 +461,14 @@ object Streaming {
         ()
       } else {
         // Stats-pruned fold (M35): scan only the state files that MAY
-        // hold the batch's keys, re-reference the rest untouched. The
-        // pruned path is taken ONLY when the key envelope is provably
-        // sound: a NULL key in the batch would never be seen against
-        // null-key state rows living in envelope-pruned files (the
-        // window dedup needs them in the same fold — two rows for the
-        // null key otherwise), and a numeric key beyond 2^53 can round
-        // under the double-typed manifest stats such that a file
-        // actually holding a batch key is pruned — both fall back to
-        // the full fold. String keys prune via the manifest's
-        // short-ASCII string stats (scanMayMatchString).
+        // hold the batch's keys (the key's [min, max] envelope through
+        // VersionedTable.scanMayMatch, which refuses to prune where
+        // the stats cannot decide: a bound beyond 2^53, a NaN, a key
+        // type without stats), re-reference the rest untouched. A NULL
+        // key in the batch falls back to the full fold: it would never
+        // be seen against null-key state rows living in envelope-
+        // pruned files (the window dedup needs them in the same fold —
+        // two rows for the null key otherwise).
         def fullFold(): Unit = {
           val state = vt.read().withColumn(opCol, lit("upsert"))
             .select(cols.map(col): _*)
@@ -506,31 +504,16 @@ object Streaming {
             ()
           }
         } else batch.schema(keyCol).dataType match {
-          case ByteType | ShortType | IntegerType | LongType |
-               FloatType | DoubleType =>
-            // the batch's key envelope: four scalars off one
-            // batch-sized scan (count(*) vs count(key) = null check)
-            val env = batch.agg(
-              min(col(keyCol)).cast("double"),
-              max(col(keyCol)).cast("double"),
-              count(lit(1)), count(col(keyCol))).head()
-            if (env.isNullAt(0) || env.getLong(2) != env.getLong(3) ||
-                math.abs(env.getDouble(0)) > 9007199254740992.0 ||
-                math.abs(env.getDouble(1)) > 9007199254740992.0)
-              fullFold()
-            else {
-              val (scan, keep, basisV) = vt.scanMayMatch(
-                keyCol, env.getDouble(0), env.getDouble(1))
-              prunedFold(scan, keep, basisV)
-            }
-          case StringType =>
+          case _: NumericType | StringType | DateType | TimestampType =>
+            // the batch's typed key envelope and its null check: four
+            // scalars off one batch-sized scan
             val env = batch.agg(min(col(keyCol)), max(col(keyCol)),
               count(lit(1)), count(col(keyCol))).head()
             if (env.isNullAt(0) || env.getLong(2) != env.getLong(3))
               fullFold()
             else {
-              val (scan, keep, basisV) = vt.scanMayMatchString(
-                keyCol, env.getString(0), env.getString(1))
+              val (scan, keep, basisV) = vt.scanMayMatch(col(keyCol)
+                .between(lit(env.get(0)), lit(env.get(1))))
               prunedFold(scan, keep, basisV)
             }
           case _ => fullFold() // no stats semantics for this key type

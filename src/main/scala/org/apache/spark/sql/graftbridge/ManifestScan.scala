@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference,
 import org.apache.spark.sql.execution.datasources.{FileIndex,
   HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.types.{DataType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One scan-able parquet file as recorded in a VersionedTable manifest:
@@ -58,16 +58,16 @@ final class ManifestFileIndex(
     * time-travel or file-pruned scan of the same table). */
   def manifestFilePaths: Seq[String] = files.map(_.path)
 
-  /** Decoded string partition values → a typed values row, via Cast
-    * from the string form Spark itself rendered at write time (the
-    * exact inverse Spark's own partition inference applies). A missing
-    * value is the null partition (`__HIVE_DEFAULT_PARTITION__`). */
+  /** Decoded string partition values → a typed values row, via
+    * [[ManifestScan.castValue]] from the string form Spark itself
+    * rendered at write time (the exact inverse Spark's own partition
+    * inference applies). A missing value is the null partition
+    * (`__HIVE_DEFAULT_PARTITION__`). */
   private def partitionRow(values: Map[String, String]): InternalRow =
     InternalRow.fromSeq(partitionSchema.fields.toSeq.map { field =>
       values.get(field.name) match {
-        case Some(v) =>
-          Cast(Literal(UTF8String.fromString(v), StringType), field.dataType,
-            Some(sessionTimeZone)).eval(InternalRow.empty)
+        case Some(v) => ManifestScan.castValue(UTF8String.fromString(v),
+          StringType, field.dataType, sessionTimeZone)
         case None => null
       }
     })
@@ -128,6 +128,14 @@ object ManifestScan {
     * immutable, so (file, row_index) never changes for a given row. */
   val FilePathCol = "_graft_file_path"
   val RowIndexCol = "_graft_row_index"
+
+  /** A catalyst value `v` of type `from` as a value of `to`, through
+    * Spark's own `Cast` in `timeZone`: how a partition path value
+    * becomes its column's value, and how file skipping lifts a literal
+    * to the column it is compared with. Throws, or yields null, where
+    * the cast does. */
+  def castValue(v: Any, from: DataType, to: DataType, timeZone: String): Any =
+    Cast(Literal(v, from), to, Some(timeZone)).eval(InternalRow.empty)
 
   /** A DataFrame over `files`, with `partitionColumns` supplied from
     * the manifest (typed per `snapshotSchema`) rather than inferred

@@ -66,7 +66,7 @@ class CdfMetaSpec extends AnyFunSuite {
     vt.enableRowTracking() // v1
     val v2 = vt.mergeVectorized(Seq((7L, 700L), (200L, 1L)).toDF("k", "v"),
       Seq("k"))
-    val v3 = vt.updateVectorizedBetween("k", 20, 22,
+    val v3 = vt.updateVectorizedWhere(col("k").between(20, 22),
       Map("v" -> (col("v") + 1L)))
     val feed = vt.changesWithUpdatesMeta(1L, v3)
     val byType = feed.groupBy("_commit_version", "_change_type").count()

@@ -67,7 +67,7 @@ class ColumnDefaultSpec extends AnyFunSuite {
     vt.write(Seq((3L, 30L, 9L)).toDF("id", "v", "prio"), SaveMode.Append)
     // pre-addition files have no prio stats -> conservatively read,
     // then row-filtered on the DEFAULTED value
-    val hit = vt.readBetween("prio", 7, 7).select("id").collect()
+    val hit = vt.readMatching(VersionedTable.NumRange("prio", 7, 7)).select("id").collect()
       .map(_.getLong(0)).toSet
     assert(hit === Set(1L, 2L))
     assert(vt.read().filter(col("prio") === 9L).count() === 1L)

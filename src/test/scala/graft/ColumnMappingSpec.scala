@@ -140,8 +140,8 @@ class ColumnMappingSpec extends AnyFunSuite {
       s"generated pruning planned wrong partitions: $days")
     assert(after.size <= before.size)
     // correctness: pruned read == full filter
-    val got = vt.readWhereTimestamp("ts",
-      "2024-03-02T00:00:00Z", "2024-03-04T23:00:00Z")
+    val got = vt.readMatching(VersionedTable.TsRange("ts",
+      "2024-03-02T00:00:00Z", "2024-03-04T23:00:00Z"))
       .select("id").collect().map(_.getLong(0)).sorted
     assert(got === (20L until 80L).toArray)
     // guards

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.graftbridge.ManifestFileIndex
 import org.apache.spark.sql.functions._
@@ -67,19 +67,40 @@ class DataSkippingSpec extends AnyFunSuite {
     DataSkippingSpec.planned(vt, df).map(fileIndex(vt))
   }
 
+  /** Which files (by append order) the DML analyzer admits for `pred`. */
+  private def mayMatchFiles(vt: VersionedTable, pred: Column): Set[Int] = {
+    val m = vt.currentManifest
+    m.entries.filter(vt.predicateMayMatch(m, pred)).map(e => fileIndex(vt)(e.relPath))
+      .toSet
+  }
+
+  private def sortedRows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
   test("every predicate shape skips on int, long, double, date, timestamp and string") {
     val src = frame(gridRows)
     // literals at row i, per column
-    def at(c: String, i: Int): String = c match {
+    def day(i: Int) = java.time.LocalDate.of(2023, 1, 1).plusDays(i)
+    def hour(i: Int) = java.time.LocalDateTime.of(2023, 1, 1, 0, 0)
+      .plusHours(i).toString.replace('T', ' ')
+    def typed(c: String, i: Int): String = c match {
       case "i" => s"$i"
       case "l" => s"${i * 1000000L}"
       case "d" => s"${i + 0.5}"
-      case "dt" => s"DATE'${java.time.LocalDate.of(2023, 1, 1).plusDays(i)}'"
-      case "ts" => s"TIMESTAMP'${java.time.LocalDateTime.of(2023, 1, 1, 0, 0)
-        .plusHours(i).toString.replace('T', ' ')}'"
+      case "dt" => s"DATE'${day(i)}'"
+      case "ts" => s"TIMESTAMP'${hour(i)}'"
       case "s" => f"'k$i%02d'"
     }
-    for (c <- Seq("i", "l", "d", "dt", "ts", "s")) {
+    // string literals against temporal columns: Spark casts them to
+    // the column's type, and so does the analyzer
+    def spelled(c: String, i: Int): String = c match {
+      case "dt" => s"'${day(i)}'"
+      case "ts" => s"'${hour(i)}'"
+    }
+    val forms: Seq[(String, (String, Int) => String)] =
+      Seq("i", "l", "d", "dt", "ts", "s").map(_ -> typed _) ++
+        Seq("dt", "ts").map(_ -> spelled _)
+    for ((c, at) <- forms) {
       val v = at(c, 15)
       val above = Set(1, 2, 3)
       val cases = Seq(
@@ -99,11 +120,22 @@ class DataSkippingSpec extends AnyFunSuite {
         s"$c > ${at(c, 39)} AND $c < ${at(c, 0)}" -> Set.empty[Int])
       cases.foreach { case (pred, want) =>
         assert(filesFor(grid, src, pred) === want, pred)
+        // DML gets the same answer from the unresolved predicate
+        assert(mayMatchFiles(grid, expr(pred)) === want, s"DML: $pred")
       }
     }
     // null counts: file 3 is all null, file 0 holds one null
     assert(filesFor(grid, src, "n IS NULL") === Set(0, 3))
     assert(filesFor(grid, src, "n IS NOT NULL") === Set(0, 1, 2))
+    // a date literal against the timestamp column, and the reverse: the
+    // literal casts to the column's type, as Spark casts the pair
+    for ((pred, want) <- Seq("ts <= DATE'2023-01-01'" -> Set(0),
+        "ts >= DATE'2023-01-02'" -> Set(2, 3))) {
+      assert(filesFor(grid, src, pred) === want, pred)
+      assert(mayMatchFiles(grid, expr(pred)) === want, s"DML: $pred")
+    }
+    assert(mayMatchFiles(grid, expr("dt >= TIMESTAMP'2023-01-16 12:00:00'")) ===
+      Set(1, 2, 3))
     // a filter the stats cannot reason about plans every file
     assert(filesFor(grid, src, "i % 7 = 3") === Set(0, 1, 2, 3))
     assert(filesFor(grid, src, "NOT (i = 15)") === Set(0, 1, 2, 3))
@@ -218,6 +250,106 @@ class DataSkippingSpec extends AnyFunSuite {
     pT.deleteVectorizedWhere(col("p") === 1.5)
     assert(pT.read().collect().map(_.getDecimal(0).toPlainString).sorted.toSeq ===
       Seq("2.25", "7.00"))
+  }
+
+  test("typed reads compare as Spark does: string bounds on an int partition, non-ASCII partition values") {
+    /** A table partitioned by `p` (one file per value); the partition
+      * values `preds` plan, after checking its rows against the same
+      * filter over the in-memory rows. */
+    def partitioned(name: String, rows: Seq[Row], st: StructType)
+        : Seq[VersionedTable.TablePredicate] => Set[String] = {
+      val vt = new VersionedTable(spark,
+        Fixtures.tempDir("graft-skip") + "/" + name)
+      vt.write(frame(rows, st).coalesce(1), partitionBy = Some(Seq("p")))
+      preds => {
+        val cond = preds.map(_.condition).reduce(_ && _)
+        assert(sortedRows(vt.readMatching(preds: _*)) ===
+          sortedRows(frame(rows, st).filter(cond)), preds)
+        vt.matchingEntries(preds: _*).map(_.partitionValues("p")).toSet
+      }
+    }
+    val intPart = partitioned("intpart", Seq(Row(1, 3), Row(2, 20), Row(3, 200)),
+      StructType(Seq(StructField("id", IntegerType), StructField("p", IntegerType))))
+    // "20" < "3" and "200" > "100" as strings, but the row filter casts
+    // the bounds to int: 3 and 20 lie in [3, 100]. String bounds never
+    // prune a numeric column; a string point casts to its type
+    assert(intPart(Seq(VersionedTable.StrRange("p", "3", "100"))) ===
+      Set("3", "20", "200"))
+    assert(intPart(Seq(VersionedTable.PartitionEq("p", "03"))) === Set("3"))
+    assert(intPart(Seq(VersionedTable.NumRange("p", 19.5, 1000))) === Set("20", "200"))
+
+    // U+FFFD sorts above U+1F600 in Java's UTF-16 order and below it in
+    // Spark's UTF-8 byte order: a non-ASCII partition value is read.
+    // Hand-built entries, as this file system's JVM encoding cannot
+    // write such a path (object stores can)
+    val (repl, smile) = ("\uFFFD", "\uD83D\uDE00")
+    val host = table("strpart", Seq(frame(Seq(Row(1, 3)), StructType(Seq(
+      StructField("id", IntegerType), StructField("p", IntegerType))))))
+    val m = graft.io.VersionManifest(Some(StructType(Seq(
+        StructField("id", IntegerType), StructField("p", StringType)))),
+      Seq(repl, smile, "abc").map(v =>
+        graft.io.ManifestEntry(s"p=$v/f.parquet", 1L, 1L)),
+      partitionBy = Seq("p"))
+    def strPart(pred: VersionedTable.TablePredicate): Set[String] =
+      m.entries.filter(host.predicateMayMatch(m, pred.condition))
+        .map(_.partitionValues("p")).toSet
+    assert(strPart(VersionedTable.StrRange("p", repl, smile + smile)) ===
+      Set(repl, smile))
+    assert(strPart(VersionedTable.StrRange("p", "abc", "abd")) ===
+      Set("abc", repl, smile))
+    assert(strPart(VersionedTable.PartitionEq("p", "abd")) === Set(repl, smile))
+  }
+
+  test("DV update and delete on a string literal against a date or timestamp partition touch only that partition") {
+    val days = Seq("2023-01-01", "2023-01-02", "2023-01-03")
+    val kinds: Seq[(DataType, String => Any, String => String)] = Seq(
+      (DateType, d => java.sql.Date.valueOf(d), d => d),
+      (TimestampType,
+        d => java.sql.Timestamp.from(java.time.Instant.parse(d + "T00:00:00Z")),
+        d => s"$d 00:00:00"))
+    for ((pType, value, literal) <- kinds) {
+      val st = StructType(Seq(StructField("id", IntegerType),
+        StructField("v", LongType), StructField("p", pType)))
+      val rows = days.zipWithIndex.flatMap { case (d, k) =>
+        (0 until 3).map(j => Row(10 * k + j, 0L, value(d)))
+      }
+      val vt = new VersionedTable(spark,
+        Fixtures.tempDir("graft-skip") + "/dml-" + pType.typeName)
+      vt.write(frame(rows, st).coalesce(1), partitionBy = Some(Seq("p")))
+      val target = col("p") === literal("2023-01-02")
+      val m = vt.currentManifest
+      def day(e: graft.io.ManifestEntry) = e.partitionValues("p").take(10)
+      assert(m.entries.filter(vt.predicateMayMatch(m, target)).map(day) ===
+        Seq("2023-01-02"), pType)
+      // the other days' files stay exactly as they were
+      val others = m.entries.filterNot(day(_) == "2023-01-02")
+      def untouched(): Boolean =
+        vt.currentManifest.entries.filterNot(day(_) == "2023-01-02") == others
+
+      vt.updateVectorizedWhere(target, Map("v" -> lit(1L)))
+      val updated = frame(rows, st)
+        .withColumn("v", when(target, lit(1L)).otherwise(col("v")))
+      assert(sortedRows(vt.read()) === sortedRows(updated), pType)
+      assert(untouched(), pType)
+
+      vt.deleteVectorizedWhere(target)
+      assert(sortedRows(vt.read()) === sortedRows(updated.filter(!target)), pType)
+      assert(untouched(), pType)
+    }
+  }
+
+  test("deleteVectorizedKeys on a string key removes exactly the listed keys") {
+    val st = StructType(Seq(StructField("k", StringType), StructField("v", IntegerType)))
+    val groups = "abcd".map(g => (0 until 10).map(j => Row(s"$g$j", j)))
+    val vt = table("strkeys", groups.map(frame(_, st)))
+    val keys = frame(Seq(Row("b2"), Row("c7"), Row("zz")),
+      StructType(Seq(StructField("x", StringType))))
+    vt.deleteVectorizedKeys("k", keys)
+    assert(sortedRows(vt.read()) === sortedRows(frame(groups.flatten, st)
+      .filter(!col("k").isin("b2", "c7"))))
+    // only the files holding a listed key carry a mask
+    assert(vt.manifestEntries(vt.currentVersion.get).filter(_.dvDir.isDefined)
+      .map(e => fileIndex(vt)(e.relPath)).toSet === Set(1, 2))
   }
 }
 

@@ -60,7 +60,7 @@ class DeletionVectorSpec extends AnyFunSuite {
     val (vt, _) = freshTable("graft-dv-keys")
     // set flavor: scattered ids — only rows IN the set are masked,
     // not the whole [min,max] envelope
-    val v1 = vt.deleteVectorizedIn("id", Set(5L, 300L, 301L, 999L))
+    val v1 = vt.deleteVectorizedWhere(col("id").isin(5L, 300L, 301L, 999L))
     assert(vt.read().count() === 996L)
     assert(vt.read().filter(col("id").isin(5L, 300L, 301L, 999L))
       .count() === 0L)
@@ -218,7 +218,7 @@ class DeletionVectorSpec extends AnyFunSuite {
   test("predicate reads apply masks") {
     val (vt, _) = freshTable("graft-dv-preds")
     vt.deleteVectorized("id", 100, 299)
-    assert(vt.readBetween("id", 0, 399).count() === 200L)
-    assert(vt.readWherePartition(Map("bucket" -> "0")).count() === 200L)
+    assert(vt.readMatching(VersionedTable.NumRange("id", 0, 399)).count() === 200L)
+    assert(vt.readMatching(VersionedTable.PartitionEq("bucket", "0")).count() === 200L)
   }
 }

@@ -152,7 +152,7 @@ class DvMergeSpec extends AnyFunSuite {
     val (vt, _) = freshTable("graft-dvm-upd", tracked = true)
     val v0 = vt.currentVersion.get
     val before = vt.manifestEntries(v0)
-    val v1 = vt.updateVectorizedBetween("id", 100, 119,
+    val v1 = vt.updateVectorizedWhere(col("id").between(100, 119),
       Map("v" -> (col("v") + 1L)))
     val after = vt.manifestEntries(v1)
     // no pre-update file rewritten

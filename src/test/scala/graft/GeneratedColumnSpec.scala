@@ -35,8 +35,8 @@ class GeneratedColumnSpec extends AnyFunSuite {
     assert(planned === Set("2024-03-02-05", "2024-03-02-06",
       "2024-03-02-07", "2024-03-02-08"),
       s"hour pruning planned wrong partitions: $planned")
-    val ids = vt.readWhereTimestamp("ts",
-        "2024-03-02T05:10:00Z", "2024-03-02T08:45:00Z")
+    val ids = vt.readMatching(TsRange("ts",
+        "2024-03-02T05:10:00Z", "2024-03-02T08:45:00Z"))
       .select("id").as[Long].collect().sorted
     assert(ids === Array(205L, 206L, 207L, 208L))
   }
@@ -60,8 +60,8 @@ class GeneratedColumnSpec extends AnyFunSuite {
       .flatMap(_.partitionValues.get("hr")).toSet
     assert(planned === Set("2024-03-02-01", "2024-03-02-02"),
       s"materialized append must land prunable hour partitions: $planned")
-    val ids = vt.readWhereTimestamp("ts",
-        "2024-03-02T01:00:00Z", "2024-03-02T02:45:00Z")
+    val ids = vt.readMatching(TsRange("ts",
+        "2024-03-02T01:00:00Z", "2024-03-02T02:45:00Z"))
       .select("id").as[Long].collect().sorted
     assert(ids === Array(201L, 202L))
     assert(vt.read().count() === 8)
@@ -82,8 +82,8 @@ class GeneratedColumnSpec extends AnyFunSuite {
       .flatMap(_.partitionValues.get("mth")).toSet
     assert(planned === Set("2024-02", "2024-03", "2024-04"),
       s"month pruning planned wrong partitions: $planned")
-    val ids = vt.readWhereTimestamp("ts",
-        "2024-02-10T00:00:00Z", "2024-04-10T00:00:00Z")
+    val ids = vt.readMatching(TsRange("ts",
+        "2024-02-10T00:00:00Z", "2024-04-10T00:00:00Z"))
       .select("id").as[Long].collect().sorted
     assert(ids === Array(220L, 305L, 320L, 405L))
   }
@@ -101,8 +101,8 @@ class GeneratedColumnSpec extends AnyFunSuite {
         TsRange("ts", "2024-05-03T00:00:00Z", "2024-05-04T23:59:59Z"))
       .flatMap(_.partitionValues.get("dt")).toSet
     assert(planned === Set("2024-05-03", "2024-05-04"))
-    assert(vt.readWhereTimestamp("ts",
-        "2024-05-03T00:00:00Z", "2024-05-04T23:59:59Z")
+    assert(vt.readMatching(TsRange("ts",
+        "2024-05-03T00:00:00Z", "2024-05-04T23:59:59Z"))
       .select("id").as[Long].collect().sorted === Array(3L, 4L))
   }
 
@@ -182,7 +182,7 @@ class GeneratedColumnSpec extends AnyFunSuite {
       .flatMap(_.partitionValues.get("kb")).toSet
     assert(all.size > 1, "fixture must span several buckets")
     // and the read is exact
-    assert(vt.readWhere(Map("id" -> (70.0, 70.0)))
+    assert(vt.readMatching(VersionedTable.NumRange("id", 70.0, 70.0))
       .select("s").collect().map(_.getString(0)).toSeq === Seq("v70"))
     // a RANGE on the source column must NOT bucket-prune (hash
     // buckets scatter ranges): every bucket stays planned
@@ -224,7 +224,7 @@ class GeneratedColumnSpec extends AnyFunSuite {
       .flatMap(_.partitionValues.get("ks")).toSet
     assert(high === Set("90"))
     // the read stays row-exact at stripe boundaries
-    assert(vt.readWhere(Map("id" -> (25.0, 44.0))).count() === 20L)
+    assert(vt.readMatching(VersionedTable.NumRange("id", 25.0, 44.0)).count() === 20L)
     intercept[RuntimeException] { vt.recordGenerated("ks", "trunc0(id)") }
   }
 

@@ -520,7 +520,7 @@ class GraftSqlSpec extends AnyFunSuite {
       "SELECT k FROM ev WHERE grp = 'B'", cat)
       .as[Long].collect().toSeq === Seq(2L))
     // the hive layout is real: the partition read plans only B
-    assert(vt.readWherePartition(Map("grp" -> "B")).count() === 1L)
+    assert(vt.readMatching(VersionedTable.PartitionEq("grp", "B")).count() === 1L)
   }
 
   test("INSERT OVERWRITE: full overwrite keeps the layout and the " +

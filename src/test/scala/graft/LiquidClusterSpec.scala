@@ -46,7 +46,7 @@ class LiquidClusterSpec extends AnyFunSuite {
     assert(planned.size < after.size,
       s"2-D skipping must prune: planned ${planned.size} of ${after.size}")
     // correctness of the pruned read against the full predicate
-    val got = vt.readWhere(Map("x" -> (100.0, 160.0), "y" -> (100.0, 160.0)))
+    val got = vt.readMatching(NumRange("x", 100.0, 160.0), NumRange("y", 100.0, 160.0))
       .select("id").as[Long].collect().sorted
     val want = vt.read()
       .filter($"x".between(100, 160) && $"y".between(100, 160))

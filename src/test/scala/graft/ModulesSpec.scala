@@ -550,17 +550,17 @@ class VersionedTableSpec extends AnyFunSuite {
 
     // the watermark shape: a timestamp range in ISO form — no manual
     // micros conversion anywhere in the call
-    val byTs = vt.readWhereTimestamp("ts",
-      "2023-01-02T00:00:00Z", "2023-01-02T23:59:59Z")
+    val byTs = vt.readMatching(VersionedTable.TsRange("ts",
+      "2023-01-02T00:00:00Z", "2023-01-02T23:59:59Z"))
     assert(byTs.inputFiles.length === 1,
       s"timestamp range must prune to one file, planned: ${byTs.inputFiles.toSeq}")
     assert(byTs.select("id").collect().map(_.getInt(0)).toSeq === Seq(2))
 
-    val byDt = vt.readWhereDate("dt", "2023-01-02", "2023-01-03")
+    val byDt = vt.readMatching(VersionedTable.DateRange("dt", "2023-01-02", "2023-01-03"))
     assert(byDt.inputFiles.length === 2)
     assert(byDt.select("id").collect().map(_.getInt(0)).sorted.toSeq === Seq(2, 3))
 
-    val byS = vt.readWhereString("s", "2023-01-03", "2023-01-09")
+    val byS = vt.readMatching(VersionedTable.StrRange("s", "2023-01-03", "2023-01-09"))
     assert(byS.inputFiles.length === 1)
     assert(byS.select("id").collect().map(_.getInt(0)).toSeq === Seq(3))
 
@@ -571,7 +571,7 @@ class VersionedTableSpec extends AnyFunSuite {
     vt2.write(day(1).union(day(2)).union(day(3)),
       partitionBy = Some(Seq("dt")))
     val all2 = vt2.read().inputFiles.length
-    val pruned = vt2.readWhereDate("dt", "2023-01-01", "2023-01-01")
+    val pruned = vt2.readMatching(VersionedTable.DateRange("dt", "2023-01-01", "2023-01-01"))
     assert(pruned.inputFiles.length < all2)
     assert(pruned.select("id").collect().map(_.getInt(0)).toSeq === Seq(1))
   }
@@ -828,7 +828,7 @@ class VersionedTableSpec extends AnyFunSuite {
     vt.write(spark.range(200, 300).toDF("id").coalesce(1), SaveMode.Append)
     assert(vt.manifestEntries(2L).forall(_.stats.contains("id")),
       "numeric column stats must be recorded in the manifest")
-    val pruned = vt.readBetween("id", 120, 180)
+    val pruned = vt.readMatching(VersionedTable.NumRange("id", 120, 180))
     // only the middle commit's file survives the manifest prune
     assert(pruned.inputFiles.length === 1,
       s"expected 1 planned file, got ${pruned.inputFiles.mkString(",")}")
@@ -836,7 +836,7 @@ class VersionedTableSpec extends AnyFunSuite {
     // row-level exactness: identical to the unpruned filtered read
     assert(pruned.collect().map(_.getLong(0)).sorted.toSeq === (120L to 180L))
     // fully-disjoint predicate: zero files, empty result, schema kept
-    val none = vt.readBetween("id", 1000, 2000)
+    val none = vt.readMatching(VersionedTable.NumRange("id", 1000, 2000))
     assert(none.count() === 0 && none.columns.toSeq === Seq("id"))
     // conjunctive multi-column pruning: two-column table, predicates
     // that individually match different files but jointly match one
@@ -846,7 +846,8 @@ class VersionedTableSpec extends AnyFunSuite {
       .coalesce(1))
     vt2.write(spark.range(100, 200).select(col("id"), (col("id") * 10).as("ts"))
       .coalesce(1), SaveMode.Append)
-    val both = vt2.readWhere(Map("id" -> (50.0, 150.0), "ts" -> (0.0, 990.0)))
+    val both = vt2.readMatching(VersionedTable.NumRange("id", 50.0, 150.0),
+      VersionedTable.NumRange("ts", 0.0, 990.0))
     // id range spans both files, ts range only the first -> one file
     assert(both.inputFiles.length === 1, both.inputFiles.mkString(","))
     assert(both.collect().map(_.getLong(0)).sorted.toSeq === (50L to 99L))
@@ -858,7 +859,7 @@ class VersionedTableSpec extends AnyFunSuite {
     vt3.write(Seq(1.0, Double.NaN, 5.0).toDF("x").coalesce(1))
     assert(vt3.manifestEntries(0L).head.stats.get("x").isEmpty,
       "NaN-containing column must carry no range stats")
-    assert(vt3.readBetween("x", 0, 10).count() === 2,
+    assert(vt3.readMatching(VersionedTable.NumRange("x", 0, 10)).count() === 2,
       "file must still be read; only the NaN row fails the predicate")
   }
 
@@ -1034,11 +1035,11 @@ class VersionedTableSpec extends AnyFunSuite {
     // partition values parse back as a real column on read
     assert(vt.read().filter(col("dt") === "2023-01-02").count() === 1)
     // string-equality partition pruning: ONE file planned, not three
-    val one = vt.readWherePartition(Map("dt" -> "2023-01-02"))
+    val one = vt.readMatching(VersionedTable.PartitionEq("dt", "2023-01-02"))
     assert(one.inputFiles.length === 1, one.inputFiles.mkString(","))
     assert(one.collect().map(_.getLong(0)).toSeq === Seq(2L))
     // no match: zero files, schema preserved
-    val none = vt.readWherePartition(Map("dt" -> "2024-12-31"))
+    val none = vt.readMatching(VersionedTable.PartitionEq("dt", "2024-12-31"))
     assert(none.count() === 0 && none.columns.toSeq === Seq("id", "dt", "v"))
     // Catalyst-level pruning through the manifest FileIndex: a plain
     // filter on the partition column must scan ONE file, no manifest API
@@ -1061,12 +1062,12 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(vt.manifestEntries(vt.currentVersion.get)
       .forall(!_.relPath.contains("=")))
 
-    // numeric partition column: readWhere's RANGE pruning applies to it
+    // numeric partition column: NumRange pruning applies to it
     val root2 = Fixtures.tempDir("graft-vt-part2") + "/tbl"
     val vt2 = new VersionedTable(spark, root2)
     vt2.write(Seq((1L, 10), (2L, 20), (3L, 30)).toDF("id", "p"),
       partitionBy = Some(Seq("p")))
-    val mid = vt2.readWhere(Map("p" -> (15.0, 25.0)))
+    val mid = vt2.readMatching(VersionedTable.NumRange("p", 15.0, 25.0))
     assert(mid.inputFiles.length === 1, mid.inputFiles.mkString(","))
     assert(mid.collect().map(_.getLong(0)).toSeq === Seq(2L))
 

@@ -22,7 +22,7 @@ class ReorgPurgeSpec extends AnyFunSuite {
     vt.write((1L to 400L).map(i => (i, i * 1.0)).toDF("id", "v")
       .repartition(8, col("id")))
     // mask a narrow id range: only the files holding those rows get DVs
-    vt.deleteVectorizedIn("id", (10L to 20L).toSet)
+    vt.deleteVectorizedWhere(col("id").isin(10L to 20L: _*))
     val vMasked = vt.currentVersion.get
     val before = vt.manifestEntries(vMasked)
     val (masked, plain) = before.partition(_.dvDir.isDefined)
@@ -62,7 +62,7 @@ class ReorgPurgeSpec extends AnyFunSuite {
     val vt = newTable("purge-part")
     vt.write((0L until 100L).map(i => (i, s"s$i", (i % 4).toString))
       .toDF("id", "s", "bucket"), partitionBy = Some(Seq("bucket")))
-    vt.deleteVectorizedIn("id", Set(5L, 6L, 7L))
+    vt.deleteVectorizedWhere(col("id").isin(5L, 6L, 7L))
     vt.reorgPurge()
     val after = vt.manifestEntries(vt.currentVersion.get)
     assert(after.forall(_.dvDir.isEmpty))
@@ -77,7 +77,7 @@ class ReorgPurgeSpec extends AnyFunSuite {
   test("appends after the masked snapshot are kept by the purge commit") {
     val vt = newTable("purge-append")
     vt.write((1L to 50L).map(i => (i, i * 1.0)).toDF("id", "v"))
-    vt.deleteVectorizedIn("id", Set(3L))
+    vt.deleteVectorizedWhere(col("id").isin(3L))
     vt.write(Seq((1000L, 0.5)).toDF("id", "v"), SaveMode.Append)
     vt.reorgPurge()
     assert(vt.read().count() === 50)

@@ -98,7 +98,7 @@ class RowTrackingSpec extends AnyFunSuite {
       s"compaction-only window must plan zero data-file reads:\n$plan0")
 
     // DV-delete then purge: the delete IS a change, the purge is not
-    vt.deleteVectorizedIn("id", Set(5L, 6L))
+    vt.deleteVectorizedWhere(col("id").isin(5L, 6L))
     val vDel = vt.currentVersion.get
     val dels = vt.changesWithUpdates(v0, vDel)
     assert(dels.select("_change_type").as[String].collect().toSet
