@@ -36,7 +36,7 @@ object IncrementalJoin {
 
   // The tag domain is the full CDF set: {insert, delete} from
   // VersionedTable.changes, plus {update_preimage, update_postimage}
-  // from changesWithUpdates — an update is exactly a signed
+  // from its `updateImages` form — an update is exactly a signed
   // (−preimage, +postimage) pair, so it folds with no special case.
   // An unrecognized tag RAISES at evaluation time instead of being
   // silently dropped (which would corrupt the maintained view).

@@ -733,191 +733,16 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * `maxFilesPerTrigger` counts the same thing). Two manifest reads,
     * O(files) set difference, no data touched; callers memoize per
     * poll loop. */
-  def addedFileCount(v: Long): Long = {
-    val toM = readManifest(v)
-    if (v == 0) toM.entries.size.toLong
-    else {
-      val prev = readManifest(v - 1).entries.map(_.relPath).toSet
-      toM.entries.count(e => !prev.contains(e.relPath)).toLong
-    }
-  }
-
-  /** One micro-batch of the streaming source
-    * ([[org.apache.spark.sql.graftbridge.VersionedStreamSource]] /
-    * `Streaming.versionedSource`): the full snapshot at `toV` when
-    * `fromV` is None (initial load), else exactly the files the range
-    * (fromV, toV] ADDED — a version of appends streams one version of
-    * files, never the table. A range that also REMOVED files
-    * (overwrite / compaction / DELETE) breaks file-to-row identity and
-    * fails loudly unless `ignoreChanges` (then: added files only,
-    * at-least-once for rewritten rows). Frames are streaming-tagged
-    * for the MicroBatchExecution plan splice. */
-  def streamBatch(fromV: Option[Long], toV: Long,
-      ignoreChanges: Boolean): DataFrame = {
-    val toM = readManifest(toV)
-    val entries = fromV match {
-      case None => toM.entries
-      case Some(f) =>
-        val fromByPath = readManifest(f).entries.map(e => e.relPath -> e).toMap
-        val fromFiles = fromByPath.keySet
-        val removed = fromFiles -- toM.entries.map(_.relPath).toSet
-        // a DV delete removes rows while keeping the file — same
-        // append-only violation as a removed file
-        val dvChanged = toM.entries.exists(e =>
-          fromByPath.get(e.relPath).exists(o =>
-            o.dvDir != e.dvDir || o.dvRows != e.dvRows))
-        if ((removed.nonEmpty || dvChanged) && !ignoreChanges) sys.error(
-          s"versions $f..$toV of $root removed ${removed.size} file(s) " +
-            (if (dvChanged) "and masked rows via deletion vectors " else "") +
-            "(overwrite/compaction/delete) — a streaming source needs " +
-            "append-only commits; set ignoreChanges=true to stream only " +
-            "added files (at-least-once for rewritten rows)")
-        toM.entries.filterNot(e => fromFiles.contains(e.relPath))
-    }
-    readFiles(toM, entries, isStreaming = true)
-  }
-
-  /** One micro-batch with PER-COMMIT delete/rewrite tolerance (Delta's
-    * `ignoreDeletes` / `skipChangeCommits` options — finer-grained
-    * than the all-or-nothing `ignoreChanges`):
-    *
-    *  - a commit that only ADDS files streams its added files, always;
-    *  - `ignoreDeletes`: a commit that only REMOVES files or only
-    *    extends DV masks (partition deletes, DV row deletes) is
-    *    admitted WITHOUT rows — deletes are tolerable without row
-    *    loss; a commit that both removes and adds (a rewrite:
-    *    UPDATE/MERGE/overwrite) still fails loudly, because silently
-    *    streaming its adds would double rewritten rows;
-    *  - `skipChangeCommits`: commits that change existing data
-    *    (remove files or extend masks) are skipped WHOLESALE — their
-    *    added files never stream either (Delta 2.4's semantics:
-    *    the stream is "new data only", rewrites are invisible).
-    *
-    * Classification is a per-version manifest walk (driver-side,
-    * O(files) set arithmetic per commit); admitted files are planned
-    * AS THEY APPEARED at their commit (their DV state then), so a
-    * file masked later in the range still streams its at-commit rows
-    * — the same at-least-once stance as `ignoreChanges`. */
-  def streamBatchSelective(fromV: Option[Long], toV: Long,
-      ignoreDeletes: Boolean, skipChangeCommits: Boolean): DataFrame = {
-    val toM = readManifest(toV)
-    val entries = fromV match {
-      case None => toM.entries // initial snapshot batch, unchanged
-      case Some(f) =>
-        var prev = readManifest(f)
-        ((f + 1) to toV).flatMap { v =>
-          val cur = readManifest(v)
-          val prevByPath = prev.entries.map(e => e.relPath -> e).toMap
-          val curPaths = cur.entries.map(_.relPath).toSet
-          val added = cur.entries
-            .filterNot(e => prevByPath.contains(e.relPath))
-          val removed = prevByPath.keySet -- curPaths
-          val masked = cur.entries.exists(e =>
-            prevByPath.get(e.relPath).exists(o =>
-              o.dvDir != e.dvDir || o.dvRows != e.dvRows))
-          prev = cur
-          if (removed.isEmpty && !masked) added // pure append
-          else if (skipChangeCommits) Seq.empty // rewrite: invisible
-          else if (ignoreDeletes && added.isEmpty) Seq.empty // pure delete
-          else sys.error(
-            s"version $v of $root is a rewrite commit (removed " +
-              s"${removed.size} file(s)" +
-              (if (masked) ", extended DV masks" else "") +
-              s", added ${added.size}) — ignoreDeletes only admits " +
-              "delete-only commits; use skipChangeCommits to skip " +
-              "rewrites wholesale, or ignoreChanges to stream their " +
-              "added files at-least-once")
-        }
-    }
-    readFiles(toM, entries, isStreaming = true)
-  }
-
-  /** One CHANGE-FEED micro-batch for (fromV, toV] — the streaming CDF
-    * source's planner (Delta `readChangeFeed` streaming): rows tagged
-    * `_change_type`, planned from manifests + DV sidecars, streaming-
-    * tagged throughout (the V1 Source contract; a row-level diff via
-    * exceptAll can't be streaming-planned, which is exactly why the
-    * feed is derived from file/mask deltas instead).
-    *
-    *  - initial batch (fromV None): the snapshot at toV as "insert"
-    *  - files ADDED in the range: their live rows as "insert" (toV's
-    *    masks applied — a row inserted and DV-deleted inside one
-    *    range collapses away, standard compacted-CDC semantics)
-    *  - DV deltas on SURVIVING files: the newly masked rows as
-    *    "delete" (a streaming scan of just those files semi-joined
-    *    against the mask delta — O(changed files + masked rows))
-    *  - a range that REMOVED files: nothing if the range's commits
-    *    are all value-preserving rewrites (OPTIMIZE* / REORG PURGE);
-    *    otherwise it fails loudly — a rewrite's row-level diff is
-    *    not derivable from manifests (that includes a DV delete that
-    *    empties a file entirely, which drops the file). Keep the
-    *    stream's lag inside the maintenance cadence, as with any
-    *    CDC reader. */
-  def streamChangeBatch(fromV: Option[Long], toV: Long): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val toM = readManifest(toV)
-    val target = logicalSchema(toM)
-    def tag(df: DataFrame, t: String): DataFrame =
-      df.select(target.fields.toSeq.map(f => col(f.name)) :+
-        lit(t).as("_change_type"): _*)
-    def emptyBatch: DataFrame =
-      tag(readFiles(toM, Seq.empty, isStreaming = true), "insert")
-        .filter(lit(false))
-    fromV match {
-      case None =>
-        tag(readFiles(toM, toM.entries, isStreaming = true), "insert")
-      case Some(f) =>
-        val fromM = readManifest(f)
-        val fromByPath = fromM.entries.map(e => e.relPath -> e).toMap
-        val toPaths = toM.entries.map(_.relPath).toSet
-        val removed = fromM.entries.filterNot(e => toPaths.contains(e.relPath))
-        if (removed.nonEmpty) {
-          val ops = history(limit = Int.MaxValue)
-            .filter(h => h.version > f && h.version <= toV)
-          val rewriteOnly = ops.size == (toV - f) &&
-            ops.forall(h => VersionedTable.layoutOp(h.operation))
-          if (!rewriteOnly) sys.error(
-            s"versions $f..$toV of $root removed ${removed.size} file(s) " +
-              "outside a pure OPTIMIZE/REORG PURGE window — the change " +
-              "feed cannot derive a row-level diff of a rewrite from " +
-              "manifests; keep the stream's lag inside the maintenance " +
-              "cadence or re-seed the stream")
-          return emptyBatch // rewrites move bytes, never rows
-        }
-        val added = toM.entries.filterNot(e => fromByPath.contains(e.relPath))
-        val inserts = tag(readFiles(toM, added, isStreaming = true), "insert")
-        val dvChangedEntries = toM.entries.filter(e =>
-          fromByPath.get(e.relPath).exists(o =>
-            o.dvDir != e.dvDir || o.dvRows != e.dvRows))
-        if (dvChangedEntries.isEmpty) inserts
-        else {
-          // a SHRUNK mask (RESTORE behind the cursor) is not an append
-          // of deletes — resurrected rows are not derivable here
-          dvChangedEntries.foreach { e =>
-            val o = fromByPath(e.relPath)
-            if (e.dvRows < o.dvRows) sys.error(
-              s"versions $f..$toV of $root shrank the deletion mask of " +
-                s"${e.relPath} (a RESTORE) — the change feed cannot " +
-                "derive resurrected rows; re-seed the stream")
-          }
-          val deleted = newlyMaskedRows(toM,
-            dvChangedEntries.map(e => e -> fromByPath(e.relPath).dvDirs),
-            isStreaming = true)
-          inserts.unionByName(tag(deleted, "delete"))
-        }
-    }
-  }
+  def addedFileCount(v: Long): Long =
+    new FeedWindow(v - 1, v).delta(v - 1, v).added.size.toLong
 
   /** S4: newest version committed at or before `ts` (ISO-8601 instant)
     * — Delta `timestampAsOf`. Commit times come from the history files;
     * RESTORE commits count (they are real versions here). */
   def versionAsOf(ts: String): Long = {
-    val cutoff = java.time.Instant.parse(ts)
     val committed = committedVersions.toSet
-    history(Int.MaxValue).reverse // oldest-first = commit order
-      .filter(e => committed.contains(e.version) &&
-        !java.time.Instant.parse(e.timestamp).isAfter(cutoff))
-      .lastOption.map(_.version)
+    versionIn(history(Int.MaxValue).filter(e => committed.contains(e.version)),
+      ts, forward = false)
       .getOrElse(sys.error(s"no version of $root committed at or before $ts"))
   }
 
@@ -1898,7 +1723,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * emptiness, duplicate-key guard and key envelope come from one
     * aggregate. On row-tracked tables updated rows
     * CARRY their row id through materialization, so
-    * [[changesWithUpdates]] reports them as `update_preimage` /
+    * [[changes]] with `updateImages` reports them as `update_preimage` /
     * `update_postimage` pairs — not delete+insert — and a no-op
     * update (source equals target) produces no feed row at all.
     *
@@ -2394,7 +2219,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * DV masks on the selected partitions are purged by the rewrite
     * (survivors only), like [[compact]]; tracked tables carry row
     * ids through. The operation string stays "OPTIMIZE"-prefixed so
-    * the [[changesWithUpdates]] rewrite-only fast path applies.
+    * the update-image feed's layout-only fast path applies.
     * Returns the current version unchanged when nothing matches. */
   def compactWhere(partCol: String, values: Set[String],
       targetFileMB: Int = 128): Long = {
@@ -2547,7 +2372,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
       // current manifest: a RESTORE to a pre-tracking version leaves
       // rowIdHw=None while ids were already issued in later versions —
       // seeding from 0 would hand those ids to different rows and let
-      // changesWithUpdates mispair them across the restore boundary.
+      // the update-image feed mispair them across the restore boundary.
       // One manifest-header read per retained version, only on this
       // one-time enable (vacuumed versions are gone along with every
       // row that ever held their ids).
@@ -2686,76 +2511,188 @@ final class VersionedTable(spark: SparkSession, root: String) {
       dataSkipping = scanSkipping(m, entries, files))
   }
 
-  /** Change feed WITH UPDATE IMAGES (Delta CDF `update_preimage` /
-    * `update_postimage`): row tracking pairs each from-row with its
-    * to-row by `_row_id`, so a rewritten row surfaces as an update,
-    * a row only in `fromV` as a delete, only in `toV` as an insert —
+  // --------------------------------------------------------- change feed
+
+  /** The commit-window classifier every change-feed entry reads. For
+    * the window (fromV, toV] it answers each commit's operation,
+    * timestamp and file delta, and the delta between any two versions
+    * of the window. fromV = -1 is "before the creating commit": an
+    * empty manifest, so v0's files read as added. Each manifest is
+    * read at most once and the history at most once, and only when a
+    * feed asks: an append-only window reads its two endpoint
+    * manifests; the manifests in between are read by a per-commit
+    * grain, or to attribute the endpoint's removals. */
+  private final class FeedWindow(val fromV: Long, val toV: Long,
+      readHistory: () => Seq[HistoryEntry] =
+        () => history(limit = Int.MaxValue)) {
+    require(fromV >= -1 && fromV <= toV && manifestCommitted(toV),
+      s"change-feed window ($fromV, $toV] of $root needs -1 <= from <= " +
+        s"to <= the current version ${currentVersion.getOrElse(-1L)}")
+    private val manifests =
+      scala.collection.mutable.Map.empty[Long, VersionManifest]
+    private val deltas = scala.collection.mutable.Map
+      .empty[(Long, Long), VersionedTable.FileDelta]
+    private lazy val lines: Map[Long, HistoryEntry] = readHistory()
+      .filter(h => h.version > fromV && h.version <= toV)
+      .map(h => h.version -> h).toMap
+
+    private def manifest(v: Long): VersionManifest =
+      manifests.getOrElseUpdate(v,
+        if (v < 0) VersionManifest(None, Seq.empty) else readManifest(v))
+
+    def delta(a: Long, b: Long): VersionedTable.FileDelta =
+      deltas.getOrElseUpdate((a, b),
+        new VersionedTable.FileDelta(manifest(a), manifest(b)))
+
+    /** Commit `v`'s operation; None when its history line is missing. */
+    def op(v: Long): Option[String] = lines.get(v).map(_.operation)
+
+    /** Commit `v`'s M33 in-commit time. Fails loudly on a missing line:
+      * a guessed time would corrupt every cursor keyed on it. */
+    def timestamp(v: Long): java.sql.Timestamp =
+      java.sql.Timestamp.from(java.time.Instant.parse(
+        lines.getOrElse(v, sys.error(s"no history line for version $v " +
+          s"of $root — cannot stamp _commit_timestamp")).timestamp))
+
+    /** Does every commit of (a, b] only move bytes (OPTIMIZE / REORG
+      * PURGE)? Then its feed is empty by construction — proving that
+      * with a diff would cost O(table). */
+    def layoutOnly(a: Long, b: Long): Boolean =
+      ((a + 1) to b).forall(v => op(v).exists(VersionedTable.layoutOp))
+
+    /** Can the rows of (a, b] be derived from file and mask deltas?
+      * Every commit needs its history line and must be neither a
+      * RESTORE (masks may shrink) nor a layout op (file identity
+      * broken); no mask may shrink; and every removal must be a
+      * whole-file death — DV DML drops a file only once its mask
+      * covers every row, and a DELETE / TRUNCATE that added no files
+      * kept no survivors — so the file's prior live rows are exactly
+      * the deleted ones. */
+    def derivable(a: Long, b: Long): Boolean = {
+      val d = delta(a, b)
+      ((a + 1) to b).forall(v => op(v).exists(o =>
+        !VersionedTable.layoutOp(o) && !o.startsWith("RESTORE"))) &&
+        d.maskShrunk.isEmpty &&
+        (d.removed.isEmpty || ((a + 1) to b).forall { v =>
+          val c = delta(v - 1, v)
+          c.removed.isEmpty ||
+            op(v).exists(VersionedTable.deathsOnly(_, c.added.nonEmpty))
+        })
+    }
+  }
+
+  /** `df` in `toM`'s logical columns (a column `df` lacks — files
+    * written before a schema change — reads null), then `extra`. */
+  private def aligned(toM: VersionManifest, df: DataFrame,
+      extra: Seq[String] = Nil): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit}
+    df.select(logicalSchema(toM).fields.toSeq.map { f =>
+      (if (df.columns.contains(f.name)) col(f.name)
+       else lit(null).cast(f.dataType)).as(f.name)
+    } ++ extra.map(col): _*)
+  }
+
+  /** No rows, in `shape`'s columns. A batch feed becomes a local
+    * relation, so it plans no file scan; a streaming feed must stay a
+    * streaming frame, so `shape` itself is returned and must scan no
+    * files. */
+  private def emptyFeed(shape: DataFrame): DataFrame =
+    if (shape.isStreaming) shape
+    else spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      shape.schema)
+
+  /** The insert/delete feed of (a, b] inside `w`, in `b`'s logical
+    * schema, tagged `_change_type`. Derived from the delta whenever
+    * [[FeedWindow.derivable]] — O(changed files + masked rows), never
+    * the table:
+    *
+    *  - added files: their live rows as inserts (`b`'s masks applied —
+    *    a row inserted and deleted inside the window collapses away);
+    *  - re-masked files: the newly masked rows as deletes (a scan of
+    *    just those files semi-joined against the mask delta);
+    *  - removed files (whole-file deaths): their `a`-live rows as
+    *    deletes;
+    *  - a layout-only window: nothing.
+    *
+    * A batch feed over any other window (an overwrite, a RESTORE, a
+    * layout op mixed with row changes, a history gap) falls back to
+    * the value-based symmetric diff of the two snapshots (`exceptAll`
+    * both ways — two full scans). The derived feed is identity-based
+    * (an UPDATE to the same values emits a delete+insert pair), the
+    * fallback value-based (such pairs cancel); signed consumers are
+    * insensitive to the difference. A streaming feed cannot plan that
+    * diff, so it fails loudly on a removal outside a layout-only
+    * window or on a shrunk mask; it admits the rest without asking
+    * the history. */
+  private def rowFeed(w: FeedWindow, a: Long, b: Long,
+      isStreaming: Boolean): DataFrame = {
+    import org.apache.spark.sql.functions.lit
+    val d = w.delta(a, b)
+    def tag(df: DataFrame, t: String): DataFrame =
+      aligned(d.to, df).withColumn("_change_type", lit(t))
+    if ((d.appendOnly && d.added.isEmpty) ||
+        (d.removed.nonEmpty && w.layoutOnly(a, b)))
+      return emptyFeed(tag(readFiles(d.to, Seq.empty, isStreaming), "insert"))
+    if (isStreaming) {
+      if (d.removed.nonEmpty) sys.error(
+        s"versions $a..$b of $root removed ${d.removed.size} file(s) " +
+          "outside a pure OPTIMIZE/REORG PURGE window — the change " +
+          "feed cannot derive a row-level diff of a rewrite from " +
+          "manifests; keep the stream's lag inside the maintenance " +
+          "cadence or re-seed the stream")
+      d.maskShrunk.foreach(e => sys.error(
+        s"versions $a..$b of $root shrank the deletion mask of " +
+          s"${e.relPath} (a RESTORE) — the change feed cannot derive " +
+          "resurrected rows; re-seed the stream"))
+    } else if (!d.appendOnly && !w.derivable(a, b)) {
+      val before = aligned(d.to, readFiles(d.from, d.from.entries))
+      val after = aligned(d.to, readFiles(d.to, d.to.entries))
+      return tag(after.exceptAll(before), "insert")
+        .unionByName(tag(before.exceptAll(after), "delete"))
+    }
+    val deletes =
+      Option.when(d.remasked.nonEmpty)(newlyMaskedRows(d.to,
+        d.remasked.map { case (o, e) => e -> o.dvDirs }, isStreaming)) ++
+      Option.when(d.removed.nonEmpty)(readFiles(d.from, d.removed))
+    (tag(readFiles(d.to, d.added, isStreaming), "insert") +:
+      deletes.map(tag(_, "delete")).toSeq).reduce(_ unionByName _)
+  }
+
+  /** The update-image feed of (a, b] (Delta CDF `update_preimage` /
+    * `update_postimage`): row tracking pairs each `a`-row with its
+    * `b`-row by `_row_id`, so a rewritten row surfaces as an update
+    * pair, a row only at `a` as a delete, only at `b` as an insert —
     * and a row that merely MOVED files (compaction, purge) with
-    * identical values produces NOTHING, which the value-diffing
-    * [[changes]] cannot promise. Reads ONLY the delta file sets (files
-    * added/removed/re-masked between the versions), so cost is
-    * O(changed files) whatever the table size. Output: `toV`'s logical
-    * columns + `_row_id` + `_change_type`; updates emit both images
-    * under the same id. */
-  def changesWithUpdates(fromV: Long, toV: Long): DataFrame = {
+    * identical values produces nothing, which the value-diffing
+    * fallback of [[rowFeed]] cannot promise. Reads only the delta's
+    * files (a re-masked file joins on both sides: its untouched rows
+    * pair up value-equal and vanish), so cost is O(changed files); a
+    * layout-only window is answered from the history alone. Columns:
+    * `_row_id`, `b`'s logical columns, `_change_type`. */
+  private def updateFeed(w: FeedWindow, a: Long, b: Long): DataFrame = {
     import org.apache.spark.sql.functions.{array, coalesce, col, explode,
       lit, struct, when}
-    val fromM = readManifest(fromV)
-    val toM = readManifest(toV)
-    require(fromM.rowIdHw.isDefined && toM.rowIdHw.isDefined,
-      s"changesWithUpdates needs row tracking enabled at both ends of " +
-        s"$root v$fromV..v$toV")
-    val fromByPath = fromM.entries.map(e => e.relPath -> e).toMap
-    val toByPath = toM.entries.map(e => e.relPath -> e).toMap
-    // REWRITE-ONLY FAST PATH: when every commit in (fromV, toV] is a
-    // value-preserving layout op (OPTIMIZE / REORG PURGE — both carry
-    // each surviving row's id and values by contract), the feed is
-    // empty BY CONSTRUCTION — answer from the history alone instead
-    // of proving emptiness with a table-sized self-join (the relPath
-    // churn otherwise puts every file in both delta sets, so an
-    // OPTIMIZE inside the window degraded the read to O(table)).
-    // The version-count guard keeps the path honest if any history
-    // line is unreadable: missing lines fall through to the diff.
-    val windowOps = history(limit = Int.MaxValue)
-      .filter(h => h.version > fromV && h.version <= toV)
-    val rewriteOnly = windowOps.size == (toV - fromV) &&
-      windowOps.forall(h => VersionedTable.layoutOp(h.operation))
-    if (rewriteOnly) {
-      val fields = org.apache.spark.sql.types.StructField(
-          RowIdCol, org.apache.spark.sql.types.LongType) +:
-        logicalSchema(toM).fields :+
-        org.apache.spark.sql.types.StructField("_change_type",
-          org.apache.spark.sql.types.StringType)
-      return spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        StructType(fields))
-    }
-    def dvChanged(a: ManifestEntry, b: ManifestEntry) =
-      a.dvDir != b.dvDir || a.dvRows != b.dvRows
-    // a surviving file whose DV changed joins on BOTH sides: its
-    // untouched rows pair up value-equal and vanish, its newly masked
-    // rows surface as deletes (resurrected ones as inserts)
-    val fromDelta = fromM.entries.filter(e => toByPath.get(e.relPath)
-      .forall(t => dvChanged(e, t)))
-    val toDelta = toM.entries.filter(e => fromByPath.get(e.relPath)
-      .forall(f => dvChanged(e, f)))
-    val target = logicalSchema(toM)
-    def aligned(m: VersionManifest, es: Seq[ManifestEntry]): DataFrame = {
-      val base =
-        if (es.nonEmpty)
-          logicalize(m, readFilesPhysicalRid(m, es))
-            .withColumnRenamed(RowIdPhysCol, RowIdCol)
-        else readVersionWithRowIds(toV).limit(0)
-      base.select((target.fields.toSeq.map { f =>
-        (if (base.columns.contains(f.name)) col(f.name)
-         else lit(null).cast(f.dataType)).as(f.name)
-      } :+ col(RowIdCol)): _*)
-    }
-    val valCols = target.fields.toSeq.map(f => col(f.name))
-    val pre = aligned(fromM, fromDelta)
-      .select(col(RowIdCol).as("__rid_l"), struct(valCols: _*).as("_pre"))
-    val post = aligned(toM, toDelta)
-      .select(col(RowIdCol).as("__rid_r"), struct(valCols: _*).as("_post"))
+    val d = w.delta(a, b)
+    require(d.from.rowIdHw.isDefined && d.to.rowIdHw.isDefined,
+      s"update images need row tracking enabled at both ends of " +
+        s"$root v$a..v$b")
+    val names = logicalSchema(d.to).fieldNames.toSeq
+    val values = names.map(col)
+    def side(m: VersionManifest, es: Seq[ManifestEntry]): DataFrame =
+      aligned(d.to,
+        if (es.isEmpty)
+          readFiles(d.to, es).withColumn(RowIdCol, lit(null).cast("long"))
+        else logicalize(m, readFilesPhysicalRid(m, es))
+          .withColumnRenamed(RowIdPhysCol, RowIdCol),
+        extra = Seq(RowIdCol))
+    if (w.layoutOnly(a, b))
+      return emptyFeed(side(d.to, Seq.empty).select(
+        (col(RowIdCol) +: values :+ lit("insert").as("_change_type")): _*))
+    val pre = side(d.from, d.removed ++ d.remasked.map(_._1))
+      .select(col(RowIdCol).as("__rid_l"), struct(values: _*).as("_pre"))
+    val post = side(d.to, d.added ++ d.remasked.map(_._2))
+      .select(col(RowIdCol).as("__rid_r"), struct(values: _*).as("_post"))
     pre.join(post, col("__rid_l") === col("__rid_r"), "full_outer")
       // rows that only changed address (compaction/purge) are NOT
       // changes; insert/delete rows have one side null, so <=> is false
@@ -2770,328 +2707,187 @@ final class VersionedTable(spark: SparkSession, root: String) {
             struct(col("_pre").as("v"), lit("update_preimage").as("t")),
             struct(col("_post").as("v"), lit("update_postimage").as("t")))))
           .as("_e"))
-      .select((Seq(col(RowIdCol)) ++
-        target.fields.toSeq.map(f => col(s"_e.v.${f.name}").as(f.name)) :+
+      .select((col(RowIdCol) +: names.map(n => col(s"_e.v.$n").as(n)) :+
         col("_e.t").as("_change_type")): _*)
   }
 
-  /** Change feed between two versions (Delta CDF substitute): rows
-    * added and removed going `fromV` → `toV`, tagged `_change_type`
-    * ("insert" / "delete").
-    *
-    * The feed is DERIVED from manifests + DV delta chains whenever the
-    * window's evidence allows — O(changed files + masked rows), never
-    * the table:
-    *
-    *  - append-only windows: the files in `toV`'s manifest but not
-    *    `fromV`'s, as inserts — a day of appends on a 100 TB table
-    *    reads one day of files;
-    *  - windows whose only mutations are appends and DV DML
-    *    (DELETE/UPDATE/MERGE via deletion vectors): added files as
-    *    inserts (toV's masks applied — a row inserted and deleted
-    *    inside the window collapses away), each surviving file's
-    *    per-file chain delta as deletes, and a file the DV DML
-    *    emptied entirely (dropped from the manifest) contributes its
-    *    fromV-live rows as deletes;
-    *  - pure OPTIMIZE / REORG PURGE windows: empty by construction —
-    *    layout ops move bytes, never rows.
-    *
-    * Only genuinely non-derivable windows — true overwrites, RESTOREs
-    * (masks can shrink), OPTIMIZE mixed with DML in one window (file
-    * identity broken), or gaps in the history — fall back to the
-    * row-level symmetric diff (`exceptAll` both ways over both
-    * snapshots — two full scans; keep CDC cursors inside the
-    * maintenance cadence to stay on the derived path). Note the
-    * derived feed is IDENTITY-based (an UPDATE that rewrites a row to
-    * the same values emits a delete+insert pair), the fallback is
-    * VALUE-based (such pairs cancel); signed consumers (IVM folds)
-    * are insensitive to the difference. */
-  def changes(fromV: Long, toV: Long): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val fromM = readManifest(fromV)
-    val fromByPath = fromM.entries.map(e => e.relPath -> e).toMap
-    val fromFiles = fromByPath.keySet
-    val toManifest = readManifest(toV)
-    val added = toManifest.entries.filterNot(e => fromFiles.contains(e.relPath))
-    val removed = fromM.entries.filterNot(e =>
-      toManifest.entries.exists(_.relPath == e.relPath))
-    val dvChangedEntries = toManifest.entries.filter(e =>
-      fromByPath.get(e.relPath).exists(o =>
-        o.dvDir != e.dvDir || o.dvRows != e.dvRows))
-    if (removed.isEmpty && dvChangedEntries.isEmpty) {
-      if (added.isEmpty)
-        readVersion(toV).limit(0).withColumn("_change_type", lit("insert"))
-      else
-        readFiles(toManifest, added).withColumn("_change_type", lit("insert"))
-    } else {
-      val target = logicalSchema(toManifest)
-      def align(df: DataFrame): DataFrame =
-        df.select(target.fields.toSeq.map { f =>
-          (if (df.columns.contains(f.name)) col(f.name)
-           else lit(null).cast(f.dataType)).as(f.name)
-        } ++ (if (df.columns.contains("_change_type"))
-                Seq(col("_change_type")) else Seq.empty): _*)
-      // window evidence: every commit's history line, else fallback
-      val ops = history(limit = Int.MaxValue)
-        .filter(h => h.version > fromV && h.version <= toV)
-      val complete = ops.size == (toV - fromV)
-      if (complete && removed.nonEmpty && ops.forall(h =>
-          VersionedTable.layoutOp(h.operation))) {
-        // pure layout window: empty by construction (answered from
-        // history — proving emptiness with a diff would be O(table))
-        return spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          StructType(target.fields :+
-            org.apache.spark.sql.types.StructField("_change_type",
-              org.apache.spark.sql.types.StringType)))
-      }
-      // derivable iff: history complete; no RESTORE (masks may
-      // shrink) and no layout op (file identity broken) inside a
-      // window that also mutates rows; every file REMOVAL is a DV DML
-      // death (fully-masked file dropped — its pre-window live rows
-      // are exactly the deleted rows); masks only grew
-      val derivable = complete &&
-        ops.forall(h => !VersionedTable.layoutOp(h.operation) &&
-          !h.operation.startsWith("RESTORE")) &&
-        (removed.isEmpty || removalsAllDvDeaths(fromV, toV)) &&
-        dvChangedEntries.forall(e =>
-          e.dvRows >= fromByPath(e.relPath).dvRows)
-      if (derivable) {
-        val inserts = align(readFiles(toManifest, added)
-          .withColumn("_change_type", lit("insert")))
-        val survivorDeletes =
-          if (dvChangedEntries.isEmpty) None
-          else Some(align(newlyMaskedRows(toManifest,
-            dvChangedEntries.map(e => e -> fromByPath(e.relPath).dvDirs),
-            isStreaming = false)
-            .withColumn("_change_type", lit("delete"))))
-        val deathDeletes =
-          if (removed.isEmpty) None
-          else Some(align(readFiles(fromM, removed)
-            .withColumn("_change_type", lit("delete"))))
-        (Seq(inserts) ++ survivorDeletes ++ deathDeletes)
-          .reduce(_ unionByName _)
-      } else {
-        // exceptAll demands identical schemas; a range crossing a
-        // schema-evolution (or rename/drop) boundary has different
-        // column sets, so align BOTH snapshots to `toV`'s LOGICAL
-        // schema (missing columns null-filled — the same value reads
-        // of the pre-evolution files produce)
-        val a = align(readVersion(fromV))
-        val b = align(readVersion(toV))
-        b.exceptAll(a).withColumn("_change_type", lit("insert"))
-          .unionByName(
-            a.exceptAll(b).withColumn("_change_type", lit("delete")))
-      }
+  /** The feed of each span (a, b], stamped with Delta CDF's
+    * `_commit_version` / `_commit_timestamp` of its end commit `b` (a
+    * plan-time literal per slice), unioned over an empty base whose
+    * typed nulls fix the columns when there are no spans. */
+  private def stamped(w: FeedWindow, spans: Seq[(Long, Long)],
+      slice: (Long, Long) => DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.lit
+    def stamp(df: DataFrame, v: org.apache.spark.sql.Column,
+        ts: org.apache.spark.sql.Column): DataFrame =
+      df.withColumn("_commit_version", v).withColumn("_commit_timestamp", ts)
+    spans.foldLeft(stamp(slice(w.toV, w.toV), lit(null).cast("long"),
+        lit(null).cast("timestamp"))) { case (acc, (a, b)) =>
+      acc.unionByName(stamp(slice(a, b), lit(b), lit(w.timestamp(b))))
     }
   }
 
-  /** Was every file removal in (fromV, toV] a whole-file DEATH — a
-    * removal whose rows are all provably deleted, so the feed can
-    * emit the file's prior live rows as deletes? Two derivable
-    * classes, checked per commit (driver-side set arithmetic over
-    * O(window commits) small manifest reads):
+  /** The batch feed of `w`: the endpoint diff, or with `commitMeta`
+    * one stamped slice per commit. */
+  private def feed(w: FeedWindow, updateImages: Boolean,
+      commitMeta: Boolean): DataFrame = {
+    val slice: (Long, Long) => DataFrame =
+      if (updateImages) updateFeed(w, _, _)
+      else rowFeed(w, _, _, isStreaming = false)
+    if (!commitMeta) slice(w.fromV, w.toV)
+    else stamped(w, ((w.fromV + 1) to w.toV).map(v => (v - 1, v)), slice)
+  }
+
+  /** Change feed of the window (fromV, toV] (Delta CDF): the rows that
+    * changed going `fromV` → `toV`, in `toV`'s logical schema, tagged
+    * `_change_type` "insert" / "delete". `fromV = -1` is before the
+    * creating commit, so the window includes v0 and its rows are
+    * inserts. Derived from manifests and DV delta chains whenever the
+    * window allows — a day of appends on a 100 TB table reads one day
+    * of files, a DV delete only the files it touched, a pure OPTIMIZE /
+    * REORG PURGE window nothing — and a value-based snapshot diff
+    * otherwise ([[rowFeed]] has the rules; keep CDC cursors inside the
+    * maintenance cadence to stay derived). Requires
+    * `-1 <= fromV <= toV <= current`.
     *
-    *  - DV DML commits: [[maskedEntry]] only drops an entry when its
-    *    chain covers every row, so their removals are deaths by
-    *    construction;
-    *  - pure-removal DELETE / TRUNCATE commits (removed files, added
-    *    NONE): a delete that rewrote survivors into new files would
-    *    have added them, so zero adds proves every removed row died —
-    *    this admits metadata partition deletes and TRUNCATE.
-    *
-    * Any other removal (overwrite, RESTORE, a rewrite-delete with
-    * surviving rows) makes the window non-derivable. */
-  private def removalsAllDvDeaths(fromV: Long, toV: Long): Boolean = {
-    val opByV = history(limit = Int.MaxValue)
-      .filter(h => h.version > fromV && h.version <= toV)
-      .map(h => h.version -> h.operation).toMap
-    var prev = readManifest(fromV).entries.map(_.relPath).toSet
-    ((fromV + 1) to toV).forall { v =>
-      val cur = readManifest(v).entries.map(_.relPath).toSet
-      val removedHere = (prev -- cur).nonEmpty
-      val addedHere = (cur -- prev).nonEmpty
-      prev = cur
-      !removedHere || opByV.get(v).exists(op =>
-        VersionedTable.deathsOnly(op, addedFiles = addedHere))
-    }
+    *  - `updateImages`: rows pair by row tracking's `_row_id`, so a
+    *    rewritten row is an `update_preimage` / `update_postimage` pair
+    *    and a row that only moved files is no change; adds a leading
+    *    `_row_id` column. Needs row tracking at both ends, so not
+    *    `fromV = -1`.
+    *  - `commitMeta`: one slice per commit, each stamped with its
+    *    `_commit_version` and M33 `_commit_timestamp` (the fields
+    *    cursors, audits and SCD2 effective dates key off). Each slice
+    *    plans only its own commit's files. */
+  def changes(fromV: Long, toV: Long, updateImages: Boolean = false,
+      commitMeta: Boolean = false): DataFrame = {
+    require(!updateImages || fromV >= 0,
+      s"update images pair rows by row tracking's _row_id, and there is " +
+        s"no row-tracked version before the creating commit of $root " +
+        s"(fromV = $fromV); start at a version with row tracking enabled")
+    feed(new FeedWindow(fromV, toV), updateImages, commitMeta)
+  }
+
+  /** [[changes]] between two commit TIMESTAMPS (Delta CDF's
+    * `startingTimestamp`/`endingTimestamp`): the start rounds FORWARD
+    * to the first version committed at or after `fromTs` (that
+    * commit's changes are included, Delta's inclusive contract), the
+    * end rounds BACK to the last version at or before `toTs`; both
+    * resolve over one history read, through [[versionAt]]'s rule. A
+    * start at the creating commit includes v0's rows as inserts.
+    * Throws when no commit falls inside the window — an empty feed
+    * would be indistinguishable from a wrong clock. */
+  def changesBetweenTimestamps(fromTs: String, toTs: String,
+      commitMeta: Boolean = false): DataFrame = {
+    val hist = history(limit = Int.MaxValue)
+    val fromV = versionIn(hist, fromTs, forward = true).getOrElse(
+      sys.error(s"no commit of $root at or after $fromTs (newest: " +
+        s"${hist.headOption.map(_.timestamp).getOrElse("none")})"))
+    val toV = versionAtOrBefore(hist, toTs)
+    require(fromV <= toV,
+      s"no commits of $root inside [$fromTs, $toTs] " +
+        s"(first at-or-after start: v$fromV; last at-or-before end: v$toV)")
+    feed(new FeedWindow(fromV - 1, toV, () => hist), updateImages = false,
+      commitMeta)
   }
 
   /** [[changes]] computed over COMMIT SPANS and unioned — the signed-
-    * consumer feed (IVM folds: inserts +, deletes −; any insert-then-
-    * delete pair either compacts inside a span or cancels
-    * arithmetically in the fold, so both give the same folded state).
-    * Commits classify individually, then MAXIMAL RUNS of derivable
-    * DML/append commits plan as ONE endpoint slice each — a 1000-
-    * commit append/DML backlog is one plan, not a 1000-way union —
-    * while layout commits (OPTIMIZE / REORG) contribute nothing and
-    * only genuinely non-derivable commits (overwrites, RESTOREs,
-    * history gaps) pay a single-commit snapshot diff. A window MIXING
-    * DML with OPTIMIZE therefore stays O(changed files + masked
-    * rows), where the plain endpoint form of [[changes]] must fall
-    * back. Driver cost: O(window commits) manifest reads. */
+    * consumer feed (IVM folds: inserts +, deletes −; an insert-then-
+    * delete pair either compacts inside a span or cancels in the fold,
+    * so both give the same folded state). Maximal runs of derivable
+    * commits plan as ONE endpoint slice each — a 1000-commit
+    * append/DML backlog is one plan, not a 1000-way union — layout
+    * commits contribute nothing, and only non-derivable commits
+    * (overwrites, RESTOREs, history gaps) pay a single-commit snapshot
+    * diff. A window MIXING DML with OPTIMIZE therefore stays
+    * O(changed files + masked rows), where the endpoint form must fall
+    * back. Driver cost: one manifest read per commit. */
   def changesPerCommit(fromV: Long, toV: Long): DataFrame = {
-    require(fromV >= 0 && fromV <= toV,
-      s"changesPerCommit range is invalid: $fromV..$toV")
-    if (fromV == toV) return changes(toV, toV)
-    val opByV = history(limit = Int.MaxValue)
-      .filter(h => h.version > fromV && h.version <= toV)
-      .map(h => h.version -> h.operation).toMap
-    // 0 = mergeable (derivable DML/append), 1 = layout (empty),
-    // 2 = other (single-commit snapshot diff)
-    var prev = readManifest(fromV)
-    val classes: Seq[(Long, Int)] = ((fromV + 1) to toV).map { v =>
-      val cur = readManifest(v)
-      val prevBy = prev.entries.map(e => e.relPath -> e).toMap
-      val curPaths = cur.entries.map(_.relPath).toSet
-      val removed = prevBy.keySet.exists(!curPaths.contains(_))
-      val added = cur.entries.exists(e => !prevBy.contains(e.relPath))
-      val dvShrunk = cur.entries.exists(e =>
-        prevBy.get(e.relPath).exists(o => e.dvRows < o.dvRows))
-      prev = cur
-      val cls = opByV.get(v) match {
-        case None => 2 // history gap: prove nothing
-        case Some(op) if op.startsWith("RESTORE") => 2
-        case Some(op) if VersionedTable.layoutOp(op) => 1 // moves no rows
-        case Some(_) if dvShrunk => 2
-        case Some(op) if removed &&
-          !VersionedTable.deathsOnly(op, addedFiles = added) => 2
-        case Some(_) => 0
-      }
-      v -> cls
-    }
-    // fold consecutive mergeable commits into one endpoint span
+    val w = new FeedWindow(fromV, toV)
     val slices = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var spanStart = -1L
+    var spanStart = -1L // first commit of the open span; -1 = none
     def flushSpan(endV: Long): Unit = if (spanStart >= 0) {
-      slices += changes(spanStart - 1, endV)
+      slices += rowFeed(w, spanStart - 1, endV, isStreaming = false)
       spanStart = -1L
     }
-    classes.foreach { case (v, cls) =>
-      cls match {
-        case 0 => if (spanStart < 0) spanStart = v
-        case 1 => flushSpan(v - 1) // layout: nothing to emit
-        case 2 => flushSpan(v - 1); slices += changes(v - 1, v)
+    ((fromV + 1) to toV).foreach { v =>
+      if (w.derivable(v - 1, v)) { if (spanStart < 0) spanStart = v }
+      else {
+        flushSpan(v - 1)
+        if (!w.layoutOnly(v - 1, v))
+          slices += rowFeed(w, v - 1, v, isStreaming = false)
       }
     }
     flushSpan(toV)
-    if (slices.isEmpty) changes(toV, toV) // all-layout window: empty
-    else slices.reduce(_ unionByName _)
+    slices.reduceOption(_ unionByName _)
+      .getOrElse(rowFeed(w, toV, toV, isStreaming = false))
   }
 
-  /** Commit timestamps (M33 monotone in-commit time) for versions in
-    * (fromV, toV] — one bounded history walk. Fails loudly on a
-    * missing line: stamping a guessed time would corrupt every
-    * downstream cursor keyed on it. */
-  private def commitTimestamps(fromV: Long, toV: Long)
-      : Map[Long, java.sql.Timestamp] = {
-    val byV = history(limit = Int.MaxValue)
-      .filter(h => h.version > fromV && h.version <= toV)
-      .map(h => h.version -> java.sql.Timestamp.from(
-        java.time.Instant.parse(h.timestamp))).toMap
-    ((fromV + 1) to toV).foreach(v => require(byV.contains(v),
-      s"no history line for version $v of $root — cannot stamp " +
-        "_commit_timestamp"))
-    byV
-  }
-
-  /** Change feed WITH COMMIT METADATA (Delta CDF's `_commit_version` /
-    * `_commit_timestamp` columns — the fields downstream consumers key
-    * cursors, audits, and SCD2 effective-dates off): [[changes]]
-    * computed per VERSION slice, each stamped with its version (a
-    * plan-time literal — the version is known per planned file set)
-    * and its M33 in-commit timestamp. Cost is the same O(changed
-    * files) as the endpoint diff: each slice plans only the files its
-    * version added/re-masked, and the version loop is driver-side
-    * manifest arithmetic. Slices align to `toV`'s logical schema, so
-    * a range crossing a schema evolution still unions. */
-  def changesWithMeta(fromV: Long, toV: Long): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    require(fromV <= toV,
-      s"changesWithMeta range is backwards: $fromV > $toV")
-    require(fromV >= -1, s"changesWithMeta fromV must be >= -1: $fromV")
-    val target = logicalSchema(readManifest(toV))
-    val tsByV = commitTimestamps(fromV, toV)
-    def align(df: DataFrame): DataFrame =
-      df.select(target.fields.toSeq.map { f =>
-        (if (df.columns.contains(f.name)) col(f.name)
-         else lit(null).cast(f.dataType)).as(f.name)
-      } ++ Seq(col("_change_type"), col("_commit_version"),
-        col("_commit_timestamp")): _*)
-    val empty = align(changes(toV, toV)
-      .withColumn("_commit_version", lit(null).cast("long"))
-      .withColumn("_commit_timestamp", lit(null).cast("timestamp")))
-      .limit(0)
-    ((fromV + 1) to toV).map { v =>
-      // fromV = -1 admits the CREATING commit: the v0 slice is the
-      // whole v0 snapshot as inserts (the empty-prelude diff)
-      val slice =
-        if (v == 0L) readVersion(0L)
-          .withColumn("_change_type", lit("insert"))
-        else changes(v - 1, v)
-      align(slice
-        .withColumn("_commit_version", lit(v))
-        .withColumn("_commit_timestamp", lit(tsByV(v))))
-    }.foldLeft(empty)(_ unionByName _)
-  }
-
-  /** [[changesWithUpdates]] with the commit-metadata columns — the
-    * row-tracked update-image feed, per-version sliced and stamped:
-    * each update pre/post pair (and insert/delete) carries the
-    * version and M33 commit time of the commit that produced it.
-    * Same O(changed files) planning per slice. */
-  def changesWithUpdatesMeta(fromV: Long, toV: Long): DataFrame = {
-    import org.apache.spark.sql.functions.lit
-    require(fromV <= toV,
-      s"changesWithUpdatesMeta range is backwards: $fromV > $toV")
-    val tsByV = commitTimestamps(fromV, toV)
-    val empty = changesWithUpdates(toV, toV)
-      .withColumn("_commit_version", lit(null).cast("long"))
-      .withColumn("_commit_timestamp", lit(null).cast("timestamp"))
-      .limit(0)
-    ((fromV + 1) to toV).map { v =>
-      changesWithUpdates(v - 1, v)
-        .withColumn("_commit_version", lit(v))
-        .withColumn("_commit_timestamp", lit(tsByV(v)))
-    }.foldLeft(empty)(_ unionByName _)
-  }
-
-  /** [[changesBetweenTimestamps]] with the commit-metadata columns —
-    * same endpoint resolution (start rounds FORWARD, end rounds
-    * BACK), the feed itself per-version stamped. */
-  def changesBetweenTimestampsWithMeta(fromTs: String,
-      toTs: String): DataFrame = {
-    val fromV = firstVersionAtOrAfter(fromTs).getOrElse(sys.error(
-      s"no commit of $root at or after $fromTs " +
-        s"(newest: ${history(limit = 1).headOption.map(_.timestamp)
-          .getOrElse("none")})"))
-    val toV = versionAtTimestamp(toTs)
-    require(fromV <= toV,
-      s"no commit of $root inside [$fromTs, $toTs]")
-    changesWithMeta(fromV - 1, toV)
-  }
-
-  /** [[streamChangeBatch]] with the commit-metadata columns: the
-    * range splits into per-version slices, each stamped with its
-    * version literal and M33 in-commit timestamp; the initial
-    * snapshot batch stamps the snapshot's own version (Delta's CDF
-    * streaming behavior). Same O(changed files) planning. */
-  def streamChangeBatchMeta(fromV: Option[Long], toV: Long): DataFrame = {
-    import org.apache.spark.sql.functions.lit
-    fromV match {
-      case None =>
-        val ts = commitTimestamps(toV - 1, toV)(toV)
-        streamChangeBatch(None, toV)
-          .withColumn("_commit_version", lit(toV))
-          .withColumn("_commit_timestamp", lit(ts))
-      case Some(f) =>
-        val tsByV = commitTimestamps(f, toV)
-        ((f + 1) to toV).map { v =>
-          streamChangeBatch(Some(v - 1), v)
-            .withColumn("_commit_version", lit(v))
-            .withColumn("_commit_timestamp", lit(tsByV(v)))
-        }.reduce(_ unionByName _)
+  /** One micro-batch of the data stream
+    * ([[org.apache.spark.sql.graftbridge.VersionedStreamSource]] /
+    * `Streaming.versionedSource`): the snapshot at `toV` when `fromV`
+    * is None (the initial load), else exactly the files the range
+    * (fromV, toV] ADDED — a version of appends streams one version of
+    * files, never the table. A commit that changed existing rows
+    * (removed files or extended DV masks) breaks file-to-row identity;
+    * `policy` says what happens to it ([[VersionedTable.ChangePolicy]]).
+    * The per-commit policies plan each admitted file AS IT APPEARED at
+    * its commit (its DV state then), so a file masked later in the
+    * range still streams its at-commit rows — at-least-once, as
+    * `IgnoreChanges`. Frames are streaming-tagged for the
+    * MicroBatchExecution plan splice. */
+  def streamBatch(fromV: Option[Long], toV: Long,
+      policy: VersionedTable.ChangePolicy): DataFrame = {
+    import VersionedTable.ChangePolicy._
+    val w = new FeedWindow(fromV.getOrElse(-1L), toV)
+    val d = w.delta(w.fromV, toV)
+    val entries = policy match {
+      case _ if fromV.isEmpty || policy == IgnoreChanges => d.added
+      case Fail =>
+        if (!d.appendOnly) sys.error(
+          s"versions ${w.fromV}..$toV of $root removed " +
+            s"${d.removed.size} file(s) " +
+            (if (d.remasked.nonEmpty) "and masked rows via deletion " +
+              "vectors " else "") +
+            "(overwrite/compaction/delete) — a streaming source needs " +
+            "append-only commits; set ignoreChanges=true to stream only " +
+            "added files (at-least-once for rewritten rows)")
+        d.added
+      case _ => ((w.fromV + 1) to toV).flatMap { v =>
+        val c = w.delta(v - 1, v)
+        if (c.appendOnly) c.added
+        else if (policy == SkipChangeCommits || c.added.isEmpty) Seq.empty
+        else sys.error(
+          s"version $v of $root is a rewrite commit (removed " +
+            s"${c.removed.size} file(s)" +
+            (if (c.remasked.nonEmpty) ", extended DV masks" else "") +
+            s", added ${c.added.size}) — ignoreDeletes only admits " +
+            "delete-only commits; use skipChangeCommits to skip " +
+            "rewrites wholesale, or ignoreChanges to stream their " +
+            "added files at-least-once")
+      }
     }
+    readFiles(d.to, entries, isStreaming = true)
+  }
+
+  /** One CHANGE-FEED micro-batch for (fromV, toV] — the streaming CDF
+    * source's planner (Delta `readChangeFeed` streaming): [[rowFeed]]'s
+    * derived rows, streaming-tagged throughout (the V1 Source contract;
+    * a row-level diff via exceptAll cannot be streaming-planned, which
+    * is why a window it cannot derive fails loudly — keep the stream's
+    * lag inside the maintenance cadence, as with any CDC reader). The
+    * initial batch (fromV None) is the snapshot at `toV` as inserts.
+    * `commitMeta` stamps `_commit_version` / `_commit_timestamp` per
+    * commit; the initial snapshot stamps its own version, Delta's CDF
+    * streaming behaviour. */
+  def streamChangeBatch(fromV: Option[Long], toV: Long,
+      commitMeta: Boolean): DataFrame = {
+    val w = new FeedWindow(fromV.getOrElse(-1L), toV)
+    val slice: (Long, Long) => DataFrame = rowFeed(w, _, _, isStreaming = true)
+    if (!commitMeta) slice(w.fromV, toV)
+    else stamped(w,
+      if (fromV.isEmpty) Seq((-1L, toV))
+      else ((w.fromV + 1) to toV).map(v => (v - 1, v)), slice)
   }
 
   // ------------------------------------------------------ column mapping
@@ -3341,67 +3137,39 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * never rewinds. */
   def restoreToTimestamp(ts: String): Unit = restore(versionAtTimestamp(ts))
 
-  /** The version [[readTimestampAsOf]] resolves. */
-  def versionAtTimestamp(ts: String): Long = {
-    val target = java.time.Instant.parse(ts)
-    val all = history(limit = Int.MaxValue)
-    val at = all // history is newest-first
-      .filter(h => !java.time.Instant.parse(h.timestamp).isAfter(target))
-      .map(_.version)
-    at.headOption.getOrElse(sys.error(
+  /** The version [[readTimestampAsOf]] resolves: [[versionAt]],
+    * failing when `ts` predates the first commit. */
+  def versionAtTimestamp(ts: String): Long =
+    versionAtOrBefore(history(limit = Int.MaxValue), ts)
+
+  private def versionAtOrBefore(hist: Seq[HistoryEntry], ts: String): Long =
+    versionIn(hist, ts, forward = false).getOrElse(sys.error(
       s"no version of $root existed at or before $ts " +
-        s"(earliest commit: ${all.lastOption.map(_.timestamp)
+        s"(earliest commit: ${hist.lastOption.map(_.timestamp)
           .getOrElse("none")})"))
-  }
 
-  /** The FIRST version committed at or after `ts` (ISO-8601 instant) —
-    * the resolution Delta's `startingTimestamp` uses: "subscribe to
-    * every change from this instant on" rounds FORWARD to the next
-    * commit, where [[versionAtTimestamp]]'s "what did the table say
-    * then" rounds BACK to the previous one. `None` when `ts` is after
-    * the newest commit (nothing has happened there yet — a streaming
-    * consumer starts with whatever commits next). Same bounded history
-    * walk as [[versionAtTimestamp]]. */
-  def firstVersionAtOrAfter(ts: String): Option[Long] = {
+  /** The version the commit-time instant `ts` (ISO-8601) names — the
+    * one timestamp resolution of every reader. `forward`: the FIRST
+    * version committed at or after `ts` (Delta's `startingTimestamp`:
+    * "every change from this instant on", so that commit is
+    * included); otherwise the NEWEST version committed at or before
+    * it (time travel, an ending bound). None when no commit lies on
+    * that side of `ts` — for `forward`, nothing has happened there
+    * yet. */
+  def versionAt(ts: String, forward: Boolean = false): Option[Long] =
+    versionIn(history(limit = Int.MaxValue), ts, forward)
+
+  /** [[versionAt]] over history `hist`. A filter, NOT a prefix scan:
+    * commit timestamps are wall clock, and a clock step-back between
+    * commits would truncate a scan at the dent. */
+  private def versionIn(hist: Seq[HistoryEntry], ts: String,
+      forward: Boolean): Option[Long] = {
     val target = java.time.Instant.parse(ts)
-    // filter + min, NOT takeWhile: commit timestamps are wall clock,
-    // and a clock step-back between commits would truncate a prefix
-    // scan at the dent — the full filter stays correct under any
-    // non-monotone history (versionAtTimestamp already scans this way)
-    val at = history(limit = Int.MaxValue)
-      .filter(h => !java.time.Instant.parse(h.timestamp).isBefore(target))
-      .map(_.version)
-    if (at.isEmpty) None else Some(at.min)
-  }
-
-  /** Change feed between two TIMESTAMPS (Delta CDF's
-    * `startingTimestamp`/`endingTimestamp` form): operators think in
-    * wall-clock instants ("what changed between 2 am and the page"),
-    * so both endpoints resolve through the commit history — the start
-    * rounds FORWARD to the first version committed at or after
-    * `fromTs` (that commit's changes are INCLUDED, Delta's inclusive
-    * contract), the end rounds BACK to the last version at or before
-    * `toTs`. Resolution is two bounded history walks; the feed itself
-    * is [[changes]] with all its fast paths (append-only file-level,
-    * O(changed files)). A start that resolves to the table's creating
-    * commit diffs against the empty prelude — the whole `toV` snapshot
-    * as inserts. Throws when no commit falls inside the window (the
-    * caller asked for changes in an interval where nothing happened —
-    * an empty feed would be indistinguishable from a wrong clock). */
-  def changesBetweenTimestamps(fromTs: String, toTs: String): DataFrame = {
-    val fromV = firstVersionAtOrAfter(fromTs).getOrElse(sys.error(
-      s"no commit of $root at or after $fromTs " +
-        s"(newest: ${history(limit = 1).headOption.map(_.timestamp)
-          .getOrElse("none")})"))
-    val toV = versionAtTimestamp(toTs)
-    require(fromV <= toV,
-      s"no commits of $root inside [$fromTs, $toTs] " +
-        s"(first at-or-after start: v$fromV; last at-or-before end: v$toV)")
-    if (fromV == 0) {
-      import org.apache.spark.sql.functions.lit
-      // diff against the empty prelude: everything at toV is an insert
-      readVersion(toV).withColumn("_change_type", lit("insert"))
-    } else changes(fromV - 1, toV)
+    val side = hist.filter { h =>
+      val t = java.time.Instant.parse(h.timestamp)
+      if (forward) !t.isBefore(target) else !t.isAfter(target)
+    }.map(_.version)
+    if (forward) side.minOption else side.maxOption
   }
 
   private val genExprRe =
@@ -4997,6 +4765,48 @@ object VersionedTable {
     op.startsWith("DELETE DV") || op.startsWith("UPDATE DV") ||
       op.startsWith("MERGE DV") ||
       (!addedFiles && (op == "TRUNCATE" || op.toUpperCase.startsWith("DELETE")))
+
+  /** What a data stream ([[VersionedTable.streamBatch]]) does with a
+    * commit that changed existing rows — removed files or extended
+    * deletion masks. Delta's streaming-source options. */
+  sealed trait ChangePolicy
+  object ChangePolicy {
+    /** Fail loudly: a data stream needs append-only commits. */
+    case object Fail extends ChangePolicy
+    /** `ignoreChanges`: stream the range's added files; rewritten rows
+      * arrive again (at-least-once). */
+    case object IgnoreChanges extends ChangePolicy
+    /** `ignoreDeletes`: admit a commit that only removed files or only
+      * extended masks, without rows — no row is lost. A rewrite that
+      * also added files still fails: streaming its adds would double
+      * the rewritten rows. */
+    case object IgnoreDeletes extends ChangePolicy
+    /** `skipChangeCommits`: skip every commit that changed existing
+      * rows, its added files too — the stream is new data only. */
+    case object SkipChangeCommits extends ChangePolicy
+  }
+
+  /** The file-level change between two manifests: files only in `to`
+    * (added), files only in `from` (removed), and files in both whose
+    * deletion mask changed (re-masked, as (from, to) entry pairs). */
+  private[io] final class FileDelta(val from: VersionManifest,
+      val to: VersionManifest) {
+    private val fromByPath = from.entries.map(e => e.relPath -> e).toMap
+    private val toPaths = to.entries.map(_.relPath).toSet
+    val added: Seq[ManifestEntry] =
+      to.entries.filterNot(e => fromByPath.contains(e.relPath))
+    val removed: Seq[ManifestEntry] =
+      from.entries.filterNot(e => toPaths.contains(e.relPath))
+    val remasked: Seq[(ManifestEntry, ManifestEntry)] =
+      to.entries.flatMap(e => fromByPath.get(e.relPath)
+        .filter(o => o.dvDir != e.dvDir || o.dvRows != e.dvRows)
+        .map(_ -> e))
+    def appendOnly: Boolean = removed.isEmpty && remasked.isEmpty
+    /** A re-masked file whose mask LOST rows: a RESTORE resurrected
+      * them. */
+    def maskShrunk: Option[ManifestEntry] =
+      remasked.collectFirst { case (o, e) if e.dvRows < o.dvRows => e }
+  }
 
   /** [[VersionedTable.pruningReport]]'s answer: planned vs total scan
     * economics of a predicated read, straight from the manifest. */

@@ -1273,7 +1273,8 @@ object Analytics {
 
   /** DELETE-TOLERANT STREAMING (q245; Delta's `skipChangeCommits` /
     * `ignoreDeletes`,
-    * [[graft.io.VersionedTable.streamBatchSelective]]): per-commit
+    * [[graft.io.VersionedTable.streamBatch]] under a
+    * [[graft.io.VersionedTable.ChangePolicy]]): per-commit
     * tolerance the all-or-nothing `ignoreChanges` cannot give. Leg A
     * streams a history `seed → append → UPDATE-rewrite → append` with
     * `skipChangeCommits`: the rewrite commit is invisible WHOLESALE

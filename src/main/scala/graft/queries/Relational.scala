@@ -553,7 +553,8 @@ object Relational {
   }
 
   /** CDF COMMIT METADATA (q243; Delta CDF `_commit_version` /
-    * `_commit_timestamp`, [[graft.io.VersionedTable.changesWithMeta]]):
+    * `_commit_timestamp`, [[graft.io.VersionedTable.changes]] with
+    * `commitMeta`):
     * the change feed per VERSION slice, each row stamped with the
     * version that produced it — the columns downstream consumers key
     * cursors, audits, and SCD2 effective-dates off. v0 creates (keys
@@ -580,7 +581,7 @@ object Relational {
       .select(col("o_orderkey"), cents.as("cents")),
       org.apache.spark.sql.SaveMode.Append) // v1
     vt.deleteVectorized("o_orderkey", 1000, 2000) // v2
-    vt.changesWithMeta(0L, 2L)
+    vt.changes(0L, 2L, commitMeta = true)
       .select(col("o_orderkey"), col("cents"), col("_change_type"),
         col("_commit_version"),
         col("_commit_timestamp").isNotNull.as("has_ts"))
@@ -2724,8 +2725,8 @@ object Relational {
     * manifest base ranges + materialized ids through rewrites), takes
     * an UPDATE, a full OPTIMIZE rewrite, an append, and a DV delete,
     * and the maintained aggregate is fed ONLY by
-    * `changesWithUpdates(v0, v1)` — whose update_preimage/postimage
-    * pairs fold into `IncrementalAgg` as signed rows. The OPTIMIZE in
+    * `changes(v0, v1, updateImages = true)` — whose update_preimage/
+    * postimage pairs fold into `IncrementalAgg` as signed rows. The OPTIMIZE in
     * the middle is the point: it rewrites every byte of the table,
     * and the feed must still contain EXACTLY the three logical
     * mutations (asserted: the compaction-only window is empty),
@@ -2754,14 +2755,15 @@ object Relational {
       Map("price" -> (col("price") + 10)))
     val vUpd = vt.currentVersion.get
     vt.compact()
-    require(vt.changesWithUpdates(vUpd, vt.currentVersion.get)
+    require(vt.changes(vUpd, vt.currentVersion.get, updateImages = true)
       .isEmpty, "a compaction-only window must produce an empty feed")
     vt.write(orders.filter(col("o_orderkey") % 4 === 0),
       org.apache.spark.sql.SaveMode.Append)
     vt.deleteVectorized("o_orderkey", 3000, 3500)
     val v1 = vt.currentVersion.get
     val agg1 = IncrementalAgg.update(agg0,
-      vt.changesWithUpdates(v0, v1), Seq("o_orderstatus"), Seq("price"))
+      vt.changes(v0, v1, updateImages = true), Seq("o_orderstatus"),
+      Seq("price"))
     agg1.select(col("o_orderstatus"),
       col(IncrementalAgg.CountCol).as("n_orders"),
       round(col(IncrementalAgg.sumCol("price")), 2).cast("double")

@@ -155,12 +155,14 @@ object GraftSql {
             .getOrElse(vt.currentVersion.getOrElse(sys.error(
               s"table $root does not exist")))
           val view = s"${name}__changes_${from}_$to"
-          vt.changesWithMeta(from - 1, to).createOrReplaceTempView(view)
+          vt.changes(from - 1, to, commitMeta = true)
+            .createOrReplaceTempView(view)
           view
         })
         // timestamp form: table_changes('t', 'fromTs'[, 'toTs']) — the
         // start rounds FORWARD, the end BACK (Delta's inclusive rule);
-        // `toTs` defaults to "now" = the newest commit
+        // an omitted `toTs` is the end of time, which rounds back to the
+        // newest commit
         val tcTsRe = ("(?i)\\btable_changes\\s*\\(\\s*'" +
           java.util.regex.Pattern.quote(name) +
           "'\\s*,\\s*'([^']+)'\\s*(?:,\\s*'([^']+)'\\s*)?\\)").r
@@ -169,15 +171,10 @@ object GraftSql {
           val view = s"${name}__changes_ts" +
             (fromTs + Option(m.group(2)).getOrElse(""))
               .replaceAll("[^0-9]", "")
-          val feed = Option(m.group(2)) match {
-            case Some(toTs) =>
-              vt.changesBetweenTimestampsWithMeta(fromTs, toTs)
-            case None =>
-              val fromV = vt.firstVersionAtOrAfter(fromTs).getOrElse(
-                sys.error(s"no commit of $root at or after $fromTs"))
-              vt.changesWithMeta(fromV - 1, vt.currentVersion.get)
-          }
-          feed.createOrReplaceTempView(view)
+          vt.changesBetweenTimestamps(fromTs,
+              Option(m.group(2)).getOrElse(java.time.Instant.MAX.toString),
+              commitMeta = true)
+            .createOrReplaceTempView(view)
           view
         })
         vt.read().createOrReplaceTempView(name)

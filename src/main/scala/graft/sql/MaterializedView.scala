@@ -316,7 +316,8 @@ object MaterializedView {
     v
   }
 
-  /** REFRESH: fold `base.changes(basis, current)` into the summary —
+  /** REFRESH: fold the base's change feed over (basis, current]
+    * ([[graft.io.VersionedTable.changesPerCommit]]) into the summary —
     * the signed IVM delta (inserts +1/+x, deletes −1/−x, CDF update
     * images as signed pairs), one full-outer merge against the
     * KB-scale MV, the base never re-aggregated — and advance the

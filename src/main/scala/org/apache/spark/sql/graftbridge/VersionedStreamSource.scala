@@ -82,12 +82,7 @@ final class VersionedStreamSource(spark: SparkSession, path: String,
       endTsMemo match {
         case Some((at, b)) if at == cur => b
         case _ =>
-          val target = java.time.Instant.parse(ts)
-          // newest version committed at or before ts; -1 = none yet
-          val b = vt.history(limit = Int.MaxValue)
-            .filter(h => !java.time.Instant.parse(h.timestamp)
-              .isAfter(target))
-            .map(_.version).headOption.getOrElse(-1L)
+          val b = vt.versionAt(ts).getOrElse(-1L) // -1 = none yet
           endTsMemo = Some((cur, b))
           b
       }
@@ -108,7 +103,7 @@ final class VersionedStreamSource(spark: SparkSession, path: String,
     * degenerate diff-against-nothing batch. */
   private lazy val effectiveStartingVersion: Option[Long] =
     startingVersion.orElse(startingTimestamp.flatMap { ts =>
-      val v = vt.firstVersionAtOrAfter(ts).getOrElse(sys.error(
+      val v = vt.versionAt(ts, forward = true).getOrElse(sys.error(
         s"startingTimestamp $ts is after the newest commit of $path — " +
           "nothing to subscribe to yet; resolution must be " +
           "restart-stable, so commit first or use startingVersion"))
@@ -123,6 +118,16 @@ final class VersionedStreamSource(spark: SparkSession, path: String,
   require(!(changeFeed && (ignoreDeletes || skipChangeCommits)),
     "ignoreDeletes/skipChangeCommits apply to the data stream, not " +
       "the change feed (the feed derives deletes itself)")
+
+  // skipChangeCommits also skips the delete-only commits ignoreDeletes
+  // would admit, so it wins when both are set
+  private val policy: graft.io.VersionedTable.ChangePolicy = {
+    import graft.io.VersionedTable.ChangePolicy._
+    if (ignoreChanges) IgnoreChanges
+    else if (skipChangeCommits) SkipChangeCommits
+    else if (ignoreDeletes) IgnoreDeletes
+    else Fail
+  }
 
   override val schema: StructType =
     VersionedStreamSource.schemaFor(spark, path, changeFeed, changeFeedMeta)
@@ -209,13 +214,8 @@ final class VersionedStreamSource(spark: SparkSession, path: String,
     * bootstrapped out of band). */
   override def getBatch(start: Option[Offset], end: Offset): DataFrame = {
     val from = start.map(version).orElse(effectiveStartingVersion.map(_ - 1))
-    if (changeFeed && changeFeedMeta)
-      vt.streamChangeBatchMeta(from, version(end))
-    else if (changeFeed) vt.streamChangeBatch(from, version(end))
-    else if (ignoreDeletes || skipChangeCommits)
-      vt.streamBatchSelective(from, version(end), ignoreDeletes,
-        skipChangeCommits)
-    else vt.streamBatch(from, version(end), ignoreChanges)
+    if (changeFeed) vt.streamChangeBatch(from, version(end), changeFeedMeta)
+    else vt.streamBatch(from, version(end), policy)
   }
 
   override def stop(): Unit = ()

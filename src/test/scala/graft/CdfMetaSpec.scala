@@ -24,7 +24,7 @@ class CdfMetaSpec extends AnyFunSuite {
     vt.write((101L to 120L).map(k => (k, s"v$k")).toDF("k", "v"),
       SaveMode.Append) // v1: appends
     vt.deleteVectorized("k", 5, 8) // v2: DV-only commit
-    val feed = vt.changesWithMeta(0L, 2L)
+    val feed = vt.changes(0L, 2L, commitMeta = true)
     assert(feed.columns.takeRight(2).toSeq ===
       Seq("_commit_version", "_commit_timestamp"))
     // v1 slice: the 20 appended rows as inserts
@@ -68,7 +68,7 @@ class CdfMetaSpec extends AnyFunSuite {
       Seq("k"))
     val v3 = vt.updateVectorizedWhere(col("k").between(20, 22),
       Map("v" -> (col("v") + 1L)))
-    val feed = vt.changesWithUpdatesMeta(1L, v3)
+    val feed = vt.changes(1L, v3, updateImages = true, commitMeta = true)
     val byType = feed.groupBy("_commit_version", "_change_type").count()
       .collect().map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2))
       .toMap
@@ -86,8 +86,8 @@ class CdfMetaSpec extends AnyFunSuite {
     vt.write(Seq((1L, "a")).toDF("k", "v")) // v0
     vt.write(Seq((2L, "b")).toDF("k", "v"), SaveMode.Append) // v1
     val t1 = vt.history(limit = 1).head.timestamp
-    val feed = vt.changesBetweenTimestampsWithMeta(
-      "1970-01-01T00:00:00Z", t1)
+    val feed = vt.changesBetweenTimestamps(
+      "1970-01-01T00:00:00Z", t1, commitMeta = true)
     assert(feed.select("_commit_version").distinct().as[Long]
       .collect().sorted === Array(0L, 1L))
     assert(feed.filter(col("_commit_version") === 0L).count() === 1L)

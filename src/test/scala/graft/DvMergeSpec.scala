@@ -90,7 +90,7 @@ class DvMergeSpec extends AnyFunSuite {
       (5000L, "fresh", 1L))     // insert
       .toDF("id", "s", "v")
     val v1 = vt.mergeVectorized(source, Seq("id"))
-    val feed = vt.changesWithUpdates(v0, v1)
+    val feed = vt.changes(v0, v1, updateImages = true)
       .select("id", "s", "v", "_change_type").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getString(3)))
       .toSet
@@ -99,7 +99,7 @@ class DvMergeSpec extends AnyFunSuite {
       (50L, "changed", 999L, "update_postimage"),
       (5000L, "fresh", 1L, "insert")))
     // the update kept its row id (pre and post pair under one id)
-    val ids = vt.changesWithUpdates(v0, v1).filter(col("id") === 50L)
+    val ids = vt.changes(v0, v1, updateImages = true).filter(col("id") === 50L)
       .select("_row_id").as[Long].collect().toSet
     assert(ids.size === 1)
   }
@@ -165,7 +165,7 @@ class DvMergeSpec extends AnyFunSuite {
       .filter(col("v") =!= col("id") * 10L).count() === 0L)
     assert(vt.read().count() === 1000L)
     // CDF: 20 update pairs, ids carried
-    val feed = vt.changesWithUpdates(v0, v1)
+    val feed = vt.changes(v0, v1, updateImages = true)
     assert(feed.filter(col("_change_type") === "update_preimage")
       .count() === 20L)
     assert(feed.filter(col("_change_type") === "update_postimage")
@@ -248,7 +248,7 @@ class DvMergeSpec extends AnyFunSuite {
     val source = Seq((7L, "seven", 700L)).toDF("id", "s", "v")
     val v2 = vt.mergeClausesVectorized(source, Seq("id"),
       deleteWhenNotMatchedBySource = Some(col("t.id") === 50L))
-    val feed = vt.changesWithUpdates(v1, v2)
+    val feed = vt.changes(v1, v2, updateImages = true)
       .select("id", "_change_type").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
     assert(feed === Set(

@@ -63,7 +63,7 @@ class RowTrackingSpec extends AnyFunSuite {
       .as[(Long, Long)].collect().toMap
     assert(after === before, "every row keeps its id across the rewrite")
 
-    val feed = vt.changesWithUpdates(v0, v1)
+    val feed = vt.changes(v0, v1, updateImages = true)
       .select("id", "v", "_row_id", "_change_type")
       .as[(Long, Double, Long, String)].collect().toSeq
     val byType = feed.groupBy(_._4)
@@ -89,7 +89,7 @@ class RowTrackingSpec extends AnyFunSuite {
     vt.compact(targetFileMB = 1)
     assert(rids(vt.readWithRowIds()) === ids0,
       "compaction preserves every id")
-    val feed0 = vt.changesWithUpdates(v0, vt.currentVersion.get)
+    val feed0 = vt.changes(v0, vt.currentVersion.get, updateImages = true)
     assert(feed0.count() === 0L, "a pure layout change is not a change")
     // the rewrite-only window answers from HISTORY, not a table diff:
     // the plan must contain no file scan at all
@@ -100,19 +100,19 @@ class RowTrackingSpec extends AnyFunSuite {
     // DV-delete then purge: the delete IS a change, the purge is not
     vt.deleteVectorizedWhere(col("id").isin(5L, 6L))
     val vDel = vt.currentVersion.get
-    val dels = vt.changesWithUpdates(v0, vDel)
+    val dels = vt.changes(v0, vDel, updateImages = true)
     assert(dels.select("_change_type").as[String].collect().toSet
       === Set("delete"))
     assert(dels.select("id").as[Long].collect().sorted.toSeq
       === Seq(5L, 6L))
     vt.reorgPurge()
-    val feedP = vt.changesWithUpdates(vDel, vt.currentVersion.get)
+    val feedP = vt.changes(vDel, vt.currentVersion.get, updateImages = true)
     assert(feedP.count() === 0L, "purge moves bytes, never rows")
     val planP = feedP.queryExecution.executedPlan.toString
     assert(!planP.contains("Scan parquet") && !planP.contains("FileScan"),
       "purge-only window must plan zero data-file reads")
     // a window MIXING a rewrite with a real change still diffs right
-    assert(vt.changesWithUpdates(v0, vt.currentVersion.get)
+    assert(vt.changes(v0, vt.currentVersion.get, updateImages = true)
       .select("_change_type").as[String].collect().toSet === Set("delete"))
     assert(rids(vt.readWithRowIds()).size === 198)
   }
@@ -176,7 +176,7 @@ class RowTrackingSpec extends AnyFunSuite {
     vt.write(Seq((100L, "9", 5.0)).toDF("id", "g", "x"), SaveMode.Append)
     val v1 = vt.currentVersion.get
     val maintained = graft.incremental.IncrementalAgg.update(
-      prior, vt.changesWithUpdates(v0, v1), Seq("g"), Seq("x"))
+      prior, vt.changes(v0, v1, updateImages = true), Seq("g"), Seq("x"))
     val recomputed = vt.read().groupBy("g")
       .agg(count(lit(1)).as("n_rows"), sum("x").as("sum_x"))
     val canon = (df: DataFrame) => df.select("g", "n_rows", "sum_x")

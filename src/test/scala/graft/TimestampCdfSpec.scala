@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.io.VersionedTable
 
 /** Timestamp resolution over the commit history: the forward-rounding
-  * [[VersionedTable.firstVersionAtOrAfter]] (Delta `startingTimestamp`
+  * [[VersionedTable.versionAt]] with `forward` (Delta `startingTimestamp`
   * semantics) against the backward-rounding `versionAtTimestamp`, and
   * the timestamp-range change feed built on the pair. */
 class TimestampCdfSpec extends AnyFunSuite {
@@ -30,10 +30,10 @@ class TimestampCdfSpec extends AnyFunSuite {
 
   test("firstVersionAtOrAfter rounds FORWARD; versionAtTimestamp BACK") {
     val (vt, ts) = fixture
-    assert(vt.firstVersionAtOrAfter(ts(0L)) === Some(0L))
-    assert(vt.firstVersionAtOrAfter(ts(2L)) === Some(2L))
+    assert(vt.versionAt(ts(0L), forward = true) === Some(0L))
+    assert(vt.versionAt(ts(2L), forward = true) === Some(2L))
     // past the newest commit: nothing has happened there yet
-    assert(vt.firstVersionAtOrAfter(plusSecs(ts(3L), 3600)) === None)
+    assert(vt.versionAt(plusSecs(ts(3L), 3600), forward = true) === None)
     // the same instant resolves BACK to v3 for time travel
     assert(vt.versionAtTimestamp(plusSecs(ts(3L), 3600)) === 3L)
   }
