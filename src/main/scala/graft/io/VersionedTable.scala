@@ -2517,32 +2517,54 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * the window (fromV, toV] it answers each commit's operation,
     * timestamp and file delta, and the delta between any two versions
     * of the window. fromV = -1 is "before the creating commit": an
-    * empty manifest, so v0's files read as added. Each manifest is
-    * read at most once and the history at most once, and only when a
-    * feed asks: an append-only window reads its two endpoint
-    * manifests; the manifests in between are read by a per-commit
-    * grain, or to attribute the endpoint's removals. */
+    * empty manifest, so v0's files read as added. The history is read
+    * at most once, and only when a feed asks. Manifests are read only
+    * when a feed asks too: an append-only window reads its two
+    * endpoints; the manifests in between are read by a per-commit
+    * grain, or to attribute the endpoint's removals. Driver memory
+    * stays O(files), not O(commits x files): the endpoints are kept
+    * for the call, the last few other manifests and the last delta
+    * only while a walk passes them, and each commit's removed/added
+    * answer as two booleans. */
   private final class FeedWindow(val fromV: Long, val toV: Long,
       readHistory: () => Seq[HistoryEntry] =
         () => history(limit = Int.MaxValue)) {
     require(fromV >= -1 && fromV <= toV && manifestCommitted(toV),
       s"change-feed window ($fromV, $toV] of $root needs -1 <= from <= " +
         s"to <= the current version ${currentVersion.getOrElse(-1L)}")
-    private val manifests =
+    private val ends =
       scala.collection.mutable.Map.empty[Long, VersionManifest]
-    private val deltas = scala.collection.mutable.Map
-      .empty[(Long, Long), VersionedTable.FileDelta]
+    private var recent = List.empty[(Long, VersionManifest)]
+    private var lastDelta =
+      Option.empty[((Long, Long), VersionedTable.FileDelta)]
+    private val filesMoved =
+      scala.collection.mutable.Map.empty[Long, (Boolean, Boolean)]
     private lazy val lines: Map[Long, HistoryEntry] = readHistory()
       .filter(h => h.version > fromV && h.version <= toV)
       .map(h => h.version -> h).toMap
 
-    private def manifest(v: Long): VersionManifest =
-      manifests.getOrElseUpdate(v,
-        if (v < 0) VersionManifest(None, Seq.empty) else readManifest(v))
+    private def load(v: Long): VersionManifest =
+      if (v < 0) VersionManifest(None, Seq.empty) else readManifest(v)
+
+    def manifest(v: Long): VersionManifest =
+      if (v == fromV || v == toV) ends.getOrElseUpdate(v, load(v))
+      else recent.collectFirst { case (`v`, m) => m }.getOrElse {
+        val m = load(v)
+        recent = ((v, m) :: recent).take(4)
+        m
+      }
 
     def delta(a: Long, b: Long): VersionedTable.FileDelta =
-      deltas.getOrElseUpdate((a, b),
-        new VersionedTable.FileDelta(manifest(a), manifest(b)))
+      lastDelta.collect { case ((`a`, `b`), d) => d }.getOrElse {
+        val d = new VersionedTable.FileDelta(manifest(a), manifest(b))
+        if (b == a + 1) filesMoved(b) = (d.removed.nonEmpty, d.added.nonEmpty)
+        lastDelta = Some((a, b) -> d)
+        d
+      }
+
+    /** Did commit `v` remove files, and did it add any? */
+    private def moved(v: Long): (Boolean, Boolean) =
+      filesMoved.getOrElse(v, { delta(v - 1, v); filesMoved(v) })
 
     /** Commit `v`'s operation; None when its history line is missing. */
     def op(v: Long): Option[String] = lines.get(v).map(_.operation)
@@ -2574,21 +2596,35 @@ final class VersionedTable(spark: SparkSession, root: String) {
         !VersionedTable.layoutOp(o) && !o.startsWith("RESTORE"))) &&
         d.maskShrunk.isEmpty &&
         (d.removed.isEmpty || ((a + 1) to b).forall { v =>
-          val c = delta(v - 1, v)
-          c.removed.isEmpty ||
-            op(v).exists(VersionedTable.deathsOnly(_, c.added.nonEmpty))
+          val (removed, added) = moved(v)
+          !removed || op(v).exists(VersionedTable.deathsOnly(_, added))
         })
     }
   }
 
-  /** `df` in `toM`'s logical columns (a column `df` lacks — files
-    * written before a schema change — reads null), then `extra`. */
+  /** `df` in `toM`'s logical columns, between `lead` and `extra`. A
+    * `df` in an older version `at`'s logical columns is matched by
+    * physical column, which a RENAME keeps. A column `df` lacks — files
+    * written before a schema change — reads null. */
   private def aligned(toM: VersionManifest, df: DataFrame,
-      extra: Seq[String] = Nil): DataFrame = {
+      lead: Seq[String] = Nil, extra: Seq[String] = Nil,
+      at: Option[VersionManifest] = None): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    df.select(logicalSchema(toM).fields.toSeq.map { f =>
-      (if (df.columns.contains(f.name)) col(f.name)
-       else lit(null).cast(f.dataType)).as(f.name)
+    def physical(m: VersionManifest): Map[String, String] =
+      if (m.mapping.nonEmpty) m.mapping.toMap
+      else logicalSchema(m).fieldNames.map(n => n -> n).toMap
+    val nameInDf: String => Option[String] = at match {
+      case Some(m) if m ne toM =>
+        val toPhysical = physical(toM)
+        val byPhysical = physical(m).map(_.swap)
+        n => toPhysical.get(n).flatMap(byPhysical.get)
+      case _ => Some(_)
+    }
+    df.select(lead.map(col) ++ logicalSchema(toM).fields.toSeq.map { f =>
+      nameInDf(f.name).filter(df.columns.contains) match {
+        case Some(n) => col(n).as(f.name)
+        case None    => lit(null).cast(f.dataType).as(f.name)
+      }
     } ++ extra.map(col): _*)
   }
 
@@ -2631,6 +2667,10 @@ final class VersionedTable(spark: SparkSession, root: String) {
     val d = w.delta(a, b)
     def tag(df: DataFrame, t: String): DataFrame =
       aligned(d.to, df).withColumn("_change_type", lit(t))
+    // `a`'s rows under `b`'s column names: a RENAME keeps the physical
+    // column, so name-matching `a`'s logical frame would read it null
+    def atFrom(es: Seq[ManifestEntry]): DataFrame = logicalize(d.to,
+      readFilesPhysical(d.from, es, isStreaming = false, withRowMeta = false))
     if ((d.appendOnly && d.added.isEmpty) ||
         (d.removed.nonEmpty && w.layoutOnly(a, b)))
       return emptyFeed(tag(readFiles(d.to, Seq.empty, isStreaming), "insert"))
@@ -2646,7 +2686,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
           s"${e.relPath} (a RESTORE) — the change feed cannot derive " +
           "resurrected rows; re-seed the stream"))
     } else if (!d.appendOnly && !w.derivable(a, b)) {
-      val before = aligned(d.to, readFiles(d.from, d.from.entries))
+      val before = aligned(d.to, atFrom(d.from.entries))
       val after = aligned(d.to, readFiles(d.to, d.to.entries))
       return tag(after.exceptAll(before), "insert")
         .unionByName(tag(before.exceptAll(after), "delete"))
@@ -2654,7 +2694,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
     val deletes =
       Option.when(d.remasked.nonEmpty)(newlyMaskedRows(d.to,
         d.remasked.map { case (o, e) => e -> o.dvDirs }, isStreaming)) ++
-      Option.when(d.removed.nonEmpty)(readFiles(d.from, d.removed))
+      Option.when(d.removed.nonEmpty)(atFrom(d.removed))
     (tag(readFiles(d.to, d.added, isStreaming), "insert") +:
       deletes.map(tag(_, "delete")).toSeq).reduce(_ unionByName _)
   }
@@ -2679,11 +2719,12 @@ final class VersionedTable(spark: SparkSession, root: String) {
         s"$root v$a..v$b")
     val names = logicalSchema(d.to).fieldNames.toSeq
     val values = names.map(col)
+    // both sides under `b`'s column names, as in [[rowFeed]]
     def side(m: VersionManifest, es: Seq[ManifestEntry]): DataFrame =
       aligned(d.to,
         if (es.isEmpty)
           readFiles(d.to, es).withColumn(RowIdCol, lit(null).cast("long"))
-        else logicalize(m, readFilesPhysicalRid(m, es))
+        else logicalize(d.to, readFilesPhysicalRid(m, es))
           .withColumnRenamed(RowIdPhysCol, RowIdCol),
         extra = Seq(RowIdCol))
     if (w.layoutOnly(a, b))
@@ -2711,20 +2752,25 @@ final class VersionedTable(spark: SparkSession, root: String) {
         col("_e.t").as("_change_type")): _*)
   }
 
-  /** The feed of each span (a, b], stamped with Delta CDF's
-    * `_commit_version` / `_commit_timestamp` of its end commit `b` (a
-    * plan-time literal per slice), unioned over an empty base whose
-    * typed nulls fix the columns when there are no spans. */
+  /** The feed of each span (a, b], in `w.toV`'s logical schema (a
+    * slice is in its own end's schema; `lead` and `_change_type` keep
+    * their places), stamped with Delta CDF's `_commit_version` /
+    * `_commit_timestamp` of its end commit `b` (a plan-time literal
+    * per slice). No spans: the empty feed at `toV`, stamped with typed
+    * nulls. */
   private def stamped(w: FeedWindow, spans: Seq[(Long, Long)],
-      slice: (Long, Long) => DataFrame): DataFrame = {
+      slice: (Long, Long) => DataFrame,
+      lead: Seq[String] = Nil): DataFrame = {
     import org.apache.spark.sql.functions.lit
-    def stamp(df: DataFrame, v: org.apache.spark.sql.Column,
+    def stamp(a: Long, b: Long, v: org.apache.spark.sql.Column,
         ts: org.apache.spark.sql.Column): DataFrame =
-      df.withColumn("_commit_version", v).withColumn("_commit_timestamp", ts)
-    spans.foldLeft(stamp(slice(w.toV, w.toV), lit(null).cast("long"),
-        lit(null).cast("timestamp"))) { case (acc, (a, b)) =>
-      acc.unionByName(stamp(slice(a, b), lit(b), lit(w.timestamp(b))))
-    }
+      aligned(w.manifest(w.toV), slice(a, b), lead, Seq("_change_type"),
+        at = Some(w.manifest(b)))
+        .withColumn("_commit_version", v).withColumn("_commit_timestamp", ts)
+    spans.map { case (a, b) => stamp(a, b, lit(b), lit(w.timestamp(b))) }
+      .reduceOption(_ unionByName _)
+      .getOrElse(stamp(w.toV, w.toV, lit(null).cast("long"),
+        lit(null).cast("timestamp")))
   }
 
   /** The batch feed of `w`: the endpoint diff, or with `commitMeta`
@@ -2735,7 +2781,8 @@ final class VersionedTable(spark: SparkSession, root: String) {
       if (updateImages) updateFeed(w, _, _)
       else rowFeed(w, _, _, isStreaming = false)
     if (!commitMeta) slice(w.fromV, w.toV)
-    else stamped(w, ((w.fromV + 1) to w.toV).map(v => (v - 1, v)), slice)
+    else stamped(w, ((w.fromV + 1) to w.toV).map(v => (v - 1, v)), slice,
+      lead = if (updateImages) Seq(RowIdCol) else Nil)
   }
 
   /** Change feed of the window (fromV, toV] (Delta CDF): the rows that
@@ -2801,21 +2848,24 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * (overwrites, RESTOREs, history gaps) pay a single-commit snapshot
     * diff. A window MIXING DML with OPTIMIZE therefore stays
     * O(changed files + masked rows), where the endpoint form must fall
-    * back. Driver cost: one manifest read per commit. */
+    * back. Every slice reads in `toV`'s logical schema. Driver cost:
+    * one manifest read per commit, and one more per span start. */
   def changesPerCommit(fromV: Long, toV: Long): DataFrame = {
     val w = new FeedWindow(fromV, toV)
     val slices = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def slice(a: Long, b: Long): Unit = slices += aligned(w.manifest(toV),
+      rowFeed(w, a, b, isStreaming = false), extra = Seq("_change_type"),
+      at = Some(w.manifest(b)))
     var spanStart = -1L // first commit of the open span; -1 = none
     def flushSpan(endV: Long): Unit = if (spanStart >= 0) {
-      slices += rowFeed(w, spanStart - 1, endV, isStreaming = false)
+      slice(spanStart - 1, endV)
       spanStart = -1L
     }
     ((fromV + 1) to toV).foreach { v =>
       if (w.derivable(v - 1, v)) { if (spanStart < 0) spanStart = v }
       else {
         flushSpan(v - 1)
-        if (!w.layoutOnly(v - 1, v))
-          slices += rowFeed(w, v - 1, v, isStreaming = false)
+        if (!w.layoutOnly(v - 1, v)) slice(v - 1, v)
       }
     }
     flushSpan(toV)

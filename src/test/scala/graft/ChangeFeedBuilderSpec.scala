@@ -127,6 +127,84 @@ class ChangeFeedBuilderSpec extends AnyFunSuite {
     }
   }
 
+  /** v0 create, v1 row tracking, v2 append, v3 ADD COLUMN w with a
+    * default, v4 append with w (one file per partition), v5 RENAME v
+    * TO amount, v6 DV update, v7 DV delete that kills v4's p0 file,
+    * v8 DROP COLUMN w. */
+  private lazy val evolving: VersionedTable = {
+    val vt = new VersionedTable(spark,
+      Fixtures.tempDir("cfb-evolving") + "/tbl")
+    def rows(ids: Seq[Long]): DataFrame =
+      ids.map(i => (i, s"p${i % 2}", i * 10L)).toDF("id", "p", "v")
+    vt.write(rows(0L until 12L), partitionBy = Some(Seq("p")))      // v0
+    vt.enableRowTracking()                                          // v1
+    vt.write(rows(12L until 16L), SaveMode.Append)                  // v2
+    vt.addColumnWithDefault("w", org.apache.spark.sql.types.LongType,
+      "5")                                                          // v3
+    vt.write(rows(16L until 20L).withColumn("w", col("id"))
+      .repartition(1), SaveMode.Append)                             // v4
+    vt.renameColumn("v", "amount")                                  // v5
+    vt.updateVectorizedWhere(col("id") % 3 === 0,
+      Map("amount" -> (col("amount") + 1L)))                        // v6
+    vt.deleteVectorizedWhere(col("id").isin(4L, 16L, 18L))          // v7
+    vt.dropColumn("w")                                              // v8
+    assert(vt.currentVersion.get === 8L)
+    vt
+  }
+
+  /** [[fold]] on (id, p, value) whatever the value column is named at
+    * that version; the defaulted `w` is left out, since its backfill
+    * is a logical change only a snapshot diff reports. */
+  private def foldEvolving(df: DataFrame, plus: Set[String]): Fold = {
+    val named = df.withColumnRenamed("amount", "v")
+    assert(named.filter(col("v").isNull).isEmpty, "a value read null")
+    fold(named, plus)
+  }
+
+  private def snapshotEvolving(vt: VersionedTable, v: Long): Fold =
+    vt.readVersion(v).withColumnRenamed("amount", "v")
+      .select("id", "p", "v").collect().toSeq
+      .groupBy(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+      .map { case (k, rs) => k -> rs.size.toLong }
+
+  test("a window across ADD, RENAME and DROP COLUMN reads in `to`'s " +
+      "logical schema and folds to the snapshot difference at every grain") {
+    val vt = evolving
+    assert(vt.history(limit = Int.MaxValue).exists(h =>
+      h.version == 7L && h.operation.startsWith("DELETE DV")))
+    assert(vt.changes(6L, 7L).filter(col("_change_type") === "delete")
+      .count() === 3L)
+    val snaps = (0L to 8L).map(v => v -> snapshotEvolving(vt, v)).toMap
+    val meta = Seq("_commit_version", "_commit_timestamp")
+    for (a <- 0L until 8L; b <- (a + 1) to 8L) {
+      val want = minus(snaps(b), snaps(a))
+      val cols = vt.readVersion(b).columns.toSeq :+ "_change_type"
+      withClue(s"window ($a, $b]: ") {
+        val endpoint = vt.changes(a, b)
+        val stamped = vt.changes(a, b, commitMeta = true)
+        val spans = vt.changesPerCommit(a, b)
+        assert(endpoint.columns.toSeq === cols, "endpoint columns")
+        assert(stamped.columns.toSeq === cols ++ meta, "stamped columns")
+        assert(spans.columns.toSeq === cols, "span columns")
+        assert(foldEvolving(endpoint, rowTypes) === want, "endpoint")
+        assert(foldEvolving(stamped.drop(meta: _*), rowTypes) === want,
+          "commit-stamped")
+        assert(foldEvolving(spans, rowTypes) === want, "spans")
+        if (a >= 1L) {
+          val images = vt.changes(a, b, updateImages = true)
+          val stampedImages = vt.changes(a, b, updateImages = true,
+            commitMeta = true)
+          assert(images.columns.toSeq === "_row_id" +: cols, "image columns")
+          assert(stampedImages.columns.toSeq === ("_row_id" +: cols) ++ meta,
+            "stamped image columns")
+          assert(foldEvolving(images, imageTypes) === want, "images")
+          assert(foldEvolving(stampedImages, imageTypes) === want,
+            "commit-stamped images")
+        }
+      }
+    }
+  }
+
   private lazy val small: VersionedTable = {
     val vt = new VersionedTable(spark, Fixtures.tempDir("cfb-bounds") + "/tbl")
     vt.write((0L until 10L).map(i => (i, "p", i)).toDF("id", "p", "v"))  // v0
