@@ -17,11 +17,13 @@ object VtProfile {
       .toDF("id", "k", "x")
     t("write v0"){ vt.write(df) }
     t("append v1"){ vt.write(df.filter(col("id") < 1000), SaveMode.Append) }
-    t("dv delete v2"){ vt.deleteVectorized("id", 100, 199) }
+    t("dv delete v2"){ vt.deleteVectorizedWhere(
+      graft.io.VersionedTable.NumRange("id", 100, 199).condition) }
     t("read count"){ println(vt.read().count()) }
     t("changes fold"){ println(vt.changes(0L, 2L).count()) }
     t("append v3"){ vt.write(df.filter(col("id") < 500), SaveMode.Append) }
-    t("dv delete v4"){ vt.deleteVectorized("id", 300, 399) }
+    t("dv delete v4"){ vt.deleteVectorizedWhere(
+      graft.io.VersionedTable.NumRange("id", 300, 399).condition) }
     spark.stop()
   }
 }

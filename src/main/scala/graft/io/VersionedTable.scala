@@ -482,42 +482,73 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * are already in the manifest. Catalyst partition pruning on the
     * returned frame works as on any partitioned table. */
   private def readFiles(m: VersionManifest, entries: Seq[ManifestEntry],
-      isStreaming: Boolean = false, withRowMeta: Boolean = false): DataFrame =
-    logicalize(m, readFilesPhysical(m, entries, isStreaming, withRowMeta))
+      rowIds: Boolean = false, rowMeta: Boolean = false,
+      isStreaming: Boolean = false): DataFrame =
+    logicalize(m, scanEntries(m, entries, rowIds, rowMeta, isStreaming))
 
-  private def readFilesPhysical(m: VersionManifest,
-      entries: Seq[ManifestEntry],
-      isStreaming: Boolean, withRowMeta: Boolean): DataFrame = {
-    import org.apache.spark.sql.functions.{col, substring}
+  /** THE scan of manifest entries' live rows, in physical columns, and
+    * the one place deletion vectors apply: files with a mask scan with
+    * row provenance and anti-join away their sidecar's (file, row_index)
+    * pairs; files without one never pay the join. `rowIds` adds, on a
+    * row-tracked table, the stable row id under its physical name:
+    * the scan's schema gains the nullable materialized-id column (files
+    * without it, plain appends, read null), resolved as
+    * `coalesce(materialized, base + row_index)` with the per-file bases
+    * broadcast from the manifest. `rowMeta` keeps the provenance
+    * columns (file path, row index). */
+  private def scanEntries(m: VersionManifest, entries: Seq[ManifestEntry],
+      rowIds: Boolean = false, rowMeta: Boolean = false,
+      isStreaming: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.functions.{broadcast, coalesce, col}
+    import graftbridge.ManifestScan.{FilePathCol, RowIndexCol}
+    val ids = rowIds && m.rowIdHw.isDefined
+    val fileRel = fileRelCol(col(FilePathCol))
+    def part(es: Seq[ManifestEntry], masked: Boolean): DataFrame = {
+      val raw = rawScan(m, es, isStreaming, rowMeta || ids || masked, ids)
+      val alive =
+        if (!masked) raw
+        else {
+          val dv = readDvRows(es.flatMap(_.dvDirs).distinct)
+          raw.join(dv, fileRel === dv("file_rel") &&
+            col(RowIndexCol) === dv("pos"), "left_anti")
+        }
+      val withIds =
+        if (!ids || es.isEmpty) alive
+        else {
+          import spark.implicits._
+          val bases = es.map(e => (e.relPath, e.baseRowId.getOrElse(
+            sys.error(s"row tracking: ${e.relPath} of $root has no base " +
+              "row id — was the file committed before enableRowTracking?"))))
+            .toDF("__rid_file", "__rid_base")
+          alive.join(broadcast(bases), fileRel === col("__rid_file"), "left")
+            .withColumn(RowIdPhysCol, coalesce(col(RowIdPhysCol),
+              col("__rid_base") + col(RowIndexCol)))
+            .drop("__rid_file", "__rid_base")
+        }
+      if (rowMeta || !(ids || masked)) withIds
+      else withIds.drop(FilePathCol, RowIndexCol)
+    }
     val (masked, plain) = entries.partition(_.dvDir.isDefined)
-    if (masked.isEmpty) return rawScan(m, entries, isStreaming, withRowMeta)
-    // DV-bearing files: read WITH per-row provenance, anti-join away the
-    // masked (file, row_index) pairs, and only then drop the provenance
-    // columns. Files without a DV never pay the join.
-    val dv = readDvRows(masked.flatMap(_.dvDirs).distinct)
-    val mdf = rawScan(m, masked, isStreaming, withRowMeta = true)
-    val fileRel = fileRelCol(col(graftbridge.ManifestScan.FilePathCol))
-    val alive = mdf.join(dv,
-      fileRel === dv("file_rel") &&
-        col(graftbridge.ManifestScan.RowIndexCol) === dv("pos"),
-      "left_anti")
-    val trimmed =
-      if (withRowMeta) alive
-      else alive.drop(graftbridge.ManifestScan.FilePathCol,
-        graftbridge.ManifestScan.RowIndexCol)
-    if (plain.isEmpty) trimmed
-    else rawScan(m, plain, isStreaming, withRowMeta).unionByName(trimmed)
+    if (masked.isEmpty) part(plain, masked = false)
+    else if (plain.isEmpty) part(masked, masked = true)
+    else part(plain, masked = false).unionByName(part(masked, masked = true))
   }
 
   /** Plan the scan with no DV application (the manifest entries' raw
-    * parquet rows). */
+    * parquet rows); `rowIds` extends the snapshot schema by the
+    * materialized row-id column. */
   private def rawScan(m: VersionManifest, entries: Seq[ManifestEntry],
-      isStreaming: Boolean, withRowMeta: Boolean,
+      isStreaming: Boolean, withRowMeta: Boolean, rowIds: Boolean = false,
       wholeFiles: Boolean = false): DataFrame = {
     val qualifiedRoot = fs.makeQualified(rootPath)
     val files = scanFiles(qualifiedRoot, entries)
+    val schema =
+      if (!rowIds) snapshotSchema(m)
+      else StructType(snapshotSchema(m).fields :+
+        org.apache.spark.sql.types.StructField(RowIdPhysCol,
+          org.apache.spark.sql.types.LongType, nullable = true))
     graftbridge.ManifestScan.parquetTable(spark, qualifiedRoot,
-      snapshotSchema(m), m.partitionBy, files, isStreaming, withRowMeta,
+      schema, m.partitionBy, files, isStreaming, withRowMeta,
       wholeFiles, scanSkipping(m, entries, files))
   }
 
@@ -717,16 +748,6 @@ final class VersionedTable(spark: SparkSession, root: String) {
         dvRows = total))
     }
 
-  /** The all-rows-dead fallback entry: the manifest must stay
-    * non-empty, so ONE candidate survives fully masked (reads yield
-    * zero rows with the right schema). */
-  private def fullyMaskedKeeper(h: ManifestEntry, folded: Set[String],
-      dvRel: String): ManifestEntry = {
-    val chain = if (folded.contains(h.relPath)) dvRel
-      else (h.dvDirs :+ dvRel).mkString(",")
-    h.copy(dvDir = Some(chain), dvRows = h.rows)
-  }
-
   /** Number of data files version `v` ADDED relative to `v-1` (for
     * v=0: the creating commit's file count) — the admission-control
     * unit behind the streaming source's `maxFilesPerBatch` (Delta's
@@ -737,16 +758,15 @@ final class VersionedTable(spark: SparkSession, root: String) {
     new FeedWindow(v - 1, v).delta(v - 1, v).added.size.toLong
 
   /** S4: newest version committed at or before `ts` (ISO-8601 instant)
-    * — Delta `timestampAsOf`. Commit times come from the history files;
-    * RESTORE commits count (they are real versions here). */
-  def versionAsOf(ts: String): Long = {
-    val committed = committedVersions.toSet
-    versionIn(history(Int.MaxValue).filter(e => committed.contains(e.version)),
-      ts, forward = false)
-      .getOrElse(sys.error(s"no version of $root committed at or before $ts"))
-  }
+    * — Delta `timestampAsOf`, by [[versionAt]]'s rule. Commit times
+    * come from the history files; RESTORE commits count (they are real
+    * versions here). Commit timestamps are wall clock, so this is an
+    * OPERATOR convenience ("what did the table say at 2 am"), not a
+    * determinism surface — hash-verified queries pin versions by
+    * NUMBER. Throws if `ts` predates every committed version. */
+  def versionAsOf(ts: String): Long = versionAtOrBefore(committedHistory(), ts)
 
-  /** S4: time-travel read by timestamp. */
+  /** S4: time-travel read by timestamp ([[versionAsOf]]). */
   def readAsOf(ts: String): DataFrame = readVersion(versionAsOf(ts))
 
   /** A version's manifest entries (file list with rows/bytes/stats) —
@@ -894,22 +914,9 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * rows rebase cleanly; an append that MIGHT hold matching rows
     * aborts the delete loudly (its rows were never scanned). */
   def deleteBetween(column: String, lo: Double, hi: Double): Long = {
-    val curV = currentVersion.getOrElse(
-      sys.error(s"table $root does not exist"))
-    val m = readManifest(curV)
     val matches = VersionedTable.NumRange(column, lo, hi).condition
-    val mayMatch = predicateMayMatch(m, matches)
-    val candidates = m.entries.filter(mayMatch)
-    if (candidates.isEmpty) return curV // provably nothing to delete
-    // tracked tables rewrite WITH each survivor's materialized row id
-    val src = if (m.rowIdHw.isDefined)
-      logicalize(m, readFilesPhysicalRid(m, candidates))
-    else readFiles(m, candidates)
-    val survivors = src.filter(!matches)
-    val v = replaceWhere(survivors, e => !mayMatch(e),
-      s"DELETE $column IN [$lo,$hi]", basisVersion = Some(curV))
-    refreshBloomIndexes(v)
-    v
+    rewriteMatching(matches, s"DELETE $column IN [$lo,$hi]")(_ =>
+      _.filter(!matches))
   }
 
   /** Row-level UPDATE (Delta `UPDATE ... WHERE column BETWEEN`):
@@ -923,75 +930,100 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * [[deleteBetween]]. */
   def updateBetween(column: String, lo: Double, hi: Double,
       set: Map[String, org.apache.spark.sql.Column]): Long = {
-    import org.apache.spark.sql.functions.{col, when}
+    import org.apache.spark.sql.functions.when
     require(set.nonEmpty, "updateBetween needs at least one column to set")
+    val matches = VersionedTable.NumRange(column, lo, hi).condition
+    rewriteMatching(matches, s"UPDATE $column IN [$lo,$hi]") { m =>
+      requireSettable(m, set)
+      // an updated row KEEPS its row id — that is what lets the change
+      // feed call it an update instead of a delete+insert
+      _.select(updatedColumns(m, set,
+        (v, old) => when(matches, v).otherwise(old)): _*)
+    }
+  }
+
+  /** The rewrite body of [[deleteBetween]] and [[updateBetween]]: the
+    * files [[predicateMayMatch]] admits for `matches` are read (row
+    * ids riding along on tracked tables) and replaced by `rows` of
+    * that scan; every other file is re-referenced untouched. `rows`
+    * sees the snapshot first, so its checks run even when no file can
+    * match. */
+  private def rewriteMatching(matches: org.apache.spark.sql.Column,
+      operation: String)(
+      rows: VersionManifest => DataFrame => DataFrame): Long = {
     val curV = currentVersion.getOrElse(
       sys.error(s"table $root does not exist"))
     val m = readManifest(curV)
-    // `src` below is LOGICALIZED, so key validation and the output
-    // projection run against the LOGICAL schema — on a mapped table
-    // (post rename/drop) the physical snapshot names would not even
-    // resolve (replaceWhere delogicalizes on write either way)
-    val schema = logicalSchema(m)
-    set.keys.foreach(k => require(schema.fieldNames.contains(k),
-      s"update sets unknown column '$k' at $root"))
-    require(!set.keys.exists(m.partitionBy.contains),
-      s"cannot update partition columns of $root in place " +
-        "(rows would change partitions) — use a MERGE")
-    val matches = VersionedTable.NumRange(column, lo, hi).condition
+    val transform = rows(m)
     val mayMatch = predicateMayMatch(m, matches)
     val candidates = m.entries.filter(mayMatch)
-    if (candidates.isEmpty) return curV // provably nothing to update
-    val tracked = m.rowIdHw.isDefined
-    val src = if (tracked) logicalize(m, readFilesPhysicalRid(m, candidates))
-              else readFiles(m, candidates)
-    val outCols = schema.fields.toSeq.map { f =>
-      set.get(f.name) match {
-        case Some(expr) =>
-          when(matches, expr.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-        case None => col(f.name)
-      }
-    // an updated row KEEPS its row id — that is what lets the change
-    // feed call it an update instead of a delete+insert
-    } ++ (if (tracked) Seq(col(RowIdPhysCol)) else Seq.empty)
-    val v = replaceWhere(src.select(outCols: _*), e => !mayMatch(e),
-      s"UPDATE $column IN [$lo,$hi]", basisVersion = Some(curV))
+    if (candidates.isEmpty) return curV // provably nothing to change
+    val v = replaceWhere(transform(readFiles(m, candidates, rowIds = true)),
+      e => !mayMatch(e), operation, basisVersion = Some(curV))
     refreshBloomIndexes(v)
     v
   }
 
-  /** Row-level DELETE of `column` ∈ [lo, hi] via DELETION VECTORS
-    * (Delta's DV mode): instead of rewriting every possibly-matching
-    * file, write a sidecar of (file, row_index) pairs for the matched
-    * rows and point the affected manifest entries at it; reads
-    * anti-join the masks away. Write amplification is O(deleted rows)
-    * — 8 bytes a row — instead of O(size of every touched file), which
-    * at 100 TB is the difference between a KB-scale commit and
-    * rewriting terabytes to delete a few rows. Stats/partition pruning
-    * still applies (a DV only shrinks a file's true range, so recorded
-    * stats stay conservative); files the manifest PROVES unaffected
-    * are neither read nor touched. A file whose every row is masked is
-    * dropped from the manifest outright. Repeated DV deletes UNION
-    * into a fresh sidecar (the new commit's masks replace the old
-    * pointers); [[compact]] purges DVs by rewriting survivors.
-    * Concurrency: rebases over commits that leave every candidate
-    * file untouched; fails loudly if a candidate was rewritten or
-    * re-masked mid-flight (same lost-update rule as [[replaceWhere]]).
-    * Isolation level is WRITE-SERIALIZABLE, matching Delta's default:
-    * a concurrent APPEND whose new rows fall inside [lo, hi] commits
-    * cleanly and those rows SURVIVE the delete — the delete's mask set
-    * was computed against its basis snapshot and new files are not
-    * re-scanned on rebase. This is the documented Delta behavior for
-    * blind appends vs. DELETE (appends never conflict under
-    * WriteSerializable); callers needing serial DELETE-then-append
-    * semantics must order the operations themselves.
-    * Prior versions still read the unmasked rows (snapshot isolation);
-    * [[vacuum]] keeps every sidecar a retained version references. */
-  def deleteVectorized(column: String, lo: Double, hi: Double): Long = {
-    val matches = VersionedTable.NumRange(column, lo, hi).condition
-    deleteVectorizedCore(matches, s"DELETE DV $column IN [$lo,$hi]")(
-      _.filter(matches))
+  /** An UPDATE's `set` must name existing non-partition columns: a
+    * row's partition value is its file's, so changing it moves the row
+    * (a MERGE). Checked against the LOGICAL schema — the frames the
+    * updates project are logicalized, and on a mapped table (post
+    * rename/drop) the physical names would not even resolve. */
+  private def requireSettable(m: VersionManifest,
+      set: Map[String, org.apache.spark.sql.Column]): Unit = {
+    val names = logicalSchema(m).fieldNames
+    set.keys.foreach(k => require(names.contains(k),
+      s"update sets unknown column '$k' at $root"))
+    require(!set.keys.exists(m.partitionBy.contains),
+      s"cannot update partition columns of $root in place " +
+        "(rows would change partitions) — use a MERGE")
   }
+
+  /** An UPDATE's output columns over a logicalized scan of `m`: each
+    * `set` column takes `pick(new value, old value)` cast to its type,
+    * the rest pass through, and the row id rides along on tracked
+    * tables. */
+  private def updatedColumns(m: VersionManifest,
+      set: Map[String, org.apache.spark.sql.Column],
+      pick: (org.apache.spark.sql.Column, org.apache.spark.sql.Column) =>
+        org.apache.spark.sql.Column): Seq[org.apache.spark.sql.Column] = {
+    import org.apache.spark.sql.functions.col
+    logicalSchema(m).fields.toSeq.map { f =>
+      set.get(f.name).fold(col(f.name))(e =>
+        pick(e.cast(f.dataType), col(f.name)).as(f.name))
+    } ++ (if (m.rowIdHw.isDefined) Seq(col(RowIdPhysCol)) else Seq.empty)
+  }
+
+  /** Row-level DELETE of every row satisfying an ARBITRARY predicate
+    * via DELETION VECTORS (Delta's DV mode) — the `DELETE FROM t WHERE
+    * <anything>` a SQL user writes; a numeric range is
+    * `VersionedTable.NumRange(column, lo, hi).condition`. Instead of
+    * rewriting every possibly-matching file, write a sidecar of (file,
+    * row_index) pairs for the matched rows and point the affected
+    * manifest entries at it; reads anti-join the masks away. Write
+    * amplification is O(deleted rows) — 8 bytes a row — instead of
+    * O(size of every touched file), which at 100 TB is the difference
+    * between a KB-scale commit and rewriting terabytes to delete a few
+    * rows. Candidate files come from [[predicateMayMatch]]'s data
+    * skipping: the predicate's comparison / IN / BETWEEN / prefix
+    * conjuncts are tested against each file's recorded stats (numeric
+    * and short-ASCII string min/max, exact partition values), so a
+    * selective predicate on a clustered column reads only the files it
+    * could touch — Delta's data-skipping-for-DML shape (a DV only
+    * shrinks a file's true range, so recorded stats stay
+    * conservative). `IN` tests each listed value, so an id-set delete
+    * skips the files between the ids too. The row mask itself is
+    * always the exact `filter(pred)` (rows where the predicate is NULL
+    * survive — SQL three-valued WHERE). A file whose every row is
+    * masked is dropped from the manifest outright; [[compact]] and
+    * [[reorgPurge]] purge DVs by rewriting survivors. Prior versions
+    * still read the unmasked rows (snapshot isolation); [[vacuum]]
+    * keeps every sidecar a retained version references. Concurrency
+    * is [[dvDml]]'s WriteSerializable protocol: a concurrent APPEND
+    * whose new rows match commits cleanly and those rows SURVIVE the
+    * delete, Delta's documented rule for blind appends vs. DELETE. */
+  def deleteVectorizedWhere(pred: org.apache.spark.sql.Column): Long =
+    dvDml(m => dvDelete(m, pred, s"DELETE DV WHERE $pred")(_.filter(pred)))
 
   /** Row-level DELETE of every row whose `column` appears in `keys` —
     * the DISTRIBUTED form of an `IN` delete: the key frame (e.g. a
@@ -1000,44 +1032,34 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * driver-sized values are the key's [min, max] envelope
     * ([[keyEnvelope]]) that skips files. `keys` must have exactly one
     * column (any name, castable to the target column's type). Same
-    * WriteSerializable semantics as the range flavor. */
-  def deleteVectorizedKeys(column: String, keys: DataFrame): Long = {
-    import org.apache.spark.sql.functions.{col, count, lit}
-    val curV = currentVersion.getOrElse(
-      sys.error(s"table $root does not exist"))
-    require(keys.columns.length == 1,
-      s"deleteVectorizedKeys expects a single-column key frame, got " +
-        s"[${keys.columns.mkString(",")}]")
-    val k = keys.select(col(keys.columns.head).as(column)).distinct()
-      .localCheckpoint() // the envelope agg AND the mask both read it
-    val env = k.agg(count(lit(1)), keyEnvelope(k, column,
-      logicalSchema(readManifest(curV))(column).dataType): _*).head()
-    if (env.getLong(0) == 0L) return curV // empty key frame: nothing to do
-    val range =
-      if (env.length < 3) "" else s"[${env.get(1)},${env.get(2)}]"
-    deleteVectorizedCore(envelopePredicate(column, env, 1),
-      s"DELETE DV $column IN KEYS$range")(_.join(k, Seq(column), "left_semi"))
-  }
+    * WriteSerializable semantics as [[deleteVectorizedWhere]]. */
+  def deleteVectorizedKeys(column: String, keys: DataFrame): Long =
+    dvDml { m =>
+      import org.apache.spark.sql.functions.{col, count, lit}
+      require(keys.columns.length == 1,
+        s"deleteVectorizedKeys expects a single-column key frame, got " +
+          s"[${keys.columns.mkString(",")}]")
+      val k = keys.select(col(keys.columns.head).as(column)).distinct()
+        .localCheckpoint() // the envelope agg AND the mask both read it
+      val env = k.agg(count(lit(1)),
+        keyEnvelope(k, column, logicalSchema(m)(column).dataType): _*).head()
+      val range =
+        if (env.length < 3) "" else s"[${env.get(1)},${env.get(2)}]"
+      if (env.getLong(0) == 0L) None // empty key frame: nothing to do
+      else dvDelete(m, envelopePredicate(column, env, 1),
+        s"DELETE DV $column IN KEYS$range")(_.join(k, Seq(column), "left_semi"))
+    }
 
-  /** Row-level DELETE of every row satisfying an ARBITRARY predicate
-    * via deletion vectors — the `DELETE FROM t WHERE <anything>` a
-    * SQL user actually writes, at the same O(deleted rows) write
-    * amplification as [[deleteVectorized]]. Candidate files come
-    * from [[predicateMayMatch]]'s data skipping: the predicate's
-    * comparison / IN / BETWEEN / prefix conjuncts are tested against
-    * each file's recorded stats (numeric and short-ASCII string
-    * min/max, exact partition values), so a selective predicate on a
-    * clustered column reads only the files it could touch — exactly
-    * Delta's data-skipping-for-DML shape. `IN` tests each listed
-    * value, so an id-set delete (the survivor list a dedup pipeline
-    * produces) skips the files between the ids too. Conjuncts the
-    * analyzer cannot prove anything about are conservatively
-    * non-skipping; the row mask itself is always the exact
-    * `filter(pred)` (rows where the predicate is NULL survive — SQL
-    * three-valued WHERE). Same WriteSerializable concurrency as the
-    * range flavor. */
-  def deleteVectorizedWhere(pred: org.apache.spark.sql.Column): Long =
-    deleteVectorizedCore(pred, s"DELETE DV WHERE $pred")(_.filter(pred))
+  /** A DV delete's plan: the files [[predicateMayMatch]] admits for
+    * `skip` are the candidates, and `mask` picks the rows of their scan
+    * to retire. None when no file can match. */
+  private def dvDelete(m: VersionManifest, skip: org.apache.spark.sql.Column,
+      operation: String)(
+      mask: DataFrame => DataFrame): Option[VersionedTable.DvPlan] = {
+    val candidates = m.entries.filter(predicateMayMatch(m, skip))
+    Option.when(candidates.nonEmpty)(VersionedTable.DvPlan(operation,
+      candidates, Some(mask(readFiles(m, candidates, rowMeta = true)))))
+  }
 
   /** CONVERT TO versioned table, IN PLACE (Delta `CONVERT TO DELTA`):
     * adopt an existing plain-parquet directory — flat or
@@ -1271,74 +1293,6 @@ final class VersionedTable(spark: SparkSession, root: String) {
       m.entries.map(_.liveRows).sum)
     dest.pointTo(0L)
     dest
-  }
-
-  /** The DV delete every flavor shares: the files [[predicateMayMatch]]
-    * admits for `skip` are the candidates, and `mask` picks the rows
-    * of their scan to retire. */
-  private def deleteVectorizedCore(skip: org.apache.spark.sql.Column,
-      opDesc: String)(mask: DataFrame => DataFrame): Long = {
-    import org.apache.spark.sql.functions.col
-    val curV = currentVersion.getOrElse(
-      sys.error(s"table $root does not exist"))
-    val m = readManifest(curV)
-    val mayMatch = predicateMayMatch(m, skip)
-    val candidates = m.entries.filter(mayMatch)
-    if (candidates.isEmpty) return curV // provably nothing to delete
-    val qualifiedRoot = fs.makeQualified(rootPath)
-    // newly-matching LIVE rows of candidate files, as (file_rel, pos);
-    // readFiles applies existing masks, so already-dead rows are never
-    // re-scanned into the new sidecar by the scan itself…
-    val matches = mask(readFiles(m, candidates, withRowMeta = true))
-      .select(
-        fileRelCol(col(graftbridge.ManifestScan.FilePathCol))
-          .as("file_rel"),
-        col(graftbridge.ManifestScan.RowIndexCol).as("pos"))
-    // …and the existing masks stay where they are: this commit writes
-    // ONLY its own delta pairs and APPENDS one link to each touched
-    // file's DV chain — O(this delete's rows) written, whatever the
-    // accumulated mask size (the amortized-cost claim holds
-    // unconditionally under sustained churn; files at the chain cap
-    // fold their mask here, once per cap commits).
-    val dir = newCommitDir(curV + 1)
-    val (folded, counts) = writeDvSidecar(matches, candidates, dir)
-    val dvRel = relativize(dir)
-    // a manifest entry's path as the scan renders it (Path.toString
-    // normalization) — the key `counts` is expressed in
-    def renderedRel(e: ManifestEntry): String =
-      renderKey(qualifiedRoot.toString,
-        new Path(qualifiedRoot, e.relPath).toString)
-    val candByPath = candidates.map(e => e.relPath -> e).toMap
-    commitWithRebase(rebase = true) { () =>
-      val nowV = currentVersion.get
-      val now = readManifest(nowV)
-      val nowByPath = now.entries.map(e => e.relPath -> e).toMap
-      candidates.foreach { c =>
-        val n = nowByPath.getOrElse(c.relPath, sys.error(
-          s"concurrent write conflict at $root: ${c.relPath} was " +
-            "rewritten while a DV delete was in flight; re-run against " +
-            "the new snapshot"))
-        if (n.dvDir != c.dvDir) sys.error(
-          s"concurrent write conflict at $root: ${c.relPath} was " +
-            "re-masked while a DV delete was in flight; re-run against " +
-            "the new snapshot")
-      }
-      val entries = now.entries.flatMap { e =>
-        if (!candByPath.contains(e.relPath)) Some(e)
-        else maskedEntry(e, counts.getOrElse(renderedRel(e), 0L),
-          folded, dvRel)
-      } match {
-        // every row of the table deleted: keep ONE fully-masked entry so
-        // the manifest stays non-empty (reads yield 0 rows, right schema)
-        case Seq() => Seq(fullyMaskedKeeper(candidates.head, folded, dvRel))
-        case es => es
-      }
-      val next = nowV + 1
-      writeManifest(next, now.copy(entries = entries))
-      appendHistory(next, opDesc, entries.map(_.liveRows).sum)
-      pointTo(next)
-      next
-    }
   }
 
   /** The READ half of a stats-pruned key-scoped rewrite (the Delta
@@ -1732,128 +1686,89 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * images; Delta raises the same error). Schema evolution is not
     * supported on this path (source columns must exist in the
     * snapshot schema) — evolving merges take the rewrite path.
-    * Concurrency is WriteSerializable, as [[deleteVectorized]]: a
-    * candidate file rewritten or re-masked mid-flight fails loudly;
-    * blind appends racing in commit cleanly and are NOT re-scanned
-    * (their rows, even matching, survive as-is — Delta's documented
+    * Concurrency is [[dvDml]]'s WriteSerializable protocol: blind
+    * appends racing in commit cleanly and are NOT re-scanned (their
+    * rows, even matching, survive as-is — Delta's documented
     * append-vs-DML rule). Returns the committed version. */
   def mergeVectorized(source: DataFrame, mergeKeys: Seq[String],
       updateColumns: Option[Seq[String]] = None): Long = {
-    import org.apache.spark.sql.functions.{broadcast, col, count,
-      count_distinct, lit, struct}
     require(mergeKeys.nonEmpty, "mergeKeys must be non-empty")
-    val curV = currentVersion.getOrElse(
-      sys.error(s"table $root does not exist"))
-    val m = readManifest(curV)
-    val schema = logicalSchema(m)
-    val tgtCols = schema.fieldNames.toSeq
-    mergeKeys.foreach(k => require(tgtCols.contains(k) &&
-      source.columns.contains(k),
-      s"merge key $k must exist in both $root and the source"))
-    source.columns.foreach(c => require(tgtCols.contains(c),
-      s"DV MERGE cannot evolve schema at $root: source column '$c' is " +
-        "not in the snapshot — use the rewrite path with evolveSchema"))
-    val updateCols = updateColumns.getOrElse(
-      source.columns.toSeq.filterNot(mergeKeys.contains))
-    updateCols.foreach(c => require(
-      tgtCols.contains(c) && !mergeKeys.contains(c),
-      s"update column '$c' must be an existing non-key column of $root"))
-    // lazy: the checks' aggregate below is its single first consumer
-    // and materializes it; the joins after it read the checkpoint
-    val src = source.localCheckpoint(eager = false)
-    // emptiness, the duplicate-key guard and the key envelope: ONE
-    // aggregate over the source
-    val keyCol = mergeKeys.head
-    val facts = src.agg(count(lit(1)),
-      count_distinct(struct(mergeKeys.map(col): _*)) +:
-        keyEnvelope(src, keyCol, schema(keyCol).dataType): _*).head()
-    if (facts.getLong(0) == 0L) return curV
-    require(facts.getLong(0) == facts.getLong(1),
-      s"MERGE source has duplicate rows on (${mergeKeys.mkString(",")}) " +
-        "— each target row may match at most one source row")
-    val candidates = m.entries.filter(
-      predicateMayMatch(m, envelopePredicate(keyCol, facts, 2)))
-    val tracked = m.rowIdHw.isDefined
-    val metaFile = graftbridge.ManifestScan.FilePathCol
-    val metaPos = graftbridge.ManifestScan.RowIndexCol
-    // ONE pass over the candidates: each matched target row with its
-    // (file, pos) and its new image — matched rows take the source's
-    // values for the update columns, row-tracked ones carry their id.
-    // O(matched) rows, checkpointed once: the DV sidecar, the update
-    // images and the insert anti-join all read it
-    val imageCols = mergeKeys.map(col) ++
-      tgtCols.filterNot(mergeKeys.contains).map { c =>
-        if (updateCols.contains(c) && source.columns.contains(c))
-          col(s"s.$c").as(c)
-        else col(s"t.$c").as(c)
-      } ++
-      (if (tracked) Seq(col(s"t.$RowIdPhysCol").as(RowIdPhysCol))
-       else Seq.empty)
-    val matched =
-      if (candidates.isEmpty) None
-      else {
-        val tgt =
-          if (tracked) logicalize(m,
-            readFilesPhysicalRid(m, candidates, keepMeta = true))
-          else readFiles(m, candidates, withRowMeta = true)
-        Some(tgt.alias("t").join(src.alias("s"), mergeKeys, "inner")
-          .select(imageCols :+ col(s"t.$metaFile").as(metaFile) :+
-            col(s"t.$metaPos").as(metaPos): _*)
-          .localCheckpoint())
+    dvDml { m =>
+      import org.apache.spark.sql.functions.{broadcast, col, count,
+        count_distinct, lit, struct}
+      import graftbridge.ManifestScan.{FilePathCol, RowIndexCol}
+      val schema = logicalSchema(m)
+      val tgtCols = schema.fieldNames.toSeq
+      mergeKeys.foreach(k => require(tgtCols.contains(k) &&
+        source.columns.contains(k),
+        s"merge key $k must exist in both $root and the source"))
+      source.columns.foreach(c => require(tgtCols.contains(c),
+        s"DV MERGE cannot evolve schema at $root: source column '$c' is " +
+          "not in the snapshot — use the rewrite path with evolveSchema"))
+      val updateCols = updateColumns.getOrElse(
+        source.columns.toSeq.filterNot(mergeKeys.contains))
+      updateCols.foreach(c => require(
+        tgtCols.contains(c) && !mergeKeys.contains(c),
+        s"update column '$c' must be an existing non-key column of $root"))
+      // lazy: the checks' aggregate below is its single first consumer
+      // and materializes it; the joins after it read the checkpoint
+      val src = source.localCheckpoint(eager = false)
+      // emptiness, the duplicate-key guard and the key envelope: ONE
+      // aggregate over the source
+      val keyCol = mergeKeys.head
+      val facts = src.agg(count(lit(1)),
+        count_distinct(struct(mergeKeys.map(col): _*)) +:
+          keyEnvelope(src, keyCol, schema(keyCol).dataType): _*).head()
+      Option.when(facts.getLong(0) > 0L) { // an empty source changes nothing
+        require(facts.getLong(0) == facts.getLong(1),
+          s"MERGE source has duplicate rows on (${mergeKeys.mkString(",")}) " +
+            "— each target row may match at most one source row")
+        val candidates = m.entries.filter(
+          predicateMayMatch(m, envelopePredicate(keyCol, facts, 2)))
+        val rowId =
+          if (m.rowIdHw.isDefined) Seq(RowIdPhysCol) else Seq.empty[String]
+        // ONE pass over the candidates: each matched target row with its
+        // (file, pos) and its new image — matched rows take the source's
+        // values for the update columns, row-tracked ones carry their id.
+        // O(matched) rows, checkpointed once: the DV sidecar, the update
+        // images and the insert anti-join all read it
+        val matched = Option.when(candidates.nonEmpty)(
+          readFiles(m, candidates, rowIds = true, rowMeta = true).alias("t")
+            .join(src.alias("s"), mergeKeys, "inner")
+            .select(mergeKeys.map(col) ++
+              tgtCols.filterNot(mergeKeys.contains).map { c =>
+                if (updateCols.contains(c) && source.columns.contains(c))
+                  col(s"s.$c").as(c)
+                else col(s"t.$c").as(c)
+              } ++ (rowId :+ FilePathCol :+ RowIndexCol)
+                .map(c => col(s"t.$c").as(c)): _*)
+            .localCheckpoint())
+        VersionedTable.DvPlan(s"MERGE DV ON (${mergeKeys.mkString(",")})",
+          candidates, matched, Some { retired =>
+            // the inserts: source rows no target row matched. An
+            // anti-join needs no distinct right side; the planner cannot
+            // size the checkpointed matches (it multiplies the join's
+            // inputs), but the sidecar write counted them, so broadcast
+            // them when their keys fit the session's broadcast threshold
+            val inserts = matched.fold(src) { rows =>
+              val keys = rows.select(mergeKeys.map(col): _*)
+              val keyBytes =
+                mergeKeys.map(k => schema(k).dataType.defaultSize).sum
+              val limit = org.apache.spark.sql.internal.SQLConf.get
+                .autoBroadcastJoinThreshold
+              src.join(if (retired * keyBytes <= limit) broadcast(keys)
+                else keys, mergeKeys, "left_anti")
+            }.select(mergeKeys.map(col) ++
+              tgtCols.filterNot(mergeKeys.contains).map { c =>
+                val f = schema(c)
+                if (source.columns.contains(c)) col(c).cast(f.dataType).as(c)
+                else lit(null).cast(f.dataType).as(c)
+              } ++ rowId.map(lit(null).cast("long").as(_)): _*)
+            matched.fold(inserts)(
+              _.drop(FilePathCol, RowIndexCol).unionByName(inserts))
+          })
       }
-    val newDvDir = newCommitDir(curV + 1)
-    val (folded, counts) = matched match {
-      case None => (Set.empty[String], Map.empty[String, Long])
-      case Some(rows) =>
-        // delta sidecar: ONLY this merge's newly retired rows — the
-        // existing masks stay in their own chain links (O(changed
-        // rows) written per commit; cap-length chains fold here)
-        writeDvSidecar(rows.select(fileRelCol(col(metaFile)).as("file_rel"),
-          col(metaPos).as("pos")), candidates, newDvDir)
     }
-    val dvRel = relativize(newDvDir)
-    val updates = matched match {
-      case Some(rows) => rows.drop(metaFile, metaPos)
-      case None =>
-        val e = readVersion(curV).limit(0)
-        (if (tracked) e.withColumn(RowIdPhysCol, lit(null).cast("long"))
-         else e).alias("t").join(src.alias("s"), mergeKeys, "inner")
-          .select(imageCols: _*)
-    }
-    // the inserts: source rows no target row matched. An anti-join
-    // needs no distinct right side; the planner cannot size the
-    // checkpointed matches (it multiplies the join's inputs), but the
-    // sidecar write counted them, so broadcast them when their keys
-    // fit the session's broadcast threshold
-    val inserts = matched.fold(src) { rows =>
-      val keys = rows.select(mergeKeys.map(col): _*)
-      val keyBytes = mergeKeys.map(k => schema(k).dataType.defaultSize).sum
-      val limit = org.apache.spark.sql.internal.SQLConf.get
-        .autoBroadcastJoinThreshold
-      src.join(
-        if (counts.values.sum * keyBytes <= limit) broadcast(keys) else keys,
-        mergeKeys, "left_anti")
-    }
-      .select(mergeKeys.map(col) ++
-        tgtCols.filterNot(mergeKeys.contains).map { c =>
-          val f = schema(c)
-          if (source.columns.contains(c)) col(c).cast(f.dataType).as(c)
-          else lit(null).cast(f.dataType).as(c)
-        } ++
-        (if (tracked) Seq(lit(null).cast("long").as(RowIdPhysCol))
-         else Seq.empty): _*)
-    val newImages = updates.unionByName(inserts)
-    reconcileAppendSchema(newImages.drop(RowIdPhysCol), schema,
-      allowEvolution = false)
-    enforceConstraints(newImages, m.constraints)
-    val dataDir = newCommitDir(curV + 1)
-    writeCommitData(delogicalize(m.mapping, newImages), m.partitionBy,
-      dataDir)
-    val added = listCommitFiles(dataDir)
-    val v = commitMaskAppend(m, candidates, counts, folded, dvRel, added,
-      s"MERGE DV ON (${mergeKeys.mkString(",")})")
-    refreshBloomIndexes(v)
-    v
   }
 
   /** Row-level UPDATE of every row satisfying an ARBITRARY predicate
@@ -1869,56 +1784,19 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * Row-tracked tables carry each updated row's id, so the change
     * feed reports updates as update pre/post image pairs. Partition
     * columns can't be set (Delta's rule — use a MERGE); concurrency
-    * as [[deleteVectorized]] (WriteSerializable). */
+    * as [[dvDml]] (WriteSerializable). */
   def updateVectorizedWhere(pred: org.apache.spark.sql.Column,
       set: Map[String, org.apache.spark.sql.Column]): Long = {
-    import org.apache.spark.sql.functions.col
     require(set.nonEmpty, "updateVectorized needs a column to set")
-    val curV = currentVersion.getOrElse(
-      sys.error(s"table $root does not exist"))
-    val m = readManifest(curV)
-    val schema = logicalSchema(m)
-    set.keys.foreach(k => require(schema.fieldNames.contains(k),
-      s"update sets unknown column '$k' at $root"))
-    require(!set.keys.exists(m.partitionBy.contains),
-      s"cannot update partition columns of $root in place " +
-        "(rows would change partitions) — use a MERGE")
-    val candidates = m.entries.filter(predicateMayMatch(m, pred))
-    if (candidates.isEmpty) return curV // provably nothing to update
-    val tracked = m.rowIdHw.isDefined
-    val metaFile = graftbridge.ManifestScan.FilePathCol
-    val metaPos = graftbridge.ManifestScan.RowIndexCol
-    // PASS 1 — mask the matched rows (predicate-column-pruned scan)
-    val matchedPairs = readFiles(m, candidates, withRowMeta = true)
-      .filter(pred)
-      .select(fileRelCol(col(metaFile)).as("file_rel"),
-        col(metaPos).as("pos"))
-    // delta sidecar only (see mergeVectorized) — chain-appended in
-    // commitMaskAppend, cap-length chains folded
-    val newDvDir = newCommitDir(curV + 1)
-    val (folded, counts) = writeDvSidecar(matchedPairs, candidates,
-      newDvDir)
-    val dvRel = relativize(newDvDir)
-    // PASS 2 — the updated images, ids carried on tracked tables
-    val scan =
-      if (tracked) logicalize(m, readFilesPhysicalRid(m, candidates))
-      else readFiles(m, candidates)
-    val newImages = scan.filter(pred)
-      .select(schema.fields.toSeq.map { f =>
-        set.get(f.name) match {
-          case Some(expr) => expr.cast(f.dataType).as(f.name)
-          case None => col(f.name)
-        }
-      } ++ (if (tracked) Seq(col(RowIdPhysCol)) else Seq.empty): _*)
-    enforceConstraints(newImages, m.constraints)
-    val dataDir = newCommitDir(curV + 1)
-    writeCommitData(delogicalize(m.mapping, newImages), m.partitionBy,
-      dataDir)
-    val added = listCommitFiles(dataDir)
-    val v = commitMaskAppend(m, candidates, counts, folded, dvRel, added,
-      s"UPDATE DV WHERE $pred")
-    refreshBloomIndexes(v)
-    v
+    dvDml { m =>
+      requireSettable(m, set)
+      // PASS 1 masks the matched rows as a DV delete does (a
+      // predicate-column-pruned scan); PASS 2 builds their images
+      dvDelete(m, pred, s"UPDATE DV WHERE $pred")(_.filter(pred)).map(p =>
+        p.copy(images = Some(_ =>
+          readFiles(m, p.candidates, rowIds = true).filter(pred)
+            .select(updatedColumns(m, set, (v, _) => v): _*))))
+    }
   }
 
   /** DV-BACKED KEYED FOLD (the streaming CDC-apply write primitive,
@@ -1931,7 +1809,8 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * (typically `window-dedup(affected ∪ batch) minus deletes`); rows
     * for keys NOT in `batchKeys` are untouched by construction, so
     * the commit writes O(batch ∪ affected) — not O(touched files),
-    * which even the stats-pruned replaceWhere fold pays.
+    * which even the stats-pruned replaceWhere fold pays. `foldWith`
+    * runs after the sidecar write and before the commit.
     *
     * Soundness needs every stored row of a touched key in `affected`:
     * candidates come from `batchKeys`' envelope against manifest
@@ -1940,114 +1819,126 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * never semi-joins, so a stored null-key row would silently evade
     * its mask — the CDC sink falls back to the full fold on null-key
     * batches for exactly this reason). Concurrency as the other DV
-    * DML ([[commitMaskAppend]]'s WriteSerializable protocol). */
+    * DML ([[dvDml]]'s WriteSerializable protocol). */
   def foldVectorized(batchKeys: DataFrame, mergeKeys: Seq[String],
       operation: String)(foldWith: DataFrame => DataFrame): Long = {
-    import org.apache.spark.sql.functions.col
     require(mergeKeys.nonEmpty, "mergeKeys must be non-empty")
-    val curV = currentVersion.getOrElse(
-      sys.error(s"table $root does not exist"))
-    val m = readManifest(curV)
-    val keys = batchKeys.select(mergeKeys.map(col): _*).distinct()
-      .localCheckpoint() // envelope agg AND the semi-join read it
-    val keyCol = mergeKeys.head
-    val candidates = keyEnvelope(keys, keyCol,
-        logicalSchema(m)(keyCol).dataType) match {
-      case Seq() => m.entries
-      case env => m.entries.filter(predicateMayMatch(m,
-        envelopePredicate(keyCol, keys.agg(env.head, env.tail: _*).head(), 0)))
-    }
-    val metaFile = graftbridge.ManifestScan.FilePathCol
-    val metaPos = graftbridge.ManifestScan.RowIndexCol
-    val affected =
-      if (candidates.isEmpty) null
-      else readFiles(m, candidates, withRowMeta = true)
-        .join(keys, mergeKeys, "left_semi")
-        .localCheckpoint() // O(affected rows), read twice below
-    val newDvDir = newCommitDir(curV + 1)
-    val (folded, counts) =
-      if (candidates.isEmpty) (Set.empty[String], Map.empty[String, Long])
-      else {
-        // delta sidecar only (see mergeVectorized) — chain-appended in
-        // commitMaskAppend, cap-length chains folded
-        val pairs = affected.select(
-          fileRelCol(col(metaFile)).as("file_rel"), col(metaPos).as("pos"))
-        writeDvSidecar(pairs, candidates, newDvDir)
+    dvDml { m =>
+      import org.apache.spark.sql.functions.col
+      val keys = batchKeys.select(mergeKeys.map(col): _*).distinct()
+        .localCheckpoint() // envelope agg AND the semi-join read it
+      val keyCol = mergeKeys.head
+      val candidates = keyEnvelope(keys, keyCol,
+          logicalSchema(m)(keyCol).dataType) match {
+        case Seq() => m.entries
+        case env => m.entries.filter(predicateMayMatch(m, envelopePredicate(
+          keyCol, keys.agg(env.head, env.tail: _*).head(), 0)))
       }
-    val dvRel = relativize(newDvDir)
-    val affectedState =
-      if (candidates.isEmpty) readVersion(curV).limit(0)
-      else affected.drop(metaFile, metaPos)
-    val newImages = foldWith(affectedState)
-    reconcileAppendSchema(newImages, logicalSchema(m),
-      allowEvolution = false)
-    enforceConstraints(newImages, m.constraints)
-    val dataDir = newCommitDir(curV + 1)
-    writeCommitData(delogicalize(m.mapping, newImages), m.partitionBy,
-      dataDir)
-    val added = listCommitFiles(dataDir)
-    val v = commitMaskAppend(m, candidates, counts, folded, dvRel, added,
-      operation)
-    refreshBloomIndexes(v)
-    v
+      // O(affected rows), checkpointed: the mask and the fold read it
+      val affected = Option.when(candidates.nonEmpty)(
+        readFiles(m, candidates, rowMeta = true)
+          .join(keys, mergeKeys, "left_semi").localCheckpoint())
+      Some(VersionedTable.DvPlan(operation, candidates, affected, Some(_ =>
+        foldWith(affected.fold(readFiles(m, Seq.empty))(_.drop(
+          graftbridge.ManifestScan.FilePathCol,
+          graftbridge.ManifestScan.RowIndexCol))))))
+    }
   }
 
-  /** Shared COMMIT half of the DV mask+append DML family
-    * ([[mergeVectorized]] / [[updateVectorizedWhere]] /
-    * [[mergeClausesVectorized]]): atomically APPEND the new delta
-    * sidecar to each touched candidate's DV chain (per-file
-    * NEWLY-masked `counts`, keyed by scan-rendered path; 0 =
-    * untouched, chain total >= rows = dropped), keep everything else
-    * verbatim, append `added` with fresh row-id ranges. Fails loudly when a candidate was rewritten or re-masked
-    * since `basis` (lost update); files committed SINCE the basis
-    * survive untouched and unexamined — WriteSerializable, the
-    * documented append-vs-DML rule. */
-  private def commitMaskAppend(basis: VersionManifest,
-      candidates: Seq[ManifestEntry], counts: Map[String, Long],
-      folded: Set[String], dvRel: String, added: Seq[ManifestEntry],
-      opDesc: String): Long = {
-    val qualifiedRoot = fs.makeQualified(rootPath)
-    def renderedRel(e: ManifestEntry): String = renderKey(
-      qualifiedRoot.toString, new Path(qualifiedRoot, e.relPath).toString)
-    val candByPath = candidates.map(e => e.relPath -> e).toMap
-    commitWithRebase(rebase = true) { () =>
+  /** THE DV DML pipeline every deletion-vector entry commits through.
+    * The entry plans against the current snapshot (None: nothing to
+    * do, the version stays). The pipeline writes the retired rows'
+    * delta sidecar ([[writeDvSidecar]]), then the images —
+    * schema-checked, constraint-checked, and written under the
+    * snapshot's partitioning and physical column names — and commits
+    * both atomically: each candidate's DV chain gains the new link
+    * (chain total >= rows: the file is dropped), the images take fresh
+    * row-id ranges, everything else stays verbatim. Then the bloom
+    * sidecars are brought current, with no job when the commit only
+    * masks.
+    *
+    * Concurrency is WRITE-SERIALIZABLE, Delta's default: the commit
+    * rebases over every commit that left the candidates alone, and
+    * files committed since the basis survive untouched and unexamined
+    * (a racing blind append's rows survive, even matching ones). It
+    * fails loudly when a candidate was rewritten or re-masked since
+    * the basis (a lost update) and — only when it appends images —
+    * when the partitioning or column mapping changed, because the
+    * images were written under the basis's. */
+  private def dvDml(
+      plan: VersionManifest => Option[VersionedTable.DvPlan]): Long = {
+    import org.apache.spark.sql.functions.col
+    import graftbridge.ManifestScan.{FilePathCol, RowIndexCol}
+    val basisV = currentVersion.getOrElse(
+      sys.error(s"table $root does not exist"))
+    val basis = readManifest(basisV)
+    val p = plan(basis).getOrElse(return basisV)
+    val dvDir = newCommitDir(basisV + 1)
+    val dvRel = relativize(dvDir)
+    // delta sidecar only: the existing masks stay in their own chain
+    // links (O(changed rows) written per commit; cap-length chains fold)
+    val (folded, counts) = p.retired.fold(
+        (Set.empty[String], Map.empty[String, Long])) { r =>
+      writeDvSidecar(r.select(fileRelCol(col(FilePathCol)).as("file_rel"),
+        col(RowIndexCol).as("pos")), p.candidates, dvDir)
+    }
+    val added = p.images.fold(Seq.empty[ManifestEntry]) { build =>
+      val images = build(counts.values.sum)
+      reconcileAppendSchema(images.drop(RowIdPhysCol), logicalSchema(basis),
+        allowEvolution = false)
+      enforceConstraints(images, basis.constraints)
+      val dataDir = newCommitDir(basisV + 1)
+      writeCommitData(delogicalize(basis.mapping, images), basis.partitionBy,
+        dataDir)
+      listCommitFiles(dataDir)
+    }
+    // rows this commit masks per candidate; `counts` is keyed by the
+    // scan's rendering of each path
+    val qualifiedRoot = fs.makeQualified(rootPath).toString
+    val masks = p.candidates.map(e => e.relPath -> counts.getOrElse(
+      renderKey(qualifiedRoot, new Path(qualifiedRoot, e.relPath).toString),
+      0L)).toMap
+    val v = commitWithRebase(rebase = true) { () =>
       val nowV = currentVersion.get
       val now = readManifest(nowV)
-      require(now.partitionBy == basis.partitionBy,
-        s"concurrent write changed partitioning of $root while a DV " +
-          s"commit ($opDesc) was in flight")
-      require(now.mapping == basis.mapping,
-        s"concurrent column rename/drop at $root while a DV commit " +
-          s"($opDesc) was in flight; re-run against the new schema")
+      def conflict(what: String): Nothing = sys.error(
+        s"concurrent write conflict at $root: $what while a DV commit " +
+          s"(${p.operation}) was in flight; re-run against the new snapshot")
+      if (added.nonEmpty) {
+        if (now.partitionBy != basis.partitionBy)
+          conflict("the partitioning changed")
+        if (now.mapping != basis.mapping)
+          conflict("a column was renamed or dropped")
+      }
       val nowByPath = now.entries.map(e => e.relPath -> e).toMap
-      candidates.foreach { c =>
-        val n = nowByPath.getOrElse(c.relPath, sys.error(
-          s"concurrent write conflict at $root: ${c.relPath} was " +
-            s"rewritten while a DV commit ($opDesc) was in flight; " +
-            "re-run against the new snapshot"))
-        if (n.dvDir != c.dvDir || n.dvRows != c.dvRows) sys.error(
-          s"concurrent write conflict at $root: ${c.relPath} was " +
-            s"re-masked while a DV commit ($opDesc) was in flight; " +
-            "re-run against the new snapshot")
+      p.candidates.foreach { c =>
+        val n = nowByPath.getOrElse(c.relPath,
+          conflict(s"${c.relPath} was rewritten"))
+        if (n.dvDir != c.dvDir || n.dvRows != c.dvRows)
+          conflict(s"${c.relPath} was re-masked")
       }
-      val kept = now.entries.flatMap { e =>
-        if (!candByPath.contains(e.relPath)) Some(e)
-        else maskedEntry(e, counts.getOrElse(renderedRel(e), 0L),
-          folded, dvRel)
-      }
-      val next = nowV + 1
+      val kept = now.entries.flatMap(e =>
+        masks.get(e.relPath).fold(Option(e))(maskedEntry(e, _, folded, dvRel)))
       val (added2, hw2) = assignRowIds(now.rowIdHw, added)
       val entries = (kept ++ added2) match {
         // every stored row retired and nothing new written: keep ONE
-        // fully-masked entry so the manifest stays non-empty
-        case Seq() => Seq(fullyMaskedKeeper(candidates.head, folded, dvRel))
+        // fully-masked entry so the manifest stays non-empty (reads
+        // yield zero rows with the right schema)
+        case Seq() if p.candidates.nonEmpty =>
+          val h = p.candidates.head
+          Seq(h.copy(dvRows = h.rows, dvDir = Some(
+            if (folded.contains(h.relPath)) dvRel
+            else (h.dvDirs :+ dvRel).mkString(","))))
         case es => es
       }
+      val next = nowV + 1
       writeManifest(next, now.copy(entries = entries, rowIdHw = hw2))
-      appendHistory(next, opDesc, entries.map(_.liveRows).sum)
+      appendHistory(next, p.operation, entries.map(_.liveRows).sum)
       pointTo(next)
       next
     }
+    refreshBloomIndexes(v)
+    v
   }
 
   /** CLAUSE MERGE via DELETION VECTORS — the full Delta-MERGE clause
@@ -2080,112 +1971,88 @@ final class VersionedTable(spark: SparkSession, root: String) {
       updateWhenNotMatchedBySource: Option[org.apache.spark.sql.Column] = None,
       notMatchedBySourceSet: Map[String, org.apache.spark.sql.Column] =
         Map.empty): Long = {
-    import org.apache.spark.sql.functions.{col, lit, when}
     require(mergeKeys.nonEmpty, "mergeKeys must be non-empty")
     require(updateWhenNotMatchedBySource.isDefined ==
       notMatchedBySourceSet.nonEmpty,
       "updateWhenNotMatchedBySource and notMatchedBySourceSet come " +
         "together: the clause needs assignments, the assignments a clause")
-    val curV = currentVersion.getOrElse(
-      sys.error(s"table $root does not exist"))
-    val m = readManifest(curV)
-    val schema = logicalSchema(m)
-    val tgtCols = schema.fieldNames.toSeq
-    mergeKeys.foreach(k => require(tgtCols.contains(k) &&
-      source.columns.contains(k),
-      s"merge key $k must exist in both $root and the source"))
-    source.columns.foreach(c => require(tgtCols.contains(c),
-      s"DV clause MERGE cannot evolve schema at $root: source column " +
-        s"'$c' is not in the snapshot — use the rewrite path"))
-    notMatchedBySourceSet.keys.foreach(k => require(
-      tgtCols.contains(k) && !mergeKeys.contains(k),
-      s"notMatchedBySourceSet assigns '$k', which must be an existing " +
-        "non-key target column"))
-    val updateCols = updateColumns.getOrElse(
-      source.columns.toSeq.filterNot(mergeKeys.contains))
-    val src = source.localCheckpoint()
-    require(src.groupBy(mergeKeys.map(col): _*).count()
-      .filter(col("count") > 1).isEmpty,
-      s"MERGE source has duplicate rows on (${mergeKeys.mkString(",")}) " +
-        "— each target row may match at most one source row")
-    val tracked = m.rowIdHw.isDefined
-    // NMBS examines every target row — EVERY file is a candidate, by
-    // semantics, exactly like Delta giving up pruning under the clause
-    val candidates = m.entries
-    val metaFile = graftbridge.ManifestScan.FilePathCol
-    val metaPos = graftbridge.ManifestScan.RowIndexCol
-    val scan =
-      if (tracked)
-        logicalize(m, readFilesPhysicalRid(m, candidates, keepMeta = true))
-      else readFiles(m, candidates, withRowMeta = true)
-    val tgt0 = scan.withColumn("_t_present", lit(true))
-    val src0 = src.withColumn("_s_present", lit(true))
-    val joined = tgt0.alias("t").join(src0.alias("s"), mergeKeys,
-      "full_outer")
-    val srcPresent = col("s._s_present").isNotNull
-    val tgtPresent = col("t._t_present").isNotNull
-    val matchedF = srcPresent && tgtPresent
-    val tgtOnly = tgtPresent && !srcPresent
-    // Delta clause semantics: NULL conditions fall through (<=> folds)
-    val del = deleteWhen.map(c => (matchedF && c) <=> lit(true))
-      .getOrElse(lit(false))
-    val upd = matchedF && !del &&
-      updateWhen.map(_ <=> lit(true)).getOrElse(lit(true))
-    val ins = !tgtPresent && srcPresent &&
-      insertWhen.map(_ <=> lit(true)).getOrElse(lit(true))
-    val nmbsDel = deleteWhenNotMatchedBySource
-      .map(c => (tgtOnly && c) <=> lit(true)).getOrElse(lit(false))
-    val nmbsUpd = updateWhenNotMatchedBySource
-      .map(c => (tgtOnly && !nmbsDel && c) <=> lit(true))
-      .getOrElse(lit(false))
-    val imageCols: Seq[org.apache.spark.sql.Column] =
-      mergeKeys.map(k => col(k).as(k)) ++
-        tgtCols.filterNot(mergeKeys.contains).map { c =>
-          val base =
-            if (updateCols.contains(c) && source.columns.contains(c))
-              when(upd || ins, col(s"s.$c")).otherwise(col(s"t.$c"))
-            else if (source.columns.contains(c))
-              when(tgtPresent, col(s"t.$c")).otherwise(col(s"s.$c"))
-            else col(s"t.$c")
-          notMatchedBySourceSet.get(c)
-            .map(e => when(nmbsUpd, e).otherwise(base))
-            .getOrElse(base).cast(schema(c).dataType).as(c)
-        }
-    val maskFlag = tgtPresent && (del || upd || nmbsDel || nmbsUpd)
-    val emitFlag = (upd || nmbsUpd || ins) <=> lit(true)
-    // ONE table-scan join; the surviving frame is O(changed rows)
-    val changed = joined.filter(maskFlag || emitFlag)
-      .select(imageCols ++ Seq(
-        col(s"t.$metaFile").as("__mc_file"),
-        col(s"t.$metaPos").as("__mc_pos"),
-        maskFlag.as("__mc_mask"), emitFlag.as("__mc_emit")) ++
-        (if (tracked)
-          Seq(when(tgtPresent, col(s"t.$RowIdPhysCol")).as(RowIdPhysCol))
-         else Seq.empty): _*)
-      .localCheckpoint()
-    val matchedPairs = changed.filter(col("__mc_mask"))
-      .select(fileRelCol(col("__mc_file")).as("file_rel"),
-        col("__mc_pos").as("pos"))
-    // delta sidecar only (see mergeVectorized) — chain-appended in
-    // commitMaskAppend, cap-length chains folded
-    val newDvDir = newCommitDir(curV + 1)
-    val (folded, counts) = writeDvSidecar(matchedPairs, candidates,
-      newDvDir)
-    val dvRel = relativize(newDvDir)
-    val newImages = changed.filter(col("__mc_emit"))
-      .select(tgtCols.map(col) ++
-        (if (tracked) Seq(col(RowIdPhysCol)) else Seq.empty): _*)
-    reconcileAppendSchema(newImages.drop(RowIdPhysCol), schema,
-      allowEvolution = false)
-    enforceConstraints(newImages, m.constraints)
-    val dataDir = newCommitDir(curV + 1)
-    writeCommitData(delogicalize(m.mapping, newImages), m.partitionBy,
-      dataDir)
-    val added = listCommitFiles(dataDir)
-    val v = commitMaskAppend(m, candidates, counts, folded, dvRel, added,
-      s"MERGE DV CLAUSES ON (${mergeKeys.mkString(",")})")
-    refreshBloomIndexes(v)
-    v
+    dvDml { m =>
+      import org.apache.spark.sql.functions.{col, lit, when}
+      import graftbridge.ManifestScan.{FilePathCol, RowIndexCol}
+      val schema = logicalSchema(m)
+      val tgtCols = schema.fieldNames.toSeq
+      mergeKeys.foreach(k => require(tgtCols.contains(k) &&
+        source.columns.contains(k),
+        s"merge key $k must exist in both $root and the source"))
+      source.columns.foreach(c => require(tgtCols.contains(c),
+        s"DV clause MERGE cannot evolve schema at $root: source column " +
+          s"'$c' is not in the snapshot — use the rewrite path"))
+      notMatchedBySourceSet.keys.foreach(k => require(
+        tgtCols.contains(k) && !mergeKeys.contains(k),
+        s"notMatchedBySourceSet assigns '$k', which must be an existing " +
+          "non-key target column"))
+      val updateCols = updateColumns.getOrElse(
+        source.columns.toSeq.filterNot(mergeKeys.contains))
+      val src = source.localCheckpoint()
+      require(src.groupBy(mergeKeys.map(col): _*).count()
+        .filter(col("count") > 1).isEmpty,
+        s"MERGE source has duplicate rows on (${mergeKeys.mkString(",")}) " +
+          "— each target row may match at most one source row")
+      val rowId =
+        if (m.rowIdHw.isDefined) Seq(RowIdPhysCol) else Seq.empty[String]
+      // NMBS examines every target row — EVERY file is a candidate, by
+      // semantics, exactly like Delta giving up pruning under the clause
+      val candidates = m.entries
+      val tgt0 = readFiles(m, candidates, rowIds = true, rowMeta = true)
+        .withColumn("_t_present", lit(true))
+      val src0 = src.withColumn("_s_present", lit(true))
+      val joined = tgt0.alias("t").join(src0.alias("s"), mergeKeys,
+        "full_outer")
+      val srcPresent = col("s._s_present").isNotNull
+      val tgtPresent = col("t._t_present").isNotNull
+      val matchedF = srcPresent && tgtPresent
+      val tgtOnly = tgtPresent && !srcPresent
+      // Delta clause semantics: NULL conditions fall through (<=> folds)
+      val del = deleteWhen.map(c => (matchedF && c) <=> lit(true))
+        .getOrElse(lit(false))
+      val upd = matchedF && !del &&
+        updateWhen.map(_ <=> lit(true)).getOrElse(lit(true))
+      val ins = !tgtPresent && srcPresent &&
+        insertWhen.map(_ <=> lit(true)).getOrElse(lit(true))
+      val nmbsDel = deleteWhenNotMatchedBySource
+        .map(c => (tgtOnly && c) <=> lit(true)).getOrElse(lit(false))
+      val nmbsUpd = updateWhenNotMatchedBySource
+        .map(c => (tgtOnly && !nmbsDel && c) <=> lit(true))
+        .getOrElse(lit(false))
+      val imageCols: Seq[org.apache.spark.sql.Column] =
+        mergeKeys.map(k => col(k).as(k)) ++
+          tgtCols.filterNot(mergeKeys.contains).map { c =>
+            val base =
+              if (updateCols.contains(c) && source.columns.contains(c))
+                when(upd || ins, col(s"s.$c")).otherwise(col(s"t.$c"))
+              else if (source.columns.contains(c))
+                when(tgtPresent, col(s"t.$c")).otherwise(col(s"s.$c"))
+              else col(s"t.$c")
+            notMatchedBySourceSet.get(c)
+              .map(e => when(nmbsUpd, e).otherwise(base))
+              .getOrElse(base).cast(schema(c).dataType).as(c)
+          }
+      val maskFlag = tgtPresent && (del || upd || nmbsDel || nmbsUpd)
+      val emitFlag = (upd || nmbsUpd || ins) <=> lit(true)
+      // ONE table-scan join; the surviving frame is O(changed rows)
+      val changed = joined.filter(maskFlag || emitFlag)
+        .select(imageCols ++ Seq(
+          col(s"t.$FilePathCol").as(FilePathCol),
+          col(s"t.$RowIndexCol").as(RowIndexCol),
+          maskFlag.as("__mc_mask"), emitFlag.as("__mc_emit")) ++
+          rowId.map(r => when(tgtPresent, col(s"t.$r")).as(r)): _*)
+        .localCheckpoint()
+      Some(VersionedTable.DvPlan(
+        s"MERGE DV CLAUSES ON (${mergeKeys.mkString(",")})", candidates,
+        Some(changed.filter(col("__mc_mask"))), Some(_ =>
+          changed.filter(col("__mc_emit"))
+            .select((tgtCols ++ rowId).map(col): _*))))
+    }
   }
 
   /** M1 on a versioned table: OPTIMIZE as a NEW version (Delta
@@ -2202,8 +2069,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
       // tracked: rewrite through replaceWhere (schema stays frozen)
       // with ids materialized, so OPTIMIZE preserves row identity and
       // the change feed sees a no-op
-      replaceWhere(readWithRowIds()
-          .withColumnRenamed(RowIdCol, RowIdPhysCol).repartition(n),
+      replaceWhere(readFiles(m, m.entries, rowIds = true).repartition(n),
         _ => false, "OPTIMIZE")
     else write(read().repartition(n), SaveMode.Overwrite, "OPTIMIZE")
     refreshBloomIndexes(v)
@@ -2235,10 +2101,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
     if (target.isEmpty) return curV
     val n = math.max(1L, target.map(_.bytes).sum /
       (targetFileMB.toLong * 1024 * 1024)).toInt
-    val src =
-      if (m.rowIdHw.isDefined)
-        logicalize(m, readFilesPhysicalRid(m, target)).repartition(n)
-      else readFiles(m, target).repartition(n)
+    val src = readFiles(m, target, rowIds = true).repartition(n)
     val v = replaceWhere(src, e => !selected(e),
       s"OPTIMIZE WHERE $partCol IN (${values.toSeq.sorted.mkString(",")})",
       basisVersion = Some(curV))
@@ -2270,10 +2133,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
     // one distributed pass: masked files with their DVs applied, in
     // PHYSICAL column names (writeCommitData's contract); tracked
     // tables carry each survivor's row id into the rewritten files
-    val survivors =
-      if (m0.rowIdHw.isDefined) readFilesPhysicalRid(m0, masked)
-      else readFilesPhysical(m0, masked, isStreaming = false,
-        withRowMeta = false)
+    val survivors = scanEntries(m0, masked, rowIds = true)
     val dir = newCommitDir(curV0 + 1)
     writeCommitData(survivors, m0.partitionBy, dir)
     val added = listCommitFiles(dir)
@@ -2317,8 +2177,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
       entries: Seq[ManifestEntry]): DataFrame = {
     val m = readManifest(currentVersion.getOrElse(
       sys.error(s"table $root does not exist")))
-    if (m.rowIdHw.isDefined) logicalize(m, readFilesPhysicalRid(m, entries))
-    else readFiles(m, entries)
+    readFiles(m, entries, rowIds = true)
   }
 
   // ------------------------------------------------------- row tracking
@@ -2448,67 +2307,8 @@ final class VersionedTable(spark: SparkSession, root: String) {
       s"row tracking is not enabled at $root (call enableRowTracking)")
     require(m.entries.nonEmpty || m.schema.isDefined,
       s"version $v of $root has an empty manifest and no recorded schema")
-    logicalize(m, readFilesPhysicalRid(m, m.entries))
+    readFiles(m, m.entries, rowIds = true)
       .withColumnRenamed(RowIdPhysCol, RowIdCol)
-  }
-
-  /** [[readFilesPhysical]] plus the row id (still under its PHYSICAL
-    * name): scan with the snapshot schema EXTENDED by the nullable
-    * materialized-id column (files without it — plain appends — read
-    * null), resolve `coalesce(materialized, base + row_index)` with
-    * the per-file bases broadcast from the manifest, and apply DV
-    * masks exactly as the plain read does. */
-  private def readFilesPhysicalRid(m: VersionManifest,
-      entries: Seq[ManifestEntry], keepMeta: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce, col}
-    def finish(df: DataFrame, es: Seq[ManifestEntry]): DataFrame = {
-      import spark.implicits._
-      val bases = es.map(e => (e.relPath, e.baseRowId.getOrElse(
-        sys.error(s"row tracking: ${e.relPath} of $root has no base row " +
-          "id — was the file committed before enableRowTracking?"))))
-        .toDF("__rid_file", "__rid_base")
-      val fileRel = fileRelCol(col(graftbridge.ManifestScan.FilePathCol))
-      val withRid = df
-        .join(broadcast(bases), fileRel === col("__rid_file"), "left")
-        .withColumn(RowIdPhysCol, coalesce(col(RowIdPhysCol),
-          col("__rid_base") + col(graftbridge.ManifestScan.RowIndexCol)))
-        .drop("__rid_file", "__rid_base")
-      if (keepMeta) withRid
-      else withRid.drop(graftbridge.ManifestScan.FilePathCol,
-        graftbridge.ManifestScan.RowIndexCol)
-    }
-    val (masked, plain) = entries.partition(_.dvDir.isDefined)
-    val plainDf =
-      if (plain.isEmpty) None else Some(finish(rawScanRid(m, plain), plain))
-    val maskedDf = if (masked.isEmpty) None else {
-      val dv = readDvRows(masked.flatMap(_.dvDirs).distinct)
-      val mdf = rawScanRid(m, masked)
-      val fileRel = fileRelCol(col(graftbridge.ManifestScan.FilePathCol))
-      val alive = mdf.join(dv,
-        fileRel === dv("file_rel") &&
-          col(graftbridge.ManifestScan.RowIndexCol) === dv("pos"),
-        "left_anti")
-      Some(finish(alive, masked))
-    }
-    (plainDf, maskedDf) match {
-      case (Some(a), Some(b)) => a.unionByName(b)
-      case (Some(a), None)    => a
-      case (None, Some(b))    => b
-      case _ => sys.error(s"rid read over zero entries at $root")
-    }
-  }
-
-  /** [[rawScan]] under the rid-extended schema, always with row meta. */
-  private def rawScanRid(m: VersionManifest,
-      entries: Seq[ManifestEntry]): DataFrame = {
-    val qualifiedRoot = fs.makeQualified(rootPath)
-    val ext = StructType(snapshotSchema(m).fields :+
-      org.apache.spark.sql.types.StructField(RowIdPhysCol,
-        org.apache.spark.sql.types.LongType, nullable = true))
-    val files = scanFiles(qualifiedRoot, entries)
-    graftbridge.ManifestScan.parquetTable(spark, qualifiedRoot, ext,
-      m.partitionBy, files, isStreaming = false, rowMeta = true,
-      dataSkipping = scanSkipping(m, entries, files))
   }
 
   // --------------------------------------------------------- change feed
@@ -2518,7 +2318,9 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * timestamp and file delta, and the delta between any two versions
     * of the window. fromV = -1 is "before the creating commit": an
     * empty manifest, so v0's files read as added. The history is read
-    * at most once, and only when a feed asks. Manifests are read only
+    * at most once, only when a feed asks, and only the window's part
+    * of it ([[historyWalk]]) unless `hist` is already in hand (the
+    * timestamp feed resolved its ends over it). Manifests are read only
     * when a feed asks too: an append-only window reads its two
     * endpoints; the manifests in between are read by a per-commit
     * grain, or to attribute the endpoint's removals. Driver memory
@@ -2527,8 +2329,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * only while a walk passes them, and each commit's removed/added
     * answer as two booleans. */
   private final class FeedWindow(val fromV: Long, val toV: Long,
-      readHistory: () => Seq[HistoryEntry] =
-        () => history(limit = Int.MaxValue)) {
+      hist: Option[Seq[HistoryEntry]] = None) {
     require(fromV >= -1 && fromV <= toV && manifestCommitted(toV),
       s"change-feed window ($fromV, $toV] of $root needs -1 <= from <= " +
         s"to <= the current version ${currentVersion.getOrElse(-1L)}")
@@ -2539,9 +2340,10 @@ final class VersionedTable(spark: SparkSession, root: String) {
       Option.empty[((Long, Long), VersionedTable.FileDelta)]
     private val filesMoved =
       scala.collection.mutable.Map.empty[Long, (Boolean, Boolean)]
-    private lazy val lines: Map[Long, HistoryEntry] = readHistory()
-      .filter(h => h.version > fromV && h.version <= toV)
-      .map(h => h.version -> h).toMap
+    private lazy val lines: Map[Long, HistoryEntry] =
+      hist.getOrElse(historyWalk(fromV, toV)(_.toList))
+        .filter(h => h.version > fromV && h.version <= toV)
+        .map(h => h.version -> h).toMap
 
     private def load(v: Long): VersionManifest =
       if (v < 0) VersionManifest(None, Seq.empty) else readManifest(v)
@@ -2669,11 +2471,12 @@ final class VersionedTable(spark: SparkSession, root: String) {
       aligned(d.to, df).withColumn("_change_type", lit(t))
     // `a`'s rows under `b`'s column names: a RENAME keeps the physical
     // column, so name-matching `a`'s logical frame would read it null
-    def atFrom(es: Seq[ManifestEntry]): DataFrame = logicalize(d.to,
-      readFilesPhysical(d.from, es, isStreaming = false, withRowMeta = false))
+    def atFrom(es: Seq[ManifestEntry]): DataFrame =
+      logicalize(d.to, scanEntries(d.from, es))
     if ((d.appendOnly && d.added.isEmpty) ||
         (d.removed.nonEmpty && w.layoutOnly(a, b)))
-      return emptyFeed(tag(readFiles(d.to, Seq.empty, isStreaming), "insert"))
+      return emptyFeed(tag(readFiles(d.to, Seq.empty,
+        isStreaming = isStreaming), "insert"))
     if (isStreaming) {
       if (d.removed.nonEmpty) sys.error(
         s"versions $a..$b of $root removed ${d.removed.size} file(s) " +
@@ -2695,7 +2498,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
       Option.when(d.remasked.nonEmpty)(newlyMaskedRows(d.to,
         d.remasked.map { case (o, e) => e -> o.dvDirs }, isStreaming)) ++
       Option.when(d.removed.nonEmpty)(atFrom(d.removed))
-    (tag(readFiles(d.to, d.added, isStreaming), "insert") +:
+    (tag(readFiles(d.to, d.added, isStreaming = isStreaming), "insert") +:
       deletes.map(tag(_, "delete")).toSeq).reduce(_ unionByName _)
   }
 
@@ -2721,12 +2524,8 @@ final class VersionedTable(spark: SparkSession, root: String) {
     val values = names.map(col)
     // both sides under `b`'s column names, as in [[rowFeed]]
     def side(m: VersionManifest, es: Seq[ManifestEntry]): DataFrame =
-      aligned(d.to,
-        if (es.isEmpty)
-          readFiles(d.to, es).withColumn(RowIdCol, lit(null).cast("long"))
-        else logicalize(d.to, readFilesPhysicalRid(m, es))
-          .withColumnRenamed(RowIdPhysCol, RowIdCol),
-        extra = Seq(RowIdCol))
+      aligned(d.to, logicalize(d.to, scanEntries(m, es, rowIds = true))
+        .withColumnRenamed(RowIdPhysCol, RowIdCol), extra = Seq(RowIdCol))
     if (w.layoutOnly(a, b))
       return emptyFeed(side(d.to, Seq.empty).select(
         (col(RowIdCol) +: values :+ lit("insert").as("_change_type")): _*))
@@ -2826,7 +2625,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * would be indistinguishable from a wrong clock. */
   def changesBetweenTimestamps(fromTs: String, toTs: String,
       commitMeta: Boolean = false): DataFrame = {
-    val hist = history(limit = Int.MaxValue)
+    val hist = committedHistory()
     val fromV = versionIn(hist, fromTs, forward = true).getOrElse(
       sys.error(s"no commit of $root at or after $fromTs (newest: " +
         s"${hist.headOption.map(_.timestamp).getOrElse("none")})"))
@@ -2834,7 +2633,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
     require(fromV <= toV,
       s"no commits of $root inside [$fromTs, $toTs] " +
         s"(first at-or-after start: v$fromV; last at-or-before end: v$toV)")
-    feed(new FeedWindow(fromV - 1, toV, () => hist), updateImages = false,
+    feed(new FeedWindow(fromV - 1, toV, Some(hist)), updateImages = false,
       commitMeta)
   }
 
@@ -3168,46 +2967,44 @@ final class VersionedTable(spark: SparkSession, root: String) {
     }
   }
 
-  /** Time travel by TIMESTAMP (Delta `timestampAsOf`): reads the
-    * newest version whose commit time is at or before `ts`
-    * (ISO-8601 instant). Resolution walks the history (bounded reads
-    * via the checkpoint fold); commit timestamps are wall-clock, so
-    * this is an OPERATOR convenience ("what did the table say at
-    * 2 am"), not a determinism surface — hash-verified queries pin
-    * versions by NUMBER. Throws if `ts` predates the first commit. */
-  def readTimestampAsOf(ts: String): DataFrame =
-    readVersion(versionAtTimestamp(ts))
-
   /** RESTORE ... TO TIMESTAMP AS OF (Delta): [[restore]] to the
-    * version [[versionAtTimestamp]] resolves — "roll the table back
-    * to what it said at 2 am", the operational form every incident
-    * runbook uses (version numbers are what the postmortem finds,
-    * timestamps are what the pager says). Same forward-commit
-    * semantics as restore(v): history is preserved, row-id high water
-    * never rewinds. */
-  def restoreToTimestamp(ts: String): Unit = restore(versionAtTimestamp(ts))
+    * version [[versionAsOf]] resolves — "roll the table back to what
+    * it said at 2 am", the operational form every incident runbook
+    * uses (version numbers are what the postmortem finds, timestamps
+    * are what the pager says). Same forward-commit semantics as
+    * restore(v): history is preserved, row-id high water never
+    * rewinds. */
+  def restoreToTimestamp(ts: String): Unit = restore(versionAsOf(ts))
 
-  /** The version [[readTimestampAsOf]] resolves: [[versionAt]],
-    * failing when `ts` predates the first commit. */
-  def versionAtTimestamp(ts: String): Long =
-    versionAtOrBefore(history(limit = Int.MaxValue), ts)
+  /** The version the commit-time instant `ts` (ISO-8601) names — the
+    * one timestamp resolution of every reader: time travel, RESTORE and
+    * CLONE by timestamp, the timestamp change feed and the streaming
+    * sources. Only committed versions count: a history line whose
+    * manifest was vacuumed (or never landed) names nothing, so every
+    * route names the same version or none. `forward`: the FIRST version
+    * committed at or after `ts` (Delta's `startingTimestamp`: "every
+    * change from this instant on", so that commit is included);
+    * otherwise the NEWEST version committed at or before it (time
+    * travel, an ending bound). None when no commit lies on that side
+    * of `ts` — for `forward`, nothing has happened there yet. */
+  def versionAt(ts: String, forward: Boolean = false): Option[Long] =
+    versionIn(committedHistory(), ts, forward)
 
+  /** The history lines of committed versions, newest first — the
+    * timeline [[versionAt]] resolves against. A whole-history read:
+    * [[versionIn]] filters rather than prefix-scans. */
+  private def committedHistory(): Seq[HistoryEntry] = {
+    val committed = committedVersions.toSet
+    history(limit = Int.MaxValue).filter(h => committed(h.version))
+  }
+
+  /** [[versionAt]] backward over committed history `hist`, failing
+    * when `ts` predates every version in it. */
   private def versionAtOrBefore(hist: Seq[HistoryEntry], ts: String): Long =
     versionIn(hist, ts, forward = false).getOrElse(sys.error(
       s"no version of $root existed at or before $ts " +
         s"(earliest commit: ${hist.lastOption.map(_.timestamp)
           .getOrElse("none")})"))
-
-  /** The version the commit-time instant `ts` (ISO-8601) names — the
-    * one timestamp resolution of every reader. `forward`: the FIRST
-    * version committed at or after `ts` (Delta's `startingTimestamp`:
-    * "every change from this instant on", so that commit is
-    * included); otherwise the NEWEST version committed at or before
-    * it (time travel, an ending bound). None when no commit lies on
-    * that side of `ts` — for `forward`, nothing has happened there
-    * yet. */
-  def versionAt(ts: String, forward: Boolean = false): Option[Long] =
-    versionIn(history(limit = Int.MaxValue), ts, forward)
 
   /** [[versionAt]] over history `hist`. A filter, NOT a prefix scan:
     * commit timestamps are wall clock, and a clock step-back between
@@ -3572,7 +3369,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
     val phys = mappingOrIdentity(m).find(_._1 == column).map(_._2)
       .getOrElse(return)
     val oldDir = bloomDirFor(bv, column)
-    val old = readBloomRows(oldDir)
+    lazy val old = readBloomRows(oldDir) // no listing when nothing is uncovered
     // names only on the driver (manifest-sized, like the entries list);
     // a vacuum may have dropped manifest bv, and then the names come
     // from the sidecar itself (one extra job)
@@ -3810,36 +3607,43 @@ final class VersionedTable(spark: SparkSession, root: String) {
   private def retryOnVanished[A](body: => A): A =
     try body catch { case _: java.io.FileNotFoundException => body }
 
+  /** The ONE newest-first history walk every reader consumes: the
+    * per-commit files (versions after the newest checkpoint), then the
+    * checkpoint's lines (or, before any checkpoint, the legacy
+    * single-file log). Lazy — a file is opened only when `read` pulls
+    * its entry — and `read` runs inside [[retryOnVanished]], so a
+    * concurrent checkpoint roll re-walks instead of losing entries.
+    * `(after, upTo]` bounds the walk by version: per-commit files
+    * outside it are never opened (their version is in their name), and
+    * the older lines are read only when the walk can reach a version
+    * at or below the oldest per-commit file's. */
+  private def historyWalk[A](after: Long = -1L, upTo: Long = Long.MaxValue)(
+      read: Iterator[HistoryEntry] => A): A = retryOnVanished {
+    val cp = newestCheckpoint
+    val files = commitHistFiles(cp.map(_._1).getOrElse(-1L))
+    val recent = files.reverseIterator
+      .filter { case (v, _) => v > after && v <= upTo }
+      .flatMap(f => parseHistoryLine(readWholeFile(f._2)))
+    def older = Option.when(files.headOption.forall(_._1 > after + 1))(
+      olderHistoryLines(cp).reverseIterator.flatMap(parseHistoryLine)
+        .filter(h => h.version > after && h.version <= upTo))
+    read(recent ++ older.iterator.flatten)
+  }
+
   /** M4: table history, newest first — O(limit) per-commit file reads
     * plus at most ONE checkpoint read, regardless of table age. Without
     * checkpoints a long-lived table (a streaming sink commits a version
     * per micro-batch) would pay O(all commits) reads on every call. */
-  def history(limit: Int = 20): Seq[HistoryEntry] = retryOnVanished {
-    val cp = newestCheckpoint
-    val cpMax = cp.map(_._1).getOrElse(-1L)
-    val recent = commitHistFiles(cpMax).reverse.iterator.take(limit)
-      .map(f => readWholeFile(f._2)).flatMap(parseHistoryLine).toSeq
-    if (recent.size >= limit) recent.take(limit)
-    else (recent ++ olderHistoryLines(cp).reverse.flatMap(parseHistoryLine))
-      .take(limit)
-  }
+  def history(limit: Int = 20): Seq[HistoryEntry] =
+    historyWalk()(_.take(limit).toList)
 
   /** Newest history entry whose operation starts with `prefix`,
-    * scanning per-commit files newest-first and stopping at the first
-    * match — O(1) content reads for the common "was the newest commit
-    * mine" case (the streaming sink's per-batch idempotence check runs
-    * this every micro-batch). Falls back to one checkpoint read when no
-    * recent commit matches. */
-  def lastOperationWith(prefix: String): Option[HistoryEntry] = retryOnVanished {
-    val cp = newestCheckpoint
-    val cpMax = cp.map(_._1).getOrElse(-1L)
-    commitHistFiles(cpMax).reverse.iterator
-      .flatMap(f => parseHistoryLine(readWholeFile(f._2)))
-      .find(_.operation.startsWith(prefix))
-      .orElse(olderHistoryLines(cp).reverse.iterator
-        .flatMap(parseHistoryLine)
-        .find(_.operation.startsWith(prefix)))
-  }
+    * stopping at the first match — O(1) content reads for the common
+    * "was the newest commit mine" case (the streaming sink's per-batch
+    * idempotence check runs this every micro-batch). Reads the
+    * checkpoint only when no recent commit matches. */
+  def lastOperationWith(prefix: String): Option[HistoryEntry] =
+    historyWalk()(_.find(_.operation.startsWith(prefix)))
 
   /** Roll every history file into one checkpoint
     * (`_history/cp_v<upto>.jsonl`): reads become O(recent commits) + 1
@@ -4716,6 +4520,15 @@ object VersionedTable {
       case _ => false
     }
   }
+
+  /** One DV DML commit as its entry plans it against the snapshot:
+    * the candidate files; the rows of their scan it retires, carrying
+    * the scan's row meta (None: no scan, no sidecar); and the images
+    * it appends (None: a delete), built after the sidecar is written
+    * from the number of rows the sidecar holds. */
+  private[io] final case class DvPlan(operation: String,
+      candidates: Seq[ManifestEntry], retired: Option[DataFrame],
+      images: Option[Long => DataFrame] = None)
 
   /** One conjunct of a [[VersionedTable.readMatching]] read (and of a
     * [[VersionedTable.pruningReport]]), combinable in ONE call and one

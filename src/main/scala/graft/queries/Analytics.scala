@@ -1069,7 +1069,8 @@ object Analytics {
     vt.write(orders.filter(col("o_orderkey") % 3 === 1).coalesce(1),
       org.apache.spark.sql.SaveMode.Append) // v1
     drain() // insert delta
-    vt.deleteVectorized("o_orderkey", 1000, 2000) // v2
+    vt.deleteVectorizedWhere(
+      graft.io.VersionedTable.NumRange("o_orderkey", 1000, 2000).condition) // v2
     drain() // delete delta
     prior.orderBy("o_orderstatus")
   }
@@ -1331,7 +1332,8 @@ object Analytics {
     vtB.write(o.filter(col("o_orderkey") % 2 === 0)) // v0
     drain(rootB, sinkB, s"$base/ckptB", skipChanges = false,
       ignoreDel = true)
-    vtB.deleteVectorized("o_orderkey", 1000, 2000) // v1: delete-only
+    vtB.deleteVectorizedWhere(
+      graft.io.VersionedTable.NumRange("o_orderkey", 1000, 2000).condition) // v1: delete-only
     vtB.write(o.filter(col("o_orderkey") % 2 === 1),
       org.apache.spark.sql.SaveMode.Append) // v2: append
     drain(rootB, sinkB, s"$base/ckptB", skipChanges = false,
@@ -1441,7 +1443,8 @@ object Analytics {
     base.write(orders.filter(col("o_orderkey") % 3 =!= 0)) // v0
     base.write(orders.filter(col("o_orderkey") % 3 === 0),
       org.apache.spark.sql.SaveMode.Append) // v1
-    base.deleteVectorized("o_orderkey", 1000, 1999) // v2
+    base.deleteVectorizedWhere(
+      graft.io.VersionedTable.NumRange("o_orderkey", 1000, 1999).condition) // v2
     val mv = new graft.io.VersionedTable(spark, mvRoot)
     mv.write(IncrementalAgg.compute(base.read().limit(0), keys, sums))
     val q = graft.streaming.Streaming.withStatePartitions(spark,
@@ -1497,7 +1500,8 @@ object Analytics {
     fact.write(orders.filter(col("o_orderkey") % 3 =!= 0)) // v0
     fact.write(orders.filter(col("o_orderkey") % 3 === 0),
       org.apache.spark.sql.SaveMode.Append) // v1
-    fact.deleteVectorized("o_orderkey", 1000, 1999) // v2
+    fact.deleteVectorizedWhere(
+      graft.io.VersionedTable.NumRange("o_orderkey", 1000, 1999).condition) // v2
     val keys = Seq("c_mktsegment")
     val sums = Seq("cents")
     val mv = new graft.io.VersionedTable(spark, mvRoot)
@@ -1838,7 +1842,8 @@ object Analytics {
     vt.write(orders.filter(col("o_orderkey") % 2 === 1),
       org.apache.spark.sql.SaveMode.Append) // v1
     drain() // resumes from checkpoint: v1's rows as inserts
-    vt.deleteVectorized("o_orderkey", 100, 300) // v2
+    vt.deleteVectorizedWhere(
+      graft.io.VersionedTable.NumRange("o_orderkey", 100, 300).condition) // v2
     drain() // the newly masked rows as deletes (a same-batch
     // append+delete would instead COLLAPSE the overlap — compacted
     // CDC semantics; per-commit drains keep the full ledger)
@@ -1896,7 +1901,8 @@ object Analytics {
       q.awaitTermination()
     }
     drain() // subscribed at t(v1): v1's odds as inserts, NO snapshot
-    vt.deleteVectorized("o_orderkey", 100, 300) // v2
+    vt.deleteVectorizedWhere(
+      graft.io.VersionedTable.NumRange("o_orderkey", 100, 300).condition) // v2
     drain() // resumes from checkpoint: the masked rows as deletes
     val ts2 = vt.history(limit = Int.MaxValue)
       .find(_.version == 2L).get.timestamp

@@ -228,7 +228,8 @@ object Relational {
     vt.write(orders.filter(col("o_orderkey") % 3 =!= 0)) // v0
     vt.write(orders.filter(col("o_orderkey") % 3 === 0),
       org.apache.spark.sql.SaveMode.Append) // v1
-    vt.deleteVectorized("o_orderkey", 100, 299) // v2
+    vt.deleteVectorizedWhere(
+      graft.io.VersionedTable.NumRange("o_orderkey", 100, 299).condition) // v2
     vt.compact() // v3: masks purged, count must be preserved
     val counts = (0L to vt.currentVersion.get).map { v =>
       (v, vt.manifestEntries(v).map(_.liveRows).sum)
@@ -360,7 +361,8 @@ object Relational {
     vt.convertInPlace(Seq("o_orderstatus")) // v0: adoption, no rewrite
     vt.write(o.filter(col("o_orderkey") % 2 =!= 0),
       org.apache.spark.sql.SaveMode.Append) // v1: normal commit
-    vt.deleteVectorized("o_orderkey", 100, 299) // v2: DVs over adopted files
+    vt.deleteVectorizedWhere(
+      graft.io.VersionedTable.NumRange("o_orderkey", 100, 299).condition) // v2: DVs over adopted files
     vt.read()
       .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
       .orderBy("o_orderkey")
@@ -580,7 +582,8 @@ object Relational {
     vt.write(o.filter(col("o_orderkey") % 3 === 1)
       .select(col("o_orderkey"), cents.as("cents")),
       org.apache.spark.sql.SaveMode.Append) // v1
-    vt.deleteVectorized("o_orderkey", 1000, 2000) // v2
+    vt.deleteVectorizedWhere(
+      graft.io.VersionedTable.NumRange("o_orderkey", 1000, 2000).condition) // v2
     vt.changes(0L, 2L, commitMeta = true)
       .select(col("o_orderkey"), col("cents"), col("_change_type"),
         col("_commit_version"),
@@ -764,7 +767,8 @@ object Relational {
     val v1 = base.currentVersion.get
     mv.write(IncrementalAgg.update(mv.read(), base.changes(v0, v1),
       keys, sums)) // O(delta) maintenance, base never re-read
-    base.deleteVectorized("o_orderkey", 100, 299) // base v2: deletes
+    base.deleteVectorizedWhere(
+      graft.io.VersionedTable.NumRange("o_orderkey", 100, 299).condition) // base v2: deletes
     val v2 = base.currentVersion.get
     mv.write(IncrementalAgg.update(mv.read(), base.changes(v1, v2),
       keys, sums))
@@ -1365,8 +1369,10 @@ object Relational {
       .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"),
         (col("o_orderkey") % 4).as("bucket"))
     vt.write(base, partitionBy = Some(Seq("bucket"))) // v0
-    vt.deleteVectorized("o_orderkey", 100, 199) // v1: DV mask
-    vt.deleteVectorized("o_orderkey", 150, 299) // v2: overlapping union
+    vt.deleteVectorizedWhere(
+      graft.io.VersionedTable.NumRange("o_orderkey", 100, 199).condition) // v1: DV mask
+    vt.deleteVectorizedWhere(
+      graft.io.VersionedTable.NumRange("o_orderkey", 150, 299).condition) // v2: overlapping union
     vt.read().select("o_orderkey", "o_totalprice", "o_orderstatus")
   }
 
@@ -1395,7 +1401,8 @@ object Relational {
       org.apache.spark.sql.SaveMode.Append) // v1: file-level feed
     val v1 = vt.currentVersion.get
     val agg1 = IncrementalAgg.update(agg0, vt.changes(v0, v1), keys, sums)
-    vt.deleteVectorized("o_orderkey", 100, 299) // v2: row-level feed
+    vt.deleteVectorizedWhere(
+      graft.io.VersionedTable.NumRange("o_orderkey", 100, 299).condition) // v2: row-level feed
     val v2 = vt.currentVersion.get
     val agg2 = IncrementalAgg.update(agg1, vt.changes(v1, v2), keys, sums)
     agg2.select(col("o_orderstatus"), col(IncrementalAgg.CountCol).as("n_rows"),
@@ -1436,7 +1443,8 @@ object Relational {
     val v1 = vt.currentVersion.get
     val agg1 = IncrementalAgg.updateByRecompute(
       agg0, vt.read(), vt.changes(v0, v1), keys, aggOf)
-    vt.deleteVectorized("o_orderkey", 100, 299) // v2: row-level feed
+    vt.deleteVectorizedWhere(
+      graft.io.VersionedTable.NumRange("o_orderkey", 100, 299).condition) // v2: row-level feed
     val v2 = vt.currentVersion.get
     val agg2 = IncrementalAgg.updateByRecompute(
       agg1, vt.read(), vt.changes(v1, v2), keys, aggOf)
@@ -1467,7 +1475,8 @@ object Relational {
     vt.write(orders.filter(col("o_orderkey") % 3 === 0),
       org.apache.spark.sql.SaveMode.Append) // v1: file-level feed
     val v1 = vt.currentVersion.get
-    vt.deleteVectorized("o_orderkey", 100, 299) // v2: row-level feed
+    vt.deleteVectorizedWhere(
+      graft.io.VersionedTable.NumRange("o_orderkey", 100, 299).condition) // v2: row-level feed
     val v2 = vt.currentVersion.get
     vt.changes(v0, v1).withColumn("feed", lit("files"))
       .unionByName(vt.changes(v1, v2).withColumn("feed", lit("rows")))
@@ -1513,7 +1522,8 @@ object Relational {
     // -- changes on both sides --
     vtA.write(orders.filter(col("o_orderkey") % 3 === 0),
       org.apache.spark.sql.SaveMode.Append) // A v1: file-level feed
-    vtA.deleteVectorized("o_orderkey", 100, 299) // A v2: row-level feed
+    vtA.deleteVectorizedWhere(
+      graft.io.VersionedTable.NumRange("o_orderkey", 100, 299).condition) // A v2: row-level feed
     val a2 = vtA.currentVersion.get
     val custVictims = vtB.read().select(col("o_custkey"))
       .filter(col("o_custkey") % 7 === 0)
@@ -1553,9 +1563,11 @@ object Relational {
     val vt = new graft.io.VersionedTable(spark, srcRoot)
     vt.write(load(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus")))
-    vt.deleteVectorized("o_orderkey", 100, 199) // source mask
+    vt.deleteVectorizedWhere(
+      graft.io.VersionedTable.NumRange("o_orderkey", 100, 199).condition) // source mask
     val clone = vt.shallowCloneTo(dstRoot)
-    clone.deleteVectorized("o_orderkey", 200, 299) // clone-only mask
+    clone.deleteVectorizedWhere(
+      graft.io.VersionedTable.NumRange("o_orderkey", 200, 299).condition) // clone-only mask
     clone.read().withColumn("side", lit("clone"))
       .unionByName(vt.read().withColumn("side", lit("source")))
       .orderBy("side", "o_orderkey")
@@ -1582,7 +1594,8 @@ object Relational {
     val vt = new graft.io.VersionedTable(spark, srcRoot)
     vt.write(load(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus")))
-    vt.deleteVectorized("o_orderkey", 100, 199) // v1: source mask
+    vt.deleteVectorizedWhere(
+      graft.io.VersionedTable.NumRange("o_orderkey", 100, 199).condition) // v1: source mask
     val clone = vt.deepCloneTo(dstRoot)
     // destroy the source: overwrite, then GC every pre-overwrite byte
     vt.write(load(spark, dir, "orders").filter(col("o_orderkey") === 1L)
@@ -1729,7 +1742,8 @@ object Relational {
     vt.write(orders.filter(col("o_orderkey") % 3 =!= 0)) // v0
     vt.write(orders.filter(col("o_orderkey") % 3 === 0),
       org.apache.spark.sql.SaveMode.Append) // v1
-    vt.deleteVectorized("o_orderkey", 100, 299) // v2
+    vt.deleteVectorizedWhere(
+      graft.io.VersionedTable.NumRange("o_orderkey", 100, 299).condition) // v2
     val perVersion = (0L to vt.currentVersion.get).map { v =>
       vt.readVersion(v)
         .agg(count(lit(1)).as("n_rows"),
@@ -2038,7 +2052,8 @@ object Relational {
       partitionBy = Some(Seq("bucket")))
     vt.write(base.filter(col("o_orderkey") % 2 === 1),
       org.apache.spark.sql.SaveMode.Append)
-    vt.deleteVectorized("o_orderkey", 500, 1500)
+    vt.deleteVectorizedWhere(
+      graft.io.VersionedTable.NumRange("o_orderkey", 500, 1500).condition)
     vt.compactWhere("bucket", Set("2", "5"))
     vt.read().orderBy("o_orderkey")
   }
@@ -2058,7 +2073,8 @@ object Relational {
     vt.write(load(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus")))
     val v0 = vt.currentVersion.get
-    vt.deleteVectorized("o_orderkey", 100, 299) // v1
+    vt.deleteVectorizedWhere(
+      graft.io.VersionedTable.NumRange("o_orderkey", 100, 299).condition) // v1
     vt.compact() // v2: purges the mask, rewrites files
     vt.restore(v0) // v3: back to the full row set
     vt.read().orderBy("o_orderkey")
@@ -2099,7 +2115,8 @@ object Relational {
     // changes on both sides
     vtA.write(orders.filter(col("o_orderkey") % 3 === 0),
       org.apache.spark.sql.SaveMode.Append)
-    vtA.deleteVectorized("o_orderkey", 100, 299)
+    vtA.deleteVectorizedWhere(
+      graft.io.VersionedTable.NumRange("o_orderkey", 100, 299).condition)
     val a2 = vtA.currentVersion.get
     vtB.deleteVectorizedKeys("o_custkey",
       vtB.read().select(col("o_custkey"))
@@ -2170,7 +2187,8 @@ object Relational {
     // changes on both sides (the q147 mutation script)
     vtA.write(orders.filter(col("o_orderkey") % 3 === 0),
       org.apache.spark.sql.SaveMode.Append)
-    vtA.deleteVectorized("o_orderkey", 100, 299)
+    vtA.deleteVectorizedWhere(
+      graft.io.VersionedTable.NumRange("o_orderkey", 100, 299).condition)
     val a2 = vtA.currentVersion.get
     vtB.deleteVectorizedKeys("o_custkey",
       vtB.read().select(col("o_custkey"))
@@ -2217,7 +2235,8 @@ object Relational {
     vt.write(orders.filter(col("o_orderkey") % 2 === 1)
       .select(col("o_orderkey"), col("o_totalprice").as("price")),
       org.apache.spark.sql.SaveMode.Append)
-    vt.deleteVectorized("o_orderkey", 100, 299)
+    vt.deleteVectorizedWhere(
+      graft.io.VersionedTable.NumRange("o_orderkey", 100, 299).condition)
     vt.read().orderBy("o_orderkey")
   }
 
@@ -2709,7 +2728,8 @@ object Relational {
     vt.write(load(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
       .repartition(8, col("o_orderkey")))
-    vt.deleteVectorized("o_totalprice", 50000.0, 100000.0)
+    vt.deleteVectorizedWhere(
+      graft.io.VersionedTable.NumRange("o_totalprice", 50000.0, 100000.0).condition)
     vt.reorgPurge()
     require(vt.manifestEntries(vt.currentVersion.get)
       .forall(_.dvDir.isEmpty), "purge must leave no DV mask")
@@ -2759,7 +2779,8 @@ object Relational {
       .isEmpty, "a compaction-only window must produce an empty feed")
     vt.write(orders.filter(col("o_orderkey") % 4 === 0),
       org.apache.spark.sql.SaveMode.Append)
-    vt.deleteVectorized("o_orderkey", 3000, 3500)
+    vt.deleteVectorizedWhere(
+      graft.io.VersionedTable.NumRange("o_orderkey", 3000, 3500).condition)
     val v1 = vt.currentVersion.get
     val agg1 = IncrementalAgg.update(agg0,
       vt.changes(v0, v1, updateImages = true), Seq("o_orderstatus"),

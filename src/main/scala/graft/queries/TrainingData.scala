@@ -2773,7 +2773,8 @@ object TrainingData {
     vt.write(d.filter(col("doc_id") % 5 === 0),
       org.apache.spark.sql.SaveMode.Append) // v1
     val v1 = vt.currentVersion.get
-    vt.deleteVectorized("doc_id", 100, 199) // v2
+    vt.deleteVectorizedWhere(
+      graft.io.VersionedTable.NumRange("doc_id", 100, 199).condition) // v2
     val v2 = vt.currentVersion.get
     val feed = vt.changes(v0, v1).unionByName(vt.changes(v1, v2))
     feed
@@ -5984,7 +5985,7 @@ object TrainingData {
       // Spark side folds ONLY the change feed — hash equality proves
       // feed-fold ≡ full recompute (IVM applied to text stats).
       // v0 = doc_id % 5 <> 0; v2 = everything minus the DV-deleted
-      // [100, 199] (deleteVectorized bounds are inclusive)
+      // [100, 199] (NumRange bounds are inclusive)
       """WITH c0 AS (
            SELECT unnest(string_split(lower(text), ' ')) AS term
            FROM documents WHERE doc_id % 5 <> 0),

@@ -596,7 +596,7 @@ object GraftSql {
           s"clone source $src does not exist in ${catalog.warehouse}")
         val srcVt = new graft.io.VersionedTable(spark, catalog.rootOf(src))
         val asOf: Option[Long] = Option(vOpt).map(_.toLong)
-          .orElse(Option(tsOpt).map(srcVt.versionAtTimestamp))
+          .orElse(Option(tsOpt).map(srcVt.versionAsOf))
         val shallow = Option(kindOpt).exists(_.equalsIgnoreCase("SHALLOW"))
         if (shallow) srcVt.shallowCloneTo(catalog.rootOf(dest), asOf)
         else srcVt.deepCloneTo(catalog.rootOf(dest), asOf)

@@ -89,7 +89,7 @@ class BloomIndexSpec extends AnyFunSuite {
     vt.write(Seq((9001L, "late")).toDF("k", "s"), SaveMode.Append)
     // pre-refresh: the unindexed late file is always planned
     assert(vt.bloomPlannedEntries("k", Seq(1L)).exists(_.rows === 1L))
-    vt.deleteVectorized("k", 10.0, 12.0)
+    vt.deleteVectorizedWhere(VersionedTable.NumRange("k", 10.0, 12.0).condition)
     vt.reorgPurge() // rewrites masked files; refresh blooms them + late
     val all = vt.manifestEntries(vt.currentVersion.get)
     val planned = vt.bloomPlannedEntries("k", Seq(1L))

@@ -23,7 +23,8 @@ class CdfMetaSpec extends AnyFunSuite {
     vt.write((1L to 100L).map(k => (k, s"v$k")).toDF("k", "v")) // v0
     vt.write((101L to 120L).map(k => (k, s"v$k")).toDF("k", "v"),
       SaveMode.Append) // v1: appends
-    vt.deleteVectorized("k", 5, 8) // v2: DV-only commit
+    vt.deleteVectorizedWhere(
+      VersionedTable.NumRange("k", 5, 8).condition) // v2: DV-only commit
     val feed = vt.changes(0L, 2L, commitMeta = true)
     assert(feed.columns.takeRight(2).toSeq ===
       Seq("_commit_version", "_commit_timestamp"))

@@ -47,11 +47,14 @@ class ChangeFeedPlanSpec extends AnyFunSuite {
       // two files split by id range: F holds [0,100), G holds [100,200)
       vt.write((0L until 200L).map(i => (i, s"v$i")).toDF("id", "s")
         .repartitionByRange(2, col("id")))                        // v0
-      vt.deleteVectorized("id", 0, 4)      // v1: d1 masks F only
-      vt.deleteVectorized("id", 10, 104)   // v2: d2 masks F and G
+      vt.deleteVectorizedWhere(
+        VersionedTable.NumRange("id", 0, 4).condition)      // v1: d1 masks F only
+      vt.deleteVectorizedWhere(
+        VersionedTable.NumRange("id", 10, 104).condition)   // v2: d2 masks F and G
       // v3: F's chain is at the cap (2 links) -> folds to [d3] where
       // d3 holds F's CUMULATIVE mask; G appends -> chain [d2, d3]
-      vt.deleteVectorized("id", 20, 114)   // v3: masks F and G again
+      vt.deleteVectorizedWhere(
+        VersionedTable.NumRange("id", 20, 114).condition)   // v3: masks F and G again
       val byStart = vt.manifestEntries(3L)
       assert(byStart.exists(_.dvDirs.size == 1),
         s"expected a folded single-link chain at v3: " +
@@ -87,7 +90,8 @@ class ChangeFeedPlanSpec extends AnyFunSuite {
       .repartitionByRange(3, col("id")))                          // v0
     val allFiles = vt.read().inputFiles.map(norm).toSet
     assert(allFiles.size == 3)
-    vt.deleteVectorized("id", 0, 9)                               // v1
+    vt.deleteVectorizedWhere(
+      VersionedTable.NumRange("id", 0, 9).condition)                               // v1
     val feed = vt.changes(0L, 1L)
     assert(rowsOf(feed) === (0L to 9L).map(_ -> "delete").toSet)
     val planned = plannedData(feed, vt, root)
@@ -115,8 +119,10 @@ class ChangeFeedPlanSpec extends AnyFunSuite {
     val vt = new VersionedTable(spark, root)
     vt.write((0L until 200L).map(i => (i, s"v$i")).toDF("id", "s")
       .repartitionByRange(2, col("id")))                          // v0
-    vt.deleteVectorized("id", 0, 4)      // v1: partial mask on F
-    vt.deleteVectorized("id", 5, 99)     // v2: F fully dead -> dropped
+    vt.deleteVectorizedWhere(
+      VersionedTable.NumRange("id", 0, 4).condition)      // v1: partial mask on F
+    vt.deleteVectorizedWhere(
+      VersionedTable.NumRange("id", 5, 99).condition)     // v2: F fully dead -> dropped
     assert(vt.manifestEntries(2L).size == 1, "F must be dropped at v2")
     val feed = vt.changes(1L, 2L)
     // only F's v1-LIVE rows die in this window (0..4 were already gone)
@@ -137,7 +143,8 @@ class ChangeFeedPlanSpec extends AnyFunSuite {
       .repartitionByRange(2, col("id")))                          // v0
     val baseFiles = vt.read().inputFiles.map(norm).toSet
     vt.write(Seq((500L, "new")).toDF("id", "s"), SaveMode.Append) // v1
-    vt.deleteVectorized("id", 0, 9)                               // v2
+    vt.deleteVectorizedWhere(
+      VersionedTable.NumRange("id", 0, 9).condition)                               // v2
     val feed = vt.changes(0L, 2L)
     assert(rowsOf(feed) ===
       ((0L to 9L).map(_ -> "delete").toSet + (500L -> "insert")))
@@ -154,7 +161,8 @@ class ChangeFeedPlanSpec extends AnyFunSuite {
     val root = Fixtures.tempDir("cfp-trunc") + "/tbl"
     val vt = new VersionedTable(spark, root)
     vt.write((0L until 50L).map(i => (i, s"v$i")).toDF("id", "s"))  // v0
-    vt.deleteVectorized("id", 0, 9)                                 // v1
+    vt.deleteVectorizedWhere(
+      VersionedTable.NumRange("id", 0, 9).condition)                                 // v1
     vt.truncate()                                                   // v2
     // only v1's LIVE rows die at v2 (0..9 were already gone)
     assert(rowsOf(vt.changes(1L, 2L)) ===
@@ -178,9 +186,9 @@ class ChangeFeedPlanSpec extends AnyFunSuite {
           .repartitionByRange(3, col("id")))                      // v0
         (0 until 10).foreach { _ =>
           rnd.nextInt(5) match {
-            case 0 => vt.deleteVectorized("id",
+            case 0 => vt.deleteVectorizedWhere(VersionedTable.NumRange("id",
               rnd.nextInt(200).toDouble,
-              (rnd.nextInt(200) + 40).toDouble)
+              (rnd.nextInt(200) + 40).toDouble).condition)
             case 1 => vt.updateVectorizedWhere(
               col("id") % (2 + rnd.nextInt(4)) === 0,
               Map("s" -> concat(col("s"), lit("u"))))
@@ -225,7 +233,8 @@ class ChangeFeedPlanSpec extends AnyFunSuite {
     vt.write((0L until 200L).map(i => (i, s"v$i")).toDF("id", "s")
       .repartitionByRange(2, col("id")))                          // v0
     val baseFiles = vt.read().inputFiles.map(norm).toSet
-    vt.deleteVectorized("id", 0, 9)                               // v1
+    vt.deleteVectorizedWhere(
+      VersionedTable.NumRange("id", 0, 9).condition)                               // v1
     vt.compact()                                                  // v2
     vt.write(Seq((600L, "new")).toDF("id", "s"), SaveMode.Append) // v3
     val feed = vt.changesPerCommit(0L, 3L)

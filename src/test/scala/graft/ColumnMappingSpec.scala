@@ -53,7 +53,7 @@ class ColumnMappingSpec extends AnyFunSuite {
     assert(!vt.read().columns.contains("tag"))
 
     // DV delete via the logical name
-    vt.deleteVectorized("id", 10, 19)
+    vt.deleteVectorizedWhere(VersionedTable.NumRange("id", 10, 19).condition)
     assert(vt.read().count() === 140)
     // row values survive the mapping: spot-check a pre-rename row
     assert(vt.read().filter(col("id") === 50L)
@@ -101,7 +101,7 @@ class ColumnMappingSpec extends AnyFunSuite {
     assert(vt.read().columns.toSeq === Seq("part"))
   }
 
-  test("readTimestampAsOf resolves the version live at a commit time") {
+  test("readAsOf resolves the version live at a commit time") {
     val root = Fixtures.tempDir("tsasof") + "/tbl"
     val vt = new VersionedTable(spark, root)
     vt.write(Seq((1L, "a")).toDF("id", "v")) // v0
@@ -110,12 +110,12 @@ class ColumnMappingSpec extends AnyFunSuite {
     val hist = vt.history() // newest-first
     assert(hist.map(_.version) === Seq(2L, 1L, 0L))
     // exactly at v1's commit instant → v1; just before v0 → error
-    assert(vt.versionAtTimestamp(hist(1).timestamp) === 1L)
-    assert(vt.readTimestampAsOf(hist(1).timestamp).count() === 2)
-    assert(vt.versionAtTimestamp(hist.head.timestamp) === 2L)
+    assert(vt.versionAsOf(hist(1).timestamp) === 1L)
+    assert(vt.readAsOf(hist(1).timestamp).count() === 2)
+    assert(vt.versionAsOf(hist.head.timestamp) === 2L)
     val before = java.time.Instant.parse(hist.last.timestamp)
       .minusSeconds(1).toString
-    intercept[RuntimeException](vt.versionAtTimestamp(before))
+    intercept[RuntimeException](vt.versionAsOf(before))
   }
 
   test("generated day(ts) column: source-column range prunes partitions") {
@@ -194,7 +194,7 @@ class ColumnMappingSpec extends AnyFunSuite {
     vt.updateBetween("b", 90.0, 99.0, Map("b" -> lit(-1L)))
     assert(vt.read().filter(col("b") === -1L).count() === 10)
     // DV delete through the mapping too
-    vt.deleteVectorized("b", 10.0, 14.0)
+    vt.deleteVectorizedWhere(VersionedTable.NumRange("b", 10.0, 14.0).condition)
     assert(vt.read().count() === 85)
   }
 

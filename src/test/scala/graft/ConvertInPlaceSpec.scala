@@ -64,7 +64,8 @@ class ConvertInPlaceSpec extends AnyFunSuite {
     val vt = new VersionedTable(spark, root)
     vt.convertInPlace()
     vt.write(Seq((3L, "c")).toDF("id", "s"), SaveMode.Append) // v1
-    vt.deleteVectorized("id", 2, 2) // v2: DV over an ADOPTED file
+    vt.deleteVectorizedWhere(
+      VersionedTable.NumRange("id", 2, 2).condition) // v2: DV over an ADOPTED file
     assert(vt.read().select("id").collect().map(_.getLong(0)).sorted
       === Seq(1L, 3L))
     assert(vt.readVersion(0L).count() === 2L, "time travel to adoption")

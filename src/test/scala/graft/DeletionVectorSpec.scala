@@ -26,7 +26,8 @@ class DeletionVectorSpec extends AnyFunSuite {
   test("DV delete masks rows without rewriting any data file") {
     val (vt, _) = freshTable("graft-dv-basic")
     val before = vt.manifestEntries(vt.currentVersion.get)
-    val v1 = vt.deleteVectorized("id", 100, 299)
+    val v1 = vt.deleteVectorizedWhere(
+      VersionedTable.NumRange("id", 100, 299).condition)
     val after = vt.manifestEntries(v1)
     // same files, byte-identical references — only dv fields changed
     assert(after.map(_.relPath).toSet === before.map(_.relPath).toSet)
@@ -45,14 +46,16 @@ class DeletionVectorSpec extends AnyFunSuite {
     val (vt, _) = freshTable("graft-dv-prune")
     // bucket partitioning spreads ids; use a range that stats exclude
     // for most files: ids 0..9 live in low-id files only
-    val v1 = vt.deleteVectorized("id", 0, 9)
+    val v1 = vt.deleteVectorizedWhere(
+      VersionedTable.NumRange("id", 0, 9).condition)
     val after = vt.manifestEntries(v1)
     assert(after.filter(_.dvDir.isDefined).forall(e =>
       e.stats.get("id").exists { case (mn, mx) => mx >= 0 && mn <= 9 }))
     // entries whose stats exclude the range are untouched
     assert(after.filter(_.dvDir.isEmpty).nonEmpty)
     // a range no file can match is a no-op commit
-    val v2 = vt.deleteVectorized("id", 1e9, 2e9)
+    val v2 = vt.deleteVectorizedWhere(
+      VersionedTable.NumRange("id", 1e9, 2e9).condition)
     assert(v2 === v1)
   }
 
@@ -85,8 +88,9 @@ class DeletionVectorSpec extends AnyFunSuite {
 
   test("overlapping DV deletes union; counts stay exact") {
     val (vt, _) = freshTable("graft-dv-union")
-    vt.deleteVectorized("id", 100, 199)
-    val v2 = vt.deleteVectorized("id", 150, 299)
+    vt.deleteVectorizedWhere(VersionedTable.NumRange("id", 100, 199).condition)
+    val v2 = vt.deleteVectorizedWhere(
+      VersionedTable.NumRange("id", 150, 299).condition)
     assert(vt.manifestEntries(v2).map(_.dvRows).sum === 200L)
     val ids = vt.read().select("id").as[Long].collect().sorted
     assert(ids === (0L until 1000L).filterNot(i => i >= 100 && i <= 299).toArray)
@@ -101,7 +105,8 @@ class DeletionVectorSpec extends AnyFunSuite {
     val df = (0 until 20).map(i => (i.toLong, (i / 10).toString))
       .toDF("id", "bucket").repartition(1)
     vt.write(df, partitionBy = Some(Seq("bucket")))
-    val v1 = vt.deleteVectorized("id", 0, 9)
+    val v1 = vt.deleteVectorizedWhere(
+      VersionedTable.NumRange("id", 0, 9).condition)
     val after = vt.manifestEntries(v1)
     assert(after.forall(_.partitionValues.get("bucket") != Some("0")))
     assert(vt.read().select("id").as[Long].collect().sorted ===
@@ -110,7 +115,7 @@ class DeletionVectorSpec extends AnyFunSuite {
 
   test("deleting every row keeps a readable empty snapshot") {
     val (vt, _) = freshTable("graft-dv-empty", n = 50)
-    vt.deleteVectorized("id", 0, 49)
+    vt.deleteVectorizedWhere(VersionedTable.NumRange("id", 0, 49).condition)
     val out = vt.read()
     assert(out.count() === 0L)
     assert(out.columns.toSeq === Seq("id", "s", "bucket"))
@@ -118,7 +123,7 @@ class DeletionVectorSpec extends AnyFunSuite {
 
   test("rewrite delete/update after a DV delete never resurrects masked rows") {
     val (vt, _) = freshTable("graft-dv-rewrite")
-    vt.deleteVectorized("id", 100, 199)
+    vt.deleteVectorizedWhere(VersionedTable.NumRange("id", 100, 199).condition)
     vt.deleteBetween("id", 150, 249) // rewrite path over DV-masked files
     val ids = vt.read().select("id").as[Long].collect().sorted
     assert(ids === (0L until 1000L).filterNot(i => i >= 100 && i <= 249).toArray)
@@ -130,7 +135,7 @@ class DeletionVectorSpec extends AnyFunSuite {
 
   test("compact purges deletion vectors and preserves the snapshot") {
     val (vt, _) = freshTable("graft-dv-compact")
-    vt.deleteVectorized("id", 0, 499)
+    vt.deleteVectorizedWhere(VersionedTable.NumRange("id", 0, 499).condition)
     val vC = vt.compact(targetFileMB = 8)
     val after = vt.manifestEntries(vC)
     assert(after.forall(_.dvDir.isEmpty))
@@ -140,8 +145,10 @@ class DeletionVectorSpec extends AnyFunSuite {
 
   test("vacuum keeps referenced sidecars; reclaims them once unreferenced") {
     val (vt, root) = freshTable("graft-dv-vacuum")
-    vt.deleteVectorized("id", 0, 99) // v1: sidecar A
-    vt.deleteVectorized("id", 100, 199) // v2: sidecar B (A's rows carried in)
+    vt.deleteVectorizedWhere(
+      VersionedTable.NumRange("id", 0, 99).condition) // v1: sidecar A
+    vt.deleteVectorizedWhere(
+      VersionedTable.NumRange("id", 100, 199).condition) // v2: sidecar B (A's rows carried in)
     val dvDirs = vt.manifestEntries(vt.currentVersion.get).flatMap(_.dvDir).distinct
     assert(dvDirs.size === 1)
     vt.vacuum(retainVersions = 1, orphanGraceMs = 0L)
@@ -161,7 +168,8 @@ class DeletionVectorSpec extends AnyFunSuite {
   test("changes() across a DV delete reports the deleted rows") {
     val (vt, _) = freshTable("graft-dv-changes", n = 100)
     val v0 = vt.currentVersion.get
-    val v1 = vt.deleteVectorized("id", 0, 9)
+    val v1 = vt.deleteVectorizedWhere(
+      VersionedTable.NumRange("id", 0, 9).condition)
     val ch = vt.changes(v0, v1)
     val deletes = ch.filter(col("_change_type") === "delete")
       .select("id").as[Long].collect().sorted
@@ -185,7 +193,8 @@ class DeletionVectorSpec extends AnyFunSuite {
     try { q.processAllAvailable(); assert(ids().length === 100) }
     finally q.stop()
 
-    vt.deleteVectorized("id", 0, 9) // v1: rows removed, file set intact
+    vt.deleteVectorizedWhere(
+      VersionedTable.NumRange("id", 0, 9).condition) // v1: rows removed, file set intact
     val q2 = sink(Streaming.versionedSource(spark, root)).start()
     val failed = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       q2.processAllAvailable(); q2.awaitTermination(30000)
@@ -208,7 +217,8 @@ class DeletionVectorSpec extends AnyFunSuite {
     val (vt, _) = freshTable("graft-dv-stale", n = 100)
     val v0 = vt.currentVersion.get
     val survivors = vt.read().filter(col("id") >= 50)
-    vt.deleteVectorized("id", 60, 69) // lands between the read and the commit
+    vt.deleteVectorizedWhere(
+      VersionedTable.NumRange("id", 60, 69).condition) // lands between the read and the commit
     val e = intercept[RuntimeException] {
       vt.replaceWhere(survivors, _ => false, "REWRITE", basisVersion = Some(v0))
     }
@@ -217,7 +227,7 @@ class DeletionVectorSpec extends AnyFunSuite {
 
   test("predicate reads apply masks") {
     val (vt, _) = freshTable("graft-dv-preds")
-    vt.deleteVectorized("id", 100, 299)
+    vt.deleteVectorizedWhere(VersionedTable.NumRange("id", 100, 299).condition)
     assert(vt.readMatching(VersionedTable.NumRange("id", 0, 399)).count() === 200L)
     assert(vt.readMatching(VersionedTable.PartitionEq("bucket", "0")).count() === 200L)
   }

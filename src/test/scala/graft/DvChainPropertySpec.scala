@@ -42,7 +42,8 @@ class DvChainPropertySpec extends AnyFunSuite {
             case 0 => // DV range delete
               val lo = rnd.nextInt(300).toLong
               val hi = lo + rnd.nextInt(40)
-              vt.deleteVectorized("id", lo.toDouble, hi.toDouble)
+              vt.deleteVectorizedWhere(
+                VersionedTable.NumRange("id", lo.toDouble, hi.toDouble).condition)
               model = model.filterNot { case (k, _) => k >= lo && k <= hi }
             case 1 => // DV predicate update
               val m = 2 + rnd.nextInt(5)

@@ -147,7 +147,7 @@ class DvMergeSpec extends AnyFunSuite {
     assert(e.getMessage.contains("duplicate"))
   }
 
-  test("updateVectorizedBetween == updateBetween semantics, files " +
+  test("updateVectorizedWhere == updateBetween semantics, files " +
       "untouched, CDF reports updates") {
     val (vt, _) = freshTable("graft-dvm-upd", tracked = true)
     val v0 = vt.currentVersion.get

@@ -280,7 +280,7 @@ class GraftSqlSpec extends AnyFunSuite {
     val root = Fixtures.tempDir("graft-sql-dv") + "/tbl"
     val vt = new VersionedTable(spark, root)
     vt.write((1L to 10L).map(k => (k, k * 10L)).toDF("k", "v")) // v0
-    vt.deleteVectorized("k", 3, 5) // v1
+    vt.deleteVectorizedWhere(VersionedTable.NumRange("k", 3, 5).condition) // v1
     val out = GraftSql.sql(spark,
       """SELECT (SELECT count(*) FROM t version as of 1) AS masked,
                 (SELECT count(*) FROM t version as of 0) AS full""",

@@ -42,7 +42,7 @@ class IdentityColumnSpec extends AnyFunSuite {
       .select("k", "sk").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val before = byKey()
-    vt.deleteVectorized("k", 50, 99)
+    vt.deleteVectorizedWhere(VersionedTable.NumRange("k", 50, 99).condition)
     vt.compact()
     vt.reorgPurge()
     val after = byKey()

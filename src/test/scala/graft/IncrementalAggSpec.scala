@@ -46,7 +46,7 @@ class IncrementalAggSpec extends AnyFunSuite {
     assert(canon(agg) === canon(IncrementalAgg.compute(vt.read(), keys, sums)))
 
     // DV delete (row-level feed)
-    vt.deleteVectorized("id", 50, 149)
+    vt.deleteVectorizedWhere(VersionedTable.NumRange("id", 50, 149).condition)
     val v2 = vt.currentVersion.get
     agg = IncrementalAgg.update(agg, vt.changes(v1, v2), keys, sums)
     assert(canon(agg) === canon(IncrementalAgg.compute(vt.read(), keys, sums)))
@@ -64,7 +64,8 @@ class IncrementalAggSpec extends AnyFunSuite {
     vt.write(frame(Seq((1L, "only", dec(10.0)), (2L, "other", dec(5.0))))) // v0
     val v0 = vt.currentVersion.get
     var agg = IncrementalAgg.compute(vt.read(), keys, sums)
-    vt.deleteVectorized("id", 1, 1) // empties group "only"
+    vt.deleteVectorizedWhere(
+      VersionedTable.NumRange("id", 1, 1).condition) // empties group "only"
     val v1 = vt.currentVersion.get
     agg = IncrementalAgg.update(agg, vt.changes(v0, v1), keys, sums)
     assert(canon(agg).map(_._1) === Seq("other"))
@@ -108,7 +109,8 @@ class IncrementalAggSpec extends AnyFunSuite {
     def mm(df: DataFrame) = df.groupBy("k")
       .agg(count(lit(1)).as(IncrementalAgg.CountCol),
         sum(col("x")).as(IncrementalAgg.sumCol("x")))
-    vt.deleteVectorized("id", 3, 4) // touches the NULL group
+    vt.deleteVectorizedWhere(
+      VersionedTable.NumRange("id", 3, 4).condition) // touches the NULL group
     val v2 = vt.currentVersion.get
     val byRecompute = IncrementalAgg.updateByRecompute(
       mm(vt.readVersion(v1)), vt.read(), vt.changes(v1, v2), keys, mm)
@@ -126,7 +128,7 @@ class IncrementalAggSpec extends AnyFunSuite {
     var agg = mm(vt.read())
     // delete the max rows of two groups — exactly what additive IVM
     // cannot maintain
-    vt.deleteVectorized("id", 95, 99)
+    vt.deleteVectorizedWhere(VersionedTable.NumRange("id", 95, 99).condition)
     val v1 = vt.currentVersion.get
     agg = IncrementalAgg.updateByRecompute(agg, vt.read(),
       vt.changes(v0, v1), keys, mm)

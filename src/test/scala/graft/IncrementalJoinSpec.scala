@@ -41,7 +41,8 @@ class IncrementalJoinSpec extends AnyFunSuite {
     // dimension row dies in the SAME maintenance round (cross term)
     vtA.write((200L until 300L).map(i => (i, i % 10, i * 2))
       .toDF("id", "k", "x"), SaveMode.Append)
-    vtA.deleteVectorized("id", 50, 99) // A: DV delete
+    vtA.deleteVectorizedWhere(
+      VersionedTable.NumRange("id", 50, 99).condition) // A: DV delete
     val a2 = vtA.currentVersion.get
     // B: delete dimension rows k=3, k=7
     vtB.deleteVectorizedKeys("k", Seq(3L, 7L).toDF("k"))
@@ -81,7 +82,8 @@ class IncrementalJoinSpec extends AnyFunSuite {
           .toDF("id", "k", "x"), SaveMode.Append)
         nextId += nNew
         val lo = rnd.nextInt(150).toLong
-        vtA.deleteVectorized("id", lo, lo + 20 + rnd.nextInt(30))
+        vtA.deleteVectorizedWhere(VersionedTable.NumRange(
+          "id", lo, lo + 20 + rnd.nextInt(30)).condition)
         val victim = rnd.nextInt(12).toLong
         vtB.deleteVectorizedKeys("k", Seq(victim).toDF("k"))
         val delta = IncrementalJoin.deltaJoin(
@@ -129,7 +131,8 @@ class IncrementalJoinSpec extends AnyFunSuite {
           .toDF("id", "k", "x"), SaveMode.Append)
         nextId += nNew
         val lo = rnd.nextInt(150).toLong
-        vtA.deleteVectorized("id", lo, lo + 20 + rnd.nextInt(30))
+        vtA.deleteVectorizedWhere(VersionedTable.NumRange(
+          "id", lo, lo + 20 + rnd.nextInt(30)).condition)
         val victim = rnd.nextInt(12).toLong // empties group `victim`
         vtB.deleteVectorizedKeys("k", Seq(victim).toDF("k"))
         val delta = IncrementalJoin.deltaJoin(

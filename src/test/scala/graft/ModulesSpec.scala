@@ -973,7 +973,8 @@ class VersionedTableSpec extends AnyFunSuite {
       .toDF("id", "p").repartition(4)
     vt.write(frame(0 until 90), partitionBy = Some(Seq("p")))
     vt.write(frame(90 until 180), SaveMode.Append)
-    vt.deleteVectorized("id", 10.0, 40.0) // masks across partitions
+    vt.deleteVectorizedWhere(
+      VersionedTable.NumRange("id", 10.0, 40.0).condition) // masks across partitions
     val before = vt.manifestEntries(vt.currentVersion.get)
     def paths(es: Seq[graft.io.ManifestEntry], p: String) =
       es.filter(_.partitionValues.get("p").contains(p)).map(_.relPath).toSet

@@ -34,7 +34,8 @@ class ShallowCloneSpec extends AnyFunSuite {
     val dst = Fixtures.tempDir("clone-dst") + "/tbl"
     val vt = new VersionedTable(spark, src)
     vt.write((0L until 500L).map(i => (i, s"v$i")).toDF("id", "v"))
-    vt.deleteVectorized("id", 100, 199) // source carries a DV mask
+    vt.deleteVectorizedWhere(
+      VersionedTable.NumRange("id", 100, 199).condition) // source carries a DV mask
     val srcBefore = rows(vt)
 
     val clone = vt.shallowCloneTo(dst)
@@ -51,7 +52,8 @@ class ShallowCloneSpec extends AnyFunSuite {
     assert(sidecarRows.count() === 100)
 
     // clone-local DV delete applies on externally-referenced files...
-    clone.deleteVectorized("id", 200, 299)
+    clone.deleteVectorizedWhere(
+      VersionedTable.NumRange("id", 200, 299).condition)
     assert(rows(clone) ===
       (0L until 500L).filterNot(i => i >= 100 && i <= 299)
         .map(i => s"$i|v$i").sorted)
@@ -64,7 +66,7 @@ class ShallowCloneSpec extends AnyFunSuite {
     assert(rows(vt) === srcBefore)
 
     // later SOURCE commits never move the clone (file list copied)
-    vt.deleteVectorized("id", 0, 49)
+    vt.deleteVectorizedWhere(VersionedTable.NumRange("id", 0, 49).condition)
     assert(rows(clone).contains("0|v0"),
       "clone must still serve rows the source deleted after cloning")
     assert(!rows(vt).contains("0|v0"))
@@ -83,7 +85,7 @@ class ShallowCloneSpec extends AnyFunSuite {
       "far/longer/than/any/source/file/path/could/ever/be/tbl"
     val vt = new VersionedTable(spark, src)
     vt.write((0L until 100L).map(i => (i, s"v$i")).toDF("id", "v"))
-    vt.deleteVectorized("id", 10, 19)
+    vt.deleteVectorizedWhere(VersionedTable.NumRange("id", 10, 19).condition)
     val clone = vt.shallowCloneTo(dst)
     assert(rows(clone) === rows(vt))
     // sidecar keys for external files are the full qualified path
@@ -94,7 +96,7 @@ class ShallowCloneSpec extends AnyFunSuite {
       .forall(_.getString(0).contains("/cl-s")),
       "external DV keys must carry the source's absolute path")
     // clone-local deletes on external files still compose
-    clone.deleteVectorized("id", 20, 29)
+    clone.deleteVectorizedWhere(VersionedTable.NumRange("id", 20, 29).condition)
     assert(clone.read().count() === 80)
     assert(vt.read().count() === 90, "source untouched")
   }
@@ -153,7 +155,8 @@ class ShallowCloneSpec extends AnyFunSuite {
     val vt = new VersionedTable(spark, src)
     vt.write((0L until 500L).map(i => (i, s"v$i")).toDF("id", "v"))
     vt.enableRowTracking() // ids must carry through the byte copy
-    vt.deleteVectorized("id", 100, 199) // DV mask must carry too
+    vt.deleteVectorizedWhere(
+      VersionedTable.NumRange("id", 100, 199).condition) // DV mask must carry too
     def tagged(t: VersionedTable): Seq[String] =
       t.readWithRowIds().collect().map(_.mkString("|")).sorted.toSeq
     val srcRows = tagged(vt)

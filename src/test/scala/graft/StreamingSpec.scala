@@ -373,7 +373,8 @@ class StreamingSpec extends AnyFunSuite {
       (3L, "c", "insert"))
     assert(rows() === snap)
     vt.write(Seq((4L, "d")).toDF("id", "s"), SaveMode.Append) // v1
-    vt.deleteVectorized("id", 2.0, 2.0) // v2
+    vt.deleteVectorizedWhere(
+      VersionedTable.NumRange("id", 2.0, 2.0).condition) // v2
     drain() // one batch spanning append + DV delete
     assert(rows() === (snap ++ Seq((2L, "b", "delete"),
       (4L, "d", "insert"))).sorted)
@@ -896,7 +897,8 @@ class StreamingSpec extends AnyFunSuite {
     vt.write((1L to 10L).map(k => (k, s"v$k")).toDF("k", "v")) // v0
     drain()
     assert(seen.size === 10)
-    vt.deleteVectorized("k", 3, 5) // v1: DV-only delete commit
+    vt.deleteVectorizedWhere(
+      VersionedTable.NumRange("k", 3, 5).condition) // v1: DV-only delete commit
     vt.write(Seq((11L, "v11")).toDF("k", "v"),
       org.apache.spark.sql.SaveMode.Append) // v2: append
     drain() // the delete admits nothing, the append streams

@@ -7,7 +7,7 @@ import graft.io.VersionedTable
 
 /** Timestamp resolution over the commit history: the forward-rounding
   * [[VersionedTable.versionAt]] with `forward` (Delta `startingTimestamp`
-  * semantics) against the backward-rounding `versionAtTimestamp`, and
+  * semantics) against the backward-rounding `versionAsOf`, and
   * the timestamp-range change feed built on the pair. */
 class TimestampCdfSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -22,20 +22,21 @@ class TimestampCdfSpec extends AnyFunSuite {
     vt.write(Seq((1L, "a"), (2L, "b")).toDF("id", "s")) // v0
     vt.write(Seq((3L, "c")).toDF("id", "s"), SaveMode.Append) // v1
     vt.write(Seq((4L, "d")).toDF("id", "s"), SaveMode.Append) // v2
-    vt.deleteVectorized("id", 1, 1) // v3
+    vt.deleteVectorizedWhere(
+      VersionedTable.NumRange("id", 1, 1).condition) // v3
     val ts = vt.history(limit = Int.MaxValue)
       .map(h => h.version -> h.timestamp).toMap
     (vt, ts)
   }
 
-  test("firstVersionAtOrAfter rounds FORWARD; versionAtTimestamp BACK") {
+  test("versionAt rounds FORWARD; versionAsOf BACK") {
     val (vt, ts) = fixture
     assert(vt.versionAt(ts(0L), forward = true) === Some(0L))
     assert(vt.versionAt(ts(2L), forward = true) === Some(2L))
     // past the newest commit: nothing has happened there yet
     assert(vt.versionAt(plusSecs(ts(3L), 3600), forward = true) === None)
     // the same instant resolves BACK to v3 for time travel
-    assert(vt.versionAtTimestamp(plusSecs(ts(3L), 3600)) === 3L)
+    assert(vt.versionAsOf(plusSecs(ts(3L), 3600)) === 3L)
   }
 
   test("changesBetweenTimestamps: inclusive start, append fast path") {

@@ -7,7 +7,10 @@
 #                  inside the body of `final class VersionedTable`
 #                  (companion object and case classes excluded)
 # Each FROM-TO argument (1-based, inclusive line numbers) also prints
-# code_lines for that range, and the sum of all ranges.
+# code_lines for that range, and the sum of all ranges. Last come the
+# class-level public defs by name, one `public_def <name>` line each in
+# file order, so a change to the public surface reads as a diff of two
+# runs.
 #
 #   tools/api_surface.sh                      # whole-file counts
 #   tools/api_surface.sh 745-909 2689-3095    # plus per-range code lines
@@ -22,11 +25,16 @@ code_lines() {
     } END { print n + 0 }' "$f"
 }
 
+# the class-level public def lines, as `public_defs` counts them
+public_def_lines() {
+  awk '/^final class VersionedTable/ { c = 1 }
+    c && /^}/ { c = 0 }
+    c && /^  def / { print }' "$f"
+}
+
 echo "lines $(wc -l < "$f")"
 echo "code_lines $(code_lines 1 999999999)"
-echo "public_defs $(awk '/^final class VersionedTable/ { c = 1 }
-  c && /^}/ { c = 0 }
-  c && /^  def / { n++ } END { print n + 0 }' "$f")"
+echo "public_defs $(public_def_lines | wc -l)"
 
 total=0
 for r in "$@"; do
@@ -35,3 +43,5 @@ for r in "$@"; do
   total=$((total + n))
 done
 if [[ $# -gt 0 ]]; then echo "code_lines[ranges] $total"; fi
+
+public_def_lines | sed -E 's/^  def ([A-Za-z0-9_]+).*/public_def \1/'
