@@ -764,7 +764,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * OPERATOR convenience ("what did the table say at 2 am"), not a
     * determinism surface — hash-verified queries pin versions by
     * NUMBER. Throws if `ts` predates every committed version. */
-  def versionAsOf(ts: String): Long = versionAtOrBefore(committedHistory(), ts)
+  def versionAsOf(ts: String): Long = new Timeline().atOrBefore(ts)
 
   /** S4: time-travel read by timestamp ([[versionAsOf]]). */
   def readAsOf(ts: String): DataFrame = readVersion(versionAsOf(ts))
@@ -977,6 +977,23 @@ final class VersionedTable(spark: SparkSession, root: String) {
     require(!set.keys.exists(m.partitionBy.contains),
       s"cannot update partition columns of $root in place " +
         "(rows would change partitions) — use a MERGE")
+  }
+
+  /** A DV merge's argument checks against snapshot `m` — every merge
+    * key on both sides, no source column outside the snapshot (a DV
+    * merge cannot evolve the schema) — and the columns a matched update
+    * takes: `updateColumns`, or every non-key source column. */
+  private def mergeUpdateCols(m: VersionManifest, source: DataFrame,
+      mergeKeys: Seq[String], updateColumns: Option[Seq[String]])
+      : Seq[String] = {
+    val tgtCols = logicalSchema(m).fieldNames.toSeq
+    mergeKeys.foreach(k => require(tgtCols.contains(k) &&
+      source.columns.contains(k),
+      s"merge key $k must exist in both $root and the source"))
+    source.columns.foreach(c => require(tgtCols.contains(c),
+      s"DV MERGE cannot evolve schema at $root: source column '$c' is " +
+        "not in the snapshot — use the rewrite path with evolveSchema"))
+    updateColumns.getOrElse(source.columns.toSeq.filterNot(mergeKeys.contains))
   }
 
   /** An UPDATE's output columns over a logicalized scan of `m`: each
@@ -1699,14 +1716,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
       import graftbridge.ManifestScan.{FilePathCol, RowIndexCol}
       val schema = logicalSchema(m)
       val tgtCols = schema.fieldNames.toSeq
-      mergeKeys.foreach(k => require(tgtCols.contains(k) &&
-        source.columns.contains(k),
-        s"merge key $k must exist in both $root and the source"))
-      source.columns.foreach(c => require(tgtCols.contains(c),
-        s"DV MERGE cannot evolve schema at $root: source column '$c' is " +
-          "not in the snapshot — use the rewrite path with evolveSchema"))
-      val updateCols = updateColumns.getOrElse(
-        source.columns.toSeq.filterNot(mergeKeys.contains))
+      val updateCols = mergeUpdateCols(m, source, mergeKeys, updateColumns)
       updateCols.foreach(c => require(
         tgtCols.contains(c) && !mergeKeys.contains(c),
         s"update column '$c' must be an existing non-key column of $root"))
@@ -1853,9 +1863,8 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * snapshot's partitioning and physical column names — and commits
     * both atomically: each candidate's DV chain gains the new link
     * (chain total >= rows: the file is dropped), the images take fresh
-    * row-id ranges, everything else stays verbatim. Then the bloom
-    * sidecars are brought current, with no job when the commit only
-    * masks.
+    * row-id ranges, everything else stays verbatim. Then, when the
+    * commit appended images, the bloom sidecars are brought current.
     *
     * Concurrency is WRITE-SERIALIZABLE, Delta's default: the commit
     * rebases over every commit that left the candidates alone, and
@@ -1937,7 +1946,8 @@ final class VersionedTable(spark: SparkSession, root: String) {
       pointTo(next)
       next
     }
-    refreshBloomIndexes(v)
+    // a masks-only commit adds no file, so it leaves no file uncovered
+    if (added.nonEmpty) refreshBloomIndexes(v)
     v
   }
 
@@ -1981,18 +1991,11 @@ final class VersionedTable(spark: SparkSession, root: String) {
       import graftbridge.ManifestScan.{FilePathCol, RowIndexCol}
       val schema = logicalSchema(m)
       val tgtCols = schema.fieldNames.toSeq
-      mergeKeys.foreach(k => require(tgtCols.contains(k) &&
-        source.columns.contains(k),
-        s"merge key $k must exist in both $root and the source"))
-      source.columns.foreach(c => require(tgtCols.contains(c),
-        s"DV clause MERGE cannot evolve schema at $root: source column " +
-          s"'$c' is not in the snapshot — use the rewrite path"))
+      val updateCols = mergeUpdateCols(m, source, mergeKeys, updateColumns)
       notMatchedBySourceSet.keys.foreach(k => require(
         tgtCols.contains(k) && !mergeKeys.contains(k),
         s"notMatchedBySourceSet assigns '$k', which must be an existing " +
           "non-key target column"))
-      val updateCols = updateColumns.getOrElse(
-        source.columns.toSeq.filterNot(mergeKeys.contains))
       val src = source.localCheckpoint()
       require(src.groupBy(mergeKeys.map(col): _*).count()
         .filter(col("count") > 1).isEmpty,
@@ -2625,15 +2628,15 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * would be indistinguishable from a wrong clock. */
   def changesBetweenTimestamps(fromTs: String, toTs: String,
       commitMeta: Boolean = false): DataFrame = {
-    val hist = committedHistory()
-    val fromV = versionIn(hist, fromTs, forward = true).getOrElse(
+    val tl = new Timeline()
+    val fromV = tl.at(fromTs, forward = true).getOrElse(
       sys.error(s"no commit of $root at or after $fromTs (newest: " +
-        s"${hist.headOption.map(_.timestamp).getOrElse("none")})"))
-    val toV = versionAtOrBefore(hist, toTs)
+        s"${tl.newest.getOrElse("none")})"))
+    val toV = tl.atOrBefore(toTs)
     require(fromV <= toV,
       s"no commits of $root inside [$fromTs, $toTs] " +
         s"(first at-or-after start: v$fromV; last at-or-before end: v$toV)")
-    feed(new FeedWindow(fromV - 1, toV, Some(hist)), updateImages = false,
+    feed(new FeedWindow(fromV - 1, toV, Some(tl.hist)), updateImages = false,
       commitMeta)
   }
 
@@ -2986,37 +2989,46 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * change from this instant on", so that commit is included);
     * otherwise the NEWEST version committed at or before it (time
     * travel, an ending bound). None when no commit lies on that side
-    * of `ts` — for `forward`, nothing has happened there yet. */
+    * of `ts` — for `forward`, nothing has happened there yet. The one
+    * exception: a forward instant at or before the creating commit
+    * names v0 even when v0's manifest is gone, because a start there
+    * reads the end snapshot as inserts and needs no manifest before
+    * it. */
   def versionAt(ts: String, forward: Boolean = false): Option[Long] =
-    versionIn(committedHistory(), ts, forward)
+    new Timeline().at(ts, forward)
 
-  /** The history lines of committed versions, newest first — the
-    * timeline [[versionAt]] resolves against. A whole-history read:
-    * [[versionIn]] filters rather than prefix-scans. */
-  private def committedHistory(): Seq[HistoryEntry] = {
-    val committed = committedVersions.toSet
-    history(limit = Int.MaxValue).filter(h => committed(h.version))
-  }
+  /** The commit timeline [[versionAt]] resolves against: the whole
+    * history, newest first, and the versions with a committed
+    * manifest. A whole-history read: resolution filters rather than
+    * prefix-scans. */
+  private final class Timeline {
+    val hist: Seq[HistoryEntry] = history(limit = Int.MaxValue)
+    private val committed = committedVersions.toSet
 
-  /** [[versionAt]] backward over committed history `hist`, failing
-    * when `ts` predates every version in it. */
-  private def versionAtOrBefore(hist: Seq[HistoryEntry], ts: String): Long =
-    versionIn(hist, ts, forward = false).getOrElse(sys.error(
-      s"no version of $root existed at or before $ts " +
-        s"(earliest commit: ${hist.lastOption.map(_.timestamp)
-          .getOrElse("none")})"))
+    /** [[versionAt]]'s rule. A filter, NOT a prefix scan: commit
+      * timestamps are wall clock, and a clock step-back between
+      * commits would truncate a scan at the dent. */
+    def at(ts: String, forward: Boolean): Option[Long] = {
+      val target = java.time.Instant.parse(ts)
+      val side = hist.filter { h =>
+        val t = java.time.Instant.parse(h.timestamp)
+        (committed(h.version) || forward && h.version == 0L) &&
+          (if (forward) !t.isBefore(target) else !t.isAfter(target))
+      }.map(_.version)
+      if (forward) side.minOption else side.maxOption
+    }
 
-  /** [[versionAt]] over history `hist`. A filter, NOT a prefix scan:
-    * commit timestamps are wall clock, and a clock step-back between
-    * commits would truncate a scan at the dent. */
-  private def versionIn(hist: Seq[HistoryEntry], ts: String,
-      forward: Boolean): Option[Long] = {
-    val target = java.time.Instant.parse(ts)
-    val side = hist.filter { h =>
-      val t = java.time.Instant.parse(h.timestamp)
-      if (forward) !t.isBefore(target) else !t.isAfter(target)
-    }.map(_.version)
-    if (forward) side.minOption else side.maxOption
+    /** [[at]] backward, failing when `ts` predates every committed
+      * version. */
+    def atOrBefore(ts: String): Long =
+      at(ts, forward = false).getOrElse(sys.error(
+        s"no version of $root existed at or before $ts (earliest " +
+          s"commit: ${hist.findLast(h => committed(h.version))
+            .map(_.timestamp).getOrElse("none")})"))
+
+    /** The newest committed version's commit time. */
+    def newest: Option[String] =
+      hist.find(h => committed(h.version)).map(_.timestamp)
   }
 
   private val genExprRe =

@@ -3,6 +3,7 @@ package graft
 import org.apache.hadoop.fs.{FSDataInputStream, Path}
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.io.VersionedTable
@@ -129,5 +130,47 @@ class HistoryWalkSpec extends AnyFunSuite {
     assert(routes(ts(3L), 1) === Seq.fill(4)(Right(3L)))
     assert(vt.read().count() === 8L) // restored to v3's rows
     assert(vt.read().filter(col("k") === 8L).isEmpty)
+  }
+
+  test("a forward instant at or before the creating commit starts from " +
+      "the beginning even when v0's manifest is gone") {
+    val base = Fixtures.tempDir("graft-ts-creating")
+    val root = s"$base/tbl"
+    val vt = new VersionedTable(spark, root)
+    vt.write(Seq(1L, 2L).toDF("id")) // v0
+    (3L to 6L).foreach(i =>
+      vt.write(Seq(i).toDF("id"), SaveMode.Append)) // v1..v4
+    val t0 = vt.history(limit = Int.MaxValue).last.timestamp
+    val before = java.time.Instant.parse(t0).minusSeconds(60).toString
+    val now = vt.history(limit = 1).head.timestamp
+    // a vacuum that deleted v0..v1's manifests and stopped before it
+    // rolled their history lines out: the lines stay, the manifests go
+    val fs = new Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq(0L, 1L).foreach(v =>
+      assert(fs.delete(new Path(root, f"_manifests/v$v%08d.txt"), false)))
+    assert(vt.committedVersions === Seq(2L, 3L, 4L))
+    assert(vt.history(limit = Int.MaxValue).map(_.version) ===
+      (4L to 0L by -1L))
+    val snapshot = (1L to 6L).map(_ -> "insert")
+    // the feed from the beginning is the snapshot as inserts
+    for (start <- Seq(before, t0)) {
+      val rows = vt.changesBetweenTimestamps(start, now)
+        .select(col("id"), col("_change_type")).as[(Long, String)]
+        .collect().sorted.toSeq
+      assert(rows === snapshot, start)
+    }
+    // and a stream subscribed there starts with the snapshot
+    val out = s"$base/out"
+    val q = graft.streaming.Streaming.versionedSource(spark, root,
+        startingTimestamp = Some(before))
+      .writeStream.format("parquet").option("path", out)
+      .option("checkpointLocation", s"$base/ckpt")
+      .outputMode(OutputMode.Append).start()
+    try q.processAllAvailable() finally q.stop()
+    assert(spark.read.parquet(out).select("id").as[Long].collect().sorted
+      .toSeq === (1L to 6L))
+    // backward, the vacuumed creating commit names nothing
+    assert(vt.versionAt(t0) === None)
   }
 }
